@@ -139,7 +139,7 @@ object Bench {
     // release + GC + settle so each pass starts from the same quiesced
     // state; blocking release keeps the churn inside this gap
     def settle(): Unit = {
-      graft.ops.Dedup.clearCaches()
+      Memo.release()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
       System.gc()

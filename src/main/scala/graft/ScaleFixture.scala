@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions._
   * disjoint:
   *
   *   - ids shift by r·10⁹ (doc/vec/order/part/supp/cust/event keys move
-  *     together, so join fan-outs stay linear);
+  *     together, so join fan-outs stay linear; every source id must be
+  *     under 10⁹, checked row by row as the replicas are written);
   *   - document tokens get a per-replica suffix, EXCEPT the en/es
   *     stopwords the quality/langid rules key on — keepRule and language
   *     signals are preserved per doc, while shingle/gram/bigram universes
@@ -32,9 +33,11 @@ import org.apache.spark.sql.functions._
   *     shared — bounded by the source's max bucket × replicas, far under
   *     MaxBandBucket);
   *   - embeddings pass through a per-replica SIGNED PERMUTATION (rotate
-  *     dimensions by 7r, alternate sign flips) — an orthogonal map, so
-  *     intra-replica geometry (norms, cosines, LSH bucket sizes) is
-  *     exactly the source's while cross-replica cosines decorrelate;
+  *     dimensions by 7r, alternate sign flips, at each vector's own
+  *     dimension) — an orthogonal map, so intra-replica norms and cosines
+  *     are exactly the source's while cross-replica cosines decorrelate;
+  *     LSH bucket sizes are only approximately preserved (the hyperplanes
+  *     are fixed, not rotated with the data);
   *   - nation/region stay fixed dims (every replica's customers reference
   *     the same 25 nations, as a bigger TPC-H would).
   */
@@ -55,8 +58,8 @@ object ScaleFixture {
 
   private def rotEmb(emb: Column, r: Int): Column =
     if (r == 0) emb
-    else transform(sequence(lit(0), lit(63)), i =>
-      (element_at(emb, pmod(i + 7 * r, lit(64)) + 1) *
+    else transform(emb, (_, i) =>
+      (element_at(emb, pmod(i + 7 * r, size(emb)) + 1) *
         when(pmod(i + r, lit(2)) === 0, 1.0f).otherwise(-1.0f))
         .cast("float"))
 
@@ -64,12 +67,21 @@ object ScaleFixture {
     require(args.length == 3,
       "usage: ScaleFixture <srcDir> <dstDir> <replicas>")
     val (src, dst, reps) = (args(0), args(1), args(2).toInt)
+    require(reps >= 1, s"replicas must be >= 1, got $reps")
     val spark = SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    replicate(spark, src, dst, reps)
+    spark.stop()
+  }
+
+  /** Write `reps` replicas of every table under `src` to `dst`. */
+  def replicate(spark: SparkSession, src: String, dst: String,
+                reps: Int): Unit = {
+    require(reps >= 1, s"replicas must be >= 1, got $reps")
 
     def rd(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     def wr(df: DataFrame, t: String): Unit =
@@ -80,7 +92,13 @@ object ScaleFixture {
       wr((0 until reps).map(r => mut(base, r)).reduce(_ unionByName _), t)
     }
 
-    def shift(c: String, r: Int): Column = col(c) + lit(r * Shift)
+    // assert_true is NULL when the id fits, so the `when` is an identity
+    // on valid data and fails the write on the first id that would
+    // collide with the next replica's range
+    def shift(c: String, r: Int): Column =
+      when(assert_true(col(c) < Shift,
+        lit(s"$c must be < $Shift to replicate")).isNull,
+        col(c) + lit(r * Shift))
 
     replicated("documents") { (d, r) =>
       val txt = mutTokens(col("text"), r)
@@ -123,6 +141,5 @@ object ScaleFixture {
     }
     // fixed dimensions: copy once
     Seq("nation", "region").foreach(t => wr(rd(t), t))
-    spark.stop()
   }
 }

@@ -108,7 +108,7 @@ object Verify {
         rm(java.nio.file.Paths.get(outDir, name))
       }
     }
-    graft.ops.Dedup.clearCaches()
+    Memo.release()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -149,14 +149,13 @@ object Migration {
     // rest on RangePartitioner's sampling being deterministic — an
     // implementation detail AQE replanning can break (round-3 ADVICE,
     // medium). One materialization makes the invariant structural. The
-    // frame is registered in [[graft.Caches]] so `Dedup.clearCaches()`
+    // frame is registered with [[graft.Memo]] so `Dedup.clearCaches()`
     // (already called by the Verify/Bench mains) releases the blocks
     // deterministically instead of waiting on GC + ContextCleaner
     // (round-4 ADVICE).
-    val parted = graft.Caches.register(
+    val parted = graft.Memo.persist(
       df.repartitionByRange(order)
-        .withColumn("__pid", spark_partition_id())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .withColumn("__pid", spark_partition_id()))
     val local = parted.withColumn("__idx",
       row_number().over(Window.partitionBy("__pid").orderBy(order))
         .cast(LongType))

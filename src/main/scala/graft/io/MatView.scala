@@ -1,13 +1,10 @@
 package graft.io
 
-import java.nio.file.Files
-
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
+import graft.Memo
 import graft.functions.{HllEstimateExpr, HllMergeExpr, HllRegistersAgg}
 
 /** One aggregate of a materialized view's definition: `fn(in) AS out`.
@@ -952,34 +949,31 @@ object MatView {
     * aggregates from `orders` directly — a hash match proves
     * incremental == recompute end-to-end through the change window.
     */
-  private val mvCache = TrieMap.empty[(SparkSession, String),
-    (String, String, String, String, String, String)]
-
   private def landedMv(s: SparkSession, dir: String)
       : (String, String, String, String, String, String) =
-    mvCache.getOrElseUpdate((s, dir), {
-      val src = Files.createTempDirectory("graft_mv_src").toString
+    Memo.session("mv_fixture", s, dir) {
+      val src = Memo.tempRoot("mv_src")
       val orders = Sources.table(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_orderpriority",
           "o_custkey")
       val hi = orders.agg(max("o_orderkey")).head.getLong(0)
       TableFormat.append(orders.filter(col("o_orderkey") % 2 === 1), src,
         statsCol = Some("o_orderkey"))
-      val mv = Files.createTempDirectory("graft_mv_view").toString
+      val mv = Memo.tempRoot("mv_view")
       create(s, mv, src, Seq("o_orderstatus"), Seq(
         MvAgg("count_star", "*", "n"),
         MvAgg("sum", "o_orderkey", "sum_key"),
         MvAgg("avg", "o_orderkey", "avg_key")))
-      val mm = Files.createTempDirectory("graft_mv_view_mm").toString
+      val mm = Memo.tempRoot("mv_view_mm")
       create(s, mm, src, Seq("o_orderstatus", "o_orderpriority"), Seq(
         MvAgg("count_star", "*", "n"),
         MvAgg("min", "o_orderkey", "min_key"),
         MvAgg("max", "o_orderkey", "max_key")))
-      val nv = Files.createTempDirectory("graft_mv_view_ndv").toString
+      val nv = Memo.tempRoot("mv_view_ndv")
       create(s, nv, src, Seq("o_orderstatus"), Seq(
         MvAgg("count_star", "*", "n"),
         MvAgg("approx_count_distinct", "o_orderkey", "keys_est")))
-      val fl = Files.createTempDirectory("graft_mv_view_flt").toString
+      val fl = Memo.tempRoot("mv_view_flt")
       create(s, fl, src, Seq("o_orderpriority"), Seq(
         MvAgg("count_star", "*", "n"),
         MvAgg("sum", "o_orderkey % 100", "sum_mod")),
@@ -987,15 +981,15 @@ object MatView {
       // star-join view: orders ⋈ customer ⋈ nation, rolled up by nation
       // — the dims land ONCE as format tables and never move, so every
       // later refresh takes the fact-delta path against their pins
-      val custD = Files.createTempDirectory("graft_mv_dim_cust").toString
+      val custD = Memo.tempRoot("mv_dim_cust")
       TableFormat.append(Sources.table(s, dir, "customer")
         .select("c_custkey", "c_nationkey"), custD,
         statsCol = Some("c_custkey"))
-      val natD = Files.createTempDirectory("graft_mv_dim_nat").toString
+      val natD = Memo.tempRoot("mv_dim_nat")
       TableFormat.append(Sources.table(s, dir, "nation")
         .select("n_nationkey", "n_name"), natD,
         statsCol = Some("n_nationkey"))
-      val jv = Files.createTempDirectory("graft_mv_view_join").toString
+      val jv = Memo.tempRoot("mv_view_join")
       create(s, jv, src, Seq("n_name"), Seq(
         MvAgg("count_star", "*", "n"),
         MvAgg("sum", "o_orderkey % 1000", "sum_mod")),
@@ -1018,7 +1012,7 @@ object MatView {
       refresh(s, fl)
       refresh(s, jv) // dims unmoved: the fact-delta path through joins
       (src, mv, mm, nv, fl, jv)
-    })
+    }
 
   private def qMvIncremental(s: SparkSession, dir: String): DataFrame = {
     val (_, mv, _, _, _, _) = landedMv(s, dir)
@@ -1063,16 +1057,14 @@ object MatView {
   /** The same lifecycle driven ENTIRELY through SQL: CREATE
     * MATERIALIZED VIEW, source DML, REFRESH, and a `graft_mv` read.
     */
-  private val sqlCache = TrieMap.empty[(SparkSession, String), String]
-
   private def landedSqlMv(s: SparkSession, dir: String): String =
-    sqlCache.getOrElseUpdate((s, dir), {
-      val src = Files.createTempDirectory("graft_mv_sqlsrc").toString
+    Memo.session("mv_sql", s, dir) {
+      val src = Memo.tempRoot("mv_sqlsrc")
       val orders = Sources.table(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus")
       TableFormat.append(orders.filter(col("o_orderkey") % 2 === 1), src,
         statsCol = Some("o_orderkey"))
-      val mv = Files.createTempDirectory("graft_mv_sqlview").toString
+      val mv = Memo.tempRoot("mv_sqlview")
       s.sql(s"""CREATE MATERIALIZED VIEW '$mv' AS
         SELECT o_orderstatus, count(*) AS n, sum(o_orderkey) AS sum_key
         FROM '$src' GROUP BY o_orderstatus""")
@@ -1080,16 +1072,11 @@ object MatView {
         statsCol = Some("o_orderkey"))
       s.sql(s"REFRESH MATERIALIZED VIEW '$mv'")
       mv
-    })
+    }
 
   private def qMvSql(s: SparkSession, dir: String): DataFrame = {
     val mv = landedSqlMv(s, dir)
     s.sql(s"SELECT * FROM graft_mv('$mv') ORDER BY o_orderstatus")
-  }
-
-  private[graft] def clearMemos(): Unit = {
-    mvCache.keys.toList.foreach(mvCache.remove)
-    sqlCache.keys.toList.foreach(sqlCache.remove)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =

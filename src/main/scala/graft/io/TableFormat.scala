@@ -3,12 +3,13 @@ package graft.io
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 
-import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+
+import graft.Memo
 
 /** A rewrite commit lost its optimistic-concurrency check: a concurrent
   * commit replaced data this rewrite read, or landed rows its keys
@@ -4147,12 +4148,9 @@ object TableFormat {
     * [[graft.ops.TextOps]]' shard memo (the snapshots are immutable; the
     * bench pays the land exactly once per pass owner).
     */
-  private val tableCache = TrieMap.empty[(SparkSession, String), String]
-
   private def landedTable(s: SparkSession, dir: String): String =
-    tableCache.getOrElseUpdate((s, dir), {
-      val root = Files.createTempDirectory("graft_table_snapshot")
-        .toString
+    Memo.session("tf_table", s, dir) {
+      val root = Memo.tempRoot("table_snapshot")
       val orders = Sources.table(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"))
       // v0: two thirds of the table; v1 appends the remaining third —
@@ -4161,7 +4159,7 @@ object TableFormat {
       append(orders.filter(col("o_orderkey") % 3 =!= 0), root)
       append(orders.filter(col("o_orderkey") % 3 === 0), root)
       root
-    })
+    }
 
   /** Snapshot-N vs snapshot-N−1 status counts through the manifest log:
     * proves append atomicity + time travel end-to-end (v0 read AFTER v1
@@ -4181,12 +4179,6 @@ object TableFormat {
       .orderBy("o_orderstatus")
   }
 
-  /** Landed RANGE-split snapshot table: orders appended as two key
-    * ranges (≤ mid, > mid) with o_orderkey stats in the manifest —
-    * the layout where manifest-level skipping has something to skip.
-    */
-  private val rangeCache = TrieMap.empty[(SparkSession, String), (String, Long)]
-
   /** (orders frame, lo, hi, mid) shared by the range/merge fixtures —
     * integer midpoint, exact in both engines, so every oracle recomputes
     * the same split from `orders` alone. One derivation site: the
@@ -4202,17 +4194,21 @@ object TableFormat {
     (orders, lo, hi, (lo + hi) / 2)
   }
 
+  /** Landed RANGE-split snapshot table: orders appended as two key
+    * ranges (≤ mid, > mid) with o_orderkey stats in the manifest —
+    * the layout where manifest-level skipping has something to skip.
+    */
   private def landedRangeTable(s: SparkSession,
                                dir: String): (String, Long) =
-    rangeCache.getOrElseUpdate((s, dir), {
-      val root = Files.createTempDirectory("graft_table_range").toString
+    Memo.session("tf_range", s, dir) {
+      val root = Memo.tempRoot("table_range")
       val (orders, _, _, mid) = orderKeySplit(s, dir)
       append(orders.filter(col("o_orderkey") <= mid), root,
         statsCol = Some("o_orderkey"))
       append(orders.filter(col("o_orderkey") > mid), root,
         statsCol = Some("o_orderkey"))
       (root, mid)
-    })
+    }
 
   /** Range read through the manifest zone maps: status counts of the
     * lower key half, read with `range` pruning so the upper dir is
@@ -4236,11 +4232,9 @@ object TableFormat {
     * status 'N' (matches no dir). Key arithmetic only, so the oracle
     * recomputes the merged table from `orders` alone.
     */
-  private val mergeCache = TrieMap.empty[(SparkSession, String), String]
-
   private def landedMergedTable(s: SparkSession, dir: String): String =
-    mergeCache.getOrElseUpdate((s, dir), {
-      val root = Files.createTempDirectory("graft_table_merge").toString
+    Memo.session("tf_merge", s, dir) {
+      val root = Memo.tempRoot("table_merge")
       val (orders, _, hi, mid) = orderKeySplit(s, dir)
       append(orders.filter(col("o_orderkey") <= mid), root,
         statsCol = Some("o_orderkey"))
@@ -4257,7 +4251,7 @@ object TableFormat {
             lit("N").as("o_orderstatus")))
       merge(s, root, updates, "o_orderkey", statsCol = Some("o_orderkey"))
       root
-    })
+    }
 
   /** Status counts of the head snapshot AFTER the copy-on-write upsert —
     * proves matched-replace + not-matched-insert end-to-end through the
@@ -4315,11 +4309,9 @@ object TableFormat {
     * arithmetic only, so the oracle recomputes the evolved head from
     * `orders` alone.
     */
-  private val evoCache = TrieMap.empty[(SparkSession, String), String]
-
   private def landedEvolvedTable(s: SparkSession, dir: String): String =
-    evoCache.getOrElseUpdate((s, dir), {
-      val root = Files.createTempDirectory("graft_table_evo").toString
+    Memo.session("tf_evo", s, dir) {
+      val root = Memo.tempRoot("table_evo")
       val orders = Sources.table(s, dir, "orders")
       append(orders.filter(col("o_orderkey") % 2 === 1)
         .select(col("o_orderkey"), col("o_orderstatus")), root)
@@ -4327,7 +4319,7 @@ object TableFormat {
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_orderpriority")), root)
       root
-    })
+    }
 
   /** Aggregate over the EVOLVED head: per-status row counts plus how
     * many rows carry the late-added column (exactly the even-key half —
@@ -4350,11 +4342,9 @@ object TableFormat {
     * the mask. Key arithmetic only, so the oracle recomputes the
     * effective head from `orders` alone.
     */
-  private val dvCache = TrieMap.empty[(SparkSession, String), String]
-
   private def landedDvTable(s: SparkSession, dir: String): String =
-    dvCache.getOrElseUpdate((s, dir), {
-      val root = Files.createTempDirectory("graft_table_dv").toString
+    Memo.session("tf_dv", s, dir) {
+      val root = Memo.tempRoot("table_dv")
       val (orders, _, _, mid) = orderKeySplit(s, dir)
       append(orders.filter(col("o_orderkey") <= mid), root,
         statsCol = Some("o_orderkey"))
@@ -4364,7 +4354,7 @@ object TableFormat {
         orders.filter(col("o_orderkey") % 13 === 0).select("o_orderkey"),
         "o_orderkey")
       root
-    })
+    }
 
   /** Status counts of the head AFTER a merge-on-read delete — proves the
     * deletion-vector read path (sidecar anti-join) end-to-end through
@@ -4435,11 +4425,9 @@ object TableFormat {
     * the insert-as-commit semantics; the oracle recomputes from
     * `orders`, so a dropped or doubled insert turns this row red.
     */
-  private val dmlCache = TrieMap.empty[(SparkSession, String), String]
-
   private def landedSqlDmlTable(s: SparkSession, dir: String): String =
-    dmlCache.getOrElseUpdate((s, dir), {
-      val root = Files.createTempDirectory("graft_table_dml").toString + "/t"
+    Memo.session("tf_dml", s, dir) {
+      val root = Memo.tempRoot("table_dml") + "/t"
       val (orders, _, _, mid) = orderKeySplit(s, dir)
       orders.createOrReplaceTempView("graft_dml_src")
       s.sql("DROP TABLE IF EXISTS graft_sql_dml_orders")
@@ -4454,7 +4442,7 @@ object TableFormat {
            |SELECT o_orderkey, o_orderstatus FROM graft_dml_src
            |WHERE o_orderkey > $mid""".stripMargin)
       root
-    })
+    }
 
   private def qTableSqlInsert(s: SparkSession, dir: String): DataFrame = {
     landedSqlDmlTable(s, dir)
@@ -4470,12 +4458,9 @@ object TableFormat {
     * and the oracle replays the same edits over `orders` in SQL, so a
     * dropped, doubled, or mis-scoped edit turns the row red.
     */
-  private val dml2Cache = TrieMap.empty[(SparkSession, String), String]
-
   private def landedSqlDml2Table(s: SparkSession, dir: String): String =
-    dml2Cache.getOrElseUpdate((s, dir), {
-      val root = Files.createTempDirectory("graft_table_dml2")
-        .toString + "/t"
+    Memo.session("tf_dml2", s, dir) {
+      val root = Memo.tempRoot("table_dml2") + "/t"
       val (orders, _, _, mid) = orderKeySplit(s, dir)
       orders.createOrReplaceTempView("graft_dml2_src")
       s.sql("DROP TABLE IF EXISTS graft_sql_dml2_orders")
@@ -4494,7 +4479,7 @@ object TableFormat {
         """UPDATE graft_sql_dml2_orders SET o_orderstatus = 'X'
           |WHERE o_orderkey % 23 = 0""".stripMargin)
       root
-    })
+    }
 
   /** COMPLEMENT DML end-to-end (r19 — [[deleteAnti]]/[[updateAnti]] via
     * the anti commands in [[graft.io.GraftDmlRule]]): a NOT EXISTS
@@ -4505,12 +4490,9 @@ object TableFormat {
     * statements in DuckDB, whose NOT IN / NOT EXISTS three-valued
     * logic this family is spec-pinned against (`AntiDmlSpec`).
     */
-  private val antiCache = TrieMap.empty[(SparkSession, String), String]
-
   private def landedSqlAntiTable(s: SparkSession, dir: String): String =
-    antiCache.getOrElseUpdate((s, dir), {
-      val root = Files.createTempDirectory("graft_table_anti")
-        .toString + "/t"
+    Memo.session("tf_anti", s, dir) {
+      val root = Memo.tempRoot("table_anti") + "/t"
       Sources.table(s, dir, "orders")
         .createOrReplaceTempView("graft_anti_orders_src")
       Sources.table(s, dir, "customer")
@@ -4533,7 +4515,7 @@ object TableFormat {
           |  (SELECT c_custkey FROM graft_anti_customer
           |   WHERE c_acctbal > 0)""".stripMargin)
       root
-    })
+    }
 
   private def qTableSqlAnti(s: SparkSession, dir: String): DataFrame = {
     landedSqlAntiTable(s, dir)
@@ -4550,13 +4532,10 @@ object TableFormat {
     * value 0, not NULL (the classic decorrelation count bug, pinned in
     * `ScalarUpdateSpec`). The oracle replays with a left join.
     */
-  private val scalUpdCache = TrieMap.empty[(SparkSession, String), String]
-
   private def landedSqlScalarUpdTable(s: SparkSession, dir: String)
       : String =
-    scalUpdCache.getOrElseUpdate((s, dir), {
-      val root = Files.createTempDirectory("graft_table_scalupd")
-        .toString + "/t"
+    Memo.session("tf_scalUpd", s, dir) {
+      val root = Memo.tempRoot("table_scalupd") + "/t"
       Sources.table(s, dir, "orders")
         .createOrReplaceTempView("graft_scalupd_orders_src")
       Sources.table(s, dir, "lineitem")
@@ -4582,7 +4561,7 @@ object TableFormat {
           |  WHERE l.l_orderkey = graft_sql_scalupd_orders.o_orderkey)
           |  > 5""".stripMargin)
       root
-    })
+    }
 
   private def qTableSqlScalarUpd(s: SparkSession, dir: String)
       : DataFrame = {
@@ -4601,13 +4580,10 @@ object TableFormat {
     * retags negative-balance customers' remaining 'F' orders. The
     * oracle replays both row-level.
     */
-  private val composedCache = TrieMap.empty[(SparkSession, String), String]
-
   private def landedSqlComposedTable(s: SparkSession, dir: String)
       : String =
-    composedCache.getOrElseUpdate((s, dir), {
-      val root = Files.createTempDirectory("graft_table_cmp")
-        .toString + "/t"
+    Memo.session("tf_composed", s, dir) {
+      val root = Memo.tempRoot("table_cmp") + "/t"
       Sources.table(s, dir, "orders")
         .createOrReplaceTempView("graft_cmp_orders_src")
       Sources.table(s, dir, "customer")
@@ -4631,7 +4607,7 @@ object TableFormat {
           |    AND c.c_acctbal < 0)
           |  AND o_orderstatus = 'F'""".stripMargin)
       root
-    })
+    }
 
   private def qTableSqlComposed(s: SparkSession, dir: String)
       : DataFrame = {
@@ -4653,12 +4629,9 @@ object TableFormat {
     * value-identical iff the reader's scan-time promotion of the
     * narrow files is exact.
     */
-  private val widenCache = TrieMap.empty[(SparkSession, String), String]
-
   private def landedSqlWidenTable(s: SparkSession, dir: String): String =
-    widenCache.getOrElseUpdate((s, dir), {
-      val root = Files.createTempDirectory("graft_table_widen")
-        .toString + "/t"
+    Memo.session("tf_widen", s, dir) {
+      val root = Memo.tempRoot("table_widen") + "/t"
       Sources.table(s, dir, "orders")
         .createOrReplaceTempView("graft_widen_orders_src")
       s.sql("DROP TABLE IF EXISTS graft_sql_widen_orders")
@@ -4676,7 +4649,7 @@ object TableFormat {
       s.sql("DELETE FROM graft_sql_widen_orders WHERE k % 19 = 0")
       s.sql("UPDATE graft_sql_widen_orders SET v = -1 WHERE k % 23 = 0")
       root
-    })
+    }
 
   private def qTableSqlWiden(s: SparkSession, dir: String): DataFrame = {
     landedSqlWidenTable(s, dir)
@@ -4694,12 +4667,9 @@ object TableFormat {
     * doorways, so a drifted MERGE translation turns exactly one of the
     * two rows red.
     */
-  private val mergeSqlCache = TrieMap.empty[(SparkSession, String), String]
-
   private def landedSqlMergeTable(s: SparkSession, dir: String): String =
-    mergeSqlCache.getOrElseUpdate((s, dir), {
-      val root = Files.createTempDirectory("graft_table_mrgsql")
-        .toString + "/t"
+    Memo.session("tf_mergeSql", s, dir) {
+      val root = Memo.tempRoot("table_mrgsql") + "/t"
       val (orders, _, hi, mid) = orderKeySplit(s, dir)
       orders.createOrReplaceTempView("graft_mrgsql_src")
       val updates = orders
@@ -4722,7 +4692,7 @@ object TableFormat {
           |WHEN MATCHED THEN UPDATE SET *
           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
       root
-    })
+    }
 
   private def qTableSqlMerge(s: SparkSession, dir: String): DataFrame = {
     landedSqlMergeTable(s, dir)
@@ -4742,12 +4712,9 @@ object TableFormat {
     * 'Z' source rows match no clause and vanish. The oracle replays
     * the same decision table over `orders` in SQL.
     */
-  private val mergeCondCache = TrieMap.empty[(SparkSession, String), String]
-
   private def landedSqlMergeCondTable(s: SparkSession, dir: String): String =
-    mergeCondCache.getOrElseUpdate((s, dir), {
-      val root = Files.createTempDirectory("graft_table_mrgcond")
-        .toString + "/t"
+    Memo.session("tf_mergeCond", s, dir) {
+      val root = Memo.tempRoot("table_mrgcond") + "/t"
       val (orders, _, hi, mid) = orderKeySplit(s, dir)
       val delta = orders.filter(col("o_orderkey") % 13 === 0)
         .select(col("o_orderkey"), lit("D").as("op"), lit("x").as("tag"))
@@ -4780,7 +4747,7 @@ object TableFormat {
           |  INSERT (o_orderkey, o_orderstatus) VALUES (s.o_orderkey, 'N')
           |""".stripMargin)
       root
-    })
+    }
 
   private def qTableSqlMergeCond(s: SparkSession, dir: String): DataFrame = {
     val root = landedSqlMergeCondTable(s, dir)
@@ -4804,13 +4771,10 @@ object TableFormat {
     * decision table declaratively; `count(o_totalprice)` pins the
     * NULL backfill.
     */
-  private val mergeScalarCache = TrieMap.empty[(SparkSession, String), String]
-
   private def landedSqlMergeScalarTable(s: SparkSession, dir: String)
       : String =
-    mergeScalarCache.getOrElseUpdate((s, dir), {
-      val root = Files.createTempDirectory("graft_table_mrgscal")
-        .toString + "/t"
+    Memo.session("tf_mergeScalar", s, dir) {
+      val root = Memo.tempRoot("table_mrgscal") + "/t"
       val orders = Sources.table(s, dir, "orders")
       orders.createOrReplaceTempView("graft_mrgscal_src")
       val hi = orders.agg(max(col("o_orderkey"))).head().getLong(0)
@@ -4839,7 +4803,7 @@ object TableFormat {
           |  INSERT (o_orderkey, o_custkey)
           |  VALUES (s.o_orderkey, s.o_custkey)""".stripMargin)
       root
-    })
+    }
 
   private def qTableSqlMergeScalar(s: SparkSession, dir: String)
       : DataFrame = {
@@ -4859,12 +4823,9 @@ object TableFormat {
     * 'K', every other unmatched row deletes. The oracle replays the
     * decision table over `orders` declaratively.
     */
-  private val mergeSrcCache = TrieMap.empty[(SparkSession, String), String]
-
   private def landedSqlMergeSrcTable(s: SparkSession, dir: String): String =
-    mergeSrcCache.getOrElseUpdate((s, dir), {
-      val root = Files.createTempDirectory("graft_table_mrgsrc")
-        .toString + "/t"
+    Memo.session("tf_mergeSrc", s, dir) {
+      val root = Memo.tempRoot("table_mrgsrc") + "/t"
       val (orders, _, hi, _) = orderKeySplit(s, dir)
       val delta = orders.filter(col("o_orderkey") % 3 === 0)
         .select(col("o_orderkey"))
@@ -4890,7 +4851,7 @@ object TableFormat {
           |WHEN NOT MATCHED BY SOURCE THEN DELETE
           |""".stripMargin)
       root
-    })
+    }
 
   private def qTableSqlMergeSrc(s: SparkSession, dir: String): DataFrame = {
     val root = landedSqlMergeSrcTable(s, dir)
@@ -4919,13 +4880,10 @@ object TableFormat {
     * ([[MergeIntoGraftTableCondCommand]], one applyDelta). The oracle
     * replays the evolved decision table over `orders`.
     */
-  private val mergeEvolCache = TrieMap.empty[(SparkSession, String), String]
-
   private def landedSqlMergeEvolTable(s: SparkSession, dir: String)
       : String =
-    mergeEvolCache.getOrElseUpdate((s, dir), {
-      val root = Files.createTempDirectory("graft_table_mrgevol")
-        .toString + "/t"
+    Memo.session("tf_mergeEvol", s, dir) {
+      val root = Memo.tempRoot("table_mrgevol") + "/t"
       val (orders, _, hi, mid) = orderKeySplit(s, dir)
       val delta = orders
         .filter(col("o_orderkey") % 7 === 0 && col("o_orderkey") <= mid)
@@ -4951,7 +4909,7 @@ object TableFormat {
           |WHEN MATCHED THEN UPDATE SET *
           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
       root
-    })
+    }
 
   /** COMPOSITE-key MERGE end-to-end (r18): the table is keyed on
     * (l_orderkey, l_linenumber) — including DUPLICATE pairs, which the
@@ -4963,13 +4921,10 @@ object TableFormat {
     * row sharing ONE component. The oracle replays row-level over
     * lineitem.
     */
-  private val mergeMultiCache = TrieMap.empty[(SparkSession, String), String]
-
   private def landedSqlMergeMultiTable(s: SparkSession, dir: String)
       : String =
-    mergeMultiCache.getOrElseUpdate((s, dir), {
-      val root = Files.createTempDirectory("graft_table_mrgmulti")
-        .toString + "/t"
+    Memo.session("tf_mergeMulti", s, dir) {
+      val root = Memo.tempRoot("table_mrgmulti") + "/t"
       val li = Sources.table(s, dir, "lineitem")
       val hi = li.agg(max(col("l_orderkey"))).head.getLong(0)
       // deduped: a duplicate source tuple would legitimately refuse
@@ -5004,7 +4959,7 @@ object TableFormat {
           |  INSERT (l_orderkey, l_linenumber, qty)
           |  VALUES (s.l_orderkey, s.l_linenumber, s.dq)""".stripMargin)
       root
-    })
+    }
 
   /** COLUMN MAPPING end-to-end (r19): the table lands with three
     * columns, RENAMES its key (metadata-only — the data files keep the
@@ -5014,12 +4969,9 @@ object TableFormat {
     * physical translation on the read, prune, and write paths at once.
     * The oracle replays the surviving rows over raw orders.
     */
-  private val renameCache = TrieMap.empty[(SparkSession, String), String]
-
   private def landedSqlRenameTable(s: SparkSession, dir: String): String =
-    renameCache.getOrElseUpdate((s, dir), {
-      val root = Files.createTempDirectory("graft_table_rename")
-        .toString + "/t"
+    Memo.session("tf_rename", s, dir) {
+      val root = Memo.tempRoot("table_rename") + "/t"
       Sources.table(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_orderpriority"))
@@ -5037,7 +4989,7 @@ object TableFormat {
       s.sql("UPDATE graft_sql_ren_orders SET o_orderstatus = 'R' " +
         "WHERE okey % 17 = 0")
       root
-    })
+    }
 
   private def qTableSqlRename(s: SparkSession, dir: String): DataFrame = {
     landedSqlRenameTable(s, dir)
@@ -5070,24 +5022,6 @@ object TableFormat {
         |  CAST(sum(o_tag) AS BIGINT) AS tag_sum
         |FROM graft_sql_mergee_view
         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
-  }
-
-  private[graft] def clearMemos(): Unit = {
-    tableCache.keys.toList.foreach(tableCache.remove)
-    rangeCache.keys.toList.foreach(rangeCache.remove)
-    mergeCache.keys.toList.foreach(mergeCache.remove)
-    evoCache.keys.toList.foreach(evoCache.remove)
-    dvCache.keys.toList.foreach(dvCache.remove)
-    dmlCache.keys.toList.foreach(dmlCache.remove)
-    dml2Cache.keys.toList.foreach(dml2Cache.remove)
-    mergeSqlCache.keys.toList.foreach(mergeSqlCache.remove)
-    mergeCondCache.keys.toList.foreach(mergeCondCache.remove)
-    mergeSrcCache.keys.toList.foreach(mergeSrcCache.remove)
-    mergeEvolCache.keys.toList.foreach(mergeEvolCache.remove)
-    mergeMultiCache.keys.toList.foreach(mergeMultiCache.remove)
-    renameCache.keys.toList.foreach(renameCache.remove)
-    widenCache.keys.toList.foreach(widenCache.remove)
-    mergeScalarCache.keys.toList.foreach(mergeScalarCache.remove)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =

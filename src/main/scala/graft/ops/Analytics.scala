@@ -776,14 +776,10 @@ object Analytics {
     * physical plan. Planning is FORCED inside the conf window (plans
     * are lazy; restoring the conf first would optimize without CBO).
     */
-  private val cboCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Unit]
-
   private def landedCboTables(s: SparkSession, dir: String): Unit =
-    cboCache.getOrElseUpdate((s, dir), {
+    graft.Memo.session("cbo5_tables", s, dir) {
       def land(name: String, stats: Seq[String], ndv: Seq[String]): Unit = {
-        val root = java.nio.file.Files
-          .createTempDirectory(s"graft_cbo5_$name").toString + "/t"
+        val root = graft.Memo.tempRoot(s"cbo5_$name") + "/t"
         // histograms on the NDV columns (r19): equi-join cardinality
         // and skewed-filter selectivity estimate off the real value
         // distribution; unsupported types skip inside
@@ -800,7 +796,7 @@ object Analytics {
       land("lineitem", Seq("l_orderkey", "l_shipdate"),
         Seq("l_orderkey", "l_suppkey", "l_partkey"))
       land("part", Seq("p_partkey"), Seq("p_partkey"))
-    })
+    }
 
   /** Fixture doorway for [[graft.SparkEntry.prepare]] (r18 VERDICT
     * nit): landing the 7 format-backed CBO tables is one-time layout,

@@ -1,13 +1,12 @@
 package graft.ops
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
+import graft.Memo
 import graft.io.Sources
 
 /** Deduplication suite for the training-data pipeline tier: exact
@@ -205,44 +204,28 @@ object Dedup {
     * a few hundred bytes/doc, far smaller than the corpus text, so
     * MEMORY_AND_DISK is safe at any scale the corpus itself fits.
     */
-  private val bandCache = TrieMap.empty[(SparkSession, String), DataFrame]
-
   private[graft] def cachedBands(s: SparkSession, dir: String): DataFrame =
-    bandCache.getOrElseUpdate((s, dir),
-      bandRows(signatures(s, dir)).persist(StorageLevel.MEMORY_AND_DISK))
+    Memo.batch("dedup_bands", s, dir)(
+      Memo.persist(bandRows(signatures(s, dir))))
 
-  /** Release every memoized band-row cache: unpersist the blocks and drop
-    * the session references. Lifecycle contract (round-3 ADVICE): the cache
-    * is keyed by (session, dir) and NEVER self-expires — results go stale
-    * if the data under `dir` is rewritten within one session, and the
-    * persisted blocks plus session references live until this is called.
-    * Call it when a batch of dedup queries over one corpus is done (the
+  /** Release every batch memo and persisted frame ([[graft.Memo.release]]).
+    * Call it when a batch of queries over one corpus is done (the
     * Verify/Bench mains do); long-lived sessions embedding this library
     * must do the same.
     */
-  def clearCaches(): Unit = {
-    // blocking: this is the batch-lifecycle boundary, and a non-blocking
-    // release defers block deletion into whatever runs next (round-7 bench:
-    // the deferred churn inflated the head of the following pass 2-4×)
-    Seq(bandCache, repBandCache, dupPairCache, grpCache, embedBandCache,
-        gramCache, embedPairCache, candPairCache)
-      .foreach { cache =>
-      cache.keys.toList.foreach { k =>
-        cache.remove(k).foreach(_.unpersist(blocking = true))
-      }
+  def clearCaches(): Unit = Memo.release()
+
+  /** (doc_id, rep) exact-dup group map — ONE corpus scan + one shuffle on
+    * the 16-byte md5 (never the text), persisted at 16 bytes/row and
+    * shared by [[repBands]] and [[dupPairs]] so neither re-reads the
+    * corpus.
+    */
+  private def exactGroups(s: SparkSession, dir: String): DataFrame =
+    Memo.batch("dedup_exact_groups", s, dir) {
+      val w = Window.partitionBy(unhex(md5(col("text"))))
+      Memo.persist(docs(s, dir)
+        .select(col("doc_id"), min(col("doc_id")).over(w).as("rep")))
     }
-    labelsCache.keys.toList.foreach { k =>
-      labelsCache.remove(k).foreach(_.unpersist(blocking = true))
-    }
-    // also release the per-call persisted frames other operators registered
-    // (surrogateKeysScaled, qWinNtileScaled — round-4 ADVICE) and drop the
-    // similarity memos so re-use after a release rebuilds cleanly
-    graft.Caches.releaseAll()
-    Similarity.clearMemos()
-    SimJoin.clearMemos()
-    Multimodal.clearMemos()
-    TextOps.clearMemos()
-  }
 
   /** Band rows of exact-dup group REPRESENTATIVES only (min doc_id per
     * md5(text)), lazily persisted like [[cachedBands]]. Pre-collapsing
@@ -254,29 +237,11 @@ object Dedup {
     * relation is re-attached linearly by [[dupPairs]] where cluster
     * semantics need it.
     */
-  private val repBandCache = TrieMap.empty[(SparkSession, String), DataFrame]
-  private val dupPairCache = TrieMap.empty[(SparkSession, String), DataFrame]
-  private val grpCache = TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** (doc_id, rep) exact-dup group map — ONE corpus scan + one shuffle on
-    * the 16-byte md5 (never the text), persisted at 16 bytes/row and
-    * shared by [[repBands]] and [[dupPairs]] so neither re-reads the
-    * corpus.
-    */
-  private def exactGroups(s: SparkSession, dir: String): DataFrame =
-    grpCache.getOrElseUpdate((s, dir), {
-      val w = Window.partitionBy(unhex(md5(col("text"))))
-      docs(s, dir)
-        .select(col("doc_id"), min(col("doc_id")).over(w).as("rep"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    })
-
   private[graft] def repBands(s: SparkSession, dir: String): DataFrame =
-    repBandCache.getOrElseUpdate((s, dir),
+    Memo.batch("dedup_rep_bands", s, dir)(Memo.persist(
       cachedBands(s, dir)
         .join(exactGroups(s, dir).filter(col("doc_id") === col("rep"))
-          .select("doc_id"), Seq("doc_id"), "left_semi")
-        .persist(StorageLevel.MEMORY_AND_DISK))
+          .select("doc_id"), Seq("doc_id"), "left_semi")))
 
   /** (rep, member) pairs for BANDABLE exact-dup members (identical text ⇒
     * identical signature, so a member is bandable iff its rep is): the
@@ -286,13 +251,12 @@ object Dedup {
     * with no byte-identical dups), never quadratic in group size.
     */
   private[graft] def dupPairs(s: SparkSession, dir: String): DataFrame =
-    dupPairCache.getOrElseUpdate((s, dir),
+    Memo.batch("dedup_dup_pairs", s, dir)(Memo.persist(
       exactGroups(s, dir)
         .filter(col("doc_id") =!= col("rep"))
         .join(cachedBands(s, dir).select("doc_id").distinct(),
           Seq("doc_id"), "left_semi")
-        .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))))
 
   /** Per-bucket size cap for the LSH pair expansion. The in-bucket pair
     * set is quadratic by nature; exact-dup pre-collapse removes the one
@@ -345,11 +309,9 @@ object Dedup {
     * The pair frame is two longs per candidate pair — persist-tiny at
     * any corpus scale LSH is usable at. Released via [[clearCaches]].
     */
-  private val candPairCache = TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def candidatePairs(s: SparkSession, dir: String): DataFrame =
-    candPairCache.getOrElseUpdate((s, dir),
-      bucketPairs(repBands(s, dir)).persist(StorageLevel.MEMORY_AND_DISK))
+    Memo.batch("dedup_cand_pairs", s, dir)(
+      Memo.persist(bucketPairs(repBands(s, dir))))
 
   /** The full dup-graph pair set: rep-level LSH candidates plus the
     * linear (rep, member) exact-dup edges — connected components over
@@ -478,23 +440,15 @@ object Dedup {
     * benched slower (InMemoryRelation re-plan overhead per round). Edges
     * are cached — every round re-reads them.
     *
-    * Checkpoint durability: `localCheckpoint` stores blocks on executors —
-    * fast, but an executor loss mid-loop kills the job. When the session
-    * has a reliable checkpoint dir configured
-    * (`sparkContext.setCheckpointDir`, e.g. an HDFS/S3 path on a real
-    * cluster), [[checkpointLabels]] uses a reliable `checkpoint()` instead,
-    * which survives executor loss — the 100 TB setting. Locally no dir is
-    * set and the fast path applies. Rounds are capped at [[MaxCcRounds]]:
+    * Checkpoint durability: see [[graft.Memo.checkpoint]] — reliable when
+    * the context has a checkpoint dir, local (fast, lost with an executor)
+    * otherwise; the blocks go at the next batch release. Rounds are capped
+    * at [[MaxCcRounds]]:
     * min-label propagation converges in O(diameter) rounds and LSH near-dup
     * graphs are micro-cliques, so a 50-round graph is a data bug worth
     * failing loudly on rather than looping forever.
     */
   private[graft] val MaxCcRounds = 50
-
-  private def checkpointLabels(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint()
-    else df.localCheckpoint()
 
   /** The min-label propagation loop itself, over an arbitrary graph:
     * `edges` must carry both directions as (src, dst); `init` is the
@@ -514,7 +468,7 @@ object Dedup {
       edges: DataFrame, init: DataFrame,
       maxRounds: Int = MaxCcRounds,
       escalate: Boolean = true): (DataFrame, Int) = {
-    var labels = checkpointLabels(init)
+    var labels = Memo.checkpoint(init)
     var changed = 1L
     var round = 0
     while (changed > 0) {
@@ -530,7 +484,7 @@ object Dedup {
       val prop = edges.join(labels, col("dst") === col("node"))
         .groupBy(col("src"))
         .agg(min(col("label")).as("nb_min"))
-      val next = checkpointLabels(
+      val next = Memo.checkpoint(
         labels.join(prop, col("node") === col("src"), "left")
           .select(col("node"), col("label"),
             least(col("label"), coalesce(col("nb_min"), col("label")))
@@ -621,7 +575,7 @@ object Dedup {
     val fromInit = init.filter(col("label") =!= col("node"))
       .select(greatest(col("node"), col("label")).as("hi"),
         least(col("node"), col("label")).as("lo"))
-    var e = checkpointLabels(
+    var e = Memo.checkpoint(
       edges.select(greatest(col("src"), col("dst")).as("hi"),
         least(col("src"), col("dst")).as("lo"))
         .filter(col("hi") =!= col("lo"))
@@ -641,7 +595,7 @@ object Dedup {
       // re-count of e) per round. Both sets are distinct by
       // construction, so next == e  ⇔  |next| == |e| ∧ next ⊆ e —
       // identical convergence semantics.
-      val flagged = checkpointLabels(
+      val flagged = Memo.checkpoint(
         smallStar(largeStar(e))
           .join(e.select(col("hi"), col("lo"), lit(1).as("seen")),
             Seq("hi", "lo"), "left"))
@@ -663,10 +617,8 @@ object Dedup {
     * (session, dir) — shared by [[qDedupComponents]] and the leakage-safe
     * split, released through [[clearCaches]] like the band rows.
     */
-  private val labelsCache = TrieMap.empty[(SparkSession, String), DataFrame]
-
   private[graft] def componentLabels(s: SparkSession, dir: String): DataFrame =
-    labelsCache.getOrElseUpdate((s, dir), {
+    Memo.batch("dedup_labels", s, dir) {
       // both edge directions via one explode — a union of two selects over
       // the pair pipeline would recompute the whole LSH join per branch
       val edges = componentPairs(s, dir)
@@ -686,9 +638,9 @@ object Dedup {
         .select(col("node"), least(col("node"), col("m")).as("label"))
       val (labels, _) = propagateMinLabels(edges, init)
       edges.unpersist()
-      labels.select(col("node").as("doc_id"), col("label").as("component_id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    })
+      Memo.persist(labels.select(col("node").as("doc_id"),
+        col("label").as("component_id")))
+    }
 
   private def qDedupComponents(s: SparkSession, dir: String): DataFrame =
     componentLabels(s, dir).orderBy("doc_id")
@@ -946,21 +898,18 @@ object Dedup {
     * aggregations, so re-reading from local disk beats evicting
     * execution memory). Released via [[clearCaches]].
     */
-  private val gramCache = TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def kgramRows(s: SparkSession, dir: String): DataFrame =
-    gramCache.getOrElseUpdate((s, dir), {
+    Memo.batch("dedup_kgrams", s, dir) {
       val ws = col("ws")
       val idx = when(size(ws) >= SubstringK,
         sequence(lit(1), size(ws) - (SubstringK - 1)))
         .otherwise(array().cast("array<int>"))
-      docs(s, dir)
+      Memo.persist(docs(s, dir)
         .select(col("doc_id"), TextOps.tokens(col("text")).as("ws"))
         .select(col("doc_id"), posexplode(transform(idx,
           i => unhex(md5(concat_ws(" ", slice(ws, i, lit(SubstringK))))))))
-        .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("g"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    })
+        .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("g")))
+    }
 
   private def qDedupSubstring(s: SparkSession, dir: String): DataFrame = {
     val grams = kgramRows(s, dir).select("doc_id", "g")
@@ -1077,22 +1026,19 @@ object Dedup {
     * the LSH self-join would otherwise evaluate the 32 dot products twice
     * per vector. Released by [[clearCaches]].
     */
-  private val embedBandCache = TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def cachedEmbedBands(s: SparkSession, dir: String): DataFrame =
-    embedBandCache.getOrElseUpdate((s, dir), {
+    Memo.batch("dedup_embed_bands", s, dir) {
       val bits = HyperPlanes.map { h =>
         val plane = array(h.toIndexedSeq.map(v => lit(v)): _*)
         when(Similarity.dot(col("embedding"), plane) >= 0, "1").otherwise("0")
       }
-      Similarity.featurizedCorpus(s, dir)
+      Memo.persist(Similarity.featurizedCorpus(s, dir)
         .select(col("vec_id"), concat(bits.toIndexedSeq: _*).as("s"))
         .select(col("vec_id"), explode(array((0 until 4).map(b =>
           struct(lit(b).as("band_id"),
             substring(col("s"), b * 8 + 1, 8).as("bkey"))): _*)).as("b"))
-        .select(col("vec_id"), col("b.band_id"), col("b.bkey"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    })
+        .select(col("vec_id"), col("b.band_id"), col("b.bkey")))
+    }
 
   /** Embedding near-dup at scale: candidates from the band-bucket
     * equi-join (shuffle key = band bucket, never all-pairs), exact cosine
@@ -1117,11 +1063,9 @@ object Dedup {
     * the build is owned by `_components` in sorted bench order. Released
     * via [[clearCaches]].
     */
-  private val embedPairCache = TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def embedVerifiedPairs(s: SparkSession, dir: String): DataFrame =
-    embedPairCache.getOrElseUpdate((s, dir),
-      buildEmbedVerifiedPairs(s, dir).persist(StorageLevel.MEMORY_AND_DISK))
+    Memo.batch("dedup_embed_pairs", s, dir)(
+      Memo.persist(buildEmbedVerifiedPairs(s, dir)))
 
   private def buildEmbedVerifiedPairs(s: SparkSession, dir: String): DataFrame = {
     val bands = cachedEmbedBands(s, dir)

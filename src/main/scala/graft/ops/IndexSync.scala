@@ -1,9 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -484,6 +480,11 @@ object IndexSync {
 
   // ------------------------------------------------------------ query
 
+  /** Replacement text for the update wave — contains every query term,
+    * so maintained postings visibly re-rank the updated docs.
+    */
+  private[graft] val CdcUpdateText = "spark merge window spark"
+
   /** Landed CDC-maintained index fixture: the documents corpus lands as
     * a two-append TableFormat table, the postings index builds once, and
     * then a merge+delete history drives refreshes — every 10th doc
@@ -492,42 +493,34 @@ object IndexSync {
     * DELETED (a deletion-vector corpus commit). A corpus compaction then
     * proves the empty-feed no-op, and an index OPTIMIZE folds the index
     * tables' own deletion vectors away. Key arithmetic only, so the
-    * oracle recomputes the effective corpus from `documents` alone.
+    * oracle recomputes the effective corpus from `documents` alone. A
+    * session memo.
     */
-  private val cdcCache = TrieMap.empty[(SparkSession, String), String]
-
-  /** Replacement text for the update wave — contains every query term,
-    * so maintained postings visibly re-rank the updated docs.
-    */
-  private[graft] val CdcUpdateText = "spark merge window spark"
-
   private[graft] def landedCdcIndex(s: SparkSession, dir: String): String =
-    cdcCache.synchronized {
-      cdcCache.getOrElseUpdate((s, dir), {
-        val base = Files.createTempDirectory("graft_idx_sync").toString
-        val corpusRoot = base + "/corpus"
-        val idxRoot = base + "/index"
-        val d = Sources.table(s, dir, "documents").select("doc_id", "text")
-        TableFormat.append(d.filter(col("doc_id") % 2 === 0), corpusRoot,
-          statsCol = Some("doc_id"))
-        TableFormat.append(d.filter(col("doc_id") % 2 === 1), corpusRoot,
-          statsCol = Some("doc_id"))
-        buildPostings(s, corpusRoot, idxRoot)
-        TableFormat.merge(s, corpusRoot,
-          d.filter(col("doc_id") % 10 === 3)
-            .select(col("doc_id"), lit(CdcUpdateText).as("text")),
-          "doc_id", statsCol = Some("doc_id"))
-        refreshPostings(s, corpusRoot, idxRoot)
-        TableFormat.deleteKeysMor(s, corpusRoot,
-          d.filter(col("doc_id") % 10 === 7).select("doc_id"), "doc_id")
-        refreshPostings(s, corpusRoot, idxRoot)
-        // byte-identical-effective corpus compaction: EMPTY feed, the
-        // refresh below must not touch the index (spec-pinned)
-        TableFormat.compact(s, corpusRoot, statsCol = Some("doc_id"))
-        refreshPostings(s, corpusRoot, idxRoot)
-        optimizePostings(s, idxRoot)
-        base
-      })
+    graft.Memo.session("idx_sync_cdc", s, dir) {
+      val base = graft.Memo.tempRoot("idx_sync")
+      val corpusRoot = base + "/corpus"
+      val idxRoot = base + "/index"
+      val d = Sources.table(s, dir, "documents").select("doc_id", "text")
+      TableFormat.append(d.filter(col("doc_id") % 2 === 0), corpusRoot,
+        statsCol = Some("doc_id"))
+      TableFormat.append(d.filter(col("doc_id") % 2 === 1), corpusRoot,
+        statsCol = Some("doc_id"))
+      buildPostings(s, corpusRoot, idxRoot)
+      TableFormat.merge(s, corpusRoot,
+        d.filter(col("doc_id") % 10 === 3)
+          .select(col("doc_id"), lit(CdcUpdateText).as("text")),
+        "doc_id", statsCol = Some("doc_id"))
+      refreshPostings(s, corpusRoot, idxRoot)
+      TableFormat.deleteKeysMor(s, corpusRoot,
+        d.filter(col("doc_id") % 10 === 7).select("doc_id"), "doc_id")
+      refreshPostings(s, corpusRoot, idxRoot)
+      // byte-identical-effective corpus compaction: EMPTY feed, the
+      // refresh below must not touch the index (spec-pinned)
+      TableFormat.compact(s, corpusRoot, statsCol = Some("doc_id"))
+      refreshPostings(s, corpusRoot, idxRoot)
+      optimizePostings(s, idxRoot)
+      base
     }
 
   /** BM25 top-10 over the CDC-MAINTAINED index — [[TextOps]]'
@@ -539,9 +532,6 @@ object IndexSync {
   private def qTextSearchTopkCdc(s: SparkSession, dir: String): DataFrame =
     bm25TopK(s, landedCdcIndex(s, dir) + "/index",
       Seq("spark", "merge", "window"), 10)
-
-  private[graft] def clearMemos(): Unit =
-    cdcCache.keys.toList.foreach(cdcCache.remove)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     Map("q_text_search_topk_cdc" -> qTextSearchTopkCdc)

@@ -516,16 +516,10 @@ object Multimodal {
     * Hamming verification would otherwise re-run the PNG decode once per
     * consuming branch. The frame is (long, 64-char string) per image —
     * hundreds of bytes/doc, safe to persist at any scale the corpus fits.
-    * Registered in [[graft.Caches]] (released by `Dedup.clearCaches()`);
-    * [[clearMemos]] drops the memo so a released session rebuilds cleanly.
+    * A batch memo.
     */
-  private val hashCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  private[graft] def clearMemos(): Unit = hashCache.clear()
-
   private def aHashSigs(s: SparkSession, dir: String): DataFrame =
-    hashCache.getOrElseUpdate((s, dir), {
+    graft.Memo.batch("mm_ahash", s, dir) {
       import s.implicits._
       // ONE decode per image, both hashes emitted from it. The semantic
       // contract is hash(decode(resizePng(bytes, 16))) — but PNG grayscale
@@ -536,7 +530,7 @@ object Multimodal {
       // 5000 PNGs per pass — 5.8 s at sf0.1). The byte-level resize path
       // stays exercised by q_mm_resize, and the oracle pins this plan to
       // the same values the byte path produces.
-      graft.Caches.register(
+      graft.Memo.persist(
         blockPngFixture(s, dir).as[(Long, Array[Byte])]
           .mapPartitions(it => it.flatMap { case (id, b) =>
             val img = javax.imageio.ImageIO.read(
@@ -547,9 +541,8 @@ object Multimodal {
               (id + ResizeIdOffset,
                 ImageCodec.aHash(ImageCodec.downscale(img, 16))))
           })
-          .toDF("img_id", "ahash")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+          .toDF("img_id", "ahash"))
+    }
 
   /** Image near-dup dedup via perceptual hash (round-8/9 VERDICT task 2):
     * the variant corpus is every document's block-mosaic PNG

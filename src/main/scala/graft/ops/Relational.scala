@@ -636,15 +636,13 @@ object Relational {
     */
   private def qWinNtileScaled(s: SparkSession, dir: String): DataFrame = {
     val ord = Seq(col("c_acctbal").desc, col("c_custkey").asc)
-    // registered in graft.Caches → released by Dedup.clearCaches()
-    // (round-4 ADVICE: repeated calls in a long session must not
-    // accumulate cached blocks)
-    val parted = graft.Caches.register(
+    // registered for release by Dedup.clearCaches() (round-4 ADVICE:
+    // repeated calls in a long session must not accumulate cached blocks)
+    val parted = graft.Memo.persist(
       t(s, dir, "customer")
         .select("c_custkey", "c_acctbal")
         .repartitionByRange(ord: _*)
-        .withColumn("__pid", spark_partition_id())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .withColumn("__pid", spark_partition_id()))
     val local = parted.withColumn("__idx",
       row_number().over(Window.partitionBy("__pid").orderBy(ord: _*))
         .cast(LongType))

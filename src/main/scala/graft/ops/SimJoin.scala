@@ -1,12 +1,10 @@
 package graft.ops
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.types.DoubleType
 
+import graft.Memo
 import graft.io.Sources
 
 /** Exact set-similarity self-join via prefix filtering — the
@@ -111,24 +109,8 @@ object SimJoin {
     * intersect ~5×; creation-time interning additionally cuts the BUILD
     * (no per-position string slice/concat/hash), 1.9 s → 0.3 s.
     */
-  private val setsCache = TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** The numeric-sorted twin of `ts` for the verification's zero-alloc
-    * merge-scan intersect ([[graft.functions.SortedIntersectCount]]) — ts
-    * itself must stay df-ordered for the prefix theorem. Derived OUTSIDE
-    * the persisted frame (r22): the memo used to carry both ~52-long
-    * arrays per doc; persisting only `ts` halves the memo's footprint and
-    * drops one array_sort per doc from the owned build, while the
-    * verification consumers sort at broadcast-build time over the
-    * document-sized cached frame (array_sort of the same longs = the same
-    * twin, exactly).
-    */
-  private def withSortedTwin(sets: DataFrame): DataFrame =
-    sets.select(col("doc_id"), col("n"),
-      array_sort(col("ts")).as("tss"))
-
   private[graft] def orderedSets(s: SparkSession, dir: String): DataFrame =
-    setsCache.getOrElseUpdate((s, dir), {
+    Memo.batch("simjoin_sets", s, dir) {
       // Shingling + interning in ONE native codegen'd pass
       // ([[graft.functions.ShingleHashes]], round-13): the composed
       // tokenize → shingle-lambda → distinct → hash pipeline was
@@ -149,7 +131,7 @@ object SimJoin {
       // computes shingles once and shuffles once (partition-wide count,
       // no ordering → single full-partition aggregate per tok)
       val w = org.apache.spark.sql.expressions.Window.partitionBy("tok")
-      graft.Caches.register(
+      Memo.persist(
         toks.select(col("doc_id"), explode(col("ts")).as("tok"))
           .select(col("doc_id"), col("tok"),
             count(lit(1)).over(w).as("df"))
@@ -160,16 +142,22 @@ object SimJoin {
             .as("o"))
           .select(col("doc_id"),
             transform(col("o"), x => x.getField("tok")).as("ts"),
-            size(col("o")).as("n"))
-          .persist(StorageLevel.MEMORY_AND_DISK))
-    })
+            size(col("o")).as("n")))
+    }
 
-  /** Drop the memoized token-set frames (mirrors
-    * [[Similarity.clearMemos]]; called from [[Dedup.clearCaches]] so the
-    * one lifecycle entry point covers this module too).
+  /** The numeric-sorted twin of `ts` for the verification's zero-alloc
+    * merge-scan intersect ([[graft.functions.SortedIntersectCount]]) — ts
+    * itself must stay df-ordered for the prefix theorem. Derived OUTSIDE
+    * the persisted frame (r22): the memo used to carry both ~52-long
+    * arrays per doc; persisting only `ts` halves the memo's footprint and
+    * drops one array_sort per doc from the owned build, while the
+    * verification consumers sort at broadcast-build time over the
+    * document-sized cached frame (array_sort of the same longs = the same
+    * twin, exactly).
     */
-  private[graft] def clearMemos(): Unit =
-    setsCache.keys.toList.foreach(setsCache.remove)
+  private def withSortedTwin(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), col("n"),
+      array_sort(col("ts")).as("tss"))
 
   /** One-sided float slack for the PPJoin pruning bounds: subtracted from
     * every computed threshold so IEEE rounding can only LOOSEN a filter

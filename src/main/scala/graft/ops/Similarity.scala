@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Memo
 import graft.io.Sources
 
 /** Similarity search over the embedding corpus: brute-force cosine top-k
@@ -405,45 +406,25 @@ object Similarity {
     * DuckDB oracle reproduces the full 2-step training and the search
     * exactly.
     */
-  /** Memoized featurized corpus and trained codebook, keyed by sf dir —
-    * the trained-IVF queries (nprobe=1 and nprobe=2) share one training
-    * run the way a real index serves many searches. The corpus persist is
-    * registered in [[graft.Caches]] (released by `Dedup.clearCaches()`);
-    * after a release the memoized plans remain correct, merely uncached,
-    * and [[clearMemos]] (also called from `clearCaches`) drops them so a
-    * long-lived session can rebuild cleanly.
+  /** Memoized featurized corpus and trained codebook (batch memos) — the
+    * trained-IVF queries (nprobe=1 and nprobe=2) share one training run
+    * the way a real index serves many searches.
     */
-  private val corpusCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val codebookCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[graft] def clearMemos(): Unit = {
-    corpusCache.clear()
-    codebookCache.clear()
-    assignCache.clear()
-  }
-
-  // memos key on (session, dir) like Dedup.labelsCache: a second session
-  // sharing the dir must not receive frames bound to the first (possibly
-  // stopped) session (round-5 ADVICE)
   private[graft] def featurizedCorpus(s: SparkSession, dir: String): DataFrame =
-    corpusCache.getOrElseUpdate((s, dir), graft.Caches.register(
+    Memo.batch("sim_corpus", s, dir)(Memo.persist(
       emb(s, dir)
         .select(col("vec_id"), col("embedding"),
-          dot(col("embedding"), col("embedding")).as("nrm2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+          dot(col("embedding"), col("embedding")).as("nrm2"))))
 
   /** The 2-step-Lloyd codebook with per-centroid ||c||², ready to
     * broadcast. Persisted (k × dim — tiny) so the second consumer skips
     * re-training.
     */
   private def trainedCodebook(s: SparkSession, dir: String): DataFrame =
-    codebookCache.getOrElseUpdate((s, dir), graft.Caches.register(
+    Memo.batch("sim_codebook", s, dir)(Memo.persist(
       lloydCentroids(featurizedCorpus(s, dir), 16, 2)
         .select(col("cid"), col("cemb"),
-          dot(col("cemb"), col("cemb")).as("cnrm2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+          dot(col("cemb"), col("cemb")).as("cnrm2"))))
 
   /** Nearest-centroid assignment of featurized `(vec_id, embedding,
     * nrm2)` rows to a FROZEN codebook — shared by the full-corpus
@@ -484,61 +465,51 @@ object Similarity {
     * frame carries the full embedding plus norms per row (the searches
     * score against it), so the persist is roughly a second copy of
     * [[featurizedCorpus]]'s cached vectors — budget both when sizing
-    * executor storage memory at scale; released via
-    * [[clearMemos]]/Caches like every other memo.
+    * executor storage memory at scale; a batch memo like the corpus.
     */
-  private val assignCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def trainedAssignment(s: SparkSession, dir: String): DataFrame =
-    assignCache.getOrElseUpdate((s, dir), graft.Caches.register(
-      assignFeaturized(featurizedCorpus(s, dir), trainedCodebook(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    Memo.batch("sim_assign", s, dir)(Memo.persist(
+      assignFeaturized(featurizedCorpus(s, dir), trainedCodebook(s, dir))))
 
-  /** Landed IVF index per (session, dir) — write-once like the postings
-    * artifact. `cells/` holds every assigned vector (embedding, ||v||,
-    * ||v||²) DIRECTORY-PARTITIONED by its inverted-list id, `cents/` the
-    * 16-row trained codebook. This is the vector-retrieval at-rest story:
-    * at 100 TB the corpus is coded once, and a search touches only the
-    * probed cells' directories — the Spark plan prunes them via dynamic
-    * partition pruning against the (broadcast) probed-query frame, so
-    * 14/16ths of the index is never listed, let alone read.
+  /** Landed IVF index per (session, dir) — a session memo, write-once
+    * like the postings artifact. `cells/` holds every assigned vector
+    * (embedding, ||v||, ||v||²) DIRECTORY-PARTITIONED by its
+    * inverted-list id, `cents/` the 16-row trained codebook. This is the
+    * vector-retrieval at-rest story: at 100 TB the corpus is coded once,
+    * and a search touches only the probed cells' directories — the Spark
+    * plan prunes them via dynamic partition pruning against the
+    * (broadcast) probed-query frame, so 14/16ths of the index is never
+    * listed, let alone read.
     */
-  private val ivfIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
   private[graft] def ivfIndexRoot(s: SparkSession, dir: String): String =
-    ivfIndexCache.synchronized {
-      ivfIndexCache.getOrElseUpdate((s, dir), {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_ivf").toString
-        // the inverted lists carry the vectors' ATTRIBUTE columns
-        // (label) alongside the embeddings: filtered ANN — the most
-        // common production vector-search shape (`lang = 'en' AND
-        // cosine top-k`) — needs the predicate evaluable INSIDE the
-        // probed cells' scan, not via a corpus-wide attribute join at
-        // query time (round-14 VERDICT #6)
-        trainedAssignment(s, dir)
-          .join(emb(s, dir).select(col("vec_id"), col("label")), "vec_id")
-          .write.partitionBy("cell").parquet(root + "/cells")
-        trainedCodebook(s, dir).write.parquet(root + "/cents")
-        // the PQ half of the at-rest index: per-(vector, subspace) codes
-        // tagged with their IVF cell and partitioned the same way, plus
-        // the 16-row per-subspace codebook sidecar — what each inverted
-        // list STORES at 100 TB (4 small ints per vector, not floats)
-        val sub = pqSubvectors(emb(s, dir))
-        val cb = pqCodebook(sub)
-        // tag codes with cells from the MEMOIZED assignment frame (just
-        // written above) — re-reading cells/ would pay a directory
-        // listing + scan for data already persisted in memory
-        pqCodes(sub, cb)
-          .join(trainedAssignment(s, dir).select(col("vec_id"), col("cell")),
-            "vec_id")
-          .repartition(col("cell"))
-          .write.partitionBy("cell").parquet(root + "/codes")
-        cb.write.parquet(root + "/pqcb")
-        root
-      })
+    Memo.session("sim_ivf_index", s, dir) {
+      val root = Memo.tempRoot("ivf")
+      // the inverted lists carry the vectors' ATTRIBUTE columns
+      // (label) alongside the embeddings: filtered ANN — the most
+      // common production vector-search shape (`lang = 'en' AND
+      // cosine top-k`) — needs the predicate evaluable INSIDE the
+      // probed cells' scan, not via a corpus-wide attribute join at
+      // query time (round-14 VERDICT #6)
+      trainedAssignment(s, dir)
+        .join(emb(s, dir).select(col("vec_id"), col("label")), "vec_id")
+        .write.partitionBy("cell").parquet(root + "/cells")
+      trainedCodebook(s, dir).write.parquet(root + "/cents")
+      // the PQ half of the at-rest index: per-(vector, subspace) codes
+      // tagged with their IVF cell and partitioned the same way, plus
+      // the 16-row per-subspace codebook sidecar — what each inverted
+      // list STORES at 100 TB (4 small ints per vector, not floats)
+      val sub = pqSubvectors(emb(s, dir))
+      val cb = pqCodebook(sub)
+      // tag codes with cells from the MEMOIZED assignment frame (just
+      // written above) — re-reading cells/ would pay a directory
+      // listing + scan for data already persisted in memory
+      pqCodes(sub, cb)
+        .join(trainedAssignment(s, dir).select(col("vec_id"), col("cell")),
+          "vec_id")
+        .repartition(col("cell"))
+        .write.partitionBy("cell").parquet(root + "/codes")
+      cb.write.parquet(root + "/pqcb")
+      root
     }
 
   /** Multi-probe IVF search over the AT-REST index — the same semantics
@@ -672,30 +643,22 @@ object Similarity {
     // themselves, so steady-state searches skip the check entirely
     // (re-probing an unchanged index per query would be statistics
     // re-collection, not adaptivity)
-    val np = npCache.getOrElseUpdate((s, dir, nprobe, k, pred.toString), {
+    // (session memo per start width, k and predicate: the index is
+    // immutable within a session, so the escalation decision is too)
+    val np = Memo.session(s"sim_nprobe_${nprobe}_${k}_$pred", s, dir) {
       var w = math.min(nprobe, IvfNumCells)
       while (w < IvfNumCells && !filled(w))
         w = math.min(w * 2, IvfNumCells)
       w
-    })
+    }
     (search(np), np)
   }
-
-  /** Settled adaptive probe widths per (session, corpus, start width,
-    * k, predicate) — the fixture/index is immutable within a session,
-    * so the escalation decision is too.
-    */
-  private val npCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int, String), Int]
 
   /** Query-set size per (session, corpus) — one count, shared by every
     * adaptive search's under-fill check.
     */
-  private val nQueriesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-
   private def nQueriesOf(s: SparkSession, dir: String): Long =
-    nQueriesCache.getOrElseUpdate((s, dir),
+    Memo.session("sim_n_queries", s, dir)(
       s.read.parquet(ivfIndexRoot(s, dir) + "/cells")
         .filter(col("vec_id") < 50).select("vec_id").distinct().count())
 

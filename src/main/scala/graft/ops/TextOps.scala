@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Memo
 import graft.io.Sources
 
 /** Text-analysis operators for the training-data pipeline tier
@@ -28,17 +29,12 @@ object TextOps {
     * occurrence (long + short string) — like [[Dedup.kgramRows]] this is
     * corpus-sized, not pair-sized; budget executor storage for it at
     * scale (MEMORY_AND_DISK spills gracefully). Owned by the first
-    * consumer in bench sorted order (`q_text_bigram_lp`); released via
-    * [[clearMemos]] + `Caches.releaseAll` from `Dedup.clearCaches()`.
+    * consumer in bench sorted order (`q_text_bigram_lp`); a batch memo.
     */
-  private val tokenRowsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   private[graft] def tokenRows(s: SparkSession, dir: String): DataFrame =
-    tokenRowsCache.getOrElseUpdate((s, dir), graft.Caches.register(
+    Memo.batch("text_tokens", s, dir)(Memo.persist(
       docs(s, dir)
-        .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+        .select(col("doc_id"), explode(tokens(col("text"))).as("w"))))
 
   /** Whitespace token array (empty tokens dropped: texts are single-spaced
     * word soup, but be robust to doubled spaces).
@@ -254,7 +250,11 @@ object TextOps {
       PostingBuckets.toLong).toInt
 
   /** Landed POSITIONAL postings artifact per (session, dir) — write-once
-    * like the shard memos. Layout is the 100 TB retrieval story:
+    * like the shard memos, but a SESSION memo: it holds only a path to an
+    * immutable landed directory, and dropping it at each release made
+    * every bench pass rebuild the whole index, billed to the first
+    * indexed consumer (r14: q_text_bm25_indexed read 1.97 s for a 0.6 s
+    * query). Layout is the 100 TB retrieval story:
     * flat `(doc_id, pos, tok)` rows, directory-partitioned by
     * `bucket = hash(tok) % B` (partition pruning: a q-term query lists
     * only q directories) and SORTED by tok within each file (parquet
@@ -264,11 +264,8 @@ object TextOps {
     * plain append — new docs' rows land beside the old, no read-modify-
     * write of a list cell ([[graft.io.TableFormat]]'s appendBatch drives
     * the streaming form).
-    */
-  private val postingsPathCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
-  /** Root of the landed index: `idx/` (positional postings), `dl/`
+    *
+    * Root of the landed index: `idx/` (positional postings), `dl/`
     * (per-doc token counts) and `stats/` (one-row n_docs + avgdl) — the
     * sidecars every ranked-retrieval scorer needs at query time without
     * touching the corpus. They are written in the same build because at
@@ -276,39 +273,36 @@ object TextOps {
     * rows the tokenizer already produced.
     */
   private[graft] def indexRoot(s: SparkSession, dir: String): String =
-    postingsPathCache.synchronized {
-      postingsPathCache.getOrElseUpdate((s, dir), {
-        // SUBDIRS of the temp dir: createTempDirectory pre-creates its
-        // path and the parquet writer (correctly) refuses to write into
-        // an existing directory without overwrite semantics
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_postings").toString
-        val toks = docs(s, dir)
-          .select(col("doc_id"),
-            posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
-        toks
-          .withColumn("bucket",
-            pmod(xxhash64(col("tok")), lit(PostingBuckets.toLong))
-              .cast("int"))
-          .repartition(col("bucket"))
-          .sortWithinPartitions("tok", "doc_id", "pos")
-          .write.partitionBy("bucket").parquet(root + "/idx")
-        // dl derived from the LANDED idx, not the toks lineage — a
-        // second action on the unpersisted plan would re-scan and
-        // re-tokenize the whole corpus (two corpus scans per build)
-        s.read.parquet(root + "/idx")
-          .groupBy("doc_id").agg(count(lit(1)).as("dl"))
-          .write.parquet(root + "/dl")
-        // avgdl as bigint/bigint IEEE division — bit-identical to the
-        // corpus-scan BM25 form and the DuckDB oracle
-        s.read.parquet(root + "/dl")
-          .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_toks"))
-          .select(col("n_docs"),
-            (col("total_toks").cast(DoubleType) / col("n_docs"))
-              .as("avgdl"))
-          .write.parquet(root + "/stats")
-        root
-      })
+    Memo.session("text_postings", s, dir) {
+      // SUBDIRS of the temp root: it is pre-created and the parquet
+      // writer (correctly) refuses to write into an existing directory
+      // without overwrite semantics
+      val root = Memo.tempRoot("postings")
+      val toks = docs(s, dir)
+        .select(col("doc_id"),
+          posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
+      toks
+        .withColumn("bucket",
+          pmod(xxhash64(col("tok")), lit(PostingBuckets.toLong))
+            .cast("int"))
+        .repartition(col("bucket"))
+        .sortWithinPartitions("tok", "doc_id", "pos")
+        .write.partitionBy("bucket").parquet(root + "/idx")
+      // dl derived from the LANDED idx, not the toks lineage — a
+      // second action on the unpersisted plan would re-scan and
+      // re-tokenize the whole corpus (two corpus scans per build)
+      s.read.parquet(root + "/idx")
+        .groupBy("doc_id").agg(count(lit(1)).as("dl"))
+        .write.parquet(root + "/dl")
+      // avgdl as bigint/bigint IEEE division — bit-identical to the
+      // corpus-scan BM25 form and the DuckDB oracle
+      s.read.parquet(root + "/dl")
+        .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_toks"))
+        .select(col("n_docs"),
+          (col("total_toks").cast(DoubleType) / col("n_docs"))
+            .as("avgdl"))
+        .write.parquet(root + "/stats")
+      root
     }
 
   private[graft] def positionalPostingsPath(s: SparkSession,
@@ -890,9 +884,6 @@ object TextOps {
   /** Memoized per-pass bigram occurrence rows (doc_id, big, w1) — see the
     * persist rationale at the use site in [[qTextBigramLp]].
     */
-  private val bigramRowsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   private def qTextBigramLp(s: SparkSession, dir: String): DataFrame = {
     // ws is MATERIALIZED in a lower select: the lambda references it per
     // array element, and with the raw tokens(text) expression inlined
@@ -911,13 +902,12 @@ object TextOps {
     // counts and the per-doc scoring join); un-persisted, each branch
     // re-ran the corpus-wide explode + per-bigram string concat — persist
     // it once per pass (token-scale storage, the tokenRows budget note
-    // applies; released via Caches.releaseAll from Dedup.clearCaches())
-    val b = bigramRowsCache.getOrElseUpdate((s, dir), graft.Caches.register(
+    // applies; a batch memo)
+    val b = Memo.batch("text_bigrams", s, dir)(Memo.persist(
       docs(s, dir)
         .select(col("doc_id"), tokens(col("text")).as("ws"))
         .select(col("doc_id"), explode(arr).as("p"))
-        .select(col("doc_id"), col("p.big").as("big"), col("p.w1").as("w1"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+        .select(col("doc_id"), col("p.big").as("big"), col("p.w1").as("w1"))))
     val c2 = b.groupBy("big", "w1").agg(count(lit(1)).as("c2"))
     // context counts DERIVED from the bigram counts instead of a second
     // corpus pass (r21): c1(w1) = Σ_big c2(big, w1) by definition — the
@@ -1364,13 +1354,6 @@ object TextOps {
       .orderBy("doc_id")
   }
 
-  /** Landed shard dir per (session, dir) for [[qCorpusShuffleRead]] —
-    * write-once like the other memos (the landed files are immutable; a
-    * re-land would only churn the temp dir).
-    */
-  private val shuffleShardCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   /** The shuffle order ROUND-TRIPPED through the physical shard layout —
     * the trainer-side read path closing the loop the writer alone left
     * open (round-11 VERDICT #6): [[qCorpusShuffle]]'s frame lands via
@@ -1382,16 +1365,15 @@ object TextOps {
     * values from storage, positions from the reader's stream order.
     */
   private def qCorpusShuffleRead(s: SparkSession, dir: String): DataFrame = {
-    val path = shuffleShardCache.synchronized {
-      shuffleShardCache.getOrElseUpdate((s, dir), {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_shuffle_shards").toString
-        graft.io.Layout.writePackedShards(
-          qCorpusShuffle(s, dir)
-            .select(col("doc_id"), col("key"), col("shard"),
-              col("pos").as("seq_id")), out)
-        out
-      })
+    // landed shard dir: a batch memo, so the next pass after a release
+    // re-lands it into a fresh temp root
+    val path = Memo.batch("text_shuffle_shards", s, dir) {
+      val out = Memo.tempRoot("shuffle_shards")
+      graft.io.Layout.writePackedShards(
+        qCorpusShuffle(s, dir)
+          .select(col("doc_id"), col("key"), col("shard"),
+            col("pos").as("seq_id")), out)
+      out
     }
     graft.io.Layout.readPackedShards(s, path)
       .select(col("doc_id"), col("key"),
@@ -1444,21 +1426,13 @@ object TextOps {
     * stage 5's bloom build is a scalar subquery whose job races the main
     * plan, and two jobs hitting a cold cache compute stages 1-4 twice
     * (measured ≈ +1 s at sf0.1); a warm cache makes the race harmless.
-    * Released via [[clearMemos]] + `Caches.releaseAll` from
-    * `Dedup.clearCaches()`.
+    * A batch memo.
     */
-  private val survivorsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   private def pipelineSurvivors(s: SparkSession, dir: String): DataFrame =
-    survivorsCache.synchronized {
-      survivorsCache.getOrElseUpdate((s, dir), {
-        val sp = graft.Caches.register(
-          buildSurvivors(s, dir)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        sp.count()
-        sp
-      })
+    Memo.batch("text_survivors", s, dir) {
+      val sp = Memo.persist(buildSurvivors(s, dir))
+      sp.count()
+      sp
     }
 
   private def buildSurvivors(s: SparkSession, dir: String): DataFrame = {
@@ -1496,12 +1470,6 @@ object TextOps {
     // memoized persisted [[pipelineSurvivors]] frame.
     fz.withColumn("bucket", splitBucket(col("gid")))
   }
-
-  /** Memoized stage-5 survivor shingle rows — see the single-build note
-    * at the use site in [[qCorpusPipeline]].
-    */
-  private val survivorShCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
 
   private def qCorpusPipeline(s: SparkSession, dir: String): DataFrame = {
     val sp = pipelineSurvivors(s, dir)
@@ -1541,15 +1509,14 @@ object TextOps {
     // reverted r21 raw-corpus shingle memo this explodes only post-stage-4
     // SURVIVORS, pre-filtered to the buckets the consumers read (test
     // ≥ 95, train < 90 — the 90-94 validation slice was exploded and
-    // discarded before). Token-scale storage (8-byte hashes), released
-    // via [[clearMemos]] + Caches.releaseAll.
-    val sh = survivorShCache.getOrElseUpdate((s, dir),
-      graft.Caches.register(sp
+    // discarded before). Token-scale storage (8-byte hashes), a batch
+    // memo.
+    val sh = Memo.batch("text_survivor_shingles", s, dir)(
+      Memo.persist(sp
         .filter(col("bucket") >= 95 || col("bucket") < 90)
         .select(col("doc_id"), col("bucket"),
           explode(graft.functions.ShingleExprs.shingleHashes(col("text")))
-            .as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+            .as("sh"))))
     val testShRows = sh.filter(col("bucket") >= 95).select("sh")
     val trainShRows = sh.filter(col("bucket") < 90)
       .select(col("doc_id"), col("sh"))
@@ -1636,42 +1603,10 @@ object TextOps {
     * token aggregate) runs once, every training round re-reads the
     * vocab-sized cached frame, and both consumer queries (q_bpe_encode
     * first in sorted bench order) share one training run — the same
-    * contract as the IVF codebook memo. Released via [[clearMemos]] from
-    * `Dedup.clearCaches()`.
+    * contract as the IVF codebook memo. A batch memo.
     */
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-
-  private[graft] def clearMemos(): Unit = {
-    bpeCache.clear()
-    // token/bigram rows are unpersisted by Caches.releaseAll at the same
-    // boundary
-    tokenRowsCache.clear()
-    bigramRowsCache.clear()
-    // blocks are unpersisted by Caches.releaseAll at the same lifecycle
-    // boundary; this drops the memo references so the next invocation
-    // rebuilds instead of reading an unpersisted (or stale-dir) frame
-    survivorsCache.clear()
-    survivorShCache.clear()
-    // landed shard dirs stay valid on disk; dropping the memo only means
-    // the next q_corpus_shuffle_read call re-lands them (write-once per
-    // memo lifetime, temp-dir scoped)
-    shuffleShardCache.clear()
-    // postingsPathCache deliberately SURVIVES this boundary: it memoizes
-    // only a path string to an immutable landed directory — no Spark
-    // frames, nothing unpersist can stale — and clearing it made every
-    // bench pass rebuild the whole index, billed to the first indexed
-    // consumer (r14: q_text_bm25_indexed read 1.97 s for a 0.6 s query)
-  }
-
-  // the lock makes the expensive thunk once-only: TrieMap.getOrElseUpdate
-  // alone is atomic for the INSERT but not the computation, so two first
-  // callers could both train (round-10 ADVICE). Training is rare and
-  // minutes-scale; a coarse lock is the right tradeoff.
   private def bpeTrained(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    bpeCache.synchronized {
-      bpeCache.getOrElseUpdate((s, dir), trainBpe(s, dir))
-    }
+    Memo.batch("text_bpe", s, dir)(trainBpe(s, dir))
 
   /** Runs the [[BpeMerges]]-round training eagerly under an AQE-off
     * window — the [[graft.ops.Graph]] qPagerank recipe: a fixed-shape
@@ -1711,19 +1646,13 @@ object TextOps {
   }
 
   private def vocabFrame(s: SparkSession, dir: String): DataFrame =
-    graft.Caches.register(
+    Memo.persist(
       docs(s, dir)
         .select(explode(tokens(col("text"))).as("w"))
         .groupBy("w").agg(count(lit(1)).as("cnt"))
         .select(col("w"), concat(lit(" "),
           array_join(split(col("w"), ""), "  "), lit(" ")).as("seq"),
-          col("cnt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  private def checkpointBpe(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint()
-    else df.localCheckpoint()
+          col("cnt")))
 
   private def trainBpeLoop(vocab0: DataFrame): (DataFrame, DataFrame) = {
     val s = vocab0.sparkSession
@@ -1763,7 +1692,7 @@ object TextOps {
     }
     import s.implicits._
     val mergesDf = merges.toSeq.toDF("step", "pair", "tok", "total")
-    (mergesDf, checkpointBpe(cur.select(col("w"), col("seq"))))
+    (mergesDf, Memo.checkpoint(cur.select(col("w"), col("seq"))))
   }
 
   private def qBpeTrain(s: SparkSession, dir: String): DataFrame =

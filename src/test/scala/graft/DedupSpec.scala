@@ -462,15 +462,27 @@ class DedupSpec extends TestSpark {
   test("clearCaches releases the band-row blocks (no executor-memory leak)") {
     graft.ops.Dedup.clearCaches()
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    // materialize the memoized band cache
-    graft.SparkEntry.queries("q_dedup_minhash")(spark, Sf).count()
-    val during = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(during.nonEmpty, "expected the band rows to be persisted")
+    // the postings index is a session memo: it must outlive the release
+    val index = graft.ops.TextOps.indexRoot(spark, Sf)
+    // one key per memo-owning module (plus the per-call persists of
+    // q_win_ntile_scaled)
+    val keys = Seq("q_dedup_minhash", "q_simjoin_prefix",
+      "q_sim_ivf_trained", "q_text_bigram_lp", "q_corpus_pipeline",
+      "q_bpe_encode", "q_mm_dedup", "q_win_ntile_scaled")
+    keys.foreach { k =>
+      val held = spark.sparkContext.getPersistentRDDs.keySet
+      graft.SparkEntry.queries(k)(spark, Sf).count()
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- held).nonEmpty,
+        s"expected $k to persist its memoized frames")
+    }
     graft.ops.Dedup.clearCaches()
     val after = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(after.isEmpty,
-      s"band cache blocks still registered after clearCaches: $after")
-    // and the cache rebuilds cleanly after a clear
+      s"persisted blocks still registered after clearCaches: " +
+        after.map(spark.sparkContext.getPersistentRDDs(_).toDebugString))
+    assert(graft.ops.TextOps.indexRoot(spark, Sf) === index)
+    assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(index)))
+    // and the caches rebuild cleanly after a clear
     assert(graft.SparkEntry.queries("q_dedup_minhash")(spark, Sf).count() > 0)
     graft.ops.Dedup.clearCaches()
   }

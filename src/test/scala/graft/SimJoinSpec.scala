@@ -97,30 +97,30 @@ class SimJoinSpec extends TestSpark {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     spark.conf.set(graft.ops.SimJoin.SaltFlag, "true")
     try {
-      graft.ops.SimJoin.clearMemos()
+      graft.ops.Dedup.clearCaches()
       val out = graft.ops.SimJoin.queries("q_simjoin_prefix")(spark, dir)
       assert(out.count() === 1100L * 1099L / 2)
       assert(out.filter(col("jaccard") =!= 1.0).count() === 0)
     } finally {
       spark.conf.unset(graft.ops.SimJoin.SaltFlag)
-      graft.ops.SimJoin.clearMemos()
+      graft.ops.Dedup.clearCaches()
     }
   }
 
   test("salt flag leaves healthy-corpus results identical (g = 1 path)") {
     spark.conf.set(graft.ops.SimJoin.SaltFlag, "true")
     try {
-      graft.ops.SimJoin.clearMemos()
+      graft.ops.Dedup.clearCaches()
       val flagged = graft.ops.SimJoin.queries("q_simjoin_prefix")(spark, Sf)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       spark.conf.unset(graft.ops.SimJoin.SaltFlag)
-      graft.ops.SimJoin.clearMemos()
+      graft.ops.Dedup.clearCaches()
       val plain = graft.ops.SimJoin.queries("q_simjoin_prefix")(spark, Sf)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       assert(flagged.toSeq === plain.toSeq)
     } finally {
       spark.conf.unset(graft.ops.SimJoin.SaltFlag)
-      graft.ops.SimJoin.clearMemos()
+      graft.ops.Dedup.clearCaches()
     }
   }
 

@@ -8,11 +8,13 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
+import TableFormat.{Edit, Hit}
+
 /** SQL DML over the table format: an `INSERT INTO` / `INSERT
   * OVERWRITE` / `DELETE FROM` / `UPDATE` whose target resolves to a
   * [[ManifestFileIndex]]-backed relation is rewritten into a manifest
   * COMMIT ([[TableFormat.append]] / [[TableFormat.replace]] /
-  * [[TableFormat.deleteWhere]] / [[TableFormat.updateWhere]]) — the
+  * [[TableFormat.rewriteRows]] / [[TableFormat.applyDelta]]) — the
   * public Delta-lake pattern of intercepting row-level commands at
   * resolution time. For the insert forms the rule is mandatory for
   * correctness, not a convenience: without it Spark's own
@@ -117,7 +119,7 @@ final class GraftDmlRule extends Rule[LogicalPlan] {
         "expresses; spell the complement as NOT EXISTS) or `[NOT] " +
         "EXISTS (SELECT … WHERE inner = outer [AND …])` (equality " +
         "correlation only) — stage other shapes into a frame and use " +
-        "deleteKeys/updateKeys/merge")
+        "deleteKeys/merge")
     e
   }
 
@@ -125,8 +127,8 @@ final class GraftDmlRule extends Rule[LogicalPlan] {
     * condition is `<target column> IN (<uncorrelated subquery>)` — the
     * canonical GDPR-erasure statement. The command materializes the
     * subquery into a key frame at RUN time and lands through the
-    * key-pruned paths ([[TableFormat.deleteKeys]]/
-    * [[TableFormat.updateKeys]]), where pruning comes from the key
+    * key-pruned copy-on-write core ([[TableFormat.rewriteRows]] over a
+    * [[TableFormat.Hit.Keys]]), where pruning comes from the key
     * VALUES (zone maps + blooms) — a static predicate tree cannot
     * prune a subquery. Correlated subqueries, NOT IN (different null
     * semantics), EXISTS, and conjunct combinations keep refusing
@@ -181,12 +183,12 @@ final class GraftDmlRule extends Rule[LogicalPlan] {
     * (outer-free) conjuncts stay on the subquery, and the rewritten
     * UNCORRELATED plan projects the inner values — a semi-join key set
     * for DELETE, the same for UPDATE. One pair lands key-pruned
-    * ([[TableFormat.deleteKeys]]/[[TableFormat.updateKeys]]); several
-    * land as a tuple (merge-on-read, like tuple IN). Supported shape:
-    * the subquery is `[Project over] Filter` whose correlated conjuncts
-    * are all top-level equalities between an inner attribute and an
-    * outer target column (up-casts tolerated on either side — the
-    * command's round-trip guard keeps the coerced comparison sound);
+    * ([[TableFormat.rewriteRows]]); several land as a tuple
+    * (merge-on-read, like tuple IN). Supported shape: the subquery is
+    * `[Project over] Filter` whose correlated conjuncts are all
+    * top-level equalities between an inner attribute and an outer
+    * target column (up-casts tolerated on either side — the command's
+    * round-trip guard keeps the coerced comparison sound);
     * non-equality correlation, correlation below joins/aggregates, and
     * NOT EXISTS keep refusing loudly through [[unbind]].
     */
@@ -360,13 +362,13 @@ final class GraftDmlRule extends Rule[LogicalPlan] {
     * — EXACTLY ONE conjunct is a supported positive IN/EXISTS subquery
     * (the whole-condition matchers applied to that conjunct), every
     * other conjunct is subquery-free and becomes the STATIC RESIDUAL.
-    * Lands through [[TableFormat.deleteKeysWhere]]/[[TableFormat.updateKeysWhere]]
-    * — a keep-filtered copy-on-write, because the footprint is a
-    * ROW-SUBSET of the matched keys (duplicate-key rows where only one
-    * satisfies the residual) that the key-based fast paths cannot
-    * express — with COMPOSED pruning: key zone-map/bloom split ∧ the
-    * residual's bounds walk. NOT-shaped conjuncts and multiple
-    * subquery conjuncts keep refusing through [[unbind]].
+    * Lands through [[TableFormat.rewriteRows]] with the residual on the
+    * [[TableFormat.Hit.Keys]] — a keep-filtered copy-on-write, because
+    * the footprint is a ROW-SUBSET of the matched keys (duplicate-key
+    * rows where only one satisfies the residual) — with COMPOSED
+    * pruning: key zone-map/bloom split ∧ the residual's bounds walk.
+    * NOT-shaped conjuncts and multiple subquery conjuncts keep refusing
+    * through [[unbind]].
     */
   private def composedKeys(cond: Expression, target: LogicalPlan)
       : Option[(Seq[String], LogicalPlan, Expression)] = {
@@ -764,9 +766,8 @@ final class GraftDmlRule extends Rule[LogicalPlan] {
       case x => x
     }
     // the ON clause: one target-key = source-key equality, or an AND
-    // of several (COMPOSITE key, r18 — lands copy-on-write through
-    // [[TableFormat.applyCoWDelta]]; the merge-on-read mask is
-    // single-key by construction)
+    // of several (COMPOSITE key, r18 — the general form lands it
+    // merge-on-read, the sidecar carrying the full key tuple)
     def eqPair(x0: Expression, y0: Expression): Option[(String, String)] =
       (bare(x0), bare(y0)) match {
         case (a: AttributeReference, b: AttributeReference)
@@ -1070,19 +1071,12 @@ private[graft] case class InsertIntoGraftTableCommand(root: String,
       // on every SQL landing (r20) — ANALYZE becomes the exception
       TableFormat.append(df, root, statsCols = statsCols,
         bloomCol = bloomCol, check = check, autoStats = true)
-    // a catalog table's resolved relation is CACHED per name
-    // (FindDataSourceTable); the commit moved the head, so the next
-    // SELECT must re-resolve against the new manifest — the same
-    // refresh InsertIntoHadoopFsRelationCommand performs. (A TEMP VIEW
-    // created via USING pins its analyzed snapshot by design — re-run
-    // registerSql/CREATE to follow the head, exactly like time travel.)
-    catalogIdent.foreach(id => spark.catalog.refreshTable(id.quotedString))
-    Seq.empty
+    GraftDmlRule.refresh(spark, catalogIdent)
   }
 }
 
 /** `DELETE FROM t WHERE …` landed as a predicate-pruned copy-on-write
-  * commit ([[TableFormat.deleteWhere]]): dirs whose zone maps exclude
+  * commit ([[TableFormat.rewriteRows]]): dirs whose zone maps exclude
   * the predicate carry verbatim, matching rows filter out of the rest
   * under SQL null semantics (NULL condition keeps the row).
   */
@@ -1093,16 +1087,14 @@ private[graft] case class DeleteFromGraftTableCommand(root: String,
     extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
-    TableFormat.deleteWhere(spark, root, GraftDmlRule.rebind(condition),
-      statsCols = GraftDmlRule.statsColsOf(writeOpts),
-      bloomCol = GraftDmlRule.bloomColOf(writeOpts))
-    catalogIdent.foreach(id => spark.catalog.refreshTable(id.quotedString))
-    Seq.empty
+    GraftDmlRule.land(spark, root, writeOpts,
+      Hit.where(GraftDmlRule.rebind(condition)), Edit.Delete)
+    GraftDmlRule.refresh(spark, catalogIdent)
   }
 }
 
 /** `UPDATE t SET … WHERE …` landed as a predicate-pruned copy-on-write
-  * commit ([[TableFormat.updateWhere]]): assignments apply
+  * commit ([[TableFormat.rewriteRows]]): assignments apply
   * simultaneously over the pre-update row, cast to the declared column
   * types, untouched dirs carry verbatim.
   */
@@ -1114,12 +1106,10 @@ private[graft] case class UpdateGraftTableCommand(root: String,
     extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
-    TableFormat.updateWhere(spark, root, GraftDmlRule.rebind(condition),
-      assignments.map { case (n, v) => n -> GraftDmlRule.rebind(v) },
-      statsCols = GraftDmlRule.statsColsOf(writeOpts),
-      bloomCol = GraftDmlRule.bloomColOf(writeOpts))
-    catalogIdent.foreach(id => spark.catalog.refreshTable(id.quotedString))
-    Seq.empty
+    GraftDmlRule.land(spark, root, writeOpts,
+      Hit.where(GraftDmlRule.rebind(condition)),
+      GraftDmlRule.assign(assignments))
+    GraftDmlRule.refresh(spark, catalogIdent)
   }
 }
 
@@ -1158,6 +1148,32 @@ private[graft] object GraftDmlRule {
   def bloomColOf(writeOpts: Map[String, String]): Option[String] =
     writeOpts.get("bloomcol").orElse(writeOpts.get("bloomCol"))
 
+  /** Land one copy-on-write statement under the table's declared
+    * stats/bloom options.
+    */
+  def land(spark: SparkSession, root: String,
+      writeOpts: Map[String, String], hit: Hit, edit: Edit): Int =
+    TableFormat.rewriteRows(spark, root, hit, edit, statsColsOf(writeOpts),
+      bloomColOf(writeOpts))
+
+  /** A statement's assignments, re-anchored on column names. */
+  def assign(assignments: Seq[(String, Expression)]): Edit.Assign =
+    Edit.Assign(assignments.map { case (n, v) => n -> rebind(v) })
+
+  /** A catalog table's resolved relation is CACHED per name
+    * (FindDataSourceTable); a commit moved the head, so the next
+    * SELECT must re-resolve against the new manifest — the same
+    * refresh InsertIntoHadoopFsRelationCommand performs. (A TEMP VIEW
+    * created via USING pins its analyzed snapshot by design — re-run
+    * registerSql/CREATE to follow the head, exactly like time travel.)
+    */
+  def refresh(spark: SparkSession,
+      catalogIdent: Option[org.apache.spark.sql.catalyst.TableIdentifier])
+      : Seq[Row] = {
+    catalogIdent.foreach(id => spark.catalog.refreshTable(id.quotedString))
+    Seq.empty
+  }
+
   /** Execute a captured DML/MERGE read plan at run time, with the
     * DV-MASK substitution re-applied first (round-17 VERDICT edge):
     * rule order inside the extension batch is not guaranteed, so a
@@ -1193,13 +1209,14 @@ private[graft] object GraftDmlRule {
 
   /** Left-join each resolved scalar's per-key frame (stable tagged
     * column names — frames are keyed and deduplicated by construction,
-    * GROUP BY the correlation keys) and return the per-name value
-    * Column: the joined value on a hit, the empty-group value
-    * otherwise. NULL correlation keys match no group (SQL equality).
+    * GROUP BY the correlation keys) and add its PLACEHOLDER column, the
+    * one the rewritten assignments/condition reference by name: the
+    * joined value on a hit, the empty-group value otherwise. NULL
+    * correlation keys match no group (SQL equality).
     */
-  def joinScalars(df0: DataFrame,
+  def withScalars(df0: DataFrame,
       resolved: Seq[(String, Seq[String], Option[DataFrame], Any)],
-      tag: String): (DataFrame, Seq[(String, org.apache.spark.sql.Column)]) = {
+      tag: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, when}
     require(!df0.columns.exists(
       _.toLowerCase.startsWith(s"__graft_sq_${tag}_")),
@@ -1219,7 +1236,7 @@ private[graft] object GraftDmlRule {
           when(col(hit) === true, col(s"__graft_sq_${tag}_val_$i"))
             .otherwise(lit(dflt))
     }
-    (cur, vals)
+    vals.foldLeft(cur) { case (d, (nm, v)) => d.withColumn(nm, v) }
   }
 
   /** Materialize a correlated NOT IN's three-valued test (r20): the
@@ -1262,6 +1279,43 @@ private[graft] object GraftDmlRule {
       (col("__graft_na_hasnull") === false &&
         col(valCol).isNotNull && col("__graft_na_vb").isNull)
     (joined, affected)
+  }
+
+  /** The NOT EXISTS / NOT IN landing shared by DELETE and UPDATE. */
+  def landAnti(spark: SparkSession, root: String,
+      writeOpts: Map[String, String], keyCols: Seq[String],
+      subquery: LogicalPlan, keepNullKeys: Boolean, edit: Edit,
+      catalogIdent: Option[org.apache.spark.sql.catalyst.TableIdentifier])
+      : Seq[Row] = {
+    import org.apache.spark.sql.functions.col
+    val raw = planFrame(spark, subquery).persist()
+    try {
+      if (keepNullKeys &&
+          !raw.filter(col(raw.columns.head).isNull).isEmpty)
+        return Seq.empty // NULL in the NOT IN list: UNKNOWN everywhere
+      val keys = subqueryKeysFrame(spark, root, keyCols, raw)
+      land(spark, root, writeOpts, Hit.NotKeys(keys, keys.columns.toSeq,
+        keepNullKeys,
+        // NOT IN 3VL needs to distinguish a genuinely empty subquery
+        // from one whose values all failed the cast round-trip (r19
+        // ADVICE): only the former truncates NULL-keyed rows
+        rawNonEmpty = keepNullKeys && !raw.isEmpty), edit)
+    } finally raw.unpersist()
+    refresh(spark, catalogIdent)
+  }
+
+  /** The correlated NOT IN landing shared by DELETE and UPDATE. */
+  def landCorrAnti(spark: SparkSession, root: String,
+      writeOpts: Map[String, String], valCol: String,
+      corrCols: Seq[String], subquery: LogicalPlan, edit: Edit,
+      catalogIdent: Option[org.apache.spark.sql.catalyst.TableIdentifier])
+      : Seq[Row] = {
+    val frame = planFrame(spark, subquery).persist()
+    try land(spark, root, writeOpts,
+      Hit.Where(org.apache.spark.sql.functions.lit(true),
+        corrAntiAffected(_, frame, valCol, corrCols)), edit)
+    finally frame.unpersist()
+    refresh(spark, catalogIdent)
   }
 
   /** Execute an uncorrelated DML subquery into the one-column key
@@ -1319,13 +1373,13 @@ private[graft] object GraftDmlRule {
 /** `DELETE FROM t WHERE k IN (SELECT …)` — the uncorrelated-subquery
   * key delete (the canonical GDPR-erasure shape at 100 TB): the
   * subquery materializes into a key frame at run time and lands
-  * through [[TableFormat.deleteKeys]], a copy-on-write commit pruned
-  * by the key VALUES (zone maps + blooms). IN-null semantics fall out
-  * of the anti-join: NULL keys match no row, NULL-keyed rows survive.
-  * The TUPLE form `(k1, k2) IN (SELECT …)` lands MERGE-ON-READ through
-  * [[TableFormat.deleteKeysMorMulti]] (r19) — per-column zone-map
-  * exclusion, a multi-column deletion-vector sidecar, never a dir
-  * rewrite and never a concatenated surrogate.
+  * through [[TableFormat.rewriteRows]], a copy-on-write commit pruned
+  * by the key VALUES (zone maps + blooms). IN-null semantics: NULL
+  * keys match no row, NULL-keyed rows survive. The TUPLE form `(k1,
+  * k2) IN (SELECT …)` lands MERGE-ON-READ through
+  * [[TableFormat.applyDelta]] (r19) — per-column zone-map exclusion,
+  * a multi-column deletion-vector sidecar, never a dir rewrite and
+  * never a concatenated surrogate.
   */
 private[graft] case class DeleteKeysGraftTableCommand(root: String,
     writeOpts: Map[String, String], keyCols: Seq[String],
@@ -1337,28 +1391,25 @@ private[graft] case class DeleteKeysGraftTableCommand(root: String,
 
   override def run(spark: SparkSession): Seq[Row] = {
     val keys = GraftDmlRule.subqueryKeys(spark, root, keyCols, subquery)
-    val statsCols = GraftDmlRule.statsColsOf(writeOpts)
-    val bloomCol = GraftDmlRule.bloomColOf(writeOpts)
+    val cols = keys.columns.toSeq
     if (keyCols.size == 1)
-      TableFormat.deleteKeys(spark, root, keys, keyCols.head,
-        statsCols = statsCols, bloomCol = bloomCol)
+      GraftDmlRule.land(spark, root, writeOpts, Hit.Keys(keys, cols),
+        Edit.Delete)
     else // r19: tuple deletes land MERGE-ON-READ — O(tuples) sidecar
       // rows on the touched dirs, never a dir rewrite (auto-fold
-      // bounds the debt; applyCoWDelta remains the explicit fold form)
-      TableFormat.deleteKeysMorMulti(spark, root, keys,
-        keyCols.map(kc => keys.schema.fields
-          .find(_.name.equalsIgnoreCase(kc)).get.name))
-    catalogIdent.foreach(id => spark.catalog.refreshTable(id.quotedString))
-    Seq.empty
+      // bounds the debt)
+      TableFormat.applyDelta(spark, root, keys, cols, spark.emptyDataFrame,
+        Nil, None, None, Map.empty[String, String], "delete-mor")
+    GraftDmlRule.refresh(spark, catalogIdent)
   }
 }
 
 /** `UPDATE t SET … WHERE k IN (SELECT …)` — the key-set twin for
-  * UPDATE, landed through [[TableFormat.updateKeys]] (same pruning
+  * UPDATE, landed through [[TableFormat.rewriteRows]] (same pruning
   * and simultaneous-assignment semantics as the predicate form); the
   * TUPLE form masks the matching tuples and appends their updated
-  * images through one merge-on-read [[TableFormat.applyDeltaMulti]]
-  * commit (r19).
+  * images through one merge-on-read [[TableFormat.applyDelta]] commit
+  * (r19).
   */
 private[graft] case class UpdateKeysGraftTableCommand(root: String,
     writeOpts: Map[String, String], keyCols: Seq[String],
@@ -1370,53 +1421,41 @@ private[graft] case class UpdateKeysGraftTableCommand(root: String,
   override def innerChildren: Seq[LogicalPlan] = Seq(subquery)
 
   override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.{col, expr}
     val keys = GraftDmlRule.subqueryKeys(spark, root, keyCols, subquery)
-    val statsCols = GraftDmlRule.statsColsOf(writeOpts)
-    val bloomCol = GraftDmlRule.bloomColOf(writeOpts)
-    val bound = assignments.map { case (n, v) =>
-      n -> GraftDmlRule.rebind(v) }
+    val cols = keys.columns.toSeq
+    val assign = GraftDmlRule.assign(assignments)
     if (keyCols.size == 1)
-      TableFormat.updateKeys(spark, root, keys, keyCols.head, bound,
-        statsCols = statsCols, bloomCol = bloomCol)
+      GraftDmlRule.land(spark, root, writeOpts, Hit.Keys(keys, cols), assign)
     else {
-      val resolved = keyCols.map(kc => keys.schema.fields
-        .find(_.name.equalsIgnoreCase(kc)).get.name)
-      val touched = TableFormat.readTouchedForKeysMulti(spark, root,
-        keys, resolved)
-      // simultaneous assignments over exactly the matching tuples
-      val hit = touched.join(keys, resolved, "left_semi")
-      val byName = bound.map { case (n, v) => n.toLowerCase -> v }.toMap
-      val updated = hit.select(hit.columns.toSeq.map { c =>
-        byName.get(c.toLowerCase) match {
-          case Some(v) => v.cast(hit.schema(c).dataType).as(c)
-          case None => col(c)
-        }
-      }: _*)
-      TableFormat.enforceCheckFor(updated, root)
-      // r19: mask the matched tuples + append the updated images in ONE
-      // merge-on-read commit — a point update writes O(tuples), never a
-      // dir rewrite
-      TableFormat.applyDeltaMulti(spark, root, keys, resolved, updated,
-        statsCols = statsCols, bloomCol = bloomCol, op = "update-where")
+      // r19: mask the matched tuples + append their updated images in
+      // ONE merge-on-read commit — a point update writes O(tuples),
+      // never a dir rewrite
+      val hit = TableFormat.readTouchedForKeys(spark, root, keys, cols)
+        .join(keys, cols, "left_semi")
+      TableFormat.applyDelta(spark, root, keys, cols,
+        TableFormat.assigned(hit, hit.schema, assign.set,
+          org.apache.spark.sql.functions.lit(true)),
+        GraftDmlRule.statsColsOf(writeOpts),
+        GraftDmlRule.bloomColOf(writeOpts), None,
+        Map.empty[String, String], "update-where")
     }
-    catalogIdent.foreach(id => spark.catalog.refreshTable(id.quotedString))
-    Seq.empty
+    GraftDmlRule.refresh(spark, catalogIdent)
   }
 }
 
 /** `DELETE FROM t WHERE NOT EXISTS (SELECT … WHERE inner = outer …)` /
   * `DELETE FROM t WHERE k NOT IN (<uncorrelated subquery>)` — the
-  * COMPLEMENT purge (r19), landed through [[TableFormat.deleteAnti]]:
-  * rows matching NO key are deleted, and the pruning INVERTS — dirs
-  * the zone maps/blooms prove key-disjoint hold only doomed rows and
-  * DROP from the manifest wholesale with zero data I/O. NOT IN's
-  * three-valued logic resolves HERE, on the RAW subquery values before
-  * the try_cast pipeline (which nulls non-round-trip values and would
-  * conflate them with genuine NULLs): one NULL in the value list makes
-  * `k NOT IN (…)` UNKNOWN on every row — the statement deletes nothing
-  * and no version mints. The subquery executes ONCE (persisted across
-  * the null probe, the zone-map split, and the keep-join).
+  * COMPLEMENT purge (r19), landed through [[TableFormat.rewriteRows]]
+  * over a [[TableFormat.Hit.NotKeys]]: rows matching NO key are
+  * deleted, and the pruning INVERTS — dirs the zone maps/blooms prove
+  * key-disjoint hold only doomed rows and DROP from the manifest
+  * wholesale with zero data I/O. NOT IN's three-valued logic resolves
+  * HERE, on the RAW subquery values before the try_cast pipeline
+  * (which nulls non-round-trip values and would conflate them with
+  * genuine NULLs): one NULL in the value list makes `k NOT IN (…)`
+  * UNKNOWN on every row — the statement deletes nothing and no version
+  * mints. The subquery executes ONCE (persisted across the null probe,
+  * the zone-map split, and the keep-join).
   */
 private[graft] case class DeleteAntiKeysGraftTableCommand(root: String,
     writeOpts: Map[String, String], keyCols: Seq[String],
@@ -1426,36 +1465,16 @@ private[graft] case class DeleteAntiKeysGraftTableCommand(root: String,
 
   override def innerChildren: Seq[LogicalPlan] = Seq(subquery)
 
-  override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.col
-    val raw = GraftDmlRule.planFrame(spark, subquery).persist()
-    try {
-      if (keepNullKeys &&
-          !raw.filter(col(raw.columns.head).isNull).isEmpty)
-        return Seq.empty // NULL in the NOT IN list: UNKNOWN everywhere
-      val keys = GraftDmlRule.subqueryKeysFrame(spark, root, keyCols, raw)
-      TableFormat.deleteAnti(spark, root, keys,
-        keyCols.map(kc => keys.schema.fields
-          .find(_.name.equalsIgnoreCase(kc)).get.name),
-        keepNullKeys,
-        statsCols = GraftDmlRule.statsColsOf(writeOpts),
-        bloomCol = GraftDmlRule.bloomColOf(writeOpts),
-        // NOT IN 3VL needs to distinguish a genuinely empty subquery
-        // from one whose values all failed the cast round-trip (r19
-        // ADVICE): only the former truncates NULL-keyed rows
-        rawNonEmpty = keepNullKeys && !raw.isEmpty)
-    } finally raw.unpersist()
-    catalogIdent.foreach(id => spark.catalog.refreshTable(id.quotedString))
-    Seq.empty
-  }
+  override def run(spark: SparkSession): Seq[Row] =
+    GraftDmlRule.landAnti(spark, root, writeOpts, keyCols, subquery,
+      keepNullKeys, Edit.Delete, catalogIdent)
 }
 
 /** `UPDATE t SET … WHERE NOT EXISTS (…)` / `… WHERE k NOT IN
-  * (<uncorrelated subquery>)` — the complement-UPDATE twin, landed
-  * through [[TableFormat.updateAnti]] (simultaneous assignments over
-  * the pre-update row). Three-valued logic matches
-  * [[DeleteAntiKeysGraftTableCommand]]: a NULL in the NOT IN value
-  * list no-ops the statement here, on the raw values.
+  * (<uncorrelated subquery>)` — the complement-UPDATE twin
+  * (simultaneous assignments over the pre-update row). Three-valued
+  * logic matches [[DeleteAntiKeysGraftTableCommand]]: a NULL in the
+  * NOT IN value list no-ops the statement, on the raw values.
   */
 private[graft] case class UpdateAntiKeysGraftTableCommand(root: String,
     writeOpts: Map[String, String], keyCols: Seq[String],
@@ -1466,26 +1485,9 @@ private[graft] case class UpdateAntiKeysGraftTableCommand(root: String,
 
   override def innerChildren: Seq[LogicalPlan] = Seq(subquery)
 
-  override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.col
-    val raw = GraftDmlRule.planFrame(spark, subquery).persist()
-    try {
-      if (keepNullKeys &&
-          !raw.filter(col(raw.columns.head).isNull).isEmpty)
-        return Seq.empty // NULL in the NOT IN list: UNKNOWN everywhere
-      val keys = GraftDmlRule.subqueryKeysFrame(spark, root, keyCols, raw)
-      TableFormat.updateAnti(spark, root, keys,
-        keyCols.map(kc => keys.schema.fields
-          .find(_.name.equalsIgnoreCase(kc)).get.name),
-        keepNullKeys,
-        assignments.map { case (n, v) => n -> GraftDmlRule.rebind(v) },
-        statsCols = GraftDmlRule.statsColsOf(writeOpts),
-        bloomCol = GraftDmlRule.bloomColOf(writeOpts),
-        rawNonEmpty = keepNullKeys && !raw.isEmpty)
-    } finally raw.unpersist()
-    catalogIdent.foreach(id => spark.catalog.refreshTable(id.quotedString))
-    Seq.empty
-  }
+  override def run(spark: SparkSession): Seq[Row] =
+    GraftDmlRule.landAnti(spark, root, writeOpts, keyCols, subquery,
+      keepNullKeys, GraftDmlRule.assign(assignments), catalogIdent)
 }
 
 /** `DELETE FROM t WHERE k NOT IN (SELECT v FROM s WHERE s.j = t.m …)`
@@ -1506,21 +1508,9 @@ private[graft] case class DeleteCorrAntiGraftTableCommand(root: String,
 
   override def innerChildren: Seq[LogicalPlan] = Seq(subquery)
 
-  override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
-    val frame = GraftDmlRule.planFrame(spark, subquery).persist()
-    try {
-      TableFormat.deleteTransform(spark, root, lit(true), { df =>
-        val (joined, affected) =
-          GraftDmlRule.corrAntiAffected(df, frame, valCol, corrCols)
-        joined.filter(not(coalesce(affected, lit(false))))
-          .select(df.columns.toSeq.map(col): _*)
-      }, statsCols = GraftDmlRule.statsColsOf(writeOpts),
-        bloomCol = GraftDmlRule.bloomColOf(writeOpts))
-    } finally frame.unpersist()
-    catalogIdent.foreach(id => spark.catalog.refreshTable(id.quotedString))
-    Seq.empty
-  }
+  override def run(spark: SparkSession): Seq[Row] =
+    GraftDmlRule.landCorrAnti(spark, root, writeOpts, valCol, corrCols,
+      subquery, Edit.Delete, catalogIdent)
 }
 
 /** `UPDATE t SET … WHERE k NOT IN (<correlated subquery>)` — the
@@ -1537,43 +1527,17 @@ private[graft] case class UpdateCorrAntiGraftTableCommand(root: String,
 
   override def innerChildren: Seq[LogicalPlan] = Seq(subquery)
 
-  override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.{col, lit, when}
-    val frame = GraftDmlRule.planFrame(spark, subquery).persist()
-    try {
-      val set = assignments.map { case (n, v) =>
-        n -> GraftDmlRule.rebind(v) }
-      TableFormat.updateTransform(spark, root, lit(true), { df =>
-        // case-insensitive like every sibling update command
-        val byName = set.map { case (n, v) => n.toLowerCase -> v }.toMap
-        require(set.size == byName.size, "duplicate assignment column")
-        val unknown = byName.keySet --
-          df.columns.map(_.toLowerCase).toSet
-        require(unknown.isEmpty,
-          s"UPDATE assigns ${unknown.mkString(", ")} which the table " +
-            s"does not have (${df.columns.mkString(", ")})")
-        val (joined, affected) =
-          GraftDmlRule.corrAntiAffected(df, frame, valCol, corrCols)
-        joined.select(df.schema.fields.toSeq.map { f =>
-          byName.get(f.name.toLowerCase) match {
-            case Some(v) => when(affected, v.cast(f.dataType))
-              .otherwise(col(f.name)).as(f.name)
-            case None => col(f.name)
-          }
-        }: _*)
-      }, statsCols = GraftDmlRule.statsColsOf(writeOpts),
-        bloomCol = GraftDmlRule.bloomColOf(writeOpts))
-    } finally frame.unpersist()
-    catalogIdent.foreach(id => spark.catalog.refreshTable(id.quotedString))
-    Seq.empty
-  }
+  override def run(spark: SparkSession): Seq[Row] =
+    GraftDmlRule.landCorrAnti(spark, root, writeOpts, valCol, corrCols,
+      subquery, GraftDmlRule.assign(assignments), catalogIdent)
 }
 
 /** `DELETE FROM t WHERE <key subquery> AND <static residual>` — the
   * conjunct-composed purge (r19b), landed through
-  * [[TableFormat.deleteKeysWhere]]: exactly the rows whose key matches
-  * the materialized frame AND whose residual holds die; pruning
-  * composes the key split with the residual's bounds walk.
+  * [[TableFormat.rewriteRows]] with the residual on the key hit:
+  * exactly the rows whose key matches the materialized frame AND
+  * whose residual holds die; pruning composes the key split with the
+  * residual's bounds walk.
   */
 private[graft] case class DeleteKeysWhereGraftTableCommand(root: String,
     writeOpts: Map[String, String], keyCols: Seq[String],
@@ -1586,19 +1550,14 @@ private[graft] case class DeleteKeysWhereGraftTableCommand(root: String,
 
   override def run(spark: SparkSession): Seq[Row] = {
     val keys = GraftDmlRule.subqueryKeys(spark, root, keyCols, subquery)
-    TableFormat.deleteKeysWhere(spark, root, keys,
-      keyCols.map(kc => keys.schema.fields
-        .find(_.name.equalsIgnoreCase(kc)).get.name),
-      GraftDmlRule.rebind(extra),
-      statsCols = GraftDmlRule.statsColsOf(writeOpts),
-      bloomCol = GraftDmlRule.bloomColOf(writeOpts))
-    catalogIdent.foreach(id => spark.catalog.refreshTable(id.quotedString))
-    Seq.empty
+    GraftDmlRule.land(spark, root, writeOpts, Hit.Keys(keys,
+      keys.columns.toSeq, Some(GraftDmlRule.rebind(extra))), Edit.Delete)
+    GraftDmlRule.refresh(spark, catalogIdent)
   }
 }
 
 /** `UPDATE t SET … WHERE <key subquery> AND <static residual>` — the
-  * composed-UPDATE twin, landed through [[TableFormat.updateKeysWhere]].
+  * composed-UPDATE twin.
   */
 private[graft] case class UpdateKeysWhereGraftTableCommand(root: String,
     writeOpts: Map[String, String], keyCols: Seq[String],
@@ -1612,22 +1571,17 @@ private[graft] case class UpdateKeysWhereGraftTableCommand(root: String,
 
   override def run(spark: SparkSession): Seq[Row] = {
     val keys = GraftDmlRule.subqueryKeys(spark, root, keyCols, subquery)
-    TableFormat.updateKeysWhere(spark, root, keys,
-      keyCols.map(kc => keys.schema.fields
-        .find(_.name.equalsIgnoreCase(kc)).get.name),
-      GraftDmlRule.rebind(extra),
-      assignments.map { case (n, v) => n -> GraftDmlRule.rebind(v) },
-      statsCols = GraftDmlRule.statsColsOf(writeOpts),
-      bloomCol = GraftDmlRule.bloomColOf(writeOpts))
-    catalogIdent.foreach(id => spark.catalog.refreshTable(id.quotedString))
-    Seq.empty
+    GraftDmlRule.land(spark, root, writeOpts, Hit.Keys(keys,
+      keys.columns.toSeq, Some(GraftDmlRule.rebind(extra))),
+      GraftDmlRule.assign(assignments))
+    GraftDmlRule.refresh(spark, catalogIdent)
   }
 }
 
 /** `UPDATE t SET v = <expr over (SELECT <aggregate> FROM s WHERE s.j =
   * t.k … [GROUP BY s.j])> [, plain assignments] [WHERE <subquery-free
   * cond>]` — the scalar-subquery enrich-update (r19b, generalized
-  * r20), landed through [[TableFormat.updateTransform]]: each
+  * r20), landed through [[TableFormat.rewriteRows]]: each
   * decorrelated per-key aggregate frame left-joins the touched rows on
   * its correlation keys and materializes as a reserved PLACEHOLDER
   * column; rows with NO matching group take the shape's EMPTY-GROUP
@@ -1656,53 +1610,25 @@ private[graft] case class UpdateScalarGraftTableCommand(root: String,
     (scalarParts ++ condScalars).map(_._3)
 
   override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.{col, when}
-    val names = (plain.map(_._1) ++ scalarAssigns.map(_._1))
-      .map(_.toLowerCase)
-    require(names.distinct.size == names.size, "duplicate assignment column")
     val resolvedA = GraftDmlRule.resolveScalars(spark, scalarParts)
     val resolvedC = GraftDmlRule.resolveScalars(spark, condScalars)
     val cond = GraftDmlRule.rebind(condition)
-    TableFormat.updateTransform(spark, root,
-      GraftDmlRule.rebind(prune.getOrElse(condition)), { df =>
-      // both scalar families materialize as the PLACEHOLDER columns
-      // the rewritten assignments/condition reference by name
-      val (cur1, assignVals) =
-        GraftDmlRule.joinScalars(df, resolvedA, "a")
-      val (cur2, condVals) =
-        GraftDmlRule.joinScalars(cur1, resolvedC, "c")
-      val cur = (assignVals ++ condVals).foldLeft(cur2) {
-        case (d, (nm, v)) => d.withColumn(nm, v) }
-      val scalByName = scalarAssigns.map { case (n, e) =>
-        n.toLowerCase -> GraftDmlRule.rebind(e) }.toMap
-      val plainByName = plain.map { case (n, v) =>
-        n.toLowerCase -> GraftDmlRule.rebind(v) }.toMap
-      val unknown = (plainByName.keySet ++ scalByName.keySet) --
-        df.columns.map(_.toLowerCase).toSet
-      require(unknown.isEmpty,
-        s"UPDATE assigns ${unknown.mkString(", ")} which the table " +
-          s"does not have (${df.columns.mkString(", ")})")
-      cur.select(df.schema.fields.toSeq.map { f =>
-        scalByName.get(f.name.toLowerCase)
-          .orElse(plainByName.get(f.name.toLowerCase)) match {
-          case Some(v) =>
-            when(cond, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-          case None => col(f.name)
-        }
-      }: _*)
-    }, statsCols = GraftDmlRule.statsColsOf(writeOpts),
-      bloomCol = GraftDmlRule.bloomColOf(writeOpts))
-    catalogIdent.foreach(id => spark.catalog.refreshTable(id.quotedString))
-    Seq.empty
+    GraftDmlRule.land(spark, root, writeOpts,
+      Hit.Where(GraftDmlRule.rebind(prune.getOrElse(condition)), df =>
+        (GraftDmlRule.withScalars(
+          GraftDmlRule.withScalars(df, resolvedA, "a"), resolvedC, "c"),
+          cond)),
+      GraftDmlRule.assign(plain ++ scalarAssigns))
+    GraftDmlRule.refresh(spark, catalogIdent)
   }
 }
 
 /** `DELETE FROM t WHERE <expr over scalar subqueries> [AND …]` — the
   * comparison purge (r19b): each decorrelated per-key aggregate joins
   * in at run time, its placeholder column feeds the rewritten
-  * condition, and the keep-filter is SQL-exact (`NOT coalesce(cond,
-  * false)` — a matchless row comparing against NULL carries). Pruning
-  * from the subquery-free conjuncts via [[TableFormat.deleteTransform]].
+  * condition, and the keep-filter is SQL-exact (a matchless row
+  * comparing against NULL carries). Pruning from the subquery-free
+  * conjuncts.
   */
 private[graft] case class DeleteScalarCondGraftTableCommand(root: String,
     writeOpts: Map[String, String],
@@ -1715,20 +1641,13 @@ private[graft] case class DeleteScalarCondGraftTableCommand(root: String,
   override def innerChildren: Seq[LogicalPlan] = condScalars.map(_._3)
 
   override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
     val resolved = GraftDmlRule.resolveScalars(spark, condScalars)
     val cond = GraftDmlRule.rebind(condition)
-    TableFormat.deleteTransform(spark, root,
-      GraftDmlRule.rebind(prune), { df =>
-      val (joined, condVals) = GraftDmlRule.joinScalars(df, resolved, "c")
-      val cur = condVals.foldLeft(joined) { case (d, (nm, v)) =>
-        d.withColumn(nm, v) }
-      cur.filter(not(coalesce(cond, lit(false))))
-        .select(df.columns.toSeq.map(col): _*)
-    }, statsCols = GraftDmlRule.statsColsOf(writeOpts),
-      bloomCol = GraftDmlRule.bloomColOf(writeOpts))
-    catalogIdent.foreach(id => spark.catalog.refreshTable(id.quotedString))
-    Seq.empty
+    GraftDmlRule.land(spark, root, writeOpts,
+      Hit.Where(GraftDmlRule.rebind(prune), df =>
+        (GraftDmlRule.withScalars(df, resolved, "c"), cond)),
+      Edit.Delete)
+    GraftDmlRule.refresh(spark, catalogIdent)
   }
 }
 
@@ -1738,8 +1657,9 @@ private[graft] case class DeleteScalarCondGraftTableCommand(root: String,
   * frames + the Scala API cover the rest):
   *
   *   - WHEN MATCHED THEN UPDATE SET * / WHEN NOT MATCHED THEN INSERT *
-  *     → [[TableFormat.merge]] (file-pruned copy-on-write upsert)
-  *   - WHEN MATCHED THEN DELETE (alone) → [[TableFormat.deleteKeys]]
+  *     → [[TableFormat.rewriteRows]] upsert (file-pruned copy-on-write)
+  *   - WHEN MATCHED THEN DELETE (alone) → [[TableFormat.rewriteRows]]
+  *     key delete
   *   - WHEN NOT MATCHED THEN INSERT * (alone) → insert-only append of
   *     the source rows whose key is absent from the target
   *
@@ -1764,9 +1684,9 @@ private[graft] case class MergeIntoGraftTableCommand(root: String,
     val bloomCol = GraftDmlRule.bloomColOf(writeOpts)
     action match {
       case "delete" =>
-        TableFormat.deleteKeys(spark, root,
-          src.select(col(sourceKey).as(targetKey)).distinct(), targetKey,
-          statsCols = statsCols, bloomCol = bloomCol)
+        GraftDmlRule.land(spark, root, writeOpts, Hit.Keys(
+          src.select(col(sourceKey).as(targetKey)).distinct(),
+          Seq(targetKey)), Edit.Delete)
       case _ =>
         val target = TableFormat.latestSchema(root).getOrElse(
           throw new IllegalArgumentException(
@@ -1781,8 +1701,8 @@ private[graft] case class MergeIntoGraftTableCommand(root: String,
           col(f.name).cast(f.dataType).as(f.name)): _*)
         action match {
           case "upsert" =>
-            TableFormat.merge(spark, root, aligned, targetKey,
-              statsCols = statsCols, bloomCol = bloomCol)
+            GraftDmlRule.land(spark, root, writeOpts,
+              Hit.Keys(aligned, Seq(targetKey)), Edit.Upsert(aligned))
           case "insert" =>
             val existing = TableFormat.readSnapshot(spark, root)
               .select(col(targetKey))
@@ -1799,8 +1719,7 @@ private[graft] case class MergeIntoGraftTableCommand(root: String,
             s"unknown merge action '$other'")
         }
     }
-    catalogIdent.foreach(id => spark.catalog.refreshTable(id.quotedString))
-    Seq.empty
+    GraftDmlRule.refresh(spark, catalogIdent)
   }
 }
 
@@ -1813,7 +1732,8 @@ private[graft] case class MergeIntoGraftTableCommand(root: String,
   *   WHEN NOT MATCHED AND s.v > 0 THEN INSERT (k, v) VALUES (s.k, s.v)
   * }}}
   *
-  * landed as ONE crash-atomic [[TableFormat.applyDelta]] commit: every
+  * landed as ONE crash-atomic [[TableFormat.applyDelta]] commit (any
+  * key arity — the sidecar carries the full key tuple): every
   * matched row whose first firing clause is update/delete contributes
   * its key to the merge-on-read MASK, update rows re-land their merged
   * image (target columns carried, assigned columns CASE-projected on
@@ -1936,10 +1856,7 @@ private[graft] case class MergeIntoGraftTableCondCommand(root: String,
       }.select(tks.map(col): _*)
     val tgt =
       if (bySource.nonEmpty) TableFormat.readSnapshot(spark, root)
-      else if (tks.size == 1)
-        TableFormat.readTouchedForKeys(spark, root, keyFrame, tks.head)
-      else
-        TableFormat.readTouchedForKeysMulti(spark, root, keyFrame, tks)
+      else TableFormat.readTouchedForKeys(spark, root, keyFrame, tks)
     val tgtP = newFields.foldLeft(
       tgt.select(tgt.columns.toSeq.map(c => col(c).as(TPfx + c)): _*)) {
         // evolution columns read null on the un-evolved target side
@@ -2059,15 +1976,8 @@ private[graft] case class MergeIntoGraftTableCondCommand(root: String,
           cached :+= u
           u
       }
-      TableFormat.enforceCheckFor(appends, root)
-      if (tks.size == 1)
-        TableFormat.applyDelta(spark, root, delKeys, tks.head, appends,
-          statsCols = statsCols, bloomCol = bloomCol)
-      else // composite key (r19): the dv sidecar carries the full key
-        // TUPLE, so the mask+append lands merge-on-read like the
-        // single-key form — O(keys) sidecar rows, no dir rewrite
-        TableFormat.applyDeltaMulti(spark, root, delKeys, tks, appends,
-          statsCols = statsCols, bloomCol = bloomCol)
+      TableFormat.applyDelta(spark, root, delKeys, tks, appends, statsCols,
+        bloomCol, None, Map.empty[String, String], "apply-delta")
     } finally cached.foreach(_.unpersist())
     if (newFields.nonEmpty) catalogIdent.foreach { id =>
       // schema evolution must also move the CATALOG's declared schema,
@@ -2082,7 +1992,6 @@ private[graft] case class MergeIntoGraftTableCondCommand(root: String,
           spark.sessionState.catalog.alterTableDataSchema(id, head)
       }
     }
-    catalogIdent.foreach(id => spark.catalog.refreshTable(id.quotedString))
-    Seq.empty
+    GraftDmlRule.refresh(spark, catalogIdent)
   }
 }

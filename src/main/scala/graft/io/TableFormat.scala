@@ -1483,10 +1483,13 @@ object TableFormat {
 
   // ------------------------------------------------------ rewrite commits
 
-  /** Split `entries` into (touched, untouched) by whether any key of
-    * `keyed`'s `keyCol` can fall inside the entry's zone-map bounds FOR
-    * THAT COLUMN. One scan of the key frame against the broadcast
-    * manifest bounds; only ≤ |manifest| matched indices reach the driver.
+  /** Split `entries` into (touched, untouched) by whether any key
+    * tuple of `keyed` can fall inside the entry's zone-map bounds. Per
+    * key column, one scan of the key frame against the broadcast
+    * manifest bounds FOR THAT COLUMN; only ≤ |manifest| matched indices
+    * reach the driver. A matching ROW needs every component present,
+    * so a dir any column excludes is untouched — the columns fold, each
+    * probing only the dirs the previous ones kept.
     *
     * Pruning is SOUND-FIRST: an entry earns "untouched" only when its
     * recorded bounds provably exclude every key, which requires bounds
@@ -1496,60 +1499,61 @@ object TableFormat {
     * "date" bounds as epoch days. Anything else is conservatively
     * touched: correctness costs a rewrite, never a carried stale row.
     */
-  private def touchedSplit(spark: SparkSession, entries: Seq[Entry],
-      keyed: DataFrame, keyCol: String,
+  private def touchedSplit(spark: SparkSession, entries0: Seq[Entry],
+      keyed: DataFrame, keyCols: Seq[String],
       colMap: Map[String, String] = Map.empty)
-      : (Seq[Entry], Seq[Entry]) = {
-    import org.apache.spark.sql.types._
-    val kind: Option[String] = keyed.schema(keyCol).dataType match {
-      case LongType | IntegerType | ShortType | ByteType => Some("long")
-      case StringType => Some("string")
-      case DateType => Some("date")
-      case _ => None
-    }
-    val statted = kind.map { k =>
-      entries.zipWithIndex.collect {
-        case (e, i) if e.bounds.get(keyCol).exists(_.typ == k) =>
-          val b = e.bounds(keyCol); (i, b.lo, b.hi)
-      }
-    }.getOrElse(Seq.empty)
-    val touchedIdx: Set[Int] =
-      entries.indices.filterNot(i => statted.exists(_._1 == i)).toSet ++ {
-        if (statted.isEmpty) Set.empty[Int]
-        else {
-          import spark.implicits._
-          val bounds = statted.toDF("i", "lo", "hi")
-          val (k, lo, hi) = kind.get match {
-            case "long" => (col(keyCol).cast("long"),
-              col("lo").cast("long"), col("hi").cast("long"))
-            case "string" => (col(keyCol), col("lo"), col("hi"))
-            case "date" => (
-              datediff(col(keyCol), lit("1970-01-01").cast(DateType))
-                .cast("long"),
-              col("lo").cast("long"), col("hi").cast("long"))
-          }
-          keyed.select(k.as("k"))
-            .join(broadcast(bounds),
-              col("k") >= lo && col("k") <= hi)
-            .select("i").distinct().collect().map(_.getInt(0)).toSet
+      : (Seq[Entry], Seq[Entry]) =
+    keyCols.foldLeft((entries0, Seq.empty[Entry])) {
+      case ((entries, untouched), keyCol) =>
+        import org.apache.spark.sql.types._
+        val kind: Option[String] = keyed.schema(keyCol).dataType match {
+          case LongType | IntegerType | ShortType | ByteType => Some("long")
+          case StringType => Some("string")
+          case DateType => Some("date")
+          case _ => None
         }
-      }
-    val (t, u) = entries.zipWithIndex.partition { case (_, i) =>
-      touchedIdx(i) }
-    // BLOOM refinement for POINT edits: zone maps cannot prune a
-    // uniformly-distributed key (every dir's [min, max] covers every
-    // key — the trickle-upsert worst case), but parquet-native bloom
-    // filters can. When the key set is small enough to hold on the
-    // driver, probe each bounds-kept dir's file blooms and release the
-    // dirs that PROVABLY contain none of the keys.
-    val cleared =
-      if (t.isEmpty) Set.empty[String]
-      else bloomExcluded(spark, t.map(_._1), keyed, keyCol,
-        colMap.getOrElse(keyCol, keyCol))
-    if (cleared.isEmpty) (t.map(_._1), u.map(_._1))
-    else (t.map(_._1).filterNot(e => cleared(e.dir)),
-      u.map(_._1) ++ t.map(_._1).filter(e => cleared(e.dir)))
-  }
+        val statted = kind.map { k =>
+          entries.zipWithIndex.collect {
+            case (e, i) if e.bounds.get(keyCol).exists(_.typ == k) =>
+              val b = e.bounds(keyCol); (i, b.lo, b.hi)
+          }
+        }.getOrElse(Seq.empty)
+        val touchedIdx: Set[Int] =
+          entries.indices.filterNot(i => statted.exists(_._1 == i)).toSet ++ {
+            if (statted.isEmpty) Set.empty[Int]
+            else {
+              import spark.implicits._
+              val bounds = statted.toDF("i", "lo", "hi")
+              val (k, lo, hi) = kind.get match {
+                case "long" => (col(keyCol).cast("long"),
+                  col("lo").cast("long"), col("hi").cast("long"))
+                case "string" => (col(keyCol), col("lo"), col("hi"))
+                case "date" => (
+                  datediff(col(keyCol), lit("1970-01-01").cast(DateType))
+                    .cast("long"),
+                  col("lo").cast("long"), col("hi").cast("long"))
+              }
+              keyed.select(k.as("k"))
+                .join(broadcast(bounds),
+                  col("k") >= lo && col("k") <= hi)
+                .select("i").distinct().collect().map(_.getInt(0)).toSet
+            }
+          }
+        val (t, u) = entries.zipWithIndex.partition { case (_, i) =>
+          touchedIdx(i) }
+        // BLOOM refinement for POINT edits: zone maps cannot prune a
+        // uniformly-distributed key (every dir's [min, max] covers every
+        // key — the trickle-upsert worst case), but parquet-native bloom
+        // filters can. When the key set is small enough to hold on the
+        // driver, probe each bounds-kept dir's file blooms and release the
+        // dirs that PROVABLY contain none of the keys.
+        val cleared =
+          if (t.isEmpty) Set.empty[String]
+          else bloomExcluded(spark, t.map(_._1), keyed, keyCol,
+            colMap.getOrElse(keyCol, keyCol))
+        (t.map(_._1).filterNot(e => cleared(e.dir)),
+          untouched ++ u.map(_._1) ++ t.map(_._1).filter(e => cleared(e.dir)))
+    }
 
   /** Cap on the number of distinct keys a bloom probe will collect to
     * the driver — above it the refinement is skipped entirely (a bulk
@@ -1710,7 +1714,8 @@ object TableFormat {
             "the new head")
       conflictKeys.foreach { case (keys, kc) =>
         if (foreign.nonEmpty &&
-            touchedSplit(spark, foreign, keys, kc, colMapOf(m))._1.nonEmpty)
+            touchedSplit(spark, foreign, keys, Seq(kc), colMapOf(m))._1
+              .nonEmpty)
           throw new CommitConflictException(
             s"rewrite of $root based on v$baseVersion conflicts with " +
               s"v$head: a concurrent commit landed data whose $kc range " +
@@ -1771,15 +1776,11 @@ object TableFormat {
     val dataDir = newDataDir(root)
     val head = readEntries(spark, m.entries, manifestSchema(m))
     writeData(head, dataDir, None, colMapOf(m))
-    // inherit the stats discipline: the fresh dir re-collects bounds
-    // and null accounts for every column ANY previous entry covered
-    // (an all-null dir legitimately has no bounds but still counts),
-    // so a bare OPTIMIZE never silently drops the zone-map/fold story
-    val cols = ((statsCol.toSeq ++ statsCols) ++
-      m.entries.flatMap(e => e.bounds.keys ++ e.nulls.keys)).distinct
     commitRewrite(spark, root, prev, readSet = m.entries,
       baseUntouched = Seq.empty,
-      produced = Seq(mkEntry(spark, dataDir, cols, colMapOf(m))),
+      produced = Seq(mkEntry(spark, dataDir,
+        inheritedStats(statsCol.toSeq ++ statsCols, m.entries),
+        colMapOf(m))),
       ourSchema = Some(head.schema), conflictKeys = None,
       op = "compact")
   }
@@ -1828,640 +1829,309 @@ object TableFormat {
     val packed = readEntries(spark, small, manifestSchema(m))
       .coalesce(nFiles)
     writeData(packed, dataDir, None, colMapOf(m))
-    val cols = ((statsCol.toSeq ++ statsCols) ++
-      small.flatMap(e => e.bounds.keys ++ e.nulls.keys)).distinct
     commitRewrite(spark, root, prev, readSet = small,
       baseUntouched = big,
-      produced = Seq(mkEntry(spark, dataDir, cols, colMapOf(m))),
+      produced = Seq(mkEntry(spark, dataDir,
+        inheritedStats(statsCol.toSeq ++ statsCols, small), colMapOf(m))),
       ourSchema = Some(packed.schema), conflictKeys = None,
       op = "compact-small")
   }
 
-  /** Predicate-pruned copy-on-write core shared by [[deleteWhere]] and
-    * [[updateWhere]]: entries whose zone-map bounds PROVABLY exclude
-    * every row satisfying `cond` carry into the new manifest verbatim
-    * (the same sound predicate-tree evaluator the SQL read path prunes
-    * with — one semantics, every doorway); the rest read EFFECTIVE
-    * (dv masked, debt folds) and rewrite through `transform`. No
-    * matching-possible dir → no-op, no version minted.
+  // ------------------------------------------------------ row-level DML
+
+  /** The rows a copy-on-write statement hits, and so the dirs it must
+    * read: every dir that provably holds no hit row carries into the
+    * new manifest VERBATIM (same path, stats and dv).
     */
-  private def rewriteWhere(spark: SparkSession, root: String,
-      cond: Column, transform: DataFrame => DataFrame,
-      statsCols: Seq[String], bloomCol: Option[String],
-      op: String): Int = {
-    val prev = latestVersion(root)
-    require(prev >= 0, s"nothing to rewrite at $root")
-    val condExpr =
-      org.apache.spark.sql.graftbridge.ColumnBridge.expression(cond)
-    require(!condExpr.exists(
-      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.SubqueryExpression]),
-      "graft-table DELETE/UPDATE conditions cannot contain subqueries — " +
-        "stage the subquery into a frame and use deleteKeys/merge")
-    val m = readManifestFull(root, prev)
-    val (touched, untouched) = m.entries.partition(e =>
-      ManifestFileIndex.keeps(e.bounds, condExpr))
-    if (touched.isEmpty) return prev
-    val dataDir = newDataDir(root)
-    val out = transform(readEntries(spark, touched, manifestSchema(m)))
-    if (op == "update-where") enforceCheck(out, m.check, root)
-    writeData(out, dataDir, bloomCol, colMapOf(m))
-    val cols = (statsCols ++
-      touched.flatMap(e => e.bounds.keys ++ e.nulls.keys)).distinct
-    commitRewrite(spark, root, prev, readSet = touched,
-      baseUntouched = untouched,
-      produced = Seq(mkEntry(spark, dataDir, cols, colMapOf(m))),
-      ourSchema = Some(out.schema), conflictKeys = None, op = op)
+  private[graft] sealed trait Hit
+  private[graft] object Hit {
+    /** Rows where `mark`'s column holds (NULL is not a hit — SQL
+      * condition semantics) over the read frame. `mark` may join
+      * per-row inputs — decorrelated aggregates, NOT IN group accounts
+      * — and returns the widened frame with the column. Dirs whose
+      * zone maps exclude the subquery-free `prune` carry (the same
+      * predicate-tree evaluator the SQL read path prunes with).
+      */
+    final case class Where(prune: Column,
+        mark: DataFrame => (DataFrame, Column)) extends Hit
+
+    /** A static condition: prunes and marks with the same Column. */
+    def where(cond: Column): Where = Where(cond, df => (df, cond))
+
+    /** Rows whose `keyCols` tuple equals a row of `keys` (a NULL key
+      * matches nothing — SQL IN semantics) and where the subquery-free
+      * `residual` holds. Pruning comes from the key VALUES
+      * ([[touchedSplit]]: zone maps + blooms, which no static predicate
+      * gives a subquery) composed with the residual's bounds walk: a
+      * dir carries when either proves it holds no hit row. An empty
+      * key set no-ops.
+      */
+    final case class Keys(keys: DataFrame, keyCols: Seq[String],
+        residual: Option[Column] = None) extends Hit
+
+    /** Rows whose key tuple matches NO row of `keys` — the landed
+      * `NOT EXISTS (… s.k = t.k …)` / `k NOT IN (<subquery>)`. Under
+      * NOT EXISTS a NULL-keyed row is hit (a correlated equality is
+      * never TRUE against NULL); `keepNullKeys` gives NOT IN's
+      * three-valued logic, where `NULL NOT IN ⟨non-empty⟩` is UNKNOWN
+      * and the row is not hit. An EMPTY frame is `NOT IN (∅)` — every
+      * row hit, NULL keys included — unless `rawNonEmpty`: the raw
+      * list was non-empty and lost every value to the key-type cast
+      * round trip, so NULL keys stay UNKNOWN. NULLs IN the raw list
+      * resolve upstream (the statement no-ops). A delete INVERTS
+      * pruning: a dir the keys provably miss holds only hit rows and
+      * drops from the manifest wholesale — under `keepNullKeys` only
+      * when its `#nulls` account proves no NULL key. An update rewrites
+      * every dir: a disjoint dir's rows all change.
+      */
+    final case class NotKeys(keys: DataFrame, keyCols: Seq[String],
+        keepNullKeys: Boolean, rawNonEmpty: Boolean) extends Hit
   }
 
-  /** Row-level DELETE by PREDICATE — the general form [[deleteKeys]]'
-    * key-list contract can't express (`DELETE FROM t WHERE k BETWEEN …
-    * AND status = '…'`). SQL null semantics: a row whose condition
-    * evaluates NULL is KEPT (the keep-filter is `NOT coalesce(cond,
-    * false)`). Dirs whose bounds exclude the predicate carry verbatim
-    * — at 100 TB a range delete rewrites the intersecting dirs, not
-    * the table. The SQL doorway (`DELETE FROM t WHERE …` over a
-    * registered table) lands here via [[graft.io.GraftDmlRule]].
+  /** What a copy-on-write statement does to the rows it hits. */
+  private[graft] sealed trait Edit
+  private[graft] object Edit {
+    case object Delete extends Edit
+
+    /** SQL UPDATE assignments — see [[assigned]]. */
+    final case class Assign(set: Seq[(String, Column)]) extends Edit
+
+    /** MERGE upsert: hit rows are replaced by `updates` and its other
+      * rows insert. Caller contract: `updates` has unique keys and is
+      * also the [[Hit.Keys]] frame.
+      */
+    final case class Upsert(updates: DataFrame) extends Edit
+  }
+
+  /** `frame` projected onto `schema` with `set`'s assignments applied
+    * where `fire` holds (NULL keeps the row as it was): every
+    * assignment sees the PRE-update row (one simultaneous select,
+    * never sequential withColumn) and casts to its column's declared
+    * type — an UPDATE never retypes. Names resolve case-insensitively,
+    * as SQL does; an unknown or duplicate column refuses.
+    */
+  private[graft] def assigned(frame: DataFrame, schema: StructType,
+      set: Seq[(String, Column)], fire: Column): DataFrame = {
+    val byName = set.map { case (n, v) => n.toLowerCase -> v }.toMap
+    require(byName.size == set.size, "duplicate assignment column")
+    val have = schema.fieldNames.map(_.toLowerCase).toSet
+    val unknown = set.map(_._1).filterNot(n => have(n.toLowerCase))
+    require(unknown.isEmpty,
+      s"UPDATE assigns ${unknown.mkString(", ")} which the table " +
+        s"does not have (${schema.fieldNames.mkString(", ")})")
+    frame.select(schema.fields.toSeq.map { f =>
+      byName.get(f.name.toLowerCase) match {
+        case Some(v) =>
+          when(fire, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
+        case None => col(f.name)
+      }
+    }: _*)
+  }
+
+  /** Stats columns a rewritten dir records: the caller's plus every
+    * column any rewritten entry carried bounds or a null account for
+    * (an all-null dir legitimately has no bounds but still counts), so
+    * no rewrite silently drops the zone-map/fold story.
+    */
+  private def inheritedStats(cols: Seq[String], read: Seq[Entry])
+      : Seq[String] =
+    (cols ++ read.flatMap(e => e.bounds.keys ++ e.nulls.keys)).distinct
+
+  /** The COPY-ON-WRITE core every row-level DELETE/UPDATE/MERGE upsert
+    * lands through (the Delta/Iceberg file-pruned rewrite): pin the
+    * head, split its dirs by `hit`, read the touched ones EFFECTIVE (dv
+    * masked — a rewrite never resurrects a deleted row — and the debt
+    * folds away), mark hit rows with one left join, apply `edit`,
+    * enforce the table's CHECK on the rows the commit introduces, write
+    * one fresh dir that inherits the touched dirs' stats, and commit
+    * through [[commitRewrite]] (a disjoint concurrent commit rebases, a
+    * true overlap raises [[CommitConflictException]]). A statement
+    * whose pruning leaves nothing to read mints no version. At 100 TB a
+    * trickle of edits rewrites the handful of intersecting dirs, never
+    * the table.
+    */
+  private[graft] def rewriteRows(spark: SparkSession, root: String,
+      hit: Hit, edit: Edit, statsCols: Seq[String],
+      bloomCol: Option[String]): Int = {
+    val prev = latestVersion(root)
+    require(prev >= 0, s"nothing to rewrite at $root")
+    edit match {
+      case Edit.Assign(set) =>
+        require(set.nonEmpty, "UPDATE needs at least one assignment")
+      case _ =>
+    }
+    val m = readManifestFull(root, prev)
+    val schema = manifestSchema(m)
+    val colMap = colMapOf(m)
+    def subqueryFree(c: Column) = {
+      val e = org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)
+      require(!e.exists(_.isInstanceOf[
+        org.apache.spark.sql.catalyst.expressions.SubqueryExpression]),
+        "graft-table DELETE/UPDATE conditions cannot contain subqueries " +
+          "— stage the subquery into a frame and use deleteKeys/merge")
+      e
+    }
+    val HitCol = "__graft_hit"
+    val isHit = coalesce(col(HitCol), lit(false))
+    // membership by left join (auto-broadcast when the key frame's
+    // stats allow — a GDPR erasure list is KBs, a bulk set shuffles)
+    def joinKeys(keys: DataFrame, keyCols: Seq[String])(df: DataFrame) = {
+      require(!df.columns.contains(HitCol), s"$HitCol is reserved")
+      df.join(keys.select(keyCols.map(col): _*).na.drop().distinct()
+        .withColumn(HitCol, lit(true)), keyCols, "left")
+    }
+    // (dirs to read and rewrite, dirs carried verbatim, dirs dropped
+    // wholesale, the hit marker over the read rows)
+    val (read, carry, drop, mark) = hit match {
+      case Hit.Where(prune, mark) =>
+        val p = subqueryFree(prune)
+        val (t, u) = m.entries.partition(e =>
+          ManifestFileIndex.keeps(e.bounds, p))
+        (t, u, Nil, mark)
+      case Hit.Keys(keys, keyCols, residual) =>
+        if (keys.isEmpty) return prev
+        val r = residual.map(subqueryFree)
+        val (tK, uK) = touchedSplit(spark, m.entries, keys, keyCols, colMap)
+        val (t, uR) = tK.partition(e =>
+          r.forall(ManifestFileIndex.keeps(e.bounds, _)))
+        (t, uK ++ uR, Nil, (df: DataFrame) => (joinKeys(keys, keyCols)(df),
+          isHit && coalesce(residual.getOrElse(lit(true)), lit(false))))
+      case Hit.NotKeys(keys, keyCols, keepNullKeys, rawNonEmpty) =>
+        require(!keepNullKeys || keyCols.size == 1,
+          "NOT IN three-valued logic (keepNullKeys) is single-column by " +
+            "its SQL shape — tuple complements arrive as NOT EXISTS")
+        if (m.entries.isEmpty) return prev
+        val empty = keys.isEmpty
+        val nullsUnknown = keepNullKeys && (!empty || rawNonEmpty)
+        val affected = (if (empty) lit(true) else !isHit) &&
+          (if (nullsUnknown) col(keyCols.head).isNotNull else lit(true))
+        val mark = (df: DataFrame) =>
+          (if (empty) df else joinKeys(keys, keyCols)(df), affected)
+        edit match {
+          case Edit.Delete =>
+            val (maybe, disjoint) =
+              if (empty) (Seq.empty[Entry], m.entries)
+              else touchedSplit(spark, m.entries, keys, keyCols, colMap)
+            val (drop, keepNulls) =
+              if (!nullsUnknown) (disjoint, Seq.empty[Entry])
+              else disjoint.partition(_.nulls.get(keyCols.head).contains(0L))
+            (maybe ++ keepNulls, Seq.empty[Entry], drop, mark)
+          case _ => (m.entries, Seq.empty[Entry], Seq.empty[Entry], mark)
+        }
+    }
+    val out: Option[DataFrame] =
+      if (read.isEmpty) edit match {
+        case Edit.Upsert(updates) => Some(updates) // a pure insert
+        case _ => if (drop.isEmpty) return prev else None
+      } else {
+        val df = readEntries(spark, read, schema)
+        val (marked, hitRows) = mark(df)
+        def kept = marked.filter(!coalesce(hitRows, lit(false)))
+          .select(df.columns.toSeq.map(col): _*)
+        Some(edit match {
+          case Edit.Delete => kept
+          case Edit.Assign(set) => assigned(marked, df.schema, set, hitRows)
+          // allowMissingColumns: on an evolved table the carried rows
+          // and the updates may straddle a widening — absent side nulls
+          case Edit.Upsert(updates) =>
+            kept.unionByName(updates, allowMissingColumns = true)
+        })
+      }
+    // CHECK probes the rows this commit introduces, before any file lands
+    edit match {
+      case Edit.Delete =>
+      case Edit.Assign(_) => out.foreach(enforceCheck(_, m.check, root))
+      case Edit.Upsert(updates) =>
+        guardNewColumns(updates.schema, Some(m))
+        enforceCheck(updates, m.check, root)
+    }
+    // bloomCol keeps the rewrite bloom-indexed: a rewritten dir that
+    // dropped its blooms would turn conservatively-touched on the NEXT
+    // point edit, decaying pruning with every rewrite
+    val produced = out.toSeq.map { df =>
+      val dataDir = newDataDir(root)
+      writeData(df, dataDir, bloomCol, colMap)
+      mkEntry(spark, dataDir, inheritedStats(statsCols, read), colMap)
+    }
+    // key-anchored verbs also refuse a concurrent commit that landed
+    // one of their keys; the complement's read set is the whole table
+    val conflictKeys = hit match {
+      case Hit.Keys(keys, keyCols, None) =>
+        Some((keys.select(keyCols.head), keyCols.head))
+      case _ => None
+    }
+    val op = (hit, edit) match {
+      case (_, Edit.Upsert(_)) => "merge"
+      case (_, Edit.Assign(_)) => "update-where"
+      case (Hit.Keys(_, _, None), _) => "delete"
+      case _ => "delete-where"
+    }
+    commitRewrite(spark, root, prev, readSet = read ++ drop,
+      baseUntouched = carry, produced = produced,
+      ourSchema = out.map(_.schema).orElse(schema),
+      conflictKeys = conflictKeys, op = op)
+  }
+
+  /** Row-level DELETE by PREDICATE (`DELETE FROM t WHERE k BETWEEN …
+    * AND status = '…'`): a row whose condition is NULL is KEPT. Dirs
+    * whose bounds exclude the predicate carry verbatim.
     */
   def deleteWhere(spark: SparkSession, root: String, cond: Column,
                   statsCol: Option[String] = None,
                   statsCols: Seq[String] = Nil,
                   bloomCol: Option[String] = None): Int =
-    rewriteWhere(spark, root, cond,
-      df => df.filter(!coalesce(cond, lit(false))),
-      (statsCol.toSeq ++ statsCols).distinct, bloomCol, op = "delete-where")
+    rewriteRows(spark, root, Hit.where(cond), Edit.Delete,
+      (statsCol.toSeq ++ statsCols).distinct, bloomCol)
 
   /** Row-level UPDATE by PREDICATE: rows satisfying `cond` take the
-    * assigned values (cast to the column's declared type — an UPDATE
-    * never retypes), all other rows — NULL-condition rows included —
-    * carry unchanged. Every assignment sees the PRE-update row (one
-    * simultaneous select, never sequential withColumn), matching SQL
-    * UPDATE semantics. Same pruning/commit story as [[deleteWhere]].
+    * assignments ([[assigned]]), all others — NULL-condition rows
+    * included — carry unchanged. Same pruning as [[deleteWhere]].
     */
   def updateWhere(spark: SparkSession, root: String, cond: Column,
                   set: Seq[(String, Column)],
                   statsCol: Option[String] = None,
                   statsCols: Seq[String] = Nil,
-                  bloomCol: Option[String] = None): Int = {
-    require(set.nonEmpty, "updateWhere needs at least one assignment")
-    rewriteWhere(spark, root, cond, { df =>
-      val byName = set.toMap
-      require(set.size == byName.size, "duplicate assignment column")
-      val unknown = byName.keySet -- df.columns.toSet
-      require(unknown.isEmpty,
-        s"UPDATE assigns ${unknown.mkString(", ")} which the table " +
-          s"does not have (${df.columns.mkString(", ")})")
-      df.select(df.schema.fields.toSeq.map { f =>
-        byName.get(f.name) match {
-          case Some(v) =>
-            when(cond, v.cast(f.dataType)).otherwise(col(f.name))
-              .as(f.name)
-          case None => col(f.name)
-        }
-      }: _*)
-    }, (statsCol.toSeq ++ statsCols).distinct, bloomCol,
-      op = "update-where")
-  }
+                  bloomCol: Option[String] = None): Int =
+    rewriteRows(spark, root, Hit.where(cond), Edit.Assign(set),
+      (statsCol.toSeq ++ statsCols).distinct, bloomCol)
 
-  /** Predicate-pruned copy-on-write UPDATE whose new values come from
-    * a caller-supplied TRANSFORM over the touched rows — the landing
-    * verb for scalar-subquery assignments (r19b,
-    * [[graft.io.UpdateScalarGraftTableCommand]]), where the assigned
-    * value is a per-key JOIN against a decorrelated aggregate frame
-    * and no static expression can express it. Same pruning/commit/
-    * CHECK story as [[updateWhere]]: dirs whose bounds exclude `cond`
-    * carry verbatim, the transform must preserve the schema (enforced
-    * — an UPDATE never retypes or reorders), NULL-condition rows carry
-    * unchanged (the transform receives `cond` and applies it per row).
-    */
-  private[graft] def updateTransform(spark: SparkSession, root: String,
-      cond: Column, transform: DataFrame => DataFrame,
-      statsCols: Seq[String] = Nil,
-      bloomCol: Option[String] = None): Int =
-    rewriteTransform(spark, root, cond, transform, statsCols, bloomCol,
-      op = "update-where")
-
-  /** The DELETE twin of [[updateTransform]] (r19b): a keep-filtered
-    * rewrite whose filter the caller builds from per-key joins (the
-    * scalar-subquery WHERE shapes). Pruning from `cond` — the
-    * subquery-FREE conjuncts; a dir they exclude holds no deletable
-    * row whatever the subquery values are.
-    */
-  private[graft] def deleteTransform(spark: SparkSession, root: String,
-      cond: Column, transform: DataFrame => DataFrame,
-      statsCols: Seq[String] = Nil,
-      bloomCol: Option[String] = None): Int =
-    rewriteTransform(spark, root, cond, transform, statsCols, bloomCol,
-      op = "delete-where")
-
-  private def rewriteTransform(spark: SparkSession, root: String,
-      cond: Column, transform: DataFrame => DataFrame,
-      statsCols: Seq[String], bloomCol: Option[String],
-      op: String): Int =
-    rewriteWhere(spark, root, cond, { df =>
-      val out = transform(df)
-      require(out.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-        df.schema.fields.map(f => (f.name, f.dataType)).toSeq,
-        s"$op transform must preserve the schema: " +
-          s"${df.schema.simpleString} -> ${out.schema.simpleString}")
-      out
-    }, statsCols, bloomCol, op = op)
-
-  /** Row-level UPDATE by KEY SET — the verb `UPDATE t SET … WHERE k IN
-    * (SELECT …)` lands on ([[graft.io.GraftDmlRule]] materializes the
-    * uncorrelated subquery into `keys`): rows whose `keyCol` matches a
-    * key take the assignments (simultaneous over the pre-update row,
-    * cast to declared types — [[updateWhere]] semantics), everything
-    * else carries. Pruning comes from the key VALUES via
-    * [[touchedSplit]] (zone maps + blooms), which a static predicate
-    * tree cannot give a subquery; dirs provably holding no key carry
-    * verbatim, a fully-disjoint key set no-ops without minting a
-    * version. NULL keys match nothing (SQL IN semantics — a NULL
-    * condition keeps the row).
-    */
-  def updateKeys(spark: SparkSession, root: String, keys: DataFrame,
-                 keyCol: String, set: Seq[(String, Column)],
-                 statsCol: Option[String] = None,
-                 statsCols: Seq[String] = Nil,
-                 bloomCol: Option[String] = None): Int = {
-    require(set.nonEmpty, "updateKeys needs at least one assignment")
-    val prev = latestVersion(root)
-    require(prev >= 0, s"nothing to update at $root")
-    if (keys.isEmpty) return prev
-    val m = readManifestFull(root, prev)
-    val (touched, untouched) =
-      touchedSplit(spark, m.entries, keys, keyCol, colMapOf(m))
-    if (touched.isEmpty) return prev // provably disjoint: no-op
-    val df = readEntries(spark, touched, manifestSchema(m))
-    val byName = set.toMap
-    require(set.size == byName.size, "duplicate assignment column")
-    val unknown = byName.keySet -- df.columns.toSet
-    require(unknown.isEmpty,
-      s"UPDATE assigns ${unknown.mkString(", ")} which the table " +
-        s"does not have (${df.columns.mkString(", ")})")
-    val HitCol = "__graft_upd_hit"
-    require(!df.columns.contains(HitCol), s"$HitCol is reserved")
-    // membership by left join (auto-broadcast when the key frame's
-    // stats allow — a GDPR erasure list is KBs, a bulk set shuffles)
-    val marked = df.join(
-      keys.select(col(keyCol)).na.drop().distinct()
-        .withColumn(HitCol, lit(true)), Seq(keyCol), "left")
-    val out = marked.select(df.schema.fields.toSeq.map { f =>
-      byName.get(f.name) match {
-        case Some(v) => when(col(HitCol) === true, v.cast(f.dataType))
-          .otherwise(col(f.name)).as(f.name)
-        case None => col(f.name)
-      }
-    }: _*)
-    enforceCheck(out, m.check, root)
-    val dataDir = newDataDir(root)
-    writeData(out, dataDir, bloomCol, colMapOf(m))
-    val cols = ((statsCol.toSeq ++ statsCols) ++
-      touched.flatMap(_.bounds.keys)).distinct
-    commitRewrite(spark, root, prev, readSet = touched,
-      baseUntouched = untouched,
-      produced = Seq(mkEntry(spark, dataDir, cols, colMapOf(m))),
-      ourSchema = Some(out.schema),
-      conflictKeys = Some((keys.select(keyCol), keyCol)),
-      op = "update-where")
-  }
-
-  /** File-pruned COPY-ON-WRITE upsert (the Delta/Iceberg MERGE pattern
-    * reduced): rows of `updates` REPLACE same-key rows of the latest
-    * snapshot; keys present nowhere are inserted. Only data dirs whose
-    * zone-map key bounds contain at least one update key are rewritten —
-    * at 100 TB that is the whole point: a trickle of updates rewrites a
-    * handful of dirs, not the table. Untouched dirs carry into the new
-    * manifest VERBATIM (same path, same stats, same dv), which the spec
-    * pins. Touched dirs are read EFFECTIVE (their deletion vectors
-    * applied — a rewrite must never resurrect a dv-deleted row) and the
-    * rewrite folds those dvs away.
-    *
-    * Caller contract: `updates` has unique keys. Commit goes through
-    * [[commitRewrite]]: a concurrent disjoint-footprint commit rebases,
-    * a true overlap raises [[CommitConflictException]].
+  /** File-pruned COPY-ON-WRITE upsert: rows of `updates` REPLACE
+    * same-key rows of the latest snapshot; keys present nowhere are
+    * inserted. Only dirs that may hold an update key are rewritten.
+    * Caller contract: `updates` has unique keys.
     */
   def merge(spark: SparkSession, root: String, updates: DataFrame,
             keyCol: String, statsCol: Option[String] = None,
             statsCols: Seq[String] = Nil,
-            bloomCol: Option[String] = None): Int = {
-    val prev = latestVersion(root)
-    require(prev >= 0, s"nothing to merge into at $root")
-    // an empty delta must not land an empty dir + a new version every
-    // idle cycle (nor wholesale-rewrite stats-less dirs)
-    if (updates.isEmpty) return prev
-    val m = readManifestFull(root, prev)
-    enforceCheck(updates, m.check, root)
-    guardNewColumns(updates.schema, Some(m))
-    val (touched, untouched) =
-      touchedSplit(spark, m.entries, updates, keyCol, colMapOf(m))
-    val dataDir = newDataDir(root)
-    val merged =
-      if (touched.isEmpty) updates
-      else readEntries(spark, touched, manifestSchema(m))
-        .join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
-        // allowMissingColumns: on an evolved table the carried rows and
-        // the updates may straddle a widening — absent side reads null
-        .unionByName(updates, allowMissingColumns = true)
-    // bloomCol keeps the rewrite bloom-indexed: a rewritten dir that
-    // silently dropped its blooms would turn conservatively-touched on
-    // the NEXT point edit, decaying pruning with every rewrite
-    writeData(merged, dataDir, bloomCol, colMapOf(m))
-    val cols = (statsCol.toSeq ++ statsCols).distinct
-    commitRewrite(spark, root, prev, readSet = touched,
-      baseUntouched = untouched,
-      produced = Seq(mkEntry(spark, dataDir, cols, colMapOf(m))),
-      ourSchema = Some(merged.schema),
-      conflictKeys = Some((updates.select(keyCol), keyCol)),
-      op = "merge")
-  }
+            bloomCol: Option[String] = None): Int =
+    rewriteRows(spark, root, Hit.Keys(updates, Seq(keyCol)),
+      Edit.Upsert(updates), (statsCol.toSeq ++ statsCols).distinct, bloomCol)
 
-  /** Row-level COPY-ON-WRITE DELETE by key — the same prune-rewrite-
-    * commit core as [[merge]] with an empty insert set: touched dirs are
-    * rewritten minus the deleted keys, untouched dirs carry verbatim.
-    * `keys` is a one-column frame of `keyCol` values (unique not
-    * required). For point deletes on big dirs prefer [[deleteKeysMor]],
-    * which writes a deletion-vector sidecar instead of rewriting data.
+  /** Row-level COPY-ON-WRITE DELETE by key: `keys` is a frame of
+    * `keyCol` values (unique not required). For point deletes on big
+    * dirs prefer [[deleteKeysMor]], which writes a deletion-vector
+    * sidecar instead of rewriting data.
     */
   def deleteKeys(spark: SparkSession, root: String, keys: DataFrame,
                  keyCol: String, statsCol: Option[String] = None,
                  statsCols: Seq[String] = Nil,
-                 bloomCol: Option[String] = None): Int = {
-    val prev = latestVersion(root)
-    require(prev >= 0, s"nothing to delete from at $root")
-    // empty-input guard (round-15 ADVICE): an empty keys frame would
-    // mark every stats-less dir touched, rewrite it verbatim, and commit
-    // a useless new version per call — mirror merge's no-op
-    if (keys.isEmpty) return prev
-    val m = readManifestFull(root, prev)
-    val (touched, untouched) =
-      touchedSplit(spark, m.entries, keys, keyCol, colMapOf(m))
-    if (touched.isEmpty) return prev // nothing referenced: no-op, no commit
-    val dataDir = newDataDir(root)
-    val remaining = readEntries(spark, touched, manifestSchema(m))
-      .join(keys.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
-    writeData(remaining, dataDir, bloomCol, colMapOf(m))
-    val cols = (statsCol.toSeq ++ statsCols).distinct
-    commitRewrite(spark, root, prev, readSet = touched,
-      baseUntouched = untouched,
-      produced = Seq(mkEntry(spark, dataDir, cols, colMapOf(m))),
-      ourSchema = Some(remaining.schema),
-      conflictKeys = Some((keys.select(keyCol), keyCol)),
-      op = "delete")
-  }
+                 bloomCol: Option[String] = None): Int =
+    rewriteRows(spark, root, Hit.Keys(keys, Seq(keyCol)), Edit.Delete,
+      (statsCol.toSeq ++ statsCols).distinct, bloomCol)
 
-  /** Row-level DELETE by KEY SET **composed with static conjuncts** —
-    * the landed form of (r19b)
-    * {{{
-    *   DELETE FROM t WHERE k IN (SELECT …) AND status = '…' [AND …]
-    *   DELETE FROM t WHERE EXISTS (SELECT … WHERE s.k = t.k …) AND …
-    * }}}
-    * Deletes exactly the rows whose key matches a frame row AND whose
-    * static residual holds — a ROW-SUBSET the key-based verbs cannot
-    * express (two rows sharing a key where only one satisfies the
-    * residual must not both die), so the landing is a keep-filtered
-    * copy-on-write. Pruning COMPOSES: a dir carries verbatim when the
-    * key values provably miss it ([[touchedSplit]]) OR its bounds
-    * exclude the static residual (the read path's predicate-tree walk)
-    * — at 100 TB a guarded erasure rewrites only dirs both prunings
-    * keep. SQL nulls: a NULL key matches nothing, a NULL residual
-    * keeps the row.
-    */
-  def deleteKeysWhere(spark: SparkSession, root: String, keys: DataFrame,
-                      keyCols: Seq[String], extra: Column,
-                      statsCols: Seq[String] = Nil,
-                      bloomCol: Option[String] = None): Int = {
-    require(keyCols.nonEmpty, "deleteKeysWhere needs a key column")
-    val prev = latestVersion(root)
-    require(prev >= 0, s"nothing to delete from at $root")
-    if (keys.isEmpty) return prev
-    val extraExpr =
-      org.apache.spark.sql.graftbridge.ColumnBridge.expression(extra)
-    require(!extraExpr.exists(
-      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.SubqueryExpression]),
-      "the composed residual must be subquery-free")
-    val m = readManifestFull(root, prev)
-    val (tK, uK) =
-      if (keyCols.size == 1)
-        touchedSplit(spark, m.entries, keys, keyCols.head, colMapOf(m))
-      else touchedSplitMulti(spark, m.entries, keys, keyCols, colMapOf(m))
-    val (touched, uX) = tK.partition(e =>
-      ManifestFileIndex.keeps(e.bounds, extraExpr))
-    val untouched = uK ++ uX
-    if (touched.isEmpty) return prev
-    val df = readEntries(spark, touched, manifestSchema(m))
-    val HitCol = "__graft_cmp_hit"
-    require(!df.columns.contains(HitCol), s"$HitCol is reserved")
-    val marked = df.join(
-      keys.select(keyCols.map(col): _*).na.drop().distinct()
-        .withColumn(HitCol, lit(true)), keyCols, "left")
-    val kept = marked.filter(
-      !(coalesce(col(HitCol), lit(false)) && coalesce(extra, lit(false))))
-      .select(df.columns.toSeq.map(col): _*)
-    val dataDir = newDataDir(root)
-    writeData(kept, dataDir, bloomCol, colMapOf(m))
-    commitRewrite(spark, root, prev, readSet = touched,
-      baseUntouched = untouched,
-      produced = Seq(mkEntry(spark, dataDir, (statsCols ++
-        touched.flatMap(e => e.bounds.keys ++ e.nulls.keys)).distinct,
-        colMapOf(m))),
-      ourSchema = Some(kept.schema), conflictKeys = None,
-      op = "delete-where")
-  }
-
-  /** The UPDATE twin of [[deleteKeysWhere]] (r19b): rows whose key
-    * matches AND whose static residual holds take the assignments
-    * (simultaneous over the PRE-update row, cast to declared types);
-    * everything else — NULL keys and NULL residuals included — carries
-    * unchanged. Same composed pruning.
-    */
-  def updateKeysWhere(spark: SparkSession, root: String, keys: DataFrame,
-                      keyCols: Seq[String], extra: Column,
-                      set: Seq[(String, Column)],
-                      statsCols: Seq[String] = Nil,
-                      bloomCol: Option[String] = None): Int = {
-    require(set.nonEmpty, "updateKeysWhere needs at least one assignment")
-    require(keyCols.nonEmpty, "updateKeysWhere needs a key column")
-    val prev = latestVersion(root)
-    require(prev >= 0, s"nothing to update at $root")
-    if (keys.isEmpty) return prev
-    val extraExpr =
-      org.apache.spark.sql.graftbridge.ColumnBridge.expression(extra)
-    require(!extraExpr.exists(
-      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.SubqueryExpression]),
-      "the composed residual must be subquery-free")
-    val m = readManifestFull(root, prev)
-    val (tK, uK) =
-      if (keyCols.size == 1)
-        touchedSplit(spark, m.entries, keys, keyCols.head, colMapOf(m))
-      else touchedSplitMulti(spark, m.entries, keys, keyCols, colMapOf(m))
-    val (touched, uX) = tK.partition(e =>
-      ManifestFileIndex.keeps(e.bounds, extraExpr))
-    val untouched = uK ++ uX
-    if (touched.isEmpty) return prev
-    val df = readEntries(spark, touched, manifestSchema(m))
-    val byName = set.toMap
-    require(set.size == byName.size, "duplicate assignment column")
-    val unknown = byName.keySet -- df.columns.toSet
-    require(unknown.isEmpty,
-      s"UPDATE assigns ${unknown.mkString(", ")} which the table " +
-        s"does not have (${df.columns.mkString(", ")})")
-    val HitCol = "__graft_cmp_hit"
-    require(!df.columns.contains(HitCol), s"$HitCol is reserved")
-    val marked = df.join(
-      keys.select(keyCols.map(col): _*).na.drop().distinct()
-        .withColumn(HitCol, lit(true)), keyCols, "left")
-    val fire = coalesce(col(HitCol), lit(false)) &&
-      coalesce(extra, lit(false))
-    val out = marked.select(df.schema.fields.toSeq.map { f =>
-      byName.get(f.name) match {
-        case Some(v) => when(fire, v.cast(f.dataType))
-          .otherwise(col(f.name)).as(f.name)
-        case None => col(f.name)
-      }
-    }: _*)
-    enforceCheck(out, m.check, root)
-    val dataDir = newDataDir(root)
-    writeData(out, dataDir, bloomCol, colMapOf(m))
-    commitRewrite(spark, root, prev, readSet = touched,
-      baseUntouched = untouched,
-      produced = Seq(mkEntry(spark, dataDir, (statsCols ++
-        touched.flatMap(e => e.bounds.keys ++ e.nulls.keys)).distinct,
-        colMapOf(m))),
-      ourSchema = Some(out.schema), conflictKeys = None,
-      op = "update-where")
-  }
-
-  /** Row-level DELETE of the COMPLEMENT of a key set — the landed form
-    * of the NOT-shaped SQL purges (r19)
-    * {{{
-    *   DELETE FROM t WHERE NOT EXISTS (SELECT 1 FROM s WHERE s.k = t.k …)
-    *   DELETE FROM t WHERE k NOT IN (SELECT v FROM s …)  -- uncorrelated
-    * }}}
-    * ([[graft.io.GraftDmlRule]] decorrelates/materializes `keys`): every
-    * row whose key tuple equality-matches NO frame row is deleted. The
-    * complement INVERTS the pruning action: a dir whose zone maps/blooms
-    * prove it holds none of the keys ([[touchedSplit]]'s "untouched")
-    * holds ONLY doomed rows — it DROPS from the manifest wholesale, zero
-    * data I/O — while maybe-overlapping dirs rewrite keeping their
-    * semi-join matches. `keepNullKeys` carries the statement's
-    * three-valued logic: NOT EXISTS deletes NULL-keyed rows (a
-    * correlated equality against NULL is never TRUE, single- or
-    * multi-key), NOT IN keeps them (`NULL NOT IN ⟨non-empty⟩` is
-    * UNKNOWN) — and under `keepNullKeys` a provably-disjoint dir may
-    * drop wholesale only when its `#nulls` account PROVES it holds no
-    * NULL-keyed rows; an unknown account rewrites conservatively. An
-    * EMPTY key frame is `x NOT IN (∅)` / no inner row can ever match:
-    * TRUE for every row, NULL keys included — the table truncates in
-    * one commit. NULLs IN the value list resolve UPSTREAM (the command
-    * no-ops the whole statement); this verb never sees them.
-    */
-  def deleteAnti(spark: SparkSession, root: String, keys: DataFrame,
-                 keyCols: Seq[String], keepNullKeys: Boolean,
-                 statsCols: Seq[String] = Nil,
-                 bloomCol: Option[String] = None,
-                 rawNonEmpty: Boolean = false): Int = {
-    require(keyCols.nonEmpty, "deleteAnti needs at least one key column")
-    require(!keepNullKeys || keyCols.size == 1,
-      "NOT IN three-valued logic (keepNullKeys) is single-column by " +
-        "its SQL shape — tuple complements arrive as NOT EXISTS")
-    val prev = latestVersion(root)
-    require(prev >= 0, s"nothing to delete from at $root")
-    val m = readManifestFull(root, prev)
-    if (m.entries.isEmpty) return prev
-    val schema = manifestSchema(m)
-    if (keys.isEmpty) {
-      // an empty POST-CAST key frame is two different statements (r19
-      // ADVICE, medium): a genuinely empty subquery is `x NOT IN (∅)`
-      // — TRUE for every row, NULL keys included, the table truncates
-      // — but a NON-empty raw list that merely lost every value to the
-      // round-trip cast filter (e.g. a BIGINT key against an
-      // all-fractional DOUBLE list) keeps SQL 3VL: non-NULL keys match
-      // nothing (TRUE, delete), NULL keys are UNKNOWN (carry). Under
-      // NOT EXISTS (!keepNullKeys) both collapse to truncate-all — a
-      // correlated equality against a non-representable value is never
-      // TRUE, NULL-keyed rows included.
-      if (!keepNullKeys || !rawNonEmpty)
-        return commitRewrite(spark, root, prev, readSet = m.entries,
-          baseUntouched = Nil, produced = Seq.empty, ourSchema = schema,
-          conflictKeys = None, op = "delete-where")
-      val (drop, rewriteNulls) =
-        m.entries.partition(_.nulls.get(keyCols.head).contains(0L))
-      val produced =
-        if (rewriteNulls.isEmpty) Seq.empty
-        else {
-          val kept = readEntries(spark, rewriteNulls, schema)
-            .filter(col(keyCols.head).isNull)
-          val dataDir = newDataDir(root)
-          writeData(kept, dataDir, bloomCol, colMapOf(m))
-          Seq(mkEntry(spark, dataDir, (statsCols ++ rewriteNulls
-            .flatMap(e => e.bounds.keys ++ e.nulls.keys)).distinct,
-            colMapOf(m)))
-        }
-      return commitRewrite(spark, root, prev, readSet = drop ++ rewriteNulls,
-        baseUntouched = Nil, produced = produced, ourSchema = schema,
-        conflictKeys = None, op = "delete-where")
-    }
-    val (maybe, disjoint) =
-      if (keyCols.size == 1)
-        touchedSplit(spark, m.entries, keys, keyCols.head, colMapOf(m))
-      else touchedSplitMulti(spark, m.entries, keys, keyCols, colMapOf(m))
-    val (drop, rewriteNulls) =
-      if (!keepNullKeys) (disjoint, Seq.empty[Entry])
-      else disjoint.partition(_.nulls.get(keyCols.head).contains(0L))
-    val rewrite = maybe ++ rewriteNulls
-    val produced =
-      if (rewrite.isEmpty) Seq.empty
-      else {
-        val df = readEntries(spark, rewrite, schema)
-        val HitCol = "__graft_anti_hit"
-        require(!df.columns.contains(HitCol), s"$HitCol is reserved")
-        val marked = df.join(
-          keys.select(keyCols.map(col): _*).na.drop().distinct()
-            .withColumn(HitCol, lit(true)), keyCols, "left")
-        val keep =
-          if (keepNullKeys)
-            coalesce(col(HitCol), lit(false)) || col(keyCols.head).isNull
-          else coalesce(col(HitCol), lit(false))
-        val kept = marked.filter(keep)
-          .select(df.columns.toSeq.map(col): _*)
-        val dataDir = newDataDir(root)
-        writeData(kept, dataDir, bloomCol, colMapOf(m))
-        Seq(mkEntry(spark, dataDir, (statsCols ++
-          rewrite.flatMap(e => e.bounds.keys ++ e.nulls.keys)).distinct,
-          colMapOf(m)))
-      }
-    // the complement's read footprint is the WHOLE table (every dir
-    // either rewrites or drops), so the conflict check is whole-table
-    commitRewrite(spark, root, prev, readSet = rewrite ++ drop,
-      baseUntouched = Nil, produced = produced, ourSchema = schema,
-      conflictKeys = None, op = "delete-where")
-  }
-
-  /** Row-level UPDATE of the COMPLEMENT of a key set — the twin verb
-    * for `UPDATE t SET … WHERE NOT EXISTS (…)` / `… WHERE k NOT IN
-    * (<uncorrelated subquery>)` (r19). Rows whose key tuple matches NO
-    * frame row take the assignments (simultaneous over the PRE-update
-    * row, cast to declared types — [[updateWhere]] semantics); matches
-    * carry unchanged. Three-valued logic mirrors [[deleteAnti]]:
-    * NULL-keyed rows update under NOT EXISTS, carry under NOT IN
-    * (UNKNOWN) — except against an EMPTY value set, where the
-    * predicate is TRUE for every row, NULL keys included. Unlike the
-    * delete, the complement UPDATE must rewrite EVERY dir (a
-    * provably-disjoint dir's rows ALL take the assignment — the data
-    * changes either way); pruning saves nothing, so one join-marked
-    * pass over the full snapshot is the plan, with the key frame
-    * broadcast when small.
-    */
-  def updateAnti(spark: SparkSession, root: String, keys: DataFrame,
-                 keyCols: Seq[String], keepNullKeys: Boolean,
-                 set: Seq[(String, Column)],
-                 statsCols: Seq[String] = Nil,
-                 bloomCol: Option[String] = None,
-                 rawNonEmpty: Boolean = false): Int = {
-    require(set.nonEmpty, "updateAnti needs at least one assignment")
-    require(keyCols.nonEmpty, "updateAnti needs at least one key column")
-    require(!keepNullKeys || keyCols.size == 1,
-      "NOT IN three-valued logic (keepNullKeys) is single-column by " +
-        "its SQL shape — tuple complements arrive as NOT EXISTS")
-    val prev = latestVersion(root)
-    require(prev >= 0, s"nothing to update at $root")
-    val m = readManifestFull(root, prev)
-    if (m.entries.isEmpty) return prev
-    val schema = manifestSchema(m)
-    val df = readEntries(spark, m.entries, schema)
-    val byName = set.toMap
-    require(set.size == byName.size, "duplicate assignment column")
-    val unknown = byName.keySet -- df.columns.toSet
-    require(unknown.isEmpty,
-      s"UPDATE assigns ${unknown.mkString(", ")} which the table " +
-        s"does not have (${df.columns.mkString(", ")})")
-    val empty = keys.isEmpty
-    val HitCol = "__graft_anti_hit"
-    require(!df.columns.contains(HitCol), s"$HitCol is reserved")
-    val marked =
-      if (empty) df.withColumn(HitCol, lit(false))
-      else df.join(
-        keys.select(keyCols.map(col): _*).na.drop().distinct()
-          .withColumn(HitCol, lit(true)), keyCols, "left")
-    val cond =
-      // an empty post-cast frame from a NON-empty raw NOT IN list
-      // keeps 3VL — NULL keys are UNKNOWN and carry (r19 ADVICE);
-      // a genuinely empty list is TRUE for every row
-      if (empty && keepNullKeys && rawNonEmpty)
-        col(keyCols.head).isNotNull
-      else if (empty) lit(true) // NOT IN (∅) / no possible match
-      else if (keepNullKeys)
-        !coalesce(col(HitCol), lit(false)) && col(keyCols.head).isNotNull
-      else !coalesce(col(HitCol), lit(false))
-    val out = marked.select(df.schema.fields.toSeq.map { f =>
-      byName.get(f.name) match {
-        case Some(v) => when(cond, v.cast(f.dataType))
-          .otherwise(col(f.name)).as(f.name)
-        case None => col(f.name)
-      }
-    }: _*)
-    enforceCheck(out, m.check, root)
-    val dataDir = newDataDir(root)
-    writeData(out, dataDir, bloomCol, colMapOf(m))
-    val cols = (statsCols ++
-      m.entries.flatMap(e => e.bounds.keys ++ e.nulls.keys)).distinct
-    commitRewrite(spark, root, prev, readSet = m.entries,
-      baseUntouched = Nil,
-      produced = Seq(mkEntry(spark, dataDir, cols, colMapOf(m))),
-      ourSchema = Some(out.schema), conflictKeys = None,
-      op = "update-where")
-  }
-
-  /** MERGE-ON-READ delete: write the deleted keys as a deletion-vector
-    * sidecar on each zone-map-touched dir instead of rewriting the dir —
-    * a point delete writes O(deleted keys) rows where copy-on-write
+  /** MERGE-ON-READ delete: the deleted keys become a deletion-vector
+    * sidecar on each zone-map-touched dir instead of a dir rewrite — a
+    * point delete writes O(deleted keys) rows where copy-on-write
     * rewrites O(dir) (round-14 VERDICT #1: at 100 TB with trickle
     * upserts, COW write amplification is the wall). Readers anti-join
     * the sidecar ([[readEntries]]); [[compact]]/[[compactRanged]]/
-    * [[merge]] rewrites FOLD sidecars into data; [[readChanges]] derives
-    * delete rows from the sidecar diff. Each commit writes ONE new
-    * sidecar carrying the touched dirs' accumulated keys (old sidecar
-    * rows folded forward), so a dir always has at most one dv pointer
-    * and superseded sidecars become vacuum fodder — and a dir whose
-    * accumulated dv would reach `foldRatio` of its rows AUTO-FOLDS
-    * instead: that dir alone rewrites effective (no dv), resetting its
-    * delete cost to O(new keys) without waiting for a manual
-    * whole-table compaction ([[morMaskOrFold]]).
+    * [[merge]] rewrites FOLD sidecars into data; [[readChanges]]
+    * derives delete rows from the sidecar diff. See [[morMaskOrFold]].
     */
   def deleteKeysMor(spark: SparkSession, root: String, keys: DataFrame,
-                    keyCol: String,
-                    foldRatio: Double = DvFoldRatio): Int =
-    deleteKeysMorMulti(spark, root, keys, Seq(keyCol), foldRatio)
-
-  /** COMPOSITE-key merge-on-read delete (r19 — the r18 VERDICT's #2
-    * gap): the deletion-vector sidecar carries the FULL key tuple as N
-    * physical columns (never a concatenated surrogate — separator-
-    * bearing strings would collide) and the read-time mask anti-joins
-    * on all of them, so a trickle of point deletes against a
-    * (k1,k2)-keyed 100 TB table lands O(keys) sidecar rows instead of
-    * rewriting every touched dir. Pruning composes per column
-    * ([[touchedSplitMulti]]); auto-fold at [[DvFoldRatio]] and the
-    * one-sidecar-per-dir discipline are shared with the single-key
-    * path — this IS the single-key path, generalized.
-    */
-  def deleteKeysMorMulti(spark: SparkSession, root: String,
-      keys: DataFrame, keyCols: Seq[String],
-      foldRatio: Double = DvFoldRatio): Int = {
-    val prev = latestVersion(root)
-    require(prev >= 0, s"nothing to delete from at $root")
-    if (keys.isEmpty) return prev
-    val m = readManifestFull(root, prev)
-    val (touched, untouched) =
-      touchedSplitMulti(spark, m.entries, keys, keyCols, colMapOf(m))
-    if (touched.isEmpty) return prev
-    commitRewrite(spark, root, prev, readSet = touched,
-      baseUntouched = untouched,
-      produced = morMaskOrFold(spark, root, touched, keys, keyCols,
-        manifestSchema(m), foldRatio),
-      ourSchema = None,
-      conflictKeys = Some((keys.select(keyCols.head), keyCols.head)),
-      op = "delete-mor")
-  }
+                    keyCol: String): Int =
+    applyDelta(spark, root, keys, Seq(keyCol), spark.emptyDataFrame,
+      Nil, None, None, Map.empty[String, String], "delete-mor")
 
   /** Auto-fold threshold: a dir whose accumulated deletion-vector rows
     * would reach this fraction of its data rows is rewritten EFFECTIVE
@@ -2474,26 +2144,29 @@ object TableFormat {
     */
   private[graft] val DvFoldRatio = 0.5
 
-  /** The produced half of a merge-on-read commit, per-dir adaptive:
-    * touched dirs whose accumulated dv stays under `foldRatio` get the
-    * shared sidecar ([[writeDvSidecar]]); dirs crossing it FOLD — their
-    * effective rows minus `keys` rewrite into one fresh data dir that
-    * carries no dv and re-records footer bounds for whatever columns
-    * the folded entries had statted (pruning must not decay across a
-    * fold). The accumulated-count probe is one tiny aggregate over the
-    * would-be sidecar (rows ∝ touched dirs × keys, the write's own
-    * size); dir row counts come from parquet footers, zero Spark jobs.
+  /** The produced half of a merge-on-read commit, per-dir adaptive.
+    * Each commit writes ONE new sidecar holding every touched dir's
+    * accumulated key tuples (the dir's previous sidecar rows fold
+    * forward, so a dir has at most one dv pointer and superseded
+    * sidecars become vacuum fodder). The tuple is N physical columns —
+    * never a concatenated surrogate, which separator-bearing strings
+    * would collide — so a later rename composes with live DVs. A dir
+    * whose accumulated rows would reach [[DvFoldRatio]] of its data
+    * rows FOLDS instead: its effective rows minus `keys` rewrite into
+    * one fresh dv-free dir with inherited stats. The accumulated-count
+    * probe is one tiny aggregate over the would-be sidecar (rows ∝
+    * touched dirs × keys, the write's own size); dir row counts come
+    * from the manifest or parquet footers, zero Spark jobs.
     */
   private def morMaskOrFold(spark: SparkSession, root: String,
       touched: Seq[Entry], keys: DataFrame, keyCols: Seq[String],
-      schema: Option[StructType], foldRatio: Double): Seq[Entry] = {
-    require(foldRatio > 0, s"foldRatio must be positive, got $foldRatio")
+      schema: Option[StructType]): Seq[Entry] = {
+    require(!keyCols.contains(DvDirCol), s"$DvDirCol is reserved")
     val pmap = schema.map(physMapOf).getOrElse(Map.empty)
     val physKeys = keyCols.map(c => pmap.getOrElse(c, c))
-    // key-shape agreement BEFORE any sidecar union: all sidecars of one
-    // table key on one column set, or the read-time anti-join is
-    // unresolvable — a mismatch must surface as this loud refusal, not
-    // as a union-by-name resolution error inside the fold probe
+    // all sidecars of one table key on one column set, or the read-time
+    // anti-join is unresolvable — a second writer deleting by a
+    // different key (set) must surface as this loud refusal
     touched.flatMap(_.dv).distinct.foreach { p =>
       val cs = spark.read.parquet(p).columns
         .filterNot(_ == DvDirCol).toSeq.sorted
@@ -2501,17 +2174,36 @@ object TableFormat {
         s"existing deletion vectors key on ${cs.mkString(",")}, not " +
           physKeys.mkString(","))
     }
-    val accumulated =
-      dvAccumulatedCounts(spark, touched, keys, keyCols, physKeys)
+    // per touched dir: existing sidecar rows ∪ fresh tuples (fresh
+    // tuples count against every touched dir; one absent from the dir
+    // inflates its count toward an earlier fold — a rewrite, never a
+    // wrong row)
+    val fresh = keys.select(keyCols.zip(physKeys).map { case (l, p) =>
+      col(l).as(p) }: _*).distinct()
+    val sidecar = touched.map { e =>
+      val mine = fresh.withColumn(DvDirCol, lit(e.dir))
+      e.dv match {
+        case Some(p) => spark.read.parquet(p)
+          .filter(col(DvDirCol) === e.dir).unionByName(mine)
+        case None => mine
+      }
+    }.reduce(_ unionByName _).dropDuplicates(physKeys :+ DvDirCol)
+    val accumulated = sidecar.groupBy(DvDirCol).agg(count(lit(1)).as("n"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val (fold, mask) = touched.partition { e =>
       // manifest row account when the entry carries one (every commit
       // since rows landed); footer pass only for legacy entries
       val rows = if (e.rows >= 0) e.rows else footerRowCount(spark, e.dir)
-      rows > 0 && accumulated.getOrElse(e.dir, 0L) >= foldRatio * rows
+      rows > 0 && accumulated.getOrElse(e.dir, 0L) >= DvFoldRatio * rows
     }
     val masked =
       if (mask.isEmpty) Seq.empty
-      else writeDvSidecar(spark, root, mask, keys, keyCols, physKeys)
+      else {
+        val dvDir = newDvDir(root)
+        sidecar.filter(col(DvDirCol).isin(mask.map(_.dir): _*))
+          .write.parquet(dvDir)
+        mask.map(_.copy(dv = Some(dvDir)))
+      }
     val folded =
       if (fold.isEmpty) Seq.empty
       else {
@@ -2520,34 +2212,9 @@ object TableFormat {
           .join(keys.select(keyCols.map(col): _*).distinct(), keyCols,
             "left_anti")
         writeData(remaining, dataDir, None, pmap)
-        val cols = fold.flatMap(_.bounds.keys).distinct
-        Seq(mkEntry(spark, dataDir, cols, pmap))
+        Seq(mkEntry(spark, dataDir, inheritedStats(Nil, fold), pmap))
       }
     masked ++ folded
-  }
-
-  /** |existing sidecar rows ∪ fresh key tuples| per touched dir — what
-    * each dir's sidecar WOULD hold after this commit (fresh tuples
-    * count against every touched dir, matching the sidecar the mask
-    * path writes; a tuple absent from the dir inflates the count toward
-    * an earlier fold, which costs a rewrite, never correctness).
-    */
-  private def dvAccumulatedCounts(spark: SparkSession, touched: Seq[Entry],
-      keys: DataFrame, keyCols: Seq[String],
-      physKeys: Seq[String]): Map[String, Long] = {
-    val fresh = keys.select(keyCols.zip(physKeys).map { case (l, p) =>
-      col(l).as(p) }: _*).distinct()
-    touched.map { e =>
-      val mine = fresh.withColumn(DvDirCol, lit(e.dir))
-      e.dv match {
-        case Some(p) => spark.read.parquet(p)
-          .filter(col(DvDirCol) === e.dir).unionByName(mine)
-        case None => mine
-      }
-    }.reduce(_ unionByName _)
-      .dropDuplicates(physKeys :+ DvDirCol)
-      .groupBy(DvDirCol).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
   }
 
   /** Total row count of a landed data dir from its parquet footers —
@@ -2566,116 +2233,64 @@ object TableFormat {
     }.sum
   }
 
-  /** Write ONE new deletion-vector sidecar masking `keys` in every
-    * `touched` dir (each touched dir's previously-accumulated sidecar
-    * rows fold forward, so a dir always has at most one dv pointer and
-    * superseded sidecars become vacuum fodder), and return the touched
-    * entries re-pointed at it — the produced half of a merge-on-read
-    * commit, shared by [[deleteKeysMor]] and [[mergeMor]].
-    */
-  private def writeDvSidecar(spark: SparkSession, root: String,
-      touched: Seq[Entry], keys: DataFrame, keyCols: Seq[String],
-      physKeys: Seq[String]): Seq[Entry] = {
-    require(!keyCols.contains(DvDirCol), s"$DvDirCol is reserved")
-    // all sidecars of one table must agree on the key columns — a
-    // second writer deleting by a different key (set) would make the
-    // read-time anti-join unresolvable. Sidecars store the PHYSICAL
-    // spellings, so a later column rename composes with live DVs
-    // without rewriting a sidecar.
-    touched.flatMap(_.dv).distinct.foreach { p =>
-      val cs = spark.read.parquet(p).columns
-        .filterNot(_ == DvDirCol).toSeq.sorted
-      require(cs == physKeys.sorted,
-        s"existing deletion vectors key on ${cs.mkString(",")}, not " +
-          physKeys.mkString(","))
-    }
-    val dvDir = newDvDir(root)
-    val fresh = keys.select(keyCols.zip(physKeys).map { case (l, p) =>
-      col(l).as(p) }: _*).distinct()
-    val perDir = touched.map { e =>
-      val mine = fresh.withColumn(DvDirCol, lit(e.dir))
-      e.dv match {
-        case Some(p) => spark.read.parquet(p)
-          .filter(col(DvDirCol) === e.dir).unionByName(mine)
-        case None => mine
-      }
-    }.reduce(_ unionByName _).dropDuplicates(physKeys :+ DvDirCol)
-    perDir.write.parquet(dvDir)
-    touched.map(_.copy(dv = Some(dvDir)))
-  }
-
   /** MERGE-ON-READ upsert — the write-amplification-friendly twin of
-    * the copy-on-write [[merge]]: matched keys are MASKED via a
-    * deletion-vector sidecar on their zone-map-touched dirs and the
-    * update rows land as one appended data dir, all in ONE commit — a
-    * trickle upsert writes O(update rows), never a dir rewrite (the
-    * round-14 VERDICT's 100 TB write-amplification wall). Readers see
-    * the same table either form produces (spec-pinned, content and
-    * change feed); COW remains the compaction-friendly form —
-    * [[compact]]/[[compactRanged]] fold the accumulated sidecars back
-    * into data on the maintenance cadence. Same caller contract
-    * (unique update keys) and the same [[commitRewrite]] conflict
-    * semantics as [[merge]].
+    * the copy-on-write [[merge]]: matched keys are MASKED and the
+    * update rows land as one appended data dir, all in ONE commit.
+    * Readers see the same table either form produces (spec-pinned,
+    * content and change feed). Same caller contract (unique update
+    * keys) as [[merge]].
     */
   def mergeMor(spark: SparkSession, root: String, updates: DataFrame,
                keyCol: String, statsCol: Option[String] = None,
                statsCols: Seq[String] = Nil,
-               bloomCol: Option[String] = None,
-               foldRatio: Double = DvFoldRatio): Int = {
-    val prev = latestVersion(root)
-    require(prev >= 0, s"nothing to merge into at $root")
-    if (updates.isEmpty) return prev
-    val m = readManifestFull(root, prev)
-    enforceCheck(updates, m.check, root)
-    guardNewColumns(updates.schema, Some(m))
-    val (touched, untouched) =
-      touchedSplit(spark, m.entries, updates, keyCol, colMapOf(m))
-    val dataDir = newDataDir(root)
-    writeData(updates, dataDir, bloomCol, colMapOf(m))
-    val cols = (statsCol.toSeq ++ statsCols).distinct
-    val dataEntry = mkEntry(spark, dataDir, cols, colMapOf(m))
-    val masked =
-      if (touched.isEmpty) Seq.empty // pure insert: no dirs to mask
-      else morMaskOrFold(spark, root, touched, updates.select(keyCol),
-        Seq(keyCol), manifestSchema(m), foldRatio)
-    commitRewrite(spark, root, prev, readSet = touched,
-      baseUntouched = untouched,
-      produced = masked :+ dataEntry,
-      ourSchema = Some(updates.schema),
-      conflictKeys = Some((updates.select(keyCol), keyCol)),
-      op = "merge-mor")
-  }
+               bloomCol: Option[String] = None): Int =
+    applyDelta(spark, root, updates.select(keyCol), Seq(keyCol), updates,
+      (statsCol.toSeq ++ statsCols).distinct, bloomCol, None,
+      Map.empty[String, String], "merge-mor")
 
-  /** Apply one CHANGE-FEED DELTA — mask `deletes` keys (merge-on-read,
-    * auto-fold per [[morMaskOrFold]]) AND land `appends` as a fresh dir
-    * — in ONE commit, optionally carrying a transaction marker. This is
-    * the verb incremental index maintenance needs (round-15 VERDICT #4):
-    * pre-r16 a refresh was a deleteKeysMor commit followed by an append
-    * commit with a plain-file high-water marker moved after both — a
-    * crash between any two of the three re-applied the whole feed on
-    * restart (doubled postings), and two refreshers could interleave.
-    * With the marker INSIDE the single commit (`txn = (appId, version)`,
-    * the [[appendBatch]] machinery generalized), a replay sees its
-    * marker at-or-past the target and skips, a crash leaves either
-    * nothing or everything, and concurrent refreshers serialize through
-    * the manifest CAS — the loser's retry reads the winner's marker and
-    * skips instead of double-applying.
-    *
-    * Degenerate shapes compose: no deletes → append-with-marker; no
-    * appends → mask-with-marker; neither but a txn → a MARKER-ONLY
-    * commit (entries verbatim — how an empty feed durably advances the
-    * high-water mark); neither and no txn → no-op. An empty delta on an
-    * ABSENT table is a no-op returning -1 (nothing to anchor a marker
-    * to). Returns the resulting latest version.
+  /** Apply one CHANGE-FEED DELTA keyed on one column — see the
+    * composite-key [[applyDelta]] core, which this commits as
+    * `apply-delta`.
     */
   def applyDelta(spark: SparkSession, root: String, deletes: DataFrame,
                  keyCol: String, appends: DataFrame,
                  statsCol: Option[String] = None,
                  statsCols: Seq[String] = Nil,
                  txn: Option[(String, Long)] = None,
-                 foldRatio: Double = DvFoldRatio,
                  bloomCol: Option[String] = None,
-                 propsDelta: Map[String, String] = Map.empty): Int = {
+                 propsDelta: Map[String, String] = Map.empty): Int =
+    applyDelta(spark, root, deletes, Seq(keyCol), appends,
+      (statsCol.toSeq ++ statsCols).distinct, bloomCol, txn, propsDelta,
+      "apply-delta")
+
+  /** The MERGE-ON-READ core: mask the `deletes` key tuples on their
+    * zone-map-touched dirs ([[morMaskOrFold]]) AND land `appends` as a
+    * fresh dir — in ONE commit, optionally carrying a transaction
+    * marker and table properties. Every merge-on-read verb lands here:
+    * point deletes, MoR upserts, tuple UPDATEs, conditional SQL MERGE
+    * and incremental index/view maintenance (round-15 VERDICT #4:
+    * with the marker INSIDE the single commit, a replay sees its
+    * marker at-or-past the target and skips, a crash leaves either
+    * nothing or everything, and concurrent refreshers serialize
+    * through the manifest CAS). Appends may be WIDER (schema-evolution
+    * merge) — the commit unions the schema — and pass the table's
+    * CHECK before any file lands. Conflicts detect on the first key
+    * column: a foreign commit holding a conflicting tuple necessarily
+    * intersects it (conservative, never missed).
+    *
+    * Degenerate shapes compose: no deletes → an [[append]] (with the
+    * marker); deletes the zone maps prove absent and no appends →
+    * no-op unless a marker/props must land; neither but a txn → a
+    * MARKER-ONLY commit (entries verbatim — how an empty feed durably
+    * advances the high-water mark); neither and no txn → no-op. An
+    * empty delta on an ABSENT table is a no-op returning -1. Returns
+    * the resulting latest version.
+    */
+  private[graft] def applyDelta(spark: SparkSession, root: String,
+      deletes: DataFrame, keyCols: Seq[String], appends: DataFrame,
+      statsCols: Seq[String], bloomCol: Option[String],
+      txn: Option[(String, Long)], propsDelta: Map[String, String],
+      op: String): Int = {
     val prev = latestVersion(root)
     txn.foreach { case (a, v) =>
       if (prev >= 0 && lastTxn(root, a) >= v) return prev // replayed delta
@@ -2687,87 +2302,31 @@ object TableFormat {
     if (!hasDeletes && !hasAppends && prev < 0 && propsDelta.isEmpty)
       return prev
     if (!hasDeletes && hasAppends && propsDelta.isEmpty)
-      return append(appends, root, statsCol, statsCols,
+      return append(appends, root, statsCols = statsCols,
         bloomCol = bloomCol, txn = txn)
     require(prev >= 0 || !hasAppends,
       "applyDelta with propsDelta needs an existing table") // props need v0
     if (prev < 0) return -1
     val m = readManifestFull(root, prev)
-    val cols = (statsCol.toSeq ++ statsCols).distinct
     if (!hasDeletes && !hasAppends) // marker/props-only: entries verbatim
       return commitRewrite(spark, root, prev, readSet = Seq.empty,
         baseUntouched = m.entries, produced = Seq.empty,
         ourSchema = None, conflictKeys = None, txn = txn,
-        op = "apply-delta", propsDelta = propsDelta)
+        op = op, propsDelta = propsDelta)
+    if (hasAppends) {
+      guardNewColumns(appends.schema, Some(m))
+      enforceCheck(appends, m.check, root)
+    }
     val (touched, untouched) =
       if (hasDeletes)
-        touchedSplit(spark, m.entries, deletes, keyCol, colMapOf(m))
+        touchedSplit(spark, m.entries, deletes, keyCols, colMapOf(m))
       else (Seq.empty[Entry], m.entries)
-    val masked =
-      if (touched.isEmpty) Seq.empty
-      else morMaskOrFold(spark, root, touched, deletes, Seq(keyCol),
-        manifestSchema(m), foldRatio)
-    if (hasAppends) guardNewColumns(appends.schema, Some(m))
-    val appended =
-      if (!hasAppends) Seq.empty
-      else {
-        val dataDir = newDataDir(root)
-        writeData(appends, dataDir, bloomCol, colMapOf(m))
-        Seq(mkEntry(spark, dataDir, cols, colMapOf(m)))
-      }
-    val conflict: Option[DataFrame] =
-      (hasDeletes, hasAppends && appends.columns.contains(keyCol)) match {
-        case (true, true) => Some(deletes.select(col(keyCol))
-          .unionByName(appends.select(col(keyCol))))
-        case (true, false) => Some(deletes.select(col(keyCol)))
-        case (false, true) => Some(appends.select(col(keyCol)))
-        case (false, false) => None // props-riding key-less append
-      }
-    commitRewrite(spark, root, prev, readSet = touched,
-      baseUntouched = untouched, produced = masked ++ appended,
-      ourSchema = if (hasAppends) Some(appends.schema) else None,
-      conflictKeys = conflict.map((_, keyCol)), txn = txn,
-      op = "apply-delta", propsDelta = propsDelta)
-  }
-
-  /** COMPOSITE-key change-feed delta, MERGE-ON-READ (r19): mask the
-    * delete TUPLES via a multi-column deletion-vector sidecar on their
-    * zone-map-touched dirs and land `appends` as one fresh dir, all in
-    * ONE commit — the composite twin of [[applyDelta]]. A point
-    * delete/merge on a (k1,k2)-keyed table writes O(tuples) sidecar
-    * rows where the pre-r19 route ([[applyCoWDelta]]) rewrote every
-    * touched dir; auto-fold at `foldRatio` keeps the copy-on-write
-    * form as the debt bound, and [[compact]] folds sidecars back into
-    * data on the maintenance cadence. Appends may be WIDER (schema-
-    * evolution merge) — the commit unions the schema. Conflicts detect
-    * on the first key column (conservative, like every composite
-    * path). [[applyCoWDelta]] remains the explicit fold/rewrite form.
-    */
-  def applyDeltaMulti(spark: SparkSession, root: String,
-      deletes: DataFrame, keyCols: Seq[String], appends: DataFrame,
-      statsCols: Seq[String] = Nil,
-      bloomCol: Option[String] = None,
-      foldRatio: Double = DvFoldRatio,
-      op: String = "merge-mor"): Int = {
-    require(keyCols.size >= 2,
-      "applyDeltaMulti is the composite-key form — use applyDelta for " +
-        "one key")
-    val prev = latestVersion(root)
-    require(prev >= 0, s"no snapshot at $root")
-    val hasDeletes = !deletes.isEmpty
-    val hasAppends = !appends.isEmpty
-    if (!hasDeletes && !hasAppends) return prev
-    val m = readManifestFull(root, prev)
-    if (hasAppends) guardNewColumns(appends.schema, Some(m))
-    val (touched, untouched) =
-      if (hasDeletes)
-        touchedSplitMulti(spark, m.entries, deletes, keyCols, colMapOf(m))
-      else (Seq.empty[Entry], m.entries)
+    if (touched.isEmpty && !hasAppends && txn.isEmpty && propsDelta.isEmpty)
+      return prev // every delete key provably absent: nothing to commit
     val masked =
       if (touched.isEmpty) Seq.empty
       else morMaskOrFold(spark, root, touched,
-        deletes.select(keyCols.map(col): _*), keyCols,
-        manifestSchema(m), foldRatio)
+        deletes.select(keyCols.map(col): _*), keyCols, manifestSchema(m))
     val appended =
       if (!hasAppends) Seq.empty
       else {
@@ -2775,25 +2334,21 @@ object TableFormat {
         writeData(appends, dataDir, bloomCol, colMapOf(m))
         Seq(mkEntry(spark, dataDir, statsCols, colMapOf(m)))
       }
-    if (masked.isEmpty && appended.isEmpty) return prev
-    val hasKeyInAppends = hasAppends &&
-      appends.columns.exists(_.equalsIgnoreCase(keyCols.head))
-    val conflict: Option[DataFrame] = (hasDeletes, hasKeyInAppends) match {
-      case (true, true) => Some(deletes.select(col(keyCols.head))
-        .unionByName(appends.select(col(keyCols.head))))
-      case (true, false) => Some(deletes.select(col(keyCols.head)))
-      case (false, true) => Some(appends.select(col(keyCols.head)))
-      case (false, false) => None // key-less append
-    }
+    val kc = keyCols.head
+    val conflict =
+      (if (hasDeletes) Seq(deletes.select(col(kc))) else Nil) ++
+        (if (hasAppends && appends.columns.exists(_.equalsIgnoreCase(kc)))
+          Seq(appends.select(col(kc))) else Nil) // key-less appends: none
     commitRewrite(spark, root, prev, readSet = touched,
       baseUntouched = untouched, produced = masked ++ appended,
       ourSchema = if (hasAppends) Some(appends.schema) else None,
-      conflictKeys = conflict.map((_, keyCols.head)), op = op)
+      conflictKeys = conflict.reduceOption(_ unionByName _).map((_, kc)),
+      txn = txn, op = op, propsDelta = propsDelta)
   }
 
   /** Effective rows of exactly the head dirs whose zone maps / blooms
-    * might hold a key of `keys` — the bounded target-side input a
-    * key-anchored MERGE join needs. Soundness carries from
+    * might hold a key tuple of `keys` — the bounded target side a
+    * key-anchored MERGE joins against. Soundness carries from
     * [[touchedSplit]]: an untouched dir PROVABLY contains none of the
     * keys, so a join (or an anti-join) of `keys` against this frame
     * equals the same join against the whole snapshot, at the cost of
@@ -2801,107 +2356,20 @@ object TableFormat {
     * the table's committed schema.
     */
   private[graft] def readTouchedForKeys(spark: SparkSession, root: String,
-      keys: DataFrame, keyCol: String): DataFrame = {
+      keys: DataFrame, keyCols: Seq[String]): DataFrame = {
     val prev = latestVersion(root)
     require(prev >= 0, s"no snapshot at $root")
     val m = readManifestFull(root, prev)
     val (touched, _) =
-      touchedSplit(spark, m.entries, keys, keyCol, colMapOf(m))
+      touchedSplit(spark, m.entries, keys, keyCols, colMapOf(m))
     if (touched.isEmpty) readSnapshot(spark, root).limit(0)
     else readEntries(spark, touched, manifestSchema(m))
   }
 
-  /** Multi-column [[touchedSplit]]: a dir is untouched when ANY key
-    * column's zone maps prove none of the tuples' values for that
-    * column land in it — a matching ROW needs every component present,
-    * so per-column exclusion composes soundly (the intersection of the
-    * per-column touched sets).
-    */
-  private def touchedSplitMulti(spark: SparkSession, entries: Seq[Entry],
-      keyed: DataFrame, keyCols: Seq[String],
-      colMap: Map[String, String] = Map.empty)
-      : (Seq[Entry], Seq[Entry]) =
-    keyCols.foldLeft((entries, Seq.empty[Entry])) {
-      case ((remaining, out), kc) =>
-        val (t, u) = touchedSplit(spark, remaining, keyed, kc, colMap)
-        (t, out ++ u)
-    }
-
-  /** Multi-column [[readTouchedForKeys]] — the bounded target side a
-    * COMPOSITE-key merge joins against.
-    */
-  private[graft] def readTouchedForKeysMulti(spark: SparkSession,
-      root: String, keys: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val prev = latestVersion(root)
-    require(prev >= 0, s"no snapshot at $root")
-    val m = readManifestFull(root, prev)
-    val (touched, _) =
-      touchedSplitMulti(spark, m.entries, keys, keyCols, colMapOf(m))
-    if (touched.isEmpty) readSnapshot(spark, root).limit(0)
-    else readEntries(spark, touched, manifestSchema(m))
-  }
-
-  /** COMPOSITE-key delta: mask-by-tuple + append in ONE commit. The
-    * merge-on-read mask is single-key by construction (a dv sidecar
-    * records VALUES of one declared column the read path anti-joins),
-    * so a composite key lands COPY-ON-WRITE instead: dirs the key
-    * tuples provably miss ([[touchedSplitMulti]]) carry verbatim, the
-    * rest read effective, drop rows matching any delete tuple
-    * (multi-column anti-join — never a concatenated surrogate, which
-    * would collide on separator-bearing strings), and re-land with the
-    * appends in one fresh dir. Cost ∝ touched dirs — the same pruning
-    * contract every single-key path keeps, with CoW's write
-    * amplification instead of a dv sidecar. Appends may be WIDER
-    * (schema-evolution merge): survivors null-backfill through the
-    * union, and the commit records the union schema.
-    */
-  private[graft] def applyCoWDelta(spark: SparkSession, root: String,
-      deletes: DataFrame, keyCols: Seq[String], appends: DataFrame,
-      statsCols: Seq[String] = Nil,
-      bloomCol: Option[String] = None,
-      op: String = "merge"): Int = {
-    require(keyCols.size >= 2,
-      "applyCoWDelta is the composite-key form — use applyDelta for " +
-        "one key (merge-on-read beats a rewrite there)")
-    val prev = latestVersion(root)
-    require(prev >= 0, s"no snapshot at $root")
-    val hasDeletes = !deletes.isEmpty
-    val hasAppends = !appends.isEmpty
-    if (!hasDeletes && !hasAppends) return prev
-    if (!hasDeletes)
-      return append(appends, root, statsCols = statsCols,
-        bloomCol = bloomCol)
-    val m = readManifestFull(root, prev)
-    if (hasAppends) guardNewColumns(appends.schema, Some(m))
-    val (touched, untouched) =
-      touchedSplitMulti(spark, m.entries, deletes, keyCols, colMapOf(m))
-    if (touched.isEmpty) // tuples provably absent: a plain append
-      return if (hasAppends) append(appends, root, statsCols = statsCols,
-        bloomCol = bloomCol) else prev
-    val survivors = readEntries(spark, touched, manifestSchema(m))
-      .join(deletes.select(keyCols.map(col): _*), keyCols, "left_anti")
-    val out =
-      if (!hasAppends) survivors
-      else survivors.unionByName(appends, allowMissingColumns = true)
-    val dataDir = newDataDir(root)
-    writeData(out, dataDir, bloomCol, colMapOf(m))
-    val cols = (statsCols ++
-      touched.flatMap(e => e.bounds.keys ++ e.nulls.keys)).distinct
-    // conflicts detect on the FIRST key column: a foreign commit
-    // holding a conflicting tuple necessarily intersects our first
-    // component's values — conservative, never missed
-    val conflict =
-      if (hasAppends && appends.columns.exists(
-          _.equalsIgnoreCase(keyCols.head)))
-        deletes.select(col(keyCols.head))
-          .unionByName(appends.select(col(keyCols.head)))
-      else deletes.select(col(keyCols.head))
-    commitRewrite(spark, root, prev, readSet = touched,
-      baseUntouched = untouched,
-      produced = Seq(mkEntry(spark, dataDir, cols, colMapOf(m))),
-      ourSchema = Some(out.schema),
-      conflictKeys = Some((conflict, keyCols.head)), op = op)
-  }
+  /** [[readTouchedForKeys]] on one key column. */
+  private[graft] def readTouchedForKeys(spark: SparkSession, root: String,
+      keys: DataFrame, keyCol: String): DataFrame =
+    readTouchedForKeys(spark, root, keys, Seq(keyCol))
 
   /** ALTER TABLE ADD COLUMNS as a commit: widen the head's schema by
     * `fields` (nullable — there is no data to backfill) with every
@@ -3190,22 +2658,6 @@ object TableFormat {
     -1 // unreachable
   }
 
-  /** The head's recorded CHECK constraint, if any — for landing paths
-    * that assemble their own commit (conditional SQL MERGE) and must
-    * validate new rows before any file lands.
-    */
-  private[graft] def checkOf(root: String): Option[String] = {
-    val v = latestVersion(root)
-    if (v < 0) None else readManifestFull(root, v).check
-  }
-
-  /** Probe `df` against the table's recorded CHECK — the same limit-1
-    * refusal every built-in landing path runs ([[enforceCheck]]),
-    * exposed for commit paths assembled outside this object.
-    */
-  private[graft] def enforceCheckFor(df: DataFrame, root: String): Unit =
-    enforceCheck(df, checkOf(root), root)
-
   // ---------------------------------------------------------- change feed
 
   /** Row-level CHANGE FEED between two snapshots `fromVersion` →
@@ -3350,7 +2802,7 @@ object TableFormat {
     val v = latestVersion(root)
     require(v >= 0, s"no snapshot at $root")
     val m = readManifestFull(root, v)
-    val (touched, _) = touchedSplit(spark, m.entries, keys, keyCol)
+    val (touched, _) = touchedSplit(spark, m.entries, keys, Seq(keyCol))
     if (touched.isEmpty)
       readEntries(spark, m.entries, manifestSchema(m)).filter(lit(false))
     else readEntries(spark, touched, manifestSchema(m))
@@ -4481,12 +3933,12 @@ object TableFormat {
       root
     }
 
-  /** COMPLEMENT DML end-to-end (r19 — [[deleteAnti]]/[[updateAnti]] via
-    * the anti commands in [[graft.io.GraftDmlRule]]): a NOT EXISTS
-    * purge keeps only orders whose customer is in the BUILDING segment
-    * (NULL-safe by construction — a correlated equality against a
-    * missing key is never TRUE), then a NOT IN update retags orders
-    * whose customer is not positive-balance. The oracle replays both
+  /** COMPLEMENT DML end-to-end (r19 — [[rewriteRows]] over a
+    * [[Hit.NotKeys]] via the anti commands in [[graft.io.GraftDmlRule]]):
+    * a NOT EXISTS purge keeps only orders whose customer is in the
+    * BUILDING segment (NULL-safe by construction — a correlated
+    * equality against a missing key is never TRUE), then a NOT IN
+    * update retags orders whose customer is not positive-balance. The oracle replays both
     * statements in DuckDB, whose NOT IN / NOT EXISTS three-valued
     * logic this family is spec-pinned against (`AntiDmlSpec`).
     */
@@ -4573,8 +4025,8 @@ object TableFormat {
         |GROUP BY o_orderkey % 10 ORDER BY bucket""".stripMargin)
   }
 
-  /** Conjunct-composed subquery DML end-to-end (r19b —
-    * [[deleteKeysWhere]]/[[updateKeysWhere]]): a guarded erasure deletes
+  /** Conjunct-composed subquery DML end-to-end (r19b — [[rewriteRows]]
+    * over a [[Hit.Keys]] with a residual): a guarded erasure deletes
     * BUILDING-segment customers' orders ONLY where the order is still
     * open ('O' — the static residual), then a composed EXISTS update
     * retags negative-balance customers' remaining 'F' orders. The
@@ -4914,12 +4366,11 @@ object TableFormat {
   /** COMPOSITE-key MERGE end-to-end (r18): the table is keyed on
     * (l_orderkey, l_linenumber) — including DUPLICATE pairs, which the
     * synthetic lineitem carries — and the statement matches on BOTH
-    * columns, landing copy-on-write through
-    * [[TableFormat.applyCoWDelta]] (the merge-on-read mask is
-    * single-key by construction). Tuple semantics are load-bearing:
-    * a single-key or concatenated-surrogate bug would update every
-    * row sharing ONE component. The oracle replays row-level over
-    * lineitem.
+    * columns, landing merge-on-read through [[applyDelta]] (the
+    * deletion-vector sidecar carries the full key tuple). Tuple
+    * semantics are load-bearing: a single-key or concatenated-surrogate
+    * bug would update every row sharing ONE component. The oracle
+    * replays row-level over lineitem.
     */
   private def landedSqlMergeMultiTable(s: SparkSession, dir: String)
       : String =

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 /** Complement-shaped DML (r19 — `io/GraftDmlRule.scala` antiSubquery,
-  * `io/TableFormat.scala` deleteAnti/updateAnti): `DELETE/UPDATE …
+  * `io/TableFormat.scala` rewriteRows over Hit.NotKeys): `DELETE/UPDATE …
   * WHERE NOT EXISTS (SELECT … WHERE inner = outer …)` and `… WHERE k
   * NOT IN (<uncorrelated subquery>)`. Pins:
   *

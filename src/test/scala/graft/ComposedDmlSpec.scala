@@ -3,7 +3,8 @@ package graft
 import java.nio.file.Files
 
 /** Conjunct-composed subquery DML (r19b — `io/GraftDmlRule.scala`
-  * composedKeys, `io/TableFormat.scala` deleteKeysWhere/updateKeysWhere):
+  * composedKeys, `io/TableFormat.scala` rewriteRows over Hit.Keys with a
+  * residual):
   * `DELETE/UPDATE … WHERE <IN/EXISTS subquery> AND <static residual>`.
   * Pins:
   *

@@ -10,7 +10,7 @@ import java.nio.file.Files
   * COLLISIONS (small component domains), so a concatenated-surrogate
   * or single-key bug surfaces as cross-tuple contamination within a
   * round or two. Landings are MERGE-ON-READ since r19 ([[graft.io
-  * .TableFormat.applyDeltaMulti]] — tuple deletion-vector sidecars
+  * .TableFormat.applyDelta]] over the key tuple — deletion-vector sidecars
   * with auto-fold), so the histories also exercise masked reads over
   * accumulated multi-column DVs; the per-column pruning is exercised
   * incidentally by every statement over the multi-dir history. Seeded,

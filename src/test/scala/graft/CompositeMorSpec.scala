@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** COMPOSITE-key MERGE-ON-READ (r19 — `io/TableFormat.scala`
-  * deleteKeysMorMulti/applyDeltaMulti): the deletion-vector sidecar
+  * applyDelta over a key tuple): the deletion-vector sidecar
   * carries the FULL key tuple as separate physical columns and the
   * read-time mask anti-joins on all of them, so a tuple point delete
   * on a multi-dir table mints ONE commit with ZERO data-dir rewrites.
@@ -25,6 +25,13 @@ class CompositeMorSpec extends TestSpark {
   private def freshRoot(): String =
     Files.createTempDirectory("graft_cmor").toString
 
+  /** A tuple merge-on-read delete — the SQL tuple DELETE's landing. */
+  private def deleteTuples(root: String,
+      keys: org.apache.spark.sql.DataFrame): Int =
+    TableFormat.applyDelta(spark, root, keys, keys.columns.toSeq,
+      spark.emptyDataFrame, Nil, None, None, Map.empty[String, String],
+      "delete-mor")
+
   private def entryInfo(root: String): Seq[(String, Option[String])] = {
     val v = TableFormat.latestVersion(root)
     val dvs = TableFormat.snapshotDvs(root, v)
@@ -41,8 +48,7 @@ class CompositeMorSpec extends TestSpark {
       .toDF("k1", "k2", "v"), root, statsCols = Seq("k1", "k2"))
     val dirsBefore = entryInfo(root).map(_._1)
     val vBefore = TableFormat.latestVersion(root)
-    TableFormat.deleteKeysMorMulti(spark, root,
-      Seq((3L, 3L), (10L, 3L)).toDF("k1", "k2"), Seq("k1", "k2"))
+    deleteTuples(root, Seq((3L, 3L), (10L, 3L)).toDF("k1", "k2"))
     assert(TableFormat.latestVersion(root) === vBefore + 1,
       "one tuple delete = one commit")
     val after = entryInfo(root)
@@ -70,8 +76,7 @@ class CompositeMorSpec extends TestSpark {
     TableFormat.append(Seq(
       ("a|b", "c", 1L), ("a", "b|c", 2L), ("a", "b", 3L), ("a|b|c", "", 4L)
     ).toDF("k1", "k2", "v"), root, statsCols = Seq("k1"))
-    TableFormat.deleteKeysMorMulti(spark, root,
-      Seq(("a|b", "c")).toDF("k1", "k2"), Seq("k1", "k2"))
+    deleteTuples(root, Seq(("a|b", "c")).toDF("k1", "k2"))
     val left = TableFormat.readSnapshot(spark, root)
       .select("v").collect().map(_.getLong(0)).toSet
     assert(left === Set(2L, 3L, 4L),
@@ -85,15 +90,13 @@ class CompositeMorSpec extends TestSpark {
       .toDF("k1", "k2", "v"), root, statsCols = Seq("k1", "k2"))
     // 4 tuple deletes of 1 row each: under the 0.5 ratio → sidecars
     (0L until 4L).foreach { i =>
-      TableFormat.deleteKeysMorMulti(spark, root,
-        Seq((i, i)).toDF("k1", "k2"), Seq("k1", "k2"))
+      deleteTuples(root, Seq((i, i)).toDF("k1", "k2"))
     }
     assert(entryInfo(root).exists(_._2.nonEmpty),
       "under the fold ratio the mask stays a sidecar")
     // the 5th crosses 0.5 × 10 → the dir folds: effective rewrite,
     // dv-free entry
-    TableFormat.deleteKeysMorMulti(spark, root,
-      Seq((4L, 4L)).toDF("k1", "k2"), Seq("k1", "k2"))
+    deleteTuples(root, Seq((4L, 4L)).toDF("k1", "k2"))
     assert(entryInfo(root).forall(_._2.isEmpty),
       "crossing the ratio must fold the dv debt into a rewrite")
     assert(TableFormat.readSnapshot(spark, root)
@@ -150,8 +153,7 @@ class CompositeMorSpec extends TestSpark {
       .toDF("k1", "k2", "v"), root, statsCols = Seq("k1"))
     TableFormat.deleteKeysMor(spark, root, Seq(1L).toDF("k1"), "k1")
     val e = intercept[IllegalArgumentException] {
-      TableFormat.deleteKeysMorMulti(spark, root,
-        Seq((2L, 2L)).toDF("k1", "k2"), Seq("k1", "k2"))
+      deleteTuples(root, Seq((2L, 2L)).toDF("k1", "k2"))
     }
     assert(e.getMessage.contains("deletion vectors key on"),
       s"a second key shape must refuse, got: ${e.getMessage}")

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
+import GraftDmlRule.{RowSet, RowTarget, ScalarPart}
 import TableFormat.{Edit, Hit}
 
 /** SQL DML over the table format: an `INSERT INTO` / `INSERT
@@ -123,17 +124,6 @@ final class GraftDmlRule extends Rule[LogicalPlan] {
     e
   }
 
-  /** The supported SUBQUERY condition (round-16 VERDICT #5): the WHOLE
-    * condition is `<target column> IN (<uncorrelated subquery>)` — the
-    * canonical GDPR-erasure statement. The command materializes the
-    * subquery into a key frame at RUN time and lands through the
-    * key-pruned copy-on-write core ([[TableFormat.rewriteRows]] over a
-    * [[TableFormat.Hit.Keys]]), where pruning comes from the key
-    * VALUES (zone maps + blooms) — a static predicate tree cannot
-    * prune a subquery. Correlated subqueries, NOT IN (different null
-    * semantics), EXISTS, and conjunct combinations keep refusing
-    * through [[unbind]].
-    */
   /** A supported IN-VALUE expression: a bare target column or the
     * analyzer's UP-cast of one (lossless ⇒ injective, so comparing in
     * the key's own declared domain after a round-trip filter is
@@ -150,6 +140,15 @@ final class GraftDmlRule extends Rule[LogicalPlan] {
     case _ => None
   }
 
+  /** The supported SUBQUERY condition (round-16 VERDICT #5): the WHOLE
+    * condition is `<target column> IN (<uncorrelated subquery>)` — the
+    * canonical GDPR-erasure statement. The command materializes the
+    * subquery into a key frame at RUN time and lands through the
+    * key-pruned copy-on-write core ([[TableFormat.rewriteRows]] over a
+    * [[TableFormat.Hit.Keys]]), where pruning comes from the key
+    * VALUES (zone maps + blooms) — a static predicate tree cannot
+    * prune a subquery.
+    */
   private def keysSubquery(cond: Expression, target: LogicalPlan)
       : Option[(Seq[String], LogicalPlan)] = cond match {
     case org.apache.spark.sql.catalyst.expressions.InSubquery(vs,
@@ -177,8 +176,8 @@ final class GraftDmlRule extends Rule[LogicalPlan] {
     *     (SELECT 1 FROM s WHERE s.k = t.k AND s.flag = 1)
     *   UPDATE t SET … WHERE k IN (SELECT k FROM s WHERE s.g = t.g)
     * }}}
-    * decorrelate to exactly the key frame the key-pruned commands
-    * already consume: each correlated EQUALITY conjunct `inner = outer`
+    * decorrelate to exactly the key frame a [[GraftDmlRule.RowTarget.Keys]]
+    * already consumes: each correlated EQUALITY conjunct `inner = outer`
     * contributes a (target column, inner value) pair, the residual
     * (outer-free) conjuncts stay on the subquery, and the rewritten
     * UNCORRELATED plan projects the inner values — a semi-join key set
@@ -285,9 +284,9 @@ final class GraftDmlRule extends Rule[LogicalPlan] {
     * outer …)` decorrelates exactly like [[existsSubquery]] — the inner
     * `Exists` is handed to it verbatim — and single-column uncorrelated
     * `k NOT IN (SELECT …)` reuses [[keysSubquery]]'s value matching.
-    * Both land through the anti commands ([[DeleteAntiKeysGraftTableCommand]]
-    * /[[UpdateAntiKeysGraftTableCommand]]): rows matching NO frame row
-    * are the statement's footprint. The boolean is `keepNullKeys` —
+    * Both classify as a [[GraftDmlRule.RowTarget.NotKeys]] of the one
+    * [[RowDmlGraftTableCommand]]: rows matching NO frame row are the
+    * statement's footprint. The boolean is `keepNullKeys` —
     * NOT IN's three-valued logic keeps NULL-keyed rows (UNKNOWN),
     * NOT EXISTS deletes/updates them (a correlated equality against
     * NULL is never TRUE). Tuple NOT IN (3VL over tuples: one non-null
@@ -468,10 +467,11 @@ final class GraftDmlRule extends Rule[LogicalPlan] {
     * `ScalarSubquery` inside the value must be a
     * [[scalarAssign]]-supported aggregate shape; each is decorrelated
     * and replaced by a placeholder attribute inside the RESERVED
-    * `__graft_sq_a_` namespace ([[joinScalars]] refuses a table whose
-    * own columns collide — the r19 ADVICE low). Everything AROUND the
-    * subquery — arithmetic, `CASE`, and user-written casts — stays in
-    * the rewritten expression and evaluates over the joined value, so
+    * `__graft_sq_a_` namespace ([[GraftDmlRule.withScalars]] refuses a
+    * table whose own columns collide — the r19 ADVICE low). Everything
+    * AROUND the subquery — arithmetic, `CASE`, and user-written casts —
+    * stays in the rewritten expression and evaluates over the joined
+    * value, so
     * `SET v = CAST((SELECT avg…) AS INT)` truncates exactly as written
     * (the r19 ADVICE medium: an unconditional cast-peel silently
     * dropped the user's lossy cast). `AssertNotNull` wrappers are
@@ -481,15 +481,13 @@ final class GraftDmlRule extends Rule[LogicalPlan] {
     */
   private def scalarValue(value: Expression, target: LogicalPlan,
       phBase: Int)
-      : Option[(Expression,
-        Seq[(String, Seq[String], LogicalPlan, LogicalPlan)])] = {
+      : Option[(Expression, Seq[ScalarPart])] = {
     import org.apache.spark.sql.catalyst.expressions.{ScalarSubquery, SubqueryExpression}
     val noAssert = value.transform {
       case a: org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull =>
         a.child
     }
-    val buf = scala.collection.mutable.Buffer
-      .empty[(String, Seq[String], LogicalPlan, LogicalPlan)]
+    val buf = scala.collection.mutable.Buffer.empty[ScalarPart]
     var ok = true
     val rewritten = noAssert.transform {
       case s: ScalarSubquery =>
@@ -525,23 +523,20 @@ final class GraftDmlRule extends Rule[LogicalPlan] {
     * condition, or an unsupported scalar shape, refuses loudly here.
     */
   private def scalarCond(cond: Expression, target: LogicalPlan)
-      : Option[(Expression,
-        Seq[(String, Seq[String], LogicalPlan, LogicalPlan)],
-        Expression)] = {
+      : Option[(Expression, Seq[ScalarPart], Expression)] = {
     import org.apache.spark.sql.catalyst.expressions.{ScalarSubquery, SubqueryExpression}
     if (!cond.exists(_.isInstanceOf[ScalarSubquery])) return None
-    val buf = scala.collection.mutable.Buffer
-      .empty[(String, Seq[String], LogicalPlan, LogicalPlan)]
+    val buf = scala.collection.mutable.Buffer.empty[ScalarPart]
     var bad: Option[String] = None
     val rewritten = cond.transform {
       case s: ScalarSubquery =>
         scalarAssign(s, target) match {
           case Some((ks, f, e)) =>
             // placeholders live INSIDE the reserved __graft_sq_c_
-            // namespace, so [[joinScalars]]' collision require covers
-            // them — a table column named like a placeholder refuses
-            // loudly instead of silently taking the scalar's value
-            // (r19 ADVICE, low)
+            // namespace, so [[GraftDmlRule.withScalars]]' collision
+            // require covers them — a table column named like a
+            // placeholder refuses loudly instead of silently taking the
+            // scalar's value (r19 ADVICE, low)
             val nm = s"__graft_sq_c_ph${buf.size}"
             buf += ((nm, ks, f, e))
             AttributeReference(nm, s.dataType, nullable = true)()
@@ -564,6 +559,60 @@ final class GraftDmlRule extends Rule[LogicalPlan] {
     Some((rewritten, buf.toSeq, prune))
   }
 
+  /** The rows a DELETE/UPDATE condition hits — the one shape chain
+    * both statements share, first match wins: a key set (IN / EXISTS),
+    * its complement (NOT IN / NOT EXISTS), a correlated NOT IN, a key
+    * set with a static residual, a condition over scalar subqueries,
+    * and otherwise a plain predicate.
+    */
+  private def rowTarget(cond: Expression, table: LogicalPlan): RowTarget =
+    keysSubquery(cond, table).orElse(existsSubquery(cond, table))
+      .map { case (ks, q) => RowTarget.Keys(ks, q, None) }
+      .orElse(antiSubquery(cond, table).map { case (ks, q, keepNull) =>
+        RowTarget.NotKeys(ks, q, keepNull) })
+      .orElse(corrAntiIn(cond, table).map { case (v, corr, q) =>
+        RowTarget.CorrAnti(v, corr, q) })
+      .orElse(composedKeys(cond, table).map { case (ks, q, residual) =>
+        RowTarget.Keys(ks, q, Some(residual)) })
+      .orElse(scalarCond(cond, table).map { case (rw, parts, prune) =>
+        RowTarget.Scalar(rw, prune, parts) })
+      .getOrElse(RowTarget.Where(unbind(cond)))
+
+  /** An UPDATE's assignments, each named by the top-level column it
+    * assigns: the plain ones, then those whose value carries scalar
+    * subqueries (r19b) with their decorrelated parts — every such value
+    * must be a [[scalarValue]]-supported shape.
+    */
+  private def rowSet(assignments: Seq[Assignment], table: LogicalPlan)
+      : RowSet = {
+    import org.apache.spark.sql.catalyst.expressions.ScalarSubquery
+    def nameOf(a: Assignment): String = a.key match {
+      case at: Attribute => at.name
+      case other => throw new IllegalArgumentException(
+        "graft-table UPDATE can only assign top-level " +
+          s"columns, got ${other.sql}")
+    }
+    val (scalA, plainA) = assignments.partition(
+      _.value.exists(_.isInstanceOf[ScalarSubquery]))
+    val parts = scala.collection.mutable.Buffer.empty[ScalarPart]
+    val scalarSet = scalA.map { a =>
+      val n = nameOf(a)
+      scalarValue(a.value, table, parts.size) match {
+        case Some((rw, ps)) => parts ++= ps; n -> rw
+        case None => throw new IllegalArgumentException(
+          "graft-table UPDATE supports scalar subqueries in " +
+            "SET only shaped `(SELECT <one aggregate> FROM s " +
+            "[WHERE s.j = t.k AND …] [GROUP BY <correlated " +
+            "keys>])` (equality correlation only), composed " +
+            "with subquery-free expressions — " +
+            s"`$n` is assigned an unsupported shape; stage " +
+            "the subquery into a frame and use merge")
+      }
+    }
+    RowSet(plainA.map(a => nameOf(a) -> unbind(a.value)) ++ scalarSet,
+      parts.toSeq)
+  }
+
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.resolveOperators {
       case i: InsertIntoStatement if i.query.resolved =>
@@ -573,126 +622,23 @@ final class GraftDmlRule extends Rule[LogicalPlan] {
         }
       case d: DeleteFromTable if d.resolved =>
         dmlTarget(d.table) match {
-          case Some((root, opts, ident)) =>
-            keysSubquery(d.condition, d.table)
-              .orElse(existsSubquery(d.condition, d.table)) match {
-              case Some((keys, sub)) =>
-                DeleteKeysGraftTableCommand(root, opts, keys, sub, ident)
-              case None => antiSubquery(d.condition, d.table) match {
-                case Some((keys, sub, keepNull)) =>
-                  DeleteAntiKeysGraftTableCommand(root, opts, keys, sub,
-                    keepNull, ident)
-                case None => corrAntiIn(d.condition, d.table) match {
-                  case Some((valCol, corrCols, sub)) =>
-                    DeleteCorrAntiGraftTableCommand(root, opts, valCol,
-                      corrCols, sub, ident)
-                  case None => composedKeys(d.condition, d.table) match {
-                  case Some((keys, sub, extra)) =>
-                    DeleteKeysWhereGraftTableCommand(root, opts, keys,
-                      sub, extra, ident)
-                  case None => scalarCond(d.condition, d.table) match {
-                    case Some((rw, subs, prune)) =>
-                      DeleteScalarCondGraftTableCommand(root, opts, rw,
-                        prune, subs, ident)
-                    case None => DeleteFromGraftTableCommand(root, opts,
-                      unbind(d.condition), ident)
-                  }
-                  }
-                }
-              }
-            }
+          case Some((root, opts, ident)) => RowDmlGraftTableCommand(root,
+            opts, rowTarget(d.condition, d.table), None, ident)
           case None => d
         }
       case u: UpdateTable if u.resolved =>
         dmlTarget(u.table) match {
-          case Some((root, opts, ident))
-              if u.assignments.exists(_.value.exists(_.isInstanceOf[
-                org.apache.spark.sql.catalyst.expressions.ScalarSubquery])) =>
-            // scalar-subquery assignments (r19b): every subquery-bearing
-            // value must be the supported whole-value aggregate shape
-            val (scalA, plainA) = u.assignments.partition(
-              _.value.exists(_.isInstanceOf[
-                org.apache.spark.sql.catalyst.expressions.ScalarSubquery]))
-            def nameOf(a: org.apache.spark.sql.catalyst.plans.logical.Assignment)
-                : String = a.key match {
-              case at: Attribute => at.name
-              case other => throw new IllegalArgumentException(
-                "graft-table UPDATE can only assign top-level " +
-                  s"columns, got ${other.sql}")
-            }
-            val sParts = scala.collection.mutable.Buffer
-              .empty[(String, Seq[String], LogicalPlan, LogicalPlan)]
-            val scalarAssigns = scalA.map { a =>
-              val n = nameOf(a)
-              scalarValue(a.value, u.table, sParts.size) match {
-                case Some((rw, parts)) => sParts ++= parts; n -> rw
-                case None => throw new IllegalArgumentException(
-                  "graft-table UPDATE supports scalar subqueries in " +
-                    "SET only shaped `(SELECT <one aggregate> FROM s " +
-                    "[WHERE s.j = t.k AND …] [GROUP BY <correlated " +
-                    "keys>])` (equality correlation only), composed " +
-                    "with subquery-free expressions — " +
-                    s"`$n` is assigned an unsupported shape; stage " +
-                    "the subquery into a frame and use merge")
-              }
-            }
-            val plainAssigns = plainA.map(a => nameOf(a) -> unbind(a.value))
-            // the condition may carry scalar subqueries of its own
-            val (condExpr, condSubs, prune) = u.condition match {
-              case None => (Literal.TrueLiteral,
-                Seq.empty[(String, Seq[String], LogicalPlan, LogicalPlan)],
-                None)
-              case Some(c) => scalarCond(c, u.table) match {
-                case Some((rw, subs, p)) => (rw, subs, Some(p))
-                case None => (unbind(c), Nil, None)
-              }
-            }
-            UpdateScalarGraftTableCommand(root, opts, condExpr, prune,
-              plainAssigns, scalarAssigns, sParts.toSeq, condSubs, ident)
           case Some((root, opts, ident)) =>
-            val assigns = u.assignments.map { a =>
-              val name = a.key match {
-                case at: Attribute => at.name
-                case other => throw new IllegalArgumentException(
-                  "graft-table UPDATE can only assign top-level " +
-                    s"columns, got ${other.sql}")
-              }
-              name -> unbind(a.value)
+            val set = rowSet(u.assignments, u.table)
+            val target = u.condition.fold[RowTarget](
+              RowTarget.Where(Literal.TrueLiteral))(rowTarget(_, u.table))
+            // a scalar-subquery SET composes with a predicate or scalar
+            // WHERE only: any other subquery condition refuses
+            target match {
+              case _: RowTarget.Where | _: RowTarget.Scalar =>
+              case _ => if (set.scalars.nonEmpty) unbind(u.condition.get)
             }
-            u.condition.flatMap(c => keysSubquery(c, u.table)
-              .orElse(existsSubquery(c, u.table))) match {
-              case Some((keys, sub)) =>
-                UpdateKeysGraftTableCommand(root, opts, keys, sub,
-                  assigns, ident)
-              case None =>
-                u.condition.flatMap(antiSubquery(_, u.table)) match {
-                  case Some((keys, sub, keepNull)) =>
-                    UpdateAntiKeysGraftTableCommand(root, opts, keys, sub,
-                      keepNull, assigns, ident)
-                  case None =>
-                   u.condition.flatMap(corrAntiIn(_, u.table)) match {
-                    case Some((valCol, corrCols, sub)) =>
-                      UpdateCorrAntiGraftTableCommand(root, opts, valCol,
-                        corrCols, sub, assigns, ident)
-                    case None =>
-                    u.condition.flatMap(composedKeys(_, u.table)) match {
-                      case Some((keys, sub, extra)) =>
-                        UpdateKeysWhereGraftTableCommand(root, opts, keys,
-                          sub, extra, assigns, ident)
-                      case None =>
-                        u.condition.flatMap(scalarCond(_, u.table)) match {
-                          case Some((rw, subs, p)) =>
-                            UpdateScalarGraftTableCommand(root, opts, rw,
-                              Some(p), assigns, Nil, Nil, subs, ident)
-                          case None => UpdateGraftTableCommand(root, opts,
-                            u.condition.map(unbind)
-                              .getOrElse(Literal.TrueLiteral),
-                            assigns, ident)
-                        }
-                    }
-                   }
-                }
-            }
+            RowDmlGraftTableCommand(root, opts, target, Some(set), ident)
           case None => u
         }
       case mt: MergeIntoTable
@@ -720,6 +666,33 @@ final class GraftDmlRule extends Rule[LogicalPlan] {
         i.assignments.forall(x => x.key.resolved && x.value.resolved)
       case _ => true
     })
+
+  // the analyzer wraps both the ON keys and the `SET *` expansion in
+  // type-reconciliation casts and nullability asserts — neither
+  // changes WHICH column is meant (the command re-casts the aligned
+  // source to the target's declared types anyway)
+  private def bare(e: Expression): Expression = e match {
+    case c: Cast => bare(c.child)
+    case a: org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull =>
+      bare(a.child)
+    case x => x
+  }
+
+  /** Whether MERGE action assignments are the identity expansion of
+    * `*`: every target column, each from its same-named source column.
+    */
+  private def isIdentity(mt: MergeIntoTable, assigns: Seq[Assignment])
+      : Boolean = {
+    val pairs = assigns.flatMap { a => (a.key, bare(a.value)) match {
+      case (k: Attribute, v: AttributeReference)
+          if mt.sourceTable.outputSet.contains(v) &&
+            k.name.equalsIgnoreCase(v.name) =>
+        Some(k.name.toLowerCase)
+      case _ => None
+    }}
+    pairs.length == assigns.length &&
+      pairs.toSet == mt.targetTable.output.map(_.name.toLowerCase).toSet
+  }
 
   /** The three STAR MERGE shapes → the key-anchored fast command
     * ([[MergeIntoGraftTableCommand]]); anything else that is still a
@@ -755,16 +728,6 @@ final class GraftDmlRule extends Rule[LogicalPlan] {
           case a: AttributeReference if !tNames(a.name.toLowerCase) => a
         }
       }
-    // the analyzer wraps both the ON keys and the `SET *` expansion in
-    // type-reconciliation casts and nullability asserts — neither
-    // changes WHICH column is meant (the command re-casts the aligned
-    // source to the target's declared types anyway)
-    def bare(e: Expression): Expression = e match {
-      case c: Cast => bare(c.child)
-      case a: org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull =>
-        bare(a.child)
-      case x => x
-    }
     // the ON clause: one target-key = source-key equality, or an AND
     // of several (COMPOSITE key, r18 — the general form lands it
     // merge-on-read, the sidecar carrying the full key tuple)
@@ -793,28 +756,18 @@ final class GraftDmlRule extends Rule[LogicalPlan] {
         s"target-key = source-key equalities: ${mt.mergeCondition.sql}")
     }
     val (tk, sk) = keys.head
-    val targetCols = mt.targetTable.output.map(_.name.toLowerCase)
-    def isIdentity(assigns: Seq[Assignment]): Boolean = {
-      val pairs = assigns.flatMap { a => (a.key, bare(a.value)) match {
-        case (k: Attribute, v: AttributeReference)
-            if sOut.contains(v) && k.name.equalsIgnoreCase(v.name) =>
-          Some(k.name.toLowerCase)
-        case _ => None
-      }}
-      pairs.length == assigns.length && pairs.toSet == targetCols.toSet
-    }
     val matched = mt.matchedActions match {
       case Seq() => Some("none")
       case Seq(UpdateStarAction(None)) => Some("update")
       case Seq(UpdateAction(None, _, true)) => Some("update") // analyzer: SET *
-      case Seq(UpdateAction(None, as, _)) if isIdentity(as) => Some("update")
+      case Seq(UpdateAction(None, as, _)) if isIdentity(mt, as) => Some("update")
       case Seq(DeleteAction(None)) => Some("delete")
       case _ => None
     }
     val notMatched = mt.notMatchedActions match {
       case Seq() => Some("none")
       case Seq(InsertStarAction(None)) => Some("insert")
-      case Seq(InsertAction(None, as)) if isIdentity(as) => Some("insert")
+      case Seq(InsertAction(None, as)) if isIdentity(mt, as) => Some("insert")
       case _ => None
     }
     // evolution is carried by the STAR actions only (the analyzer
@@ -835,7 +788,7 @@ final class GraftDmlRule extends Rule[LogicalPlan] {
         case _ => false
       } || mt.notMatchedActions.zipWithIndex.exists {
         case (InsertStarAction(_), _) => true
-        case (InsertAction(_, as), i) => isIdentity(as) && starIdx.contains(i)
+        case (InsertAction(_, as), i) => isIdentity(mt, as) && starIdx.contains(i)
         case _ => false
       }) evolveCols
       else Nil
@@ -872,17 +825,14 @@ final class GraftDmlRule extends Rule[LogicalPlan] {
   private def condMerge(mt: MergeIntoTable, root: String,
       opts: Map[String, String], keys: Seq[(String, String)],
       ident: Option[org.apache.spark.sql.catalyst.TableIdentifier],
-      refuse: String => Nothing,
-      evolve: Seq[AttributeReference] = Nil,
-      starIdx: Seq[Int] = Nil): LogicalPlan = {
-    val tOut = mt.targetTable.outputSet
-    val sOut = mt.sourceTable.outputSet
+      refuse: String => Nothing, evolve: Seq[AttributeReference],
+      starIdx: Seq[Int]): LogicalPlan = {
     val srcByName = mt.sourceTable.output
       .map(a => a.name.toLowerCase -> a).toMap
     def pfx(e: Expression): Expression = unbind(e).transform {
-      case a: AttributeReference if tOut.contains(a) =>
+      case a: AttributeReference if mt.targetTable.outputSet.contains(a) =>
         a.withName(GraftDmlRule.TPfx + a.name)
-      case a: AttributeReference if sOut.contains(a) =>
+      case a: AttributeReference if mt.sourceTable.outputSet.contains(a) =>
         a.withName(GraftDmlRule.SPfx + a.name)
     }
     // UNCORRELATED scalar subqueries in CLAUSE CONDITIONS (r20 — the
@@ -925,22 +875,6 @@ final class GraftDmlRule extends Rule[LogicalPlan] {
           s"MERGE … SET */INSERT * needs source column '${t.name}'"))
         t.name -> pfx(s)
       } ++ evolve.map(a => a.name -> pfx(a))
-    val targetCols = mt.targetTable.output.map(_.name.toLowerCase)
-    def isIdentity(assigns: Seq[Assignment]): Boolean = {
-      def bare(e: Expression): Expression = e match {
-        case c: Cast => bare(c.child)
-        case a: org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull =>
-          bare(a.child)
-        case x => x
-      }
-      val pairs = assigns.flatMap { a => (a.key, bare(a.value)) match {
-        case (k: Attribute, v: AttributeReference)
-            if sOut.contains(v) && k.name.equalsIgnoreCase(v.name) =>
-          Some(k.name.toLowerCase)
-        case _ => None
-      }}
-      pairs.length == assigns.length && pairs.toSet == targetCols.toSet
-    }
     val matchedSpecs: Seq[(Option[Expression],
         Option[Seq[(String, Expression)]])] =
       mt.matchedActions.map {
@@ -958,7 +892,7 @@ final class GraftDmlRule extends Rule[LogicalPlan] {
       mt.notMatchedActions.zipWithIndex.map {
         case (InsertStarAction(c), _) => (c.map(pfxCond), identityAssigns)
         case (InsertAction(c, as), i)
-            if evolve.nonEmpty && isIdentity(as) && starIdx.contains(i) =>
+            if evolve.nonEmpty && isIdentity(mt, as) && starIdx.contains(i) =>
           // a GENUINE `INSERT *` (parse-time tag) carries the evolution
           // columns; an explicit all-target identity list does not —
           // its inserts read NULL there (r19)
@@ -1075,45 +1009,179 @@ private[graft] case class InsertIntoGraftTableCommand(root: String,
   }
 }
 
-/** `DELETE FROM t WHERE …` landed as a predicate-pruned copy-on-write
-  * commit ([[TableFormat.rewriteRows]]): dirs whose zone maps exclude
-  * the predicate carry verbatim, matching rows filter out of the rest
-  * under SQL null semantics (NULL condition keeps the row).
+/** Every SQL `DELETE FROM t WHERE …` and `UPDATE t SET … [WHERE …]`:
+  * `target` names the rows the condition hits and `set` is None for
+  * DELETE, the assignments for UPDATE. `run` materializes the target's
+  * subquery, if any, and lands one copy-on-write commit through
+  * [[TableFormat.rewriteRows]] — the target's [[TableFormat.Hit]] ×
+  * [[TableFormat.Edit.Delete]] or [[TableFormat.Edit.Assign]] — that
+  * reads only the dirs that may hold a hit row and carries the rest
+  * verbatim. UPDATE assignments apply simultaneously over the
+  * pre-update row, cast to the declared column types.
+  *
+  * One input shape picks the merge-on-read strategy instead: a TUPLE
+  * key set without a residual — `(k1, k2) IN (SELECT …)` or a
+  * multi-pair correlated `EXISTS` (r19). The matched tuples become a
+  * deletion-vector sidecar on the touched dirs and an UPDATE appends
+  * their assigned images, all in one [[TableFormat.applyDelta]]
+  * commit: O(tuples) written, never a dir rewrite (auto-fold bounds
+  * the debt), never a concatenated surrogate key.
   */
-private[graft] case class DeleteFromGraftTableCommand(root: String,
-    writeOpts: Map[String, String],
-    condition: org.apache.spark.sql.catalyst.expressions.Expression,
+private[graft] case class RowDmlGraftTableCommand(root: String,
+    writeOpts: Map[String, String], target: RowTarget,
+    set: Option[RowSet],
     catalogIdent: Option[org.apache.spark.sql.catalyst.TableIdentifier])
     extends LeafRunnableCommand {
 
-  override def run(spark: SparkSession): Seq[Row] = {
-    GraftDmlRule.land(spark, root, writeOpts,
-      Hit.where(GraftDmlRule.rebind(condition)), Edit.Delete)
-    GraftDmlRule.refresh(spark, catalogIdent)
-  }
-}
-
-/** `UPDATE t SET … WHERE …` landed as a predicate-pruned copy-on-write
-  * commit ([[TableFormat.rewriteRows]]): assignments apply
-  * simultaneously over the pre-update row, cast to the declared column
-  * types, untouched dirs carry verbatim.
-  */
-private[graft] case class UpdateGraftTableCommand(root: String,
-    writeOpts: Map[String, String],
-    condition: org.apache.spark.sql.catalyst.expressions.Expression,
-    assignments: Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)],
-    catalogIdent: Option[org.apache.spark.sql.catalyst.TableIdentifier])
-    extends LeafRunnableCommand {
+  override def innerChildren: Seq[LogicalPlan] =
+    set.toSeq.flatMap(_.scalars.map(_._3)) ++ target.plans
 
   override def run(spark: SparkSession): Seq[Row] = {
-    GraftDmlRule.land(spark, root, writeOpts,
-      Hit.where(GraftDmlRule.rebind(condition)),
-      GraftDmlRule.assign(assignments))
+    import org.apache.spark.sql.functions.{col, lit}
+    import GraftDmlRule.{assign, bloomColOf, corrAntiAffected, land,
+      planFrame, rebind, resolveScalars, statsColsOf, subqueryKeysFrame,
+      withScalars}
+    val assigns = set.map(s => assign(s.assigns))
+    val edit = assigns.getOrElse(Edit.Delete)
+    def landHit(hit: Hit): Unit = land(spark, root, writeOpts, hit, edit)
+    var cached: Option[DataFrame] = None
+    def persisted(q: LogicalPlan): DataFrame = {
+      val df = planFrame(spark, q).persist()
+      cached = Some(df)
+      df
+    }
+    // scalar parts resolve once, before the commit: the SET's
+    // placeholders ("a", UPDATE only), then the condition's ("c")
+    def scalarHit(cond: Expression, prune: Expression,
+        condScalars: Seq[ScalarPart]): Hit =
+      if (set.forall(_.scalars.isEmpty) && condScalars.isEmpty)
+        Hit.where(rebind(cond))
+      else {
+        val a = set.map(s => resolveScalars(spark, s.scalars))
+        val c = resolveScalars(spark, condScalars)
+        val hits = rebind(cond)
+        Hit.Where(rebind(prune), df =>
+          (withScalars(a.fold(df)(withScalars(df, _, "a")), c, "c"), hits))
+      }
+    try target match {
+      case RowTarget.Keys(keyCols, q, residual) =>
+        val keys = subqueryKeysFrame(spark, root, keyCols, planFrame(spark, q))
+        val cols = keys.columns.toSeq
+        if (keyCols.size == 1 || residual.nonEmpty)
+          landHit(Hit.Keys(keys, cols, residual.map(rebind)))
+        else {
+          val images = assigns.fold(spark.emptyDataFrame) { a =>
+            val hit = TableFormat.readTouchedForKeys(spark, root, keys, cols)
+              .join(keys, cols, "left_semi")
+            TableFormat.assigned(hit, hit.schema, a.set, lit(true))
+          }
+          TableFormat.applyDelta(spark, root, keys, cols, images,
+            statsColsOf(writeOpts), bloomColOf(writeOpts), None,
+            Map.empty[String, String],
+            if (set.isEmpty) "delete-mor" else "update-where")
+        }
+      case RowTarget.NotKeys(keyCols, q, keepNullKeys) =>
+        // NOT IN's three-valued logic resolves on the RAW values, before
+        // the key-type cast nulls the ones that do not round-trip: one
+        // NULL in the list is UNKNOWN on every row — no version mints
+        val raw = persisted(q)
+        if (keepNullKeys && !raw.filter(col(raw.columns.head).isNull).isEmpty)
+          return Seq.empty
+        val keys = subqueryKeysFrame(spark, root, keyCols, raw)
+        landHit(Hit.NotKeys(keys, keys.columns.toSeq, keepNullKeys,
+          // NOT IN 3VL needs to distinguish a genuinely empty subquery
+          // from one whose values all failed the cast round-trip (r19
+          // ADVICE): only the former truncates NULL-keyed rows
+          rawNonEmpty = keepNullKeys && !raw.isEmpty))
+      case RowTarget.CorrAnti(valCol, corrCols, q) =>
+        val frame = persisted(q)
+        landHit(Hit.Where(lit(true),
+          corrAntiAffected(_, frame, valCol, corrCols)))
+      case RowTarget.Where(cond) => landHit(scalarHit(cond, cond, Nil))
+      case RowTarget.Scalar(cond, prune, condScalars) =>
+        landHit(scalarHit(cond, prune, condScalars))
+    } finally cached.foreach(_.unpersist())
     GraftDmlRule.refresh(spark, catalogIdent)
   }
 }
 
 private[graft] object GraftDmlRule {
+  /** A decorrelated scalar subquery: (placeholder column, target key
+    * columns it correlates on — empty when uncorrelated, per-key frame
+    * plan, empty-group plan). See [[resolveScalars]].
+    */
+  type ScalarPart = (String, Seq[String], LogicalPlan, LogicalPlan)
+
+  /** The rows a SQL DELETE/UPDATE hits, as the rule classified its
+    * condition; each lands as one [[TableFormat.Hit]]. An (unevaluable)
+    * expression whose children are the target's conditions, so the
+    * optimizer normalizes them in the command as it does any
+    * expression field — the zone-map prune reads the folded literals
+    * and no `With` survives into [[rebind]].
+    */
+  sealed trait RowTarget extends Expression
+      with org.apache.spark.sql.catalyst.expressions.Unevaluable {
+    override def dataType: org.apache.spark.sql.types.DataType =
+      org.apache.spark.sql.types.BooleanType
+    override def nullable: Boolean = false
+
+    /** The subquery plans the target executes, shown by EXPLAIN. */
+    def plans: Seq[LogicalPlan] = this match {
+      case RowTarget.Keys(_, q, _) => Seq(q)
+      case RowTarget.NotKeys(_, q, _) => Seq(q)
+      case RowTarget.CorrAnti(_, _, q) => Seq(q)
+      case RowTarget.Scalar(_, _, parts) => parts.map(_._3)
+      case RowTarget.Where(_) => Nil
+    }
+  }
+  object RowTarget {
+    import org.apache.spark.sql.catalyst.trees.{BinaryLike, LeafLike, UnaryLike}
+
+    /** A subquery-free predicate. */
+    final case class Where(cond: Expression) extends RowTarget
+        with UnaryLike[Expression] {
+      override def child: Expression = cond
+      override protected def withNewChildInternal(c: Expression): Where =
+        copy(cond = c)
+    }
+
+    /** Rows whose `keyCols` tuple is in the subquery's rows (IN /
+      * EXISTS) and, when given, satisfy the static `residual`.
+      */
+    final case class Keys(keyCols: Seq[String], subquery: LogicalPlan,
+        residual: Option[Expression]) extends RowTarget {
+      override def children: Seq[Expression] = residual.toSeq
+      override protected def withNewChildrenInternal(
+          cs: IndexedSeq[Expression]): Keys = copy(residual = cs.headOption)
+    }
+
+    /** The complement (NOT IN / NOT EXISTS); see [[TableFormat.Hit.NotKeys]]. */
+    final case class NotKeys(keyCols: Seq[String], subquery: LogicalPlan,
+        keepNullKeys: Boolean) extends RowTarget with LeafLike[Expression]
+
+    /** Correlated NOT IN; see [[corrAntiAffected]]. */
+    final case class CorrAnti(valCol: String, corrCols: Seq[String],
+        subquery: LogicalPlan) extends RowTarget with LeafLike[Expression]
+
+    /** `cond` over scalar-subquery placeholders; `prune` is its
+      * subquery-free conjuncts.
+      */
+    final case class Scalar(cond: Expression, prune: Expression,
+        condScalars: Seq[ScalarPart]) extends RowTarget
+        with BinaryLike[Expression] {
+      override def left: Expression = cond
+      override def right: Expression = prune
+      override protected def withNewChildrenInternal(l: Expression,
+          r: Expression): Scalar = copy(cond = l, prune = r)
+    }
+  }
+
+  /** An UPDATE's assignments by column name and the scalar parts their
+    * placeholders stand for.
+    */
+  final case class RowSet(assigns: Seq[(String, Expression)],
+      scalars: Seq[ScalarPart])
+
   /** Column-name prefixes a conditional MERGE's run-time join uses to
     * keep same-named target/source columns apart; clause expressions
     * are pre-renamed onto them at resolution time, while attr identity
@@ -1194,7 +1262,7 @@ private[graft] object GraftDmlRule {
     * uncorrelated form resolves to its single-row literal instead.
     */
   def resolveScalars(spark: SparkSession,
-      parts: Seq[(String, Seq[String], LogicalPlan, LogicalPlan)])
+      parts: Seq[ScalarPart])
       : Seq[(String, Seq[String], Option[DataFrame], Any)] =
     parts.map { case (n, ks, framePlan, emptyPlan) =>
       if (ks.isEmpty) {
@@ -1281,62 +1349,17 @@ private[graft] object GraftDmlRule {
     (joined, affected)
   }
 
-  /** The NOT EXISTS / NOT IN landing shared by DELETE and UPDATE. */
-  def landAnti(spark: SparkSession, root: String,
-      writeOpts: Map[String, String], keyCols: Seq[String],
-      subquery: LogicalPlan, keepNullKeys: Boolean, edit: Edit,
-      catalogIdent: Option[org.apache.spark.sql.catalyst.TableIdentifier])
-      : Seq[Row] = {
-    import org.apache.spark.sql.functions.col
-    val raw = planFrame(spark, subquery).persist()
-    try {
-      if (keepNullKeys &&
-          !raw.filter(col(raw.columns.head).isNull).isEmpty)
-        return Seq.empty // NULL in the NOT IN list: UNKNOWN everywhere
-      val keys = subqueryKeysFrame(spark, root, keyCols, raw)
-      land(spark, root, writeOpts, Hit.NotKeys(keys, keys.columns.toSeq,
-        keepNullKeys,
-        // NOT IN 3VL needs to distinguish a genuinely empty subquery
-        // from one whose values all failed the cast round-trip (r19
-        // ADVICE): only the former truncates NULL-keyed rows
-        rawNonEmpty = keepNullKeys && !raw.isEmpty), edit)
-    } finally raw.unpersist()
-    refresh(spark, catalogIdent)
-  }
-
-  /** The correlated NOT IN landing shared by DELETE and UPDATE. */
-  def landCorrAnti(spark: SparkSession, root: String,
-      writeOpts: Map[String, String], valCol: String,
-      corrCols: Seq[String], subquery: LogicalPlan, edit: Edit,
-      catalogIdent: Option[org.apache.spark.sql.catalyst.TableIdentifier])
-      : Seq[Row] = {
-    val frame = planFrame(spark, subquery).persist()
-    try land(spark, root, writeOpts,
-      Hit.Where(org.apache.spark.sql.functions.lit(true),
-        corrAntiAffected(_, frame, valCol, corrCols)), edit)
-    finally frame.unpersist()
-    refresh(spark, catalogIdent)
-  }
-
-  /** Execute an uncorrelated DML subquery into the one-column key
-    * frame the key-pruned verbs take — renamed and cast to the target
-    * key column's declared type, so [[TableFormat.touchedSplit]]
-    * probes zone maps in the key's own comparison domain. When the
+  /** Execute an uncorrelated DML subquery into the key frame the
+    * key-pruned hits take — renamed and cast to the target key
+    * columns' declared types, so [[TableFormat.touchedSplit]] probes
+    * zone maps in each key's own comparison domain. When the
     * subquery's values live in a WIDER domain (the accepted coerced
     * shape `CAST(k) IN (…)` — up-casts only), values that do not
     * ROUND-TRIP through the key type can never equal any key there, so
     * they drop instead of wrapping into a WRONG key under non-ANSI
     * cast (round-17 ADVICE, medium); a NULL IN-list value matches no
-    * row and drops with them.
-    */
-  def subqueryKeys(spark: SparkSession, root: String,
-      keyCols: Seq[String], subquery: LogicalPlan): DataFrame =
-    subqueryKeysFrame(spark, root, keyCols, planFrame(spark, subquery))
-
-  /** [[subqueryKeys]] over an already-executed frame — the anti
-    * commands materialize the subquery ONCE (they must inspect the RAW
-    * values for NOT IN's null check before the try_cast pipeline nulls
-    * non-round-trip values) and feed the same frame here.
+    * row and drops with them. `sub` is already planned: the NOT IN
+    * target inspects its RAW values first.
     */
   def subqueryKeysFrame(spark: SparkSession, root: String,
       keyCols: Seq[String], sub: DataFrame): DataFrame = {
@@ -1367,287 +1390,6 @@ private[graft] object GraftDmlRule {
       df.filter(col(f.name).cast(sub.schema(c).dataType) ===
         col(s"__graft_orig_${f.name}"))
     }.select(fields.map(f => col(f.name)): _*)
-  }
-}
-
-/** `DELETE FROM t WHERE k IN (SELECT …)` — the uncorrelated-subquery
-  * key delete (the canonical GDPR-erasure shape at 100 TB): the
-  * subquery materializes into a key frame at run time and lands
-  * through [[TableFormat.rewriteRows]], a copy-on-write commit pruned
-  * by the key VALUES (zone maps + blooms). IN-null semantics: NULL
-  * keys match no row, NULL-keyed rows survive. The TUPLE form `(k1,
-  * k2) IN (SELECT …)` lands MERGE-ON-READ through
-  * [[TableFormat.applyDelta]] (r19) — per-column zone-map exclusion,
-  * a multi-column deletion-vector sidecar, never a dir rewrite and
-  * never a concatenated surrogate.
-  */
-private[graft] case class DeleteKeysGraftTableCommand(root: String,
-    writeOpts: Map[String, String], keyCols: Seq[String],
-    subquery: LogicalPlan,
-    catalogIdent: Option[org.apache.spark.sql.catalyst.TableIdentifier])
-    extends LeafRunnableCommand {
-
-  override def innerChildren: Seq[LogicalPlan] = Seq(subquery)
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    val keys = GraftDmlRule.subqueryKeys(spark, root, keyCols, subquery)
-    val cols = keys.columns.toSeq
-    if (keyCols.size == 1)
-      GraftDmlRule.land(spark, root, writeOpts, Hit.Keys(keys, cols),
-        Edit.Delete)
-    else // r19: tuple deletes land MERGE-ON-READ — O(tuples) sidecar
-      // rows on the touched dirs, never a dir rewrite (auto-fold
-      // bounds the debt)
-      TableFormat.applyDelta(spark, root, keys, cols, spark.emptyDataFrame,
-        Nil, None, None, Map.empty[String, String], "delete-mor")
-    GraftDmlRule.refresh(spark, catalogIdent)
-  }
-}
-
-/** `UPDATE t SET … WHERE k IN (SELECT …)` — the key-set twin for
-  * UPDATE, landed through [[TableFormat.rewriteRows]] (same pruning
-  * and simultaneous-assignment semantics as the predicate form); the
-  * TUPLE form masks the matching tuples and appends their updated
-  * images through one merge-on-read [[TableFormat.applyDelta]] commit
-  * (r19).
-  */
-private[graft] case class UpdateKeysGraftTableCommand(root: String,
-    writeOpts: Map[String, String], keyCols: Seq[String],
-    subquery: LogicalPlan,
-    assignments: Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)],
-    catalogIdent: Option[org.apache.spark.sql.catalyst.TableIdentifier])
-    extends LeafRunnableCommand {
-
-  override def innerChildren: Seq[LogicalPlan] = Seq(subquery)
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    val keys = GraftDmlRule.subqueryKeys(spark, root, keyCols, subquery)
-    val cols = keys.columns.toSeq
-    val assign = GraftDmlRule.assign(assignments)
-    if (keyCols.size == 1)
-      GraftDmlRule.land(spark, root, writeOpts, Hit.Keys(keys, cols), assign)
-    else {
-      // r19: mask the matched tuples + append their updated images in
-      // ONE merge-on-read commit — a point update writes O(tuples),
-      // never a dir rewrite
-      val hit = TableFormat.readTouchedForKeys(spark, root, keys, cols)
-        .join(keys, cols, "left_semi")
-      TableFormat.applyDelta(spark, root, keys, cols,
-        TableFormat.assigned(hit, hit.schema, assign.set,
-          org.apache.spark.sql.functions.lit(true)),
-        GraftDmlRule.statsColsOf(writeOpts),
-        GraftDmlRule.bloomColOf(writeOpts), None,
-        Map.empty[String, String], "update-where")
-    }
-    GraftDmlRule.refresh(spark, catalogIdent)
-  }
-}
-
-/** `DELETE FROM t WHERE NOT EXISTS (SELECT … WHERE inner = outer …)` /
-  * `DELETE FROM t WHERE k NOT IN (<uncorrelated subquery>)` — the
-  * COMPLEMENT purge (r19), landed through [[TableFormat.rewriteRows]]
-  * over a [[TableFormat.Hit.NotKeys]]: rows matching NO key are
-  * deleted, and the pruning INVERTS — dirs the zone maps/blooms prove
-  * key-disjoint hold only doomed rows and DROP from the manifest
-  * wholesale with zero data I/O. NOT IN's three-valued logic resolves
-  * HERE, on the RAW subquery values before the try_cast pipeline
-  * (which nulls non-round-trip values and would conflate them with
-  * genuine NULLs): one NULL in the value list makes `k NOT IN (…)`
-  * UNKNOWN on every row — the statement deletes nothing and no version
-  * mints. The subquery executes ONCE (persisted across the null probe,
-  * the zone-map split, and the keep-join).
-  */
-private[graft] case class DeleteAntiKeysGraftTableCommand(root: String,
-    writeOpts: Map[String, String], keyCols: Seq[String],
-    subquery: LogicalPlan, keepNullKeys: Boolean,
-    catalogIdent: Option[org.apache.spark.sql.catalyst.TableIdentifier])
-    extends LeafRunnableCommand {
-
-  override def innerChildren: Seq[LogicalPlan] = Seq(subquery)
-
-  override def run(spark: SparkSession): Seq[Row] =
-    GraftDmlRule.landAnti(spark, root, writeOpts, keyCols, subquery,
-      keepNullKeys, Edit.Delete, catalogIdent)
-}
-
-/** `UPDATE t SET … WHERE NOT EXISTS (…)` / `… WHERE k NOT IN
-  * (<uncorrelated subquery>)` — the complement-UPDATE twin
-  * (simultaneous assignments over the pre-update row). Three-valued
-  * logic matches [[DeleteAntiKeysGraftTableCommand]]: a NULL in the
-  * NOT IN value list no-ops the statement, on the raw values.
-  */
-private[graft] case class UpdateAntiKeysGraftTableCommand(root: String,
-    writeOpts: Map[String, String], keyCols: Seq[String],
-    subquery: LogicalPlan, keepNullKeys: Boolean,
-    assignments: Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)],
-    catalogIdent: Option[org.apache.spark.sql.catalyst.TableIdentifier])
-    extends LeafRunnableCommand {
-
-  override def innerChildren: Seq[LogicalPlan] = Seq(subquery)
-
-  override def run(spark: SparkSession): Seq[Row] =
-    GraftDmlRule.landAnti(spark, root, writeOpts, keyCols, subquery,
-      keepNullKeys, GraftDmlRule.assign(assignments), catalogIdent)
-}
-
-/** `DELETE FROM t WHERE k NOT IN (SELECT v FROM s WHERE s.j = t.m …)`
-  * — the CORRELATED NOT IN purge (r20): the decorrelated frame's
-  * per-group accounts join in at run time and the keep-filter applies
-  * NOT IN's exact three-valued gate per matched group
-  * ([[GraftDmlRule.corrAntiAffected]]): empty group → the row dies
-  * (NULL-keyed rows included); a group holding an inner NULL, or a
-  * NULL outer value against a non-empty group, is UNKNOWN → the row
-  * carries. A whole-table rewrite by construction — the affected set
-  * (empty-group rows) is value-dependent, so no static prune exists.
-  */
-private[graft] case class DeleteCorrAntiGraftTableCommand(root: String,
-    writeOpts: Map[String, String], valCol: String,
-    corrCols: Seq[String], subquery: LogicalPlan,
-    catalogIdent: Option[org.apache.spark.sql.catalyst.TableIdentifier])
-    extends LeafRunnableCommand {
-
-  override def innerChildren: Seq[LogicalPlan] = Seq(subquery)
-
-  override def run(spark: SparkSession): Seq[Row] =
-    GraftDmlRule.landCorrAnti(spark, root, writeOpts, valCol, corrCols,
-      subquery, Edit.Delete, catalogIdent)
-}
-
-/** `UPDATE t SET … WHERE k NOT IN (<correlated subquery>)` — the
-  * correlated-NOT-IN UPDATE twin (r20): rows whose three-valued gate
-  * is TRUE take the assignments (simultaneous over the PRE-update
-  * row, cast to declared types), FALSE/UNKNOWN rows carry unchanged.
-  */
-private[graft] case class UpdateCorrAntiGraftTableCommand(root: String,
-    writeOpts: Map[String, String], valCol: String,
-    corrCols: Seq[String], subquery: LogicalPlan,
-    assignments: Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)],
-    catalogIdent: Option[org.apache.spark.sql.catalyst.TableIdentifier])
-    extends LeafRunnableCommand {
-
-  override def innerChildren: Seq[LogicalPlan] = Seq(subquery)
-
-  override def run(spark: SparkSession): Seq[Row] =
-    GraftDmlRule.landCorrAnti(spark, root, writeOpts, valCol, corrCols,
-      subquery, GraftDmlRule.assign(assignments), catalogIdent)
-}
-
-/** `DELETE FROM t WHERE <key subquery> AND <static residual>` — the
-  * conjunct-composed purge (r19b), landed through
-  * [[TableFormat.rewriteRows]] with the residual on the key hit:
-  * exactly the rows whose key matches the materialized frame AND
-  * whose residual holds die; pruning composes the key split with the
-  * residual's bounds walk.
-  */
-private[graft] case class DeleteKeysWhereGraftTableCommand(root: String,
-    writeOpts: Map[String, String], keyCols: Seq[String],
-    subquery: LogicalPlan,
-    extra: org.apache.spark.sql.catalyst.expressions.Expression,
-    catalogIdent: Option[org.apache.spark.sql.catalyst.TableIdentifier])
-    extends LeafRunnableCommand {
-
-  override def innerChildren: Seq[LogicalPlan] = Seq(subquery)
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    val keys = GraftDmlRule.subqueryKeys(spark, root, keyCols, subquery)
-    GraftDmlRule.land(spark, root, writeOpts, Hit.Keys(keys,
-      keys.columns.toSeq, Some(GraftDmlRule.rebind(extra))), Edit.Delete)
-    GraftDmlRule.refresh(spark, catalogIdent)
-  }
-}
-
-/** `UPDATE t SET … WHERE <key subquery> AND <static residual>` — the
-  * composed-UPDATE twin.
-  */
-private[graft] case class UpdateKeysWhereGraftTableCommand(root: String,
-    writeOpts: Map[String, String], keyCols: Seq[String],
-    subquery: LogicalPlan,
-    extra: org.apache.spark.sql.catalyst.expressions.Expression,
-    assignments: Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)],
-    catalogIdent: Option[org.apache.spark.sql.catalyst.TableIdentifier])
-    extends LeafRunnableCommand {
-
-  override def innerChildren: Seq[LogicalPlan] = Seq(subquery)
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    val keys = GraftDmlRule.subqueryKeys(spark, root, keyCols, subquery)
-    GraftDmlRule.land(spark, root, writeOpts, Hit.Keys(keys,
-      keys.columns.toSeq, Some(GraftDmlRule.rebind(extra))),
-      GraftDmlRule.assign(assignments))
-    GraftDmlRule.refresh(spark, catalogIdent)
-  }
-}
-
-/** `UPDATE t SET v = <expr over (SELECT <aggregate> FROM s WHERE s.j =
-  * t.k … [GROUP BY s.j])> [, plain assignments] [WHERE <subquery-free
-  * cond>]` — the scalar-subquery enrich-update (r19b, generalized
-  * r20), landed through [[TableFormat.rewriteRows]]: each
-  * decorrelated per-key aggregate frame left-joins the touched rows on
-  * its correlation keys and materializes as a reserved PLACEHOLDER
-  * column; rows with NO matching group take the shape's EMPTY-GROUP
-  * value (evaluated at run time — an ungrouped `count(*)` is 0, a
-  * GROUPED aggregate is NULL because the subquery returns zero rows;
-  * never assumed); the assigned expressions — arithmetic/CASE/casts
-  * AROUND the placeholders, preserved verbatim — evaluate in one
-  * simultaneous select over the PRE-update row under the WHERE
-  * condition. Pruning comes from the static condition's zone-map walk
-  * (an unconditioned enrich-update is a whole-table rewrite by
-  * construction). NULL correlation keys match no group (SQL equality)
-  * and take the empty-group value.
-  */
-private[graft] case class UpdateScalarGraftTableCommand(root: String,
-    writeOpts: Map[String, String],
-    condition: org.apache.spark.sql.catalyst.expressions.Expression,
-    prune: Option[org.apache.spark.sql.catalyst.expressions.Expression],
-    plain: Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)],
-    scalarAssigns: Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)],
-    scalarParts: Seq[(String, Seq[String], LogicalPlan, LogicalPlan)],
-    condScalars: Seq[(String, Seq[String], LogicalPlan, LogicalPlan)],
-    catalogIdent: Option[org.apache.spark.sql.catalyst.TableIdentifier])
-    extends LeafRunnableCommand {
-
-  override def innerChildren: Seq[LogicalPlan] =
-    (scalarParts ++ condScalars).map(_._3)
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    val resolvedA = GraftDmlRule.resolveScalars(spark, scalarParts)
-    val resolvedC = GraftDmlRule.resolveScalars(spark, condScalars)
-    val cond = GraftDmlRule.rebind(condition)
-    GraftDmlRule.land(spark, root, writeOpts,
-      Hit.Where(GraftDmlRule.rebind(prune.getOrElse(condition)), df =>
-        (GraftDmlRule.withScalars(
-          GraftDmlRule.withScalars(df, resolvedA, "a"), resolvedC, "c"),
-          cond)),
-      GraftDmlRule.assign(plain ++ scalarAssigns))
-    GraftDmlRule.refresh(spark, catalogIdent)
-  }
-}
-
-/** `DELETE FROM t WHERE <expr over scalar subqueries> [AND …]` — the
-  * comparison purge (r19b): each decorrelated per-key aggregate joins
-  * in at run time, its placeholder column feeds the rewritten
-  * condition, and the keep-filter is SQL-exact (a matchless row
-  * comparing against NULL carries). Pruning from the subquery-free
-  * conjuncts.
-  */
-private[graft] case class DeleteScalarCondGraftTableCommand(root: String,
-    writeOpts: Map[String, String],
-    condition: org.apache.spark.sql.catalyst.expressions.Expression,
-    prune: org.apache.spark.sql.catalyst.expressions.Expression,
-    condScalars: Seq[(String, Seq[String], LogicalPlan, LogicalPlan)],
-    catalogIdent: Option[org.apache.spark.sql.catalyst.TableIdentifier])
-    extends LeafRunnableCommand {
-
-  override def innerChildren: Seq[LogicalPlan] = condScalars.map(_._3)
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    val resolved = GraftDmlRule.resolveScalars(spark, condScalars)
-    val cond = GraftDmlRule.rebind(condition)
-    GraftDmlRule.land(spark, root, writeOpts,
-      Hit.Where(GraftDmlRule.rebind(prune), df =>
-        (GraftDmlRule.withScalars(df, resolved, "c"), cond)),
-      Edit.Delete)
-    GraftDmlRule.refresh(spark, catalogIdent)
   }
 }
 
@@ -1778,8 +1520,8 @@ private[graft] case class MergeIntoGraftTableCondCommand(root: String,
     notMatched: Seq[(Option[Expression], Seq[(String, Expression)])],
     bySource: Seq[(Option[Expression], Option[Seq[(String, Expression)]])],
     catalogIdent: Option[org.apache.spark.sql.catalyst.TableIdentifier],
-    evolve: Seq[(String, org.apache.spark.sql.types.DataType)] = Nil,
-    condScalars: Seq[(String, LogicalPlan)] = Nil)
+    evolve: Seq[(String, org.apache.spark.sql.types.DataType)],
+    condScalars: Seq[(String, LogicalPlan)])
     extends LeafRunnableCommand {
 
   override def innerChildren: Seq[LogicalPlan] =

@@ -808,8 +808,8 @@ object MatView {
     // — refresh I/O ∝ affected dirs, never view size (the delta
     // aggregation evaluates once more for the bounds probe; it is an
     // aggregate of the change window, bounded by changed files)
-    val old = TableFormat.readTouched(spark, mvRoot,
-      delta.select(KeyCol), KeyCol)
+    val old = TableFormat.readTouchedForKeys(spark, mvRoot,
+      delta.select(KeyCol), Seq(KeyCol))
     // disambiguate: every delta column except the join key gets a d_ name
     val d = delta.columns.filterNot(_ == KeyCol)
       .foldLeft(delta)((f, c) => f.withColumnRenamed(c, s"__d_$c"))

@@ -2274,9 +2274,10 @@ object TableFormat {
     * nothing or everything, and concurrent refreshers serialize
     * through the manifest CAS). Appends may be WIDER (schema-evolution
     * merge) — the commit unions the schema — and pass the table's
-    * CHECK before any file lands. Conflicts detect on the first key
-    * column: a foreign commit holding a conflicting tuple necessarily
-    * intersects it (conservative, never missed).
+    * CHECK before any file lands; the appended dir keeps the touched
+    * dirs' zone maps ([[inheritedStats]]). Conflicts detect on the
+    * first key column: a foreign commit holding a conflicting tuple
+    * necessarily intersects it (conservative, never missed).
     *
     * Degenerate shapes compose: no deletes → an [[append]] (with the
     * marker); deletes the zone maps prove absent and no appends →
@@ -2332,7 +2333,8 @@ object TableFormat {
       else {
         val dataDir = newDataDir(root)
         writeData(appends, dataDir, bloomCol, colMapOf(m))
-        Seq(mkEntry(spark, dataDir, statsCols, colMapOf(m)))
+        Seq(mkEntry(spark, dataDir, inheritedStats(statsCols, touched),
+          colMapOf(m)))
       }
     val kc = keyCols.head
     val conflict =
@@ -2348,7 +2350,9 @@ object TableFormat {
 
   /** Effective rows of exactly the head dirs whose zone maps / blooms
     * might hold a key tuple of `keys` — the bounded target side a
-    * key-anchored MERGE joins against. Soundness carries from
+    * key-anchored MERGE joins against, and the standing state a
+    * [[MatView]] refresh merges (refresh I/O ∝ the affected groups'
+    * dirs, not view size). Soundness carries from
     * [[touchedSplit]]: an untouched dir PROVABLY contains none of the
     * keys, so a join (or an anti-join) of `keys` against this frame
     * equals the same join against the whole snapshot, at the cost of
@@ -2692,20 +2696,9 @@ object TableFormat {
     require(fromVersion < toVersion,
       s"change feed needs fromVersion < toVersion, " +
         s"got $fromVersion/$toVersion")
-    val mFrom = readManifestFull(root, fromVersion)
-    val mTo = readManifestFull(root, toVersion)
-    val fromBy = mFrom.entries.map(e => e.dir -> e).toMap
-    val toBy = mTo.entries.map(e => e.dir -> e).toMap
-    val added = mTo.entries.filter(e =>
-      !fromBy.get(e.dir).exists(_.dv == e.dv))
-    val dropped = mFrom.entries.filter(e =>
-      !toBy.get(e.dir).exists(_.dv == e.dv))
-    val schema: Option[StructType] = manifestSchema(mTo).orElse {
-      val dirs = (added ++ dropped).map(_.dir).distinct
-      if (dirs.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true")
-        .parquet(dirs: _*).schema)
-    }
+    val w = window(root, fromVersion, toVersion)
+    val (mTo, added, dropped) = (w.to, w.added, w.dropped)
+    val schema = w.schema(spark)
     // r20 (the r19 VERDICT #5): serve EVERY window under the HEAD's
     // logical spellings. Each manifest carries its own logical names,
     // so a window ending before a RENAME would otherwise serve the
@@ -2789,23 +2782,38 @@ object TableFormat {
     }
   }
 
-  /** EFFECTIVE head rows from only the data dirs whose zone-map bounds
-    * intersect `keys` — the read-side twin of the delete path's
-    * touched-split: rows of keys outside a dir's recorded range cannot
-    * live there, so a point-ish lookup reads O(touched dirs), never the
-    * table ([[MatView]]'s state merge rides this: refresh I/O ∝ the
-    * affected groups' dirs, not view size). Unstatted dirs read
-    * conservatively, like every pruning consumer.
+  /** The manifest diff of the window `fromVersion` → `toVersion`, the
+    * one every change reader derives from: the TO manifest, the entries
+    * `added` at TO and `dropped` from FROM — an entry moved when its dir
+    * is absent on the other side or its dv pointer differs. A verbatim
+    * entry cannot hold a change. `fromVersion < 0` is "since before the
+    * table existed": every TO entry is added.
     */
-  private[graft] def readTouched(spark: SparkSession, root: String,
-      keys: DataFrame, keyCol: String): DataFrame = {
-    val v = latestVersion(root)
-    require(v >= 0, s"no snapshot at $root")
-    val m = readManifestFull(root, v)
-    val (touched, _) = touchedSplit(spark, m.entries, keys, Seq(keyCol))
-    if (touched.isEmpty)
-      readEntries(spark, m.entries, manifestSchema(m)).filter(lit(false))
-    else readEntries(spark, touched, manifestSchema(m))
+  private case class Window(to: Manifest, added: Seq[Entry],
+      dropped: Seq[Entry]) {
+    /** The TO schema, or a footer merge of the moved dirs on a legacy
+      * manifest.
+      */
+    def schema(spark: SparkSession): Option[StructType] =
+      manifestSchema(to).orElse {
+        val dirs = (added ++ dropped).map(_.dir).distinct
+        if (dirs.isEmpty) None
+        else Some(spark.read.option("mergeSchema", "true")
+          .parquet(dirs: _*).schema)
+      }
+  }
+
+  private def window(root: String, fromVersion: Int, toVersion: Int)
+      : Window = {
+    val to = readManifestFull(root, toVersion)
+    if (fromVersion < 0) return Window(to, to.entries, Nil)
+    val from = readManifestFull(root, fromVersion)
+    def moved(side: Seq[Entry], other: Seq[Entry]): Seq[Entry] = {
+      val by = other.map(e => e.dir -> e).toMap
+      side.filter(e => !by.get(e.dir).exists(_.dv == e.dv))
+    }
+    Window(to, moved(to.entries, from.entries),
+      moved(from.entries, to.entries))
   }
 
   /** The RAW two-sided delta between two snapshots — (rows added, rows
@@ -2822,25 +2830,11 @@ object TableFormat {
   private[graft] def readDelta(spark: SparkSession, root: String,
       fromVersion: Int, toVersion: Int)
       : (Option[DataFrame], Option[DataFrame]) = {
-    val mTo = readManifestFull(root, toVersion)
-    val (added, dropped) =
-      if (fromVersion < 0) (mTo.entries, Seq.empty[Entry])
-      else {
-        val mFrom = readManifestFull(root, fromVersion)
-        val fromBy = mFrom.entries.map(e => e.dir -> e).toMap
-        val toBy = mTo.entries.map(e => e.dir -> e).toMap
-        (mTo.entries.filter(e => !fromBy.get(e.dir).exists(_.dv == e.dv)),
-          mFrom.entries.filter(e => !toBy.get(e.dir).exists(_.dv == e.dv)))
-      }
-    val schema: Option[StructType] = manifestSchema(mTo).orElse {
-      val dirs = (added ++ dropped).map(_.dir).distinct
-      if (dirs.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true")
-        .parquet(dirs: _*).schema)
-    }
+    val w = window(root, fromVersion, toVersion)
+    val schema = w.schema(spark)
     def side(es: Seq[Entry]): Option[DataFrame] =
       if (es.isEmpty) None else Some(readEntries(spark, es, schema))
-    (side(added), side(dropped))
+    (side(w.added), side(w.dropped))
   }
 
   /** Rows ADDED between two snapshots — the appends-mode streaming
@@ -2857,25 +2851,19 @@ object TableFormat {
   private[graft] def readAppends(spark: SparkSession, root: String,
       fromVersion: Int, toVersion: Int,
       ignoreChanges: Boolean): DataFrame = {
-    val mTo = readManifestFull(root, toVersion)
-    if (fromVersion < 0) return readEntries(spark, mTo.entries,
-      manifestSchema(mTo))
-    val mFrom = readManifestFull(root, fromVersion)
-    val fromBy = mFrom.entries.map(e => e.dir -> e).toMap
-    val toDirs = mTo.entries.map(_.dir).toSet
-    if (!ignoreChanges) {
-      val dropped = mFrom.entries.filterNot(e => toDirs(e.dir))
-      val dvMoved = mTo.entries.filter(e =>
-        fromBy.get(e.dir).exists(_.dv != e.dv))
-      require(dropped.isEmpty && dvMoved.isEmpty,
-        s"append-only stream over $root hit a rewrite/delete commit in " +
-          s"v$fromVersion..v$toVersion (${dropped.size} dirs dropped, " +
-          s"${dvMoved.size} deletion vectors moved) — consume mode=cdc, " +
-          "or set ignoreChanges=true to accept replayed rewritten rows")
-    }
-    readEntries(spark,
-      mTo.entries.filterNot(e => fromBy.contains(e.dir)),
-      manifestSchema(mTo))
+    val w = window(root, fromVersion, toVersion)
+    // a dropped entry is a dir gone from TO or one whose dv moved
+    val toDirs = w.to.entries.map(_.dir).toSet
+    val (dvMoved, gone) = w.dropped.partition(e => toDirs(e.dir))
+    require(ignoreChanges || w.dropped.isEmpty,
+      s"append-only stream over $root hit a rewrite/delete commit in " +
+        s"v$fromVersion..v$toVersion (${gone.size} dirs dropped, " +
+        s"${dvMoved.size} deletion vectors moved) — consume mode=cdc, " +
+        "or set ignoreChanges=true to accept replayed rewritten rows")
+    // under ignoreChanges only the dirs new at TO are appends
+    val moved = dvMoved.map(_.dir).toSet
+    readEntries(spark, w.added.filterNot(e => moved(e.dir)),
+      manifestSchema(w.to))
   }
 
   /** The recorded schema of the latest snapshot (None on a legacy
@@ -3977,8 +3965,8 @@ object TableFormat {
         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
   }
 
-  /** Scalar-subquery UPDATE end-to-end (r19b —
-    * [[graft.io.UpdateScalarGraftTableCommand]]): every third order's
+  /** Scalar-subquery UPDATE end-to-end (r19b — a scalar SET of
+    * [[graft.io.RowDmlGraftTableCommand]]): every third order's
     * total is replaced by its LINEITEM COUNT via a correlated ungrouped
     * aggregate — orders with no lineitems take count's EMPTY-GROUP
     * value 0, not NULL (the classic decorrelation count bug, pinned in

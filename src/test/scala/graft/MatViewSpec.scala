@@ -752,7 +752,7 @@ class MatViewSpec extends TestSpark {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val (nTouched, nAll) =
       try (filesRead(
-        TableFormat.readTouched(spark, mv, keys, MatView.KeyCol)),
+        TableFormat.readTouchedForKeys(spark, mv, keys, Seq(MatView.KeyCol))),
         filesRead(TableFormat.readSnapshot(spark, mv)))
       finally spark.conf.set("spark.sql.adaptive.enabled", "true")
     assert(nTouched < nAll,

@@ -136,6 +136,62 @@ class RowDmlSpec extends TestSpark {
         case 3L => 3L; case 4L => 99L; case _ => -1L })),
       Some("UPDATE graft_rd SET v = coalesce((SELECT max(y) FROM " +
         "graft_rd_corr c WHERE c.x = graft_rd.k), -1) WHERE k > 1000")),
+    Shape("correlated EXISTS DELETE, one pair",
+      "DELETE FROM graft_rd WHERE EXISTS " +
+        "(SELECT 1 FROM graft_rd_keys s WHERE s.x = graft_rd.k)",
+      "delete", Set(2), _.filterNot(r => Set(3L, 5L, 102L)(r.k)),
+      Some("DELETE FROM graft_rd WHERE EXISTS " +
+        "(SELECT 1 FROM graft_rd_none s WHERE s.x = graft_rd.k)")),
+    Shape("correlated EXISTS UPDATE, one pair",
+      "UPDATE graft_rd SET v = -3 WHERE EXISTS " +
+        "(SELECT 1 FROM graft_rd_keys s WHERE s.x = graft_rd.k)",
+      "update-where", Set(2),
+      upd(_)(r => Set(3L, 5L, 102L)(r.k), _.copy(v = -3)),
+      Some("UPDATE graft_rd SET v = -3 WHERE EXISTS " +
+        "(SELECT 1 FROM graft_rd_none s WHERE s.x = graft_rd.k)")),
+    Shape("correlated EXISTS DELETE, two pairs",
+      "DELETE FROM graft_rd WHERE EXISTS (SELECT 1 FROM graft_rd_pairs p " +
+        "WHERE p.x = graft_rd.k AND p.y = graft_rd.g)",
+      "delete-mor", Set(2), _.filterNot(r => r.k == 3 || r.k == 105),
+      Some("DELETE FROM graft_rd WHERE EXISTS (SELECT 1 FROM graft_rd_pairs " +
+        "p WHERE p.x = graft_rd.k AND p.y = graft_rd.g AND p.x > 1000)")),
+    Shape("correlated EXISTS UPDATE, two pairs",
+      "UPDATE graft_rd SET v = -4 WHERE EXISTS (SELECT 1 FROM graft_rd_pairs " +
+        "p WHERE p.x = graft_rd.k AND p.y = graft_rd.g)",
+      "update-where", Set(2),
+      upd(_)(r => r.k == 3 || r.k == 105, _.copy(v = -4)),
+      Some("UPDATE graft_rd SET v = -4 WHERE EXISTS (SELECT 1 FROM " +
+        "graft_rd_pairs p WHERE p.x = graft_rd.k AND p.y = graft_rd.g " +
+        "AND p.x > 1000)")),
+    Shape("correlated IN UPDATE",
+      "UPDATE graft_rd SET v = -5 WHERE k IN " +
+        "(SELECT x FROM graft_rd_pairs p WHERE p.y = graft_rd.g)",
+      "update-where", Set(2),
+      upd(_)(r => r.k == 3 || r.k == 105, _.copy(v = -5)),
+      Some("UPDATE graft_rd SET v = -5 WHERE k IN (SELECT x FROM " +
+        "graft_rd_pairs p WHERE p.y = graft_rd.g AND p.x > 1000)")),
+    Shape("scalar-subquery DELETE",
+      "DELETE FROM graft_rd WHERE v > (SELECT avg(x) FROM graft_rd_keys) " +
+        "AND k < 150",
+      "delete-where", Set(2), _.filterNot(r => r.k >= 100 && r.k < 150),
+      Some("DELETE FROM graft_rd WHERE v > (SELECT avg(x) FROM " +
+        "graft_rd_keys) AND k > 1000")),
+    Shape("plain SET, scalar-subquery WHERE UPDATE",
+      "UPDATE graft_rd SET st = 'S' WHERE v < (SELECT avg(y) FROM " +
+        "graft_rd_corr c WHERE c.x = graft_rd.k) AND k < 50",
+      "update-where", Set(1, 2), upd(_)(_.k == 4, _.copy(st = "S")),
+      Some("UPDATE graft_rd SET st = 'S' WHERE v < (SELECT avg(y) FROM " +
+        "graft_rd_corr c WHERE c.x = graft_rd.k) AND k > 1000")),
+    Shape("scalar SET, scalar WHERE UPDATE",
+      "UPDATE graft_rd SET v = coalesce((SELECT max(y) FROM graft_rd_corr c " +
+        "WHERE c.x = graft_rd.k), -1) WHERE v < (SELECT avg(x) FROM " +
+        "graft_rd_keys) AND k < 50",
+      "update-where", Set(1, 2),
+      upd(_)(_.k < 10, r => r.copy(v = r.k match {
+        case 3L => 3L; case 4L => 99L; case _ => -1L })),
+      Some("UPDATE graft_rd SET v = coalesce((SELECT max(y) FROM " +
+        "graft_rd_corr c WHERE c.x = graft_rd.k), -1) WHERE v < (SELECT " +
+        "avg(x) FROM graft_rd_keys) AND k > 1000")),
     Shape("MERGE upsert",
       "MERGE INTO graft_rd t USING graft_rd_src s ON t.k = s.k " +
         "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
@@ -211,6 +267,20 @@ class RowDmlSpec extends TestSpark {
     spark.sql("DROP TABLE graft_rd")
   }
 
+  test("NOT IN over a list holding NULL is UNKNOWN everywhere: no version") {
+    views()
+    val root = freshTable()
+    val v0 = TableFormat.latestVersion(root)
+    Seq("DELETE FROM graft_rd WHERE k NOT IN (SELECT x FROM graft_rd_nulls)",
+      "UPDATE graft_rd SET v = 0 WHERE k NOT IN " +
+        "(SELECT x FROM graft_rd_nulls)").foreach { q =>
+      spark.sql(q)
+      assert(TableFormat.latestVersion(root) === v0, q)
+    }
+    assert(rows(root) === base.flatten.toSet)
+    spark.sql("DROP TABLE graft_rd")
+  }
+
   test("unknown and duplicate assignment columns are refused") {
     val root = freshTable()
     val v0 = TableFormat.latestVersion(root)
@@ -274,6 +344,29 @@ class RowDmlSpec extends TestSpark {
       "the rewritten dir's bounds must prune the next point delete")
     assert(TableFormat.readSnapshot(spark, root).as[Long].collect().toSet ===
       ((0L until 10L) ++ (100L until 110L)).toSet - 3L - 105L)
+  }
+
+  test("merge-on-read appends inherit the touched dirs' zone maps") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_rd_mor_zm").toString
+    TableFormat.append((0L until 10L).map(k => (k, k)).toDF("k", "v"), root,
+      statsCols = Seq("k"))
+    TableFormat.append((100L until 110L).map(k => (k, k)).toDF("k", "v"),
+      root, statsCols = Seq("k"))
+    val before = entries(root).map(_._1).toSet
+    TableFormat.applyDelta(spark, root, Seq(3L).toDF("k"), "k",
+      Seq((3L, -3L)).toDF("k", "v"))
+    val appended = TableFormat.readManifestFull(root,
+      TableFormat.latestVersion(root)).entries.filterNot(e => before(e.dir))
+    assert(appended.size === 1 && appended.head.bounds.contains("k"),
+      s"the appended dir must carry k's bounds: $appended")
+    // a point delete landing only in the other dir carries the appended one
+    TableFormat.deleteKeys(spark, root, Seq(105L).toDF("k"), "k")
+    assert(entries(root).map(_._1).contains(appended.head.dir),
+      "the appended dir's bounds must prune the next point delete")
+    assert(TableFormat.readSnapshot(spark, root).as[(Long, Long)].collect()
+      .toSet === ((0L until 10L) ++ (100L until 110L)).map(k =>
+        k -> (if (k == 3L) -3L else k)).toSet - (105L -> 105L))
   }
 }
 

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 /** Scalar-subquery UPDATE assignments (r19b — `io/GraftDmlRule.scala`
-  * scalarAssign + UpdateScalarGraftTableCommand): `UPDATE t SET v =
+  * scalarAssign + the scalar SET of RowDmlGraftTableCommand): `UPDATE t SET v =
   * (SELECT <aggregate> FROM s WHERE s.j = t.k [AND …])`. Pins:
   *
   *   - per-key aggregate semantics incl. the EMPTY-GROUP value from

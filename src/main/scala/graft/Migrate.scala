@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.etl.Migration
 import graft.io.Sources
@@ -20,11 +21,14 @@ import graft.io.Sources
   * satisfied at insert time (the same path JdbcSpec proves against embedded
   * Derby); `--out` writes one parquet directory per table — the lake-first
   * variant of the same bundle. Every landed count is VERIFIED against the
-  * source frame's count: exit code 0 means all seven tables landed exactly
-  * their source row counts, any mismatch exits 1. For `--jdbc` the landed
-  * count is the before/after DELTA of this run's append, so re-running
-  * against a pre-existing database verifies this run's rows, not the
-  * table's cumulative contents.
+  * source row count: exit code 0 means all seven tables landed exactly
+  * their source row counts, any mismatch exits 1. Source rows are observed
+  * on the write itself (`Dataset.observe`, no job of their own); landed
+  * rows are counted by the target: a `SELECT COUNT(*)` the database
+  * answers for `--jdbc`, a parquet re-read for `--out`. For `--jdbc` the
+  * landed count is the before/after DELTA of this run's append, so
+  * re-running against a pre-existing database verifies this run's rows,
+  * not the table's cumulative contents.
   */
 object Migrate {
 
@@ -50,9 +54,9 @@ object Migrate {
   }
 
   /** Land the bundle and return `(table, sourceRows, landedRows)` in FK
-    * order — `landedRows` read back from the TARGET (parquet re-read, or
-    * JDBC count delta across the append), so the report proves what landed
-    * rather than echoing the input.
+    * order — `sourceRows` observed on the write, `landedRows` read back from
+    * the TARGET (parquet re-read, or JDBC count delta across the append), so
+    * the report proves what landed rather than echoing the input.
     */
   private[graft] def run(spark: SparkSession, sfDir: String, outDir: String,
       jdbcUrl: Option[String]): Seq[(String, Long, Long)] = {
@@ -73,14 +77,18 @@ object Migrate {
         case _ => false
       }
     def jdbcCount(url: String, name: String): Long =
-      // single-cursor count read — the report query, not the data path
-      // (the parallel-range read is Sources.jdbcRead)
+      // the database counts and returns one row: one job, whatever the
+      // table holds (a `dbtable` count() would pull every row back through
+      // one cursor). Derby types COUNT(*) as INTEGER, others as BIGINT.
       try spark.read.format("jdbc").option("url", url)
-        .option("dbtable", name).load().count()
+        .option("query", s"SELECT COUNT(*) AS n FROM $name").load().head()
+        .get(0).asInstanceOf[Number].longValue
       catch { case e: Exception if isTableMissing(e) => 0L }
     val bundle = Migration.migrateAll(spark, sfDir)
-    bundle.map { case (name, df) =>
-      val source = df.count()
+    bundle.map { case (name, frame) =>
+      // counted by the write's own tasks; read only after the write returns
+      val rows = Observation()
+      val df = frame.observe(rows, count(lit(1)).as("rows"))
       val landed = jdbcUrl match {
         case Some(url) =>
           val before = jdbcCount(url, name)
@@ -90,6 +98,9 @@ object Migrate {
           df.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
           spark.read.parquet(s"$outDir/$name.parquet").count()
       }
+      val source = rows.get.getOrElse("rows", throw new IllegalStateException(
+        s"the write of $name reported no source row count"))
+        .asInstanceOf[Long]
       (name, source, landed)
     }
   }

@@ -148,24 +148,27 @@ object Migration {
     // and identical partition boundaries across the two evaluations would
     // rest on RangePartitioner's sampling being deterministic — an
     // implementation detail AQE replanning can break (round-3 ADVICE,
-    // medium). One materialization makes the invariant structural. The
-    // frame is registered with [[graft.Memo]] so `Dedup.clearCaches()`
-    // (already called by the Verify/Bench mains) releases the blocks
-    // deterministically instead of waiting on GC + ContextCleaner
-    // (round-4 ADVICE).
+    // medium). One materialization makes the invariant structural.
+    // The ≤ nParts-row offsets are persisted beside it: every action over
+    // the result (the seven writes of [[migrateAll]]) then broadcasts one
+    // offsets table instead of re-running its groupBy and single-partition
+    // window. Both stay lazy (no job here) and are
+    // registered with [[graft.Memo]], so `Memo.release()` (called by the
+    // Verify/Bench mains) frees them together and deterministically instead
+    // of waiting on GC + ContextCleaner (round-4 ADVICE).
     val parted = graft.Memo.persist(
       df.repartitionByRange(order)
         .withColumn("__pid", spark_partition_id()))
     val local = parted.withColumn("__idx",
       row_number().over(Window.partitionBy("__pid").orderBy(order))
         .cast(LongType))
-    val offsets = parted.groupBy("__pid")
+    val offsets = graft.Memo.persist(parted.groupBy("__pid")
       .agg(count(lit(1)).as("__n"))
       .select(col("__pid"),
         coalesce(sum(col("__n")).over(
           Window.orderBy("__pid")
             .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-          .as("__off"))
+          .as("__off")))
     local.join(broadcast(offsets), "__pid")
       .withColumn(idName, col("__off") + col("__idx"))
       .drop("__pid", "__idx", "__off")
@@ -275,6 +278,15 @@ object Migration {
     * key, and a [[graft.io.Sources.jdbcAppend]] over this Seq in order
     * satisfies every FK at insert time. uuids go through [[mintUuid]]:
     * deterministic by default, real `uuid()` under [[ProdUuidFlag]].
+    *
+    * The keyed base itself is deliberately NOT persisted, although all
+    * seven tables read it: a cached plan keeps its partition count (Spark
+    * does not let AQE change a cached plan's output partitioning), so each
+    * write would run as many writer tasks as the base has partitions
+    * instead of the few AQE coalesces them to. Against Derby that meant 4
+    * concurrent writers per table and a ~15% larger database. Re-running
+    * the local ranks per table is cheap next to that; the roster scan and
+    * the offsets are shared through [[surrogateKeysScaled]]'s persists.
     */
   def migrateAll(s: SparkSession, dir: String): Seq[(String, DataFrame)] = {
     val nation = Sources.table(s, dir, "nation")

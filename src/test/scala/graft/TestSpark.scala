@@ -34,6 +34,21 @@ trait TestSpark extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(n > 0, s"$label plan has no windows at all — check the query:\n$plan")
   }
+
+  /** Spark jobs `block` submits, counted under a fresh job group: the
+    * status tracker lists a group's jobs directly, so no listener of our
+    * own is needed. Jobs submitted from other threads are not counted.
+    * The tracker is fed by the listener bus, so a job whose start event is
+    * still queued can be missed, never one counted twice: the count is
+    * fit for an upper bound.
+    */
+  def jobsOf(block: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "counted by TestSpark.jobsOf")
+    try block finally sc.clearJobGroup()
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
 }
 
 object TestSpark {

@@ -288,4 +288,74 @@ class ColumnMappingSpec extends TestSpark {
     assert(TableFormat.tableProps(root)
       .get(graft.io.TableFormat.ColMapProp).forall(_.isEmpty))
   }
+
+  /** The merged NDV estimate [[TableFormat.colStats]] reports for `c`
+    * (None = NULL, some entry lacks a sketch).
+    */
+  private def ndvOf(root: String, c: String): Option[Long] =
+    Option(TableFormat.colStats(spark, root).filter(col("column") === c)
+      .collect()(0).getAs[java.lang.Long]("ndv")).map(_.longValue)
+
+  test("an overwrite after RENAME never sketches a column through the " +
+      "old mapping") {
+    import spark.implicits._
+    val root = freshRoot()
+    TableFormat.append((0L until 20L).map(i => (i, i)).toDF("k", "a"), root)
+    TableFormat.analyze(spark, root, Seq("a"))
+    TableFormat.renameColumn(spark, root, "a", "b")
+    // the overwrite's `a` is a new column of its own; the retired
+    // mapping b → a must not read it as `b`
+    val v = TableFormat.replace(spark, root,
+      (0L until 20L).map(i => (i, 7L)).toDF("k", "a"))
+    val m = TableFormat.readManifestFull(root, v)
+    assert(m.entries.flatMap(_.ndv.keys).toSet.subsetOf(Set("k", "a")),
+      "sketch keyed on a column the schema lacks: " +
+        m.entries.map(_.ndv.keySet))
+    TableFormat.addColumns(spark, root,
+      Seq(org.apache.spark.sql.types.StructField("b",
+        org.apache.spark.sql.types.LongType)))
+    val ndvB = ndvOf(root, "b")
+    assert(!ndvB.exists(_ > 0),
+      s"every b is NULL, yet colStats estimates ndv(b) = $ndvB")
+  }
+
+  test("an overwrite carrying both the old and the new spelling keeps " +
+      "the analyzed coverage") {
+    import spark.implicits._
+    val root = freshRoot()
+    TableFormat.append((0L until 20L).map(i => (i, i % 4)).toDF("k", "a"),
+      root)
+    TableFormat.analyze(spark, root, Seq("a"))
+    TableFormat.renameColumn(spark, root, "a", "b")
+    TableFormat.analyze(spark, root, Seq("b"))
+    TableFormat.replace(spark, root,
+      (0L until 20L).map(i => (i, 7L, i)).toDF("k", "a", "b"))
+    assert(TableFormat.readSnapshot(spark, root).columns.toSeq ===
+      Seq("k", "a", "b"))
+    // once analyzed stays analyzed: b is re-sketched from the new b
+    val ndvB = ndvOf(root, "b")
+    assert(ndvB.exists(n => n >= 18 && n <= 22), s"ndv(b) = $ndvB")
+  }
+
+  test("an append racing a RENAME of one of its columns refuses instead " +
+      "of aliasing two columns") {
+    import spark.implicits._
+    val root = freshRoot()
+    TableFormat.append(Seq((1L, "old")).toDF("k", "c"), root)
+    // the rename commits while the append is writing its data dir — after
+    // its pre-write guard read the head, before its manifest install
+    val renameMidWrite = udf { (x: String) =>
+      if (TableFormat.latestVersion(root) == 0)
+        TableFormat.renameColumn(null, root, "c", "r")
+      x
+    }
+    val racing = Seq((2L, "new")).toDF("k", "c")
+      .withColumn("c", renameMidWrite(col("c")))
+    val e = intercept[IllegalArgumentException] {
+      TableFormat.append(racing, root) }
+    assert(e.getMessage.contains("cannot add column 'c'"))
+    val head = TableFormat.readSnapshot(spark, root)
+    assert(head.columns.toSeq === Seq("k", "r"))
+    assert(head.as[(Long, String)].collect().toSeq === Seq((1L, "old")))
+  }
 }

@@ -90,7 +90,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           String.valueOf(tvfArg(children(1), "graft_snapshot version")).toInt
         else -1
         graft.io.TableFormat
-          .readSnapshotSql(org.apache.spark.sql.SparkSession.active, root, v)
+          .readSnapshot(org.apache.spark.sql.SparkSession.active, root, v)
           .queryExecution.analyzed
       }))
     ext.injectTableFunction((

@@ -12,13 +12,14 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * `createRelation`, because a v1 provider must return ONE relation
   * and the dv mask is a multi-relation plan. Now the provider returns
   * the relation MASK-PENDING ([[ManifestFileIndex.maskPending]]) and
-  * this rule substitutes the same composed plan `readSnapshotSql`
-  * builds — clean dirs scan plain, dv dirs scan under the broadcast
-  * anti-join mask — re-aliased onto the original relation's exprIds so
-  * every parent reference survives. Manifest pruning is intact: the
-  * substitute's legs scan through fresh (unpoisoned) manifest indexes
-  * over the SAME pinned entry set, so a ranged WHERE still prunes dirs
-  * and pushes into parquet on both legs.
+  * this rule substitutes the same composed plan `readSnapshot` builds
+  * ([[TableFormat.entriesFrame]]) — clean dirs scan plain, dv dirs
+  * scan under the broadcast anti-join mask — re-aliased onto the
+  * original relation's exprIds so every parent reference survives.
+  * Manifest pruning is intact: the substitute's legs scan through
+  * fresh (unpoisoned) manifest indexes over the SAME pinned entry set,
+  * so a ranged WHERE still prunes dirs and pushes into parquet on both
+  * legs.
   *
   * Row-level command TARGETS are deliberately skipped: an
   * INSERT/DELETE/UPDATE/MERGE target is a WRITE coordinate —
@@ -77,7 +78,7 @@ final class GraftDvMaskRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private def substitute(l: LogicalRelation): LogicalPlan = {
     val fs = l.relation.asInstanceOf[HadoopFsRelation]
     val idx = fs.location.asInstanceOf[ManifestFileIndex]
-    val masked0 = TableFormat.maskedFrame(spark, idx.root, idx.entries,
+    val masked0 = TableFormat.entriesFrame(spark, idx.root, idx.entries,
       fs.dataSchema).queryExecution.analyzed
     // carry the catalog identity onto every leg: Catalog.refreshTable
     // walks the resolved plan and calls catalogTable.get on each

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{DateType, StringType, TimestampType}
   * session-catalog table fails resolution — so this rule intercepts
   * [[RelationTimeTravel]] while the relation is still unresolved,
   * recognizes the provider from the catalog metadata, and substitutes
-  * the requested snapshot's plan ([[TableFormat.readSnapshotSql]] —
+  * the requested snapshot's plan ([[TableFormat.readSnapshot]] —
   * manifest-pruned, dv-masked, the full-fidelity doorway).
   * `VERSION AS OF` is the manifest version; `TIMESTAMP AS OF` resolves
   * to the LAST version whose manifest was published at or before the
@@ -74,7 +74,7 @@ final class GraftTimeTravelRule(spark: SparkSession)
               TableFormat.versionAt(root, instantMillis(ts.getOrElse(
                 throw new IllegalArgumentException(
                   "time travel needs VERSION AS OF or TIMESTAMP AS OF")))))
-            TableFormat.readSnapshotSql(spark, root, v)
+            TableFormat.readSnapshot(spark, root, v)
               .queryExecution.analyzed
           case None => tt
         }

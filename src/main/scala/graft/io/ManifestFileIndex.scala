@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal, Or}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal, Or}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.BaseRelation
@@ -17,11 +17,12 @@ import org.apache.spark.sql.types._
   * `FileSourceStrategy` hands every scan's data filters to
   * [[listFiles]]; conjuncts of the shape `col (=|<|<=|>|>=|IN) literal`
   * over long/string/date columns translate to inclusive ranges and
-  * prune manifest entries through the SAME bounds-intersection the
-  * Scala API's `readSnapshotPruned` uses — one pruning semantics, two
-  * doorways. Everything else about the scan stays Spark's own parquet
-  * path: pushed row-group filters, vectorized reads, whole-stage
-  * codegen.
+  * prune manifest entries against their typed bounds. Every snapshot
+  * read builds on this index ([[TableFormat.entriesFrame]]), so the
+  * Scala API's `readSnapshot(...).filter(...)` and a SQL WHERE prune
+  * through one semantics. Everything else about the scan stays
+  * Spark's own parquet path: pushed row-group filters, vectorized
+  * reads, whole-stage codegen.
   *
   * Scale: pruning runs on the driver against the in-memory manifest
   * (KB–MB for a 100 TB table); file statuses are listed once per index
@@ -49,7 +50,7 @@ private[graft] final class ManifestFileIndex(
       s"snapshot at $root carries deletion vectors or renamed columns " +
         "(column mapping); this relation must be read through " +
         "graft.GraftExtensions (the injected mask rule), " +
-        "TableFormat.readSnapshotSql/registerSql, or after compact() " +
+        "TableFormat.readSnapshot/registerSql, or after compact() " +
         "folds the vectors")
 
   /** LAZY per-dir listing memo: a pruned query lists ONLY its surviving
@@ -113,7 +114,8 @@ private[graft] object ManifestFileIndex {
     * filter? A sound Boolean EVALUATOR over the predicate tree — And
     * intersects, Or unions (so `k <= 5 OR k >= 900` prunes the middle
     * dirs, which a conjunct-flattening translation cannot express), IN
-    * lists probe exactly per value, leaf comparisons of the shape
+    * lists probe exactly per value (the optimizer's InSet form of a
+    * long list too), leaf comparisons of the shape
     * `col (=|<|<=|>|>=) literal` check the recorded range, and ANY
     * unknown shape — casts, functions, Not, null predicates — answers
     * "maybe" (true). Unstatted columns answer "maybe" too. Pruning is
@@ -126,10 +128,9 @@ private[graft] object ManifestFileIndex {
     case Or(l, r) => keeps(bounds, l) || keeps(bounds, r)
     case In(a: Attribute, vs) if vs.nonEmpty && vs.forall {
         case Literal(_, _) => true; case _ => false } =>
-      val xs = vs.collect { case Literal(v, t) => value(v, t) }
-      if (xs.exists(_.isEmpty)) true // a value we can't compare: maybe
-      else bounds.get(a.name).forall(b =>
-        xs.flatten.exists(x => survives(b, Some(x), Some(x))))
+      keepsAnyOf(bounds, a, vs.collect { case Literal(v, t) => value(v, t) })
+    case InSet(a: Attribute, hs) if hs.nonEmpty =>
+      keepsAnyOf(bounds, a, hs.toSeq.map(value(_, a.dataType)))
     case cmp =>
       leafRange(cmp) match {
         case Some((c, lo, hi)) =>
@@ -137,6 +138,15 @@ private[graft] object ManifestFileIndex {
         case None => true // unknown shape: maybe (sound)
       }
   }
+
+  /** An IN list over `a`: can the entry hold any of the values? A value
+    * outside the comparison domain answers "maybe".
+    */
+  private def keepsAnyOf(bounds: Map[String, TableFormat.ColBounds],
+      a: Attribute, xs: Seq[Option[Any]]): Boolean =
+    if (xs.exists(_.isEmpty)) true
+    else bounds.get(a.name).forall(b =>
+      xs.flatten.exists(x => survives(b, Some(x), Some(x))))
 
   /** The inclusive range a single comparison constrains `col` to, open
     * ends as None; None for shapes the evaluator cannot reason about

@@ -98,8 +98,9 @@ final class TableFormatSourceProvider
     * or WHERE prunes data dirs against the manifest zone maps with no
     * Scala-API involvement (round-15 VERDICT #1). Options:
     * `versionAsOf=<n>` time-travels. A snapshot carrying live deletion
-    * vectors refuses (a one-relation contract cannot express the mask)
-    * — [[TableFormat.readSnapshotSql]] is the full-fidelity doorway.
+    * vectors or renamed columns lands mask-pending (a one-relation
+    * contract cannot express the mask): the injected [[GraftDvMaskRule]]
+    * substitutes the composed plan [[TableFormat.readSnapshot]] builds.
     */
   override def createRelation(sqlContext: SQLContext,
       parameters: Map[String, String]): BaseRelation = {

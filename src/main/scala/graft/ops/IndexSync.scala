@@ -297,9 +297,7 @@ object IndexSync {
     import s.implicits._
     require(terms.nonEmpty, "bm25TopK needs at least one query term")
     val buckets = terms.map(TextOps.tokenBucket).distinct
-    val tp = TableFormat.readSnapshot(s, postingsRoot(idxRoot),
-        range = Some((buckets.min.toLong, buckets.max.toLong)),
-        rangeCol = Some("bucket"))
+    val tp = TableFormat.readSnapshot(s, postingsRoot(idxRoot))
       .filter(col("bucket").isin(buckets.map(x => x: Any): _*) &&
         col("tok").isin(terms.map(x => x: Any): _*))
       .select(col("doc_id"), col("tok").as("w"))

@@ -734,8 +734,8 @@ object Relational {
     * to its group before slicing; here the partial aggregate keeps a
     * k-sized heap per group map-side, so the exchange carries at most
     * k rows per group. Micro-benched 1.9× faster than the window sort at
-    * 20M rows × 1000 groups (`Test/runMain graft.TopKMicroBench`); same
-    * oracle semantics as `q_topk_group` (score desc, id asc ties).
+    * 20M rows × 1000 groups; same oracle semantics as `q_topk_group`
+    * (score desc, id asc ties).
     */
   private lazy val topk3Udaf = udaf(new Similarity.TopKAgg(3))
 

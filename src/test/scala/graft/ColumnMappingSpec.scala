@@ -358,4 +358,24 @@ class ColumnMappingSpec extends TestSpark {
     assert(head.columns.toSeq === Seq("k", "r"))
     assert(head.as[(Long, String)].collect().toSeq === Seq((1L, "old")))
   }
+
+  test("restore past an overwrite brings back the target's column mapping") {
+    import spark.implicits._
+    val root = freshRoot()
+    TableFormat.append(Seq((1L, "a")).toDF("k", "s"), root)
+    TableFormat.setProps(root, Map("owner" -> "graft"))
+    val renamed = TableFormat.renameColumn(spark, root, "s", "t")
+    // the overwrite resets the mapping; the user property carries
+    TableFormat.replace(spark, root, Seq((2L, "b")).toDF("k", "t"))
+    val restored = TableFormat.restore(root, renamed)
+    def rows(v: Int): Seq[(Long, String)] =
+      TableFormat.readSnapshot(spark, root, v).as[(Long, String)]
+        .collect().toSeq
+    assert(rows(restored) === rows(renamed))
+    assert(rows(restored) === Seq((1L, "a")),
+      "the renamed column must read through the target's mapping")
+    val props = TableFormat.readManifestFull(root, restored).props
+    assert(props.get("owner").contains("graft"))
+    assert(props.get(TableFormat.ColMapProp).contains("t=s"))
+  }
 }

@@ -22,11 +22,6 @@ class NdvStatsSpec extends TestSpark {
     finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
-  private def scans(df: org.apache.spark.sql.DataFrame): Int =
-    df.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.size
-
   test("sketch estimate lands within tolerance; register merge is exact") {
     import spark.implicits._
     val longs = (1L to 5000L).map(k => k * 2654435761L).toDF("v")

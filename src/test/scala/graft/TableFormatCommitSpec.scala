@@ -97,7 +97,8 @@ class TableFormatCommitSpec extends TestSpark {
       "v13 analyze 1 2 6" ->
         s"k:bigint,t:string,a:bigint | ${mapped}x;owner=graft",
       "v14 overwrite 1 2 1" -> "k:bigint,t:string,a:bigint | owner=graft",
-      "v15 restore 1 2 6" -> "k:bigint,t:string,a:bigint | owner=graft"))
+      "v15 restore 1 2 6" ->
+        s"k:bigint,t:string,a:bigint | ${mapped}x;owner=graft"))
   }
 
   test("racing metadata-only commits serialize: versions contiguous, " +
@@ -144,21 +145,27 @@ class TableFormatCommitSpec extends TestSpark {
       "rename-column" -> perThread, "analyze" -> perThread))
   }
 
-  test("guard: one manifest install — no CAS catch, retry bound or " +
-      "writeManifest call outside commitNext") {
+  /** The Scala sources under `src/main` (the suite runs from the
+    * repository root).
+    */
+  private def mainSources(): Seq[Path] = {
     val main = Paths.get("src/main")
     assert(Files.isDirectory(main), s"run from the repository root: $main")
-    val files: Seq[Path] = {
-      val s = Files.walk(main)
-      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally s.close()
-    }
+    val s = Files.walk(main)
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally s.close()
+  }
+
+  private def comment(l: String): Boolean = {
+    val t = l.trim
+    t.startsWith("*") || t.startsWith("/**") || t.startsWith("//")
+  }
+
+  test("guard: one manifest install — no CAS catch, retry bound or " +
+      "writeManifest call outside commitNext") {
+    val files = mainSources()
     val casCatch =
       """case\s+\w+\s*:\s*(java\.nio\.file\.)?FileAlreadyExistsException""".r
-    def comment(l: String): Boolean = {
-      val t = l.trim
-      t.startsWith("*") || t.startsWith("/**") || t.startsWith("//")
-    }
     // lines of `def name(` through its closing brace at member indent
     def span(lines: IndexedSeq[String], name: String): Set[Int] = {
       val start = lines.indexWhere(_.contains(s"def $name("))
@@ -188,5 +195,36 @@ class TableFormatCommitSpec extends TestSpark {
       }
     }
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("guard: one snapshot reader — one ManifestFileIndex.frame caller, " +
+      "no footer-merge read, no data read beside the dv sidecars") {
+    val files = mainSources()
+    val merges = files.flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (l, i) if l.contains("mergeSchema") => s"$f:${i + 1}: $l"
+      }
+    }
+    assert(merges.isEmpty, merges.mkString("\n", "\n", ""))
+    val tf = files.find(_.getFileName.toString == "TableFormat.scala").get
+    val lines = Files.readAllLines(tf).asScala.toIndexedSeq
+    // the member def each line belongs to (nested defs sit deeper)
+    val member = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r
+    val owner = lines.scanLeft("") { (d, l) =>
+      member.findFirstMatchIn(l).map(_.group(1)).getOrElse(d)
+    }.tail
+    def code(p: String => Boolean): Seq[Int] =
+      lines.indices.filter(i => !comment(lines(i)) && p(lines(i)))
+    val builders =
+      code(_.contains("ManifestFileIndex.frame(")).map(owner).distinct
+    assert(builders.size === 1,
+      s"ManifestFileIndex.frame is called from ${builders.mkString(", ")}")
+    // a deletion-vector sidecar is not a snapshot: its reads stay plain
+    val sidecarReaders = Set("dvMaskLegs", "dvMask", "morMaskOrFold",
+      "dropColumn")
+    val reads = code(l => """\.read\b""".r.findFirstIn(l).isDefined)
+      .filterNot(i => sidecarReaders(owner(i)))
+      .map(i => s"$tf:${i + 1} (${owner(i)}): ${lines(i).trim}")
+    assert(reads.isEmpty, reads.mkString("\n", "\n", ""))
   }
 }

@@ -109,21 +109,26 @@ class TableFormatSpec extends TestSpark {
       root, statsCol = Some("k"))
     TableFormat.append((201L to 300L).map(k => (k, s"s$k")).toDF("k", "s"),
       root, statsCol = Some("k"))
-    val full = TableFormat.readSnapshot(spark, root)
-    val pruned = TableFormat.readSnapshot(spark, root,
-      range = Some((150L, 160L)))
-    // the I/O proof: the pruned read plans strictly fewer input files,
-    // and they are a subset of the full snapshot's
-    assert(pruned.inputFiles.length < full.inputFiles.length)
-    assert(pruned.inputFiles.toSet.subsetOf(full.inputFiles.toSet))
-    // skipping never changes results once the row filter applies
-    assert(pruned.filter(col("k").between(150, 160)).count() === 11)
+    val (_, full) = runAndFiles(TableFormat.readSnapshot(spark, root))
+    val (rows, pruned) = runAndFiles(TableFormat.readSnapshot(spark, root)
+      .filter(col("k").between(150, 160)))
+    // the I/O proof: the filtered scan reads exactly the files of the
+    // one dir whose zone map intersects — strictly fewer than the full
+    // snapshot's
+    val kept = TableFormat.prunedDirs(root, 2,
+      Seq(("k", Long.box(150L), Long.box(160L))))
+    assert(kept.size === 1)
+    assert(pruned === filesUnder(kept) && pruned < full)
+    // skipping never changes results: the filter decides every row
+    assert(rows.length === 11)
     // a dir WITHOUT stats is conservatively kept
     TableFormat.append(Seq((999L, "x")).toDF("k", "s"), root)
-    val mixed = TableFormat.readSnapshot(spark, root,
-      range = Some((150L, 160L)))
-    assert(mixed.filter(col("k") === 999L).count() === 1,
-      "stat-less dirs must survive pruning")
+    val (mixed, mixedFiles) = runAndFiles(TableFormat.readSnapshot(spark, root)
+      .filter(col("k") === 999L))
+    assert(mixed.length === 1, "stat-less dirs must survive pruning")
+    val statless = TableFormat.prunedDirs(root, 3,
+      Seq(("k", Long.box(999L), Long.box(999L))))
+    assert(statless.size === 1 && mixedFiles === filesUnder(statless))
   }
 
   test("compaction rewrites the head snapshot, older versions untouched") {
@@ -146,14 +151,18 @@ class TableFormatSpec extends TestSpark {
     assert(TableFormat.readSnapshot(spark, root, 1).count() === 4)
     // and the compacted entry carries usable zone-map stats: an
     // intersecting range keeps the (single) dir, a disjoint one prunes
-    // everything — which now reads as an EMPTY frame with the RECORDED
+    // everything — which reads as an EMPTY frame with the RECORDED
     // schema (r15 schema-in-manifest; pre-r15 this had to throw because
     // an empty snapshot's schema was unknowable from footers)
-    assert(TableFormat.readSnapshot(spark, root,
-      range = Some((0L, 3L))).count() === 8)
-    val empty = TableFormat.readSnapshot(spark, root,
-      range = Some((100L, 200L)))
-    assert(empty.columns.toSeq === Seq("k", "s") && empty.count() === 0)
+    val (low, lowFiles) = runAndFiles(TableFormat.readSnapshot(spark, root)
+      .filter(col("k").between(0, 3)))
+    assert(low.length === 4)
+    assert(lowFiles === filesUnder(TableFormat.snapshotDirs(root, v)))
+    val empty = TableFormat.readSnapshot(spark, root)
+      .filter(col("k").between(100, 200))
+    val (none, noFiles) = runAndFiles(empty)
+    assert(empty.columns.toSeq === Seq("k", "s") && none.isEmpty)
+    assert(noFiles === 0 && noFiles < lowFiles)
   }
 
   test("compactSmall coalesces only the small tail; big dirs carry verbatim") {
@@ -681,8 +690,12 @@ class TableFormatSpec extends TestSpark {
         root, statsCol = Some("k"))
     }
     // pre-compaction: a narrow range read cannot skip anything
-    val before = TableFormat.readSnapshot(spark, root,
-      range = Some((0L, 4L))).inputFiles.length
+    def narrow(): (Int, Long) = {
+      val (rows, files) = runAndFiles(TableFormat.readSnapshot(spark, root)
+        .filter(col("k").between(0, 4)))
+      (rows.length, files)
+    }
+    val (rowsBefore, before) = narrow()
     val v = TableFormat.compactRanged(spark, root, "k", nBuckets = 3)
     assert(v === 3)
     // content identical, total order preserved by key
@@ -690,9 +703,9 @@ class TableFormatSpec extends TestSpark {
       .select("k").collect().map(_.getLong(0)).sorted.toSeq ===
       (0L until 30L).toSeq)
     // post-compaction: disjoint tight ranges — the same narrow read now
-    // touches a strict subset of the files
-    val after = TableFormat.readSnapshot(spark, root,
-      range = Some((0L, 4L))).inputFiles.length
+    // touches strictly fewer files, same rows
+    val (rowsAfter, after) = narrow()
+    assert(rowsBefore === 5 && rowsAfter === 5)
     assert(after < before,
       s"ranged compaction did not improve skipping: $after !< $before")
     // time travel to the delta layout is intact
@@ -701,34 +714,16 @@ class TableFormatSpec extends TestSpark {
 
   // ------------------------------------------------- round-15 semantics
 
-  /** Spark jobs started by `body` — listener-counted, with a drain pause
-    * because the listener bus is asynchronous. Used to prove the
-    * metadata paths (snapshot planning, footer-stats commits) issue NO
-    * distributed work.
-    */
-  private def countJobs(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; Thread.sleep(1500); n.get() }
-    finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("commit stats come from footers: zero extra Spark jobs vs no stats") {
     import spark.implicits._
     val root = freshRoot()
     val rows = (1L to 50L).map(k => (k, s"s$k"))
-    val plain = countJobs {
-      TableFormat.append(rows.toDF("k", "s"), root); ()
+    val plain = jobsOf {
+      TableFormat.append(rows.toDF("k", "s"), root)
     }
-    val statted = countJobs {
+    val statted = jobsOf {
       TableFormat.append(rows.toDF("k", "s"), root,
-        statsCol = Some("k"), statsCols = Seq("s")); ()
+        statsCol = Some("k"), statsCols = Seq("s"))
     }
     // pre-r15 the statted append ran a distributed min/max aggregate
     // RE-READING the dir it just wrote; footer stats must cost zero jobs
@@ -749,7 +744,7 @@ class TableFormatSpec extends TestSpark {
     // planning an evolved snapshot must NOT run the pre-r15 distributed
     // footer-schema merge — the manifest carries the committed schema
     var df: org.apache.spark.sql.DataFrame = null
-    val jobs = countJobs { df = TableFormat.readSnapshot(spark, root) }
+    val jobs = jobsOf { df = TableFormat.readSnapshot(spark, root) }
     assert(jobs === 0,
       s"snapshot planning ran $jobs Spark jobs — schema must come from " +
         "the manifest, not a footer-inference job")
@@ -1207,10 +1202,13 @@ class TableFormatSpec extends TestSpark {
     // keeps ~a quarter. Strictly fewer is the contract.
     assert(nZ < nRanged,
       s"z-order pruned $nZ dirs, range layout $nRanged — no win")
-    // and pruning never loses rows: the box content is exact
-    val boxed = TableFormat.readSnapshotPruned(spark, zed, box)
-      .filter($"x".between(0, 31) && $"y".between(0, 31))
-    assert(boxed.count() === 32L * 32L)
+    // a box filter over the z-ordered snapshot scans exactly the kept
+    // dirs' files, and pruning never loses rows: the box content is exact
+    val (boxed, boxFiles) = runAndFiles(TableFormat.readSnapshot(spark, zed)
+      .filter($"x".between(0, 31) && $"y".between(0, 31)))
+    assert(boxed.length === 32 * 32)
+    assert(boxFiles === filesUnder(TableFormat.prunedDirs(zed, 1, box)))
+    assert(boxFiles < filesUnder(TableFormat.snapshotDirs(zed, 1)))
   }
 
   test("q_table_dv masks every 13th key through the sidecar read") {

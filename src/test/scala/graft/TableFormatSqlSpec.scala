@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * ([[graft.io.ManifestFileIndex]]): Catalyst-driven manifest pruning —
   * a plain `.filter` or SQL WHERE must skip data dirs through the
   * manifest zone maps with no hand-passed predicate list (pre-r16 only
-  * `readSnapshotPruned` pruned, and a `.filter` after `readSnapshot`
-  * scanned every live dir). The DuckDB oracle owns `q_table_sql` /
+  * such a list pruned, and a `.filter` after `readSnapshot` scanned
+  * every live dir). The DuckDB oracle owns `q_table_sql` /
   * `q_table_sql_dv` VALUES; this suite owns the I/O proof (the scan's
   * numFiles metric against `prunedDirs`) and the provider contracts.
   */
@@ -25,32 +25,6 @@ class TableFormatSqlSpec extends TestSpark {
 
   private def freshRoot(): String =
     Files.createTempDirectory("graft_tf_sql").toString
-
-  /** Execute `df` ONCE and return (rows, files read by its
-    * ManifestFileIndex-backed parquet scans). One action only: Spark
-    * resets plan metrics per action but caches the scan's selected
-    * partitions, so a second action on the same Dataset reads zeros —
-    * rows and the I/O account must come from the same execution.
-    */
-  private def runAndFiles(df: DataFrame): (Array[Row], Long) = {
-    val rows = df.collect()
-    val files = df.queryExecution.executedPlan
-      .collect { case f: FileSourceScanExec => f }
-      .filter(_.relation.location.isInstanceOf[graft.io.ManifestFileIndex])
-      .map(_.metrics("numFiles").value).sum
-    (rows, files)
-  }
-
-  /** On-disk parquet data-file count under the given data dirs. */
-  private def filesUnder(dirs: Seq[String]): Long =
-    dirs.map { d =>
-      val s = Files.list(Paths.get(d))
-      try s.iterator().asScala.count { p =>
-        val n = p.getFileName.toString
-        n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
-      }
-      finally s.close()
-    }.sum.toLong
 
   private def withStaticPlans[T](body: => T): T = {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -888,6 +862,13 @@ class TableFormatSqlSpec extends TestSpark {
       assert(rows2(0).getLong(0) === 2)
       assert(files2 === filesUnder(keptDirs),
         "IN-list pruning kept the envelope, not the per-value union")
+      // past 10 values the optimizer rewrites IN to InSet: same probe
+      val (rows3, files3) = runAndFiles(spark.sql(
+        "SELECT count(*) FROM graft_sql_or WHERE k IN " +
+          (10 to 20).mkString("(", ", ", ", 290)")))
+      assert(rows3(0).getLong(0) === 12)
+      assert(files3 === filesUnder(keptDirs),
+        "an InSet list did not prune per value")
     }
   }
 
@@ -1010,8 +991,6 @@ class TableFormatSqlSpec extends TestSpark {
     withStaticPlans {
       val root = landRanges()
       TableFormat.registerSql(spark, root, "graft_sql_cnt2")
-      def scans(df: DataFrame): Int = df.queryExecution.executedPlan
-        .collect { case f: FileSourceScanExec => f }.size
       // a WHERE may change cardinality — even one the manifest could
       // prove empty — so any filter shape scans
       val filtered = spark.sql(
@@ -1060,8 +1039,6 @@ class TableFormatSqlSpec extends TestSpark {
         Seq.fill(20)((Option.empty[Long], "x")).toDF("k", "s"),
         root, statsCol = Some("k"))
       TableFormat.registerSql(spark, root, "graft_sql_nulls")
-      def scans(df: DataFrame): Int = df.queryExecution.executedPlan
-        .collect { case f: FileSourceScanExec => f }.size
       val q = spark.sql("SELECT count(k) AS n FROM graft_sql_nulls")
       assert(scans(q) === 0,
         s"count(col) with complete null accounts must fold:\n" +
@@ -1124,8 +1101,6 @@ class TableFormatSqlSpec extends TestSpark {
     withStaticPlans {
       val root = landRanges()
       TableFormat.registerSql(spark, root, "graft_sql_mm")
-      def scans(df: DataFrame): Int = df.queryExecution.executedPlan
-        .collect { case f: FileSourceScanExec => f }.size
       // the stats-only query a dashboard fires at a 100 TB table: all
       // three answers come from the manifest in one LocalTableScan
       val q = spark.sql(

@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,20 +42,59 @@ trait TestSpark extends AnyFunSuite with BeforeAndAfterAll {
   /** Spark jobs `block` submits, counted under a fresh job group: the
     * status tracker lists a group's jobs directly, so no listener of our
     * own is needed. Jobs submitted from other threads are not counted.
-    * The tracker is fed by the listener bus, so a job whose start event is
-    * still queued can be missed, never one counted twice: the count is
-    * fit for an upper bound.
+    * The tracker is fed by the listener bus, which is drained before the
+    * group is read, so every job start `block` caused has landed: the
+    * count is exact.
     */
   def jobsOf(block: => Any): Int = {
     val sc = spark.sparkContext
     val group = s"graft-jobs-${java.util.UUID.randomUUID()}"
     sc.setJobGroup(group, "counted by TestSpark.jobsOf")
     try block finally sc.clearJobGroup()
+    org.apache.spark.ListenerBusDrain(sc)
     sc.statusTracker.getJobIdsForGroup(group).length
   }
+
+  /** Parquet scan nodes in `df`'s physical plan, adaptive query stages
+    * included — 0 means the answer came from metadata alone.
+    */
+  def scans(df: DataFrame): Int =
+    TestSpark.Plans.collect(df.queryExecution.executedPlan) {
+      case f: FileSourceScanExec => f
+    }.size
+
+  /** Execute `df` ONCE and return (rows, files read by its
+    * ManifestFileIndex-backed parquet scans — the scans' `numFiles`
+    * metric, the I/O proof of manifest pruning). One action only: Spark
+    * resets plan metrics per action but caches the scan's selected
+    * partitions, so a second action on the same Dataset reads zeros —
+    * rows and the I/O account must come from the same execution.
+    */
+  def runAndFiles(df: DataFrame): (Array[Row], Long) = {
+    val rows = df.collect()
+    val files = TestSpark.Plans.collect(df.queryExecution.executedPlan) {
+      case f: FileSourceScanExec
+          if f.relation.location.isInstanceOf[graft.io.ManifestFileIndex] => f
+    }.map(_.metrics("numFiles").value).sum
+    (rows, files)
+  }
+
+  /** On-disk parquet data-file count under the given data dirs. */
+  def filesUnder(dirs: Seq[String]): Long =
+    dirs.map { d =>
+      val s = java.nio.file.Files.list(java.nio.file.Paths.get(d))
+      try s.iterator().asScala.count { p =>
+        val n = p.getFileName.toString
+        n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
+      }
+      finally s.close()
+    }.sum.toLong
 }
 
 object TestSpark {
+  /** Plan walks that descend into adaptive query stages. */
+  private object Plans extends AdaptiveSparkPlanHelper
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -77,24 +77,70 @@ object Migration {
       .select("c_custkey", "c_name", "c_acctbal")
       .orderBy("c_custkey")
 
+  // ---------------------------------------------------------------------
+  // Column derivations, each named once: the single-capability queries
+  // below and the [[migrateAll]] bundle read the same expressions.
+
+  /** The legacy roster key every derivation is computed from. */
+  private def key: Column = col("c_custkey")
+
+  // P7 name cleaning / splitting (reference README.md:9)
+  private def givenName: Column =
+    upper(trim(split(col("c_name"), "#").getItem(0))).as("given_name")
+
+  private def familyName: Column =
+    split(col("c_name"), "#").getItem(1).as("family_name")
+
+  // P8 gender normalization: legacy coding -> OpenMRS 'M'/'F'/null
+  private def gender: Column =
+    when(key % 3 === 0, "M").when(key % 3 === 1, "F")
+      .otherwise(lit(null).cast(StringType)).as("gender")
+
+  // P6 date normalization: derived deterministic birthdate
+  private def birthdate: Column =
+    date_add(to_date(lit("1950-01-01")),
+      ((key * 37) % 18250).cast(IntegerType)).as("birthdate")
+
+  // P3 identifier candidates in priority order (reference README.md:13-15)
+  private def nationalId: Column =
+    when(key % 3 === 0, concat(lit("NAT-"), key.cast(StringType)))
+
+  private def birthCertificate: Column =
+    when(key % 2 === 0, concat(lit("BC-"), key.cast(StringType)))
+
+  /** Which candidate the fallback took, over `national_id` and
+    * `birth_certificate` columns.
+    */
+  private def identifierType: Column =
+    when(col("national_id").isNotNull, "national_id")
+      .when(col("birth_certificate").isNotNull, "birth_certificate")
+      .otherwise("generated")
+
+  /** U3 unpivot: the wide legacy attribute columns as one exploded
+    * `(attr_type, value)` struct `a` per row — 1 row in, 3 rows out via a
+    * generator, no shuffle.
+    */
+  private def attributes: Column =
+    explode(array(
+      struct(lit("acctbal").as("attr_type"),
+        col("c_acctbal").cast(DecimalType(12, 2)).cast(StringType)
+          .as("value")),
+      struct(lit("mktsegment").as("attr_type"),
+        col("c_mktsegment").as("value")),
+      struct(lit("nation").as("attr_type"),
+        col("c_nationkey").cast(StringType).as("value")))).as("a")
+
   // P3 identifier priority fallback (reference README.md:13-15)
   private def qIdentFallback(s: SparkSession, dir: String): DataFrame =
     customer(s, dir)
       .select(
         col("c_custkey").as("client_id"),
-        when(col("c_custkey") % 3 === 0,
-          concat(lit("NAT-"), col("c_custkey").cast(StringType)))
-          .as("national_id"),
-        when(col("c_custkey") % 2 === 0,
-          concat(lit("BC-"), col("c_custkey").cast(StringType)))
-          .as("birth_certificate"))
+        nationalId.as("national_id"),
+        birthCertificate.as("birth_certificate"))
       .withColumn("identifier",
         coalesce(col("national_id"), col("birth_certificate"),
           concat(lit("GEN-"), col("client_id").cast(StringType))))
-      .withColumn("identifier_type",
-        when(col("national_id").isNotNull, "national_id")
-          .when(col("birth_certificate").isNotNull, "birth_certificate")
-          .otherwise("generated"))
+      .withColumn("identifier_type", identifierType)
       .orderBy("client_id")
 
   // P4 deterministic uuid
@@ -174,18 +220,18 @@ object Migration {
       .drop("__pid", "__idx", "__off")
   }
 
+  /** The roster with its minted `person_id` — the one keyed base. */
+  private def keyedRoster(s: SparkSession, dir: String): DataFrame =
+    surrogateKeysScaled(customer(s, dir), key, "person_id")
+
   private def qSurrogateKeyScaled(s: SparkSession, dir: String): DataFrame =
-    surrogateKeysScaled(customer(s, dir), col("c_custkey"), "person_id")
+    keyedRoster(s, dir)
       .select(col("person_id"), col("c_custkey").as("client_id"))
       .orderBy("person_id")
 
-  // P7 name cleaning / splitting (reference README.md:9)
   private def qNameSplit(s: SparkSession, dir: String): DataFrame =
     customer(s, dir)
-      .select(
-        col("c_custkey").as("client_id"),
-        upper(trim(split(col("c_name"), "#").getItem(0))).as("given_name"),
-        split(col("c_name"), "#").getItem(1).as("family_name"))
+      .select(col("c_custkey").as("client_id"), givenName, familyName)
       .orderBy("client_id")
 
   // P9 / U1 check digit for generated identifiers
@@ -214,41 +260,28 @@ object Migration {
     * equals `ROW_NUMBER() OVER (ORDER BY c_custkey)` bit-for-bit).
     */
   private def qPerson(s: SparkSession, dir: String): DataFrame =
-    surrogateKeysScaled(customer(s, dir), col("c_custkey"), "person_id")
-      .select(
-        col("person_id"),
-        col("c_custkey").as("client_id"),
-        upper(trim(split(col("c_name"), "#").getItem(0))).as("given_name"),
-        split(col("c_name"), "#").getItem(1).as("family_name"),
-        // gender normalization P8: legacy coding -> OpenMRS 'M'/'F'/null
-        when(col("c_custkey") % 3 === 0, "M")
-          .when(col("c_custkey") % 3 === 1, "F")
-          .otherwise(lit(null).cast(StringType)).as("gender"),
-        // date normalization P6: derived deterministic birthdate
-        date_add(to_date(lit("1950-01-01")),
-          ((col("c_custkey") * 37) % 18250).cast(IntegerType))
-          .as("birthdate"),
-        (col("c_custkey") % 5 === 0).as("birthdate_estimated"),
-        lit(1L).as("creator"),
-        lit(false).as("voided"),
-        mintUuid(s, lit("person"), col("c_custkey"), col("c_name")).as("uuid"))
-      .orderBy("person_id")
+    person(s, keyedRoster(s, dir)).orderBy("person_id")
+
+  /** The OpenMRS `person` rows of a [[keyedRoster]] frame. */
+  private def person(s: SparkSession, base: DataFrame): DataFrame =
+    base.select(
+      col("person_id"),
+      key.as("client_id"),
+      givenName,
+      familyName,
+      gender,
+      birthdate,
+      (key % 5 === 0).as("birthdate_estimated"),
+      lit(1L).as("creator"),
+      lit(false).as("voided"),
+      mintUuid(s, lit("person"), key, col("c_name")).as("uuid"))
 
   /** U3 unpivot: wide legacy row -> `person_attribute` EAV rows (reference
-    * `README.md:11`), 1 row in -> 3 rows out via a generator, no shuffle.
+    * `README.md:11`) through [[attributes]].
     */
   private def qUnpivot(s: SparkSession, dir: String): DataFrame =
     customer(s, dir)
-      .select(
-        col("c_custkey").as("person_id"),
-        explode(array(
-          struct(lit("acctbal").as("attr_type"),
-            col("c_acctbal").cast(DecimalType(12, 2)).cast(StringType)
-              .as("value")),
-          struct(lit("mktsegment").as("attr_type"),
-            col("c_mktsegment").as("value")),
-          struct(lit("nation").as("attr_type"),
-            col("c_nationkey").cast(StringType).as("value")))).as("a"))
+      .select(col("c_custkey").as("person_id"), attributes)
       .select(col("person_id"), col("a.attr_type"), col("a.value"))
       .orderBy("person_id", "attr_type")
 
@@ -291,28 +324,12 @@ object Migration {
   def migrateAll(s: SparkSession, dir: String): Seq[(String, DataFrame)] = {
     val nation = Sources.table(s, dir, "nation")
       .select(col("n_nationkey"), col("n_name"))
-    val base = surrogateKeysScaled(customer(s, dir), col("c_custkey"),
-      "person_id")
-    val key = col("c_custkey")
-
-    val person = base.select(
-      col("person_id"),
-      key.as("client_id"),
-      upper(trim(split(col("c_name"), "#").getItem(0))).as("given_name"),
-      split(col("c_name"), "#").getItem(1).as("family_name"),
-      when(key % 3 === 0, "M").when(key % 3 === 1, "F")
-        .otherwise(lit(null).cast(StringType)).as("gender"),
-      date_add(to_date(lit("1950-01-01")),
-        ((key * 37) % 18250).cast(IntegerType)).as("birthdate"),
-      (key % 5 === 0).as("birthdate_estimated"),
-      lit(1L).as("creator"),
-      lit(false).as("voided"),
-      mintUuid(s, lit("person"), key, col("c_name")).as("uuid"))
+    val base = keyedRoster(s, dir)
 
     val personName = base.select(
       col("person_id"),
-      upper(trim(split(col("c_name"), "#").getItem(0))).as("given_name"),
-      split(col("c_name"), "#").getItem(1).as("family_name"),
+      givenName,
+      familyName,
       lit(true).as("preferred"),
       mintUuid(s, lit("person_name"), key, col("c_name")).as("uuid"))
 
@@ -325,15 +342,7 @@ object Migration {
         mintUuid(s, lit("person_address"), key).as("uuid"))
 
     val personAttribute = base
-      .select(col("person_id"), key.as("ck"),
-        explode(array(
-          struct(lit("acctbal").as("attr_type"),
-            col("c_acctbal").cast(DecimalType(12, 2)).cast(StringType)
-              .as("value")),
-          struct(lit("mktsegment").as("attr_type"),
-            col("c_mktsegment").as("value")),
-          struct(lit("nation").as("attr_type"),
-            col("c_nationkey").cast(StringType).as("value")))).as("a"))
+      .select(col("person_id"), key.as("ck"), attributes)
       .select(col("person_id"), col("a.attr_type").as("attr_type"),
         col("a.value").as("value"),
         mintUuid(s, lit("person_attribute"), col("ck"), col("a.attr_type"))
@@ -346,19 +355,15 @@ object Migration {
       mintUuid(s, lit("patient"), key).as("uuid"))
 
     val patientIdentifier = base
-      .withColumn("national_id", when(key % 3 === 0,
-        concat(lit("NAT-"), key.cast(StringType))))
-      .withColumn("birth_certificate", when(key % 2 === 0,
-        concat(lit("BC-"), key.cast(StringType))))
+      .withColumn("national_id", nationalId)
+      .withColumn("birth_certificate", birthCertificate)
       .select(
         col("person_id").as("patient_id"),
         coalesce(col("national_id"), col("birth_certificate"),
           concat(lit("GEN-"), key.cast(StringType), lit("-"),
             graft.functions.LuhnExprs.luhnMod30(key.cast(StringType))))
             .as("identifier"),
-        when(col("national_id").isNotNull, "national_id")
-          .when(col("birth_certificate").isNotNull, "birth_certificate")
-          .otherwise("generated").as("identifier_type"),
+        identifierType.as("identifier_type"),
         lit(true).as("preferred"),
         mintUuid(s, lit("patient_identifier"), key).as("uuid"))
 
@@ -368,7 +373,7 @@ object Migration {
       mintUuid(s, lit("dreams_mapping"), key).as("uuid"))
 
     Seq(
-      "person" -> person,
+      "person" -> person(s, base),
       "person_name" -> personName,
       "person_address" -> personAddress,
       "person_attribute" -> personAttribute,

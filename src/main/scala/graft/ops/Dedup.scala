@@ -981,9 +981,9 @@ object Dedup {
 
   /** Embedding near-dup: pairs with cosine ≥ 0.5. All-pairs is acceptable
     * here only because `embeddings` is a compact (n ≤ thousands) table;
-    * the corpus-scale path is the bucketed IVF join in
-    * [[Similarity.qSimIvf]]. Norms are precomputed per side so the pair
-    * loop does one dot product, not three.
+    * the corpus-scale path is the bucketed IVF join of the `q_sim_ivf`
+    * key. Norms are precomputed per side so the pair loop does one dot
+    * product, not three; [[Similarity.cosine]] nulls a zero-norm pair.
     */
   private def qDedupEmbed(s: SparkSession, dir: String): DataFrame = {
     // the persisted featurized corpus (vec_id, embedding, nrm2 = ‖v‖²)
@@ -995,8 +995,8 @@ object Dedup {
         sqrt(col("nrm2")).as("nrm"))
     e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        Num.r4(Similarity.dot(col("a.embedding"), col("b.embedding"))
-          / (col("a.nrm") * col("b.nrm"))).as("cosine"))
+        Num.r4(Similarity.cosine(col("a.embedding"), col("b.embedding"),
+          col("a.nrm"), col("b.nrm"))).as("cosine"))
       .filter(col("cosine") >= 0.5)
       .orderBy("vec_a", "vec_b")
   }
@@ -1084,8 +1084,8 @@ object Dedup {
       .join(e.as("ea"), col("vec_a") === col("ea.vec_id"))
       .join(e.as("eb"), col("vec_b") === col("eb.vec_id"))
       .select(col("vec_a"), col("vec_b"),
-        Num.r4(Similarity.dot(col("ea.embedding"), col("eb.embedding"))
-          / (col("ea.nrm") * col("eb.nrm"))).as("cosine"))
+        Num.r4(Similarity.cosine(col("ea.embedding"), col("eb.embedding"),
+          col("ea.nrm"), col("eb.nrm"))).as("cosine"))
       .filter(col("cosine") >= 0.4)
   }
 

@@ -80,7 +80,7 @@ object Similarity {
   /** Map-side nearest-centroid argmin: array_min over (dist², cid)
     * structs = the lexicographic minimum = min_by(cid, struct(dist2,
     * cid)) — identical value and tie-break. An EMPTY codebook yields
-    * NULL; callers filter assigned rows on non-null so a degenerate
+    * NULL; [[assign]] filters assigned rows on non-null so a degenerate
     * empty-codebook input produces an empty result, exactly like the
     * crossJoin+groupBy form this replaced (r21 review finding).
     */
@@ -100,23 +100,122 @@ object Similarity {
     df.select(col("vec_id"), col("embedding"),
       l2norm(col("embedding")).as("nrm"))
 
-  /** Brute-force cosine top-k for one query vector. The single-row query
-    * side is broadcast; orderBy+limit plans as TakeOrderedAndProject (per-
-    * partition k-heaps, no global sort) — the exact-scan baseline that IVF
-    * approximates.
+  /** `(vec_id, embedding, nrm2 = ‖v‖²)` — the featurized form every
+    * nearest-cell fold reads.
     */
-  private def qSimTopk(s: SparkSession, dir: String): DataFrame = {
+  private def featurize(v: DataFrame): DataFrame =
+    v.select(col("vec_id"), col("embedding"),
+      dot(col("embedding"), col("embedding")).as("nrm2"))
+
+  // ------------------------------------------------ the one search core
+  //
+  // Every key below composes pieces defined once each: the per-query
+  // ranking rule (topK) with its cosine (cosineTopK) and ADC (adcTopK)
+  // scorers, the cell probe (probe) and the nearest-cell assignment
+  // (assign). Exact, in-session IVF and at-rest IVF searches differ only
+  // in the frames they hand to these.
+
+  /** The per-query ranking rule: rank each query's candidates by `order`,
+    * ties to the lower `vec_id`, keep `rn ≤ k`, output ordered by
+    * `(q_id, rn)`. A window partitioned by query — the per-group top-k
+    * pattern (O4) applied to vectors.
+    */
+  private def topK(scored: DataFrame, order: Column, k: Int): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    scored
+      .withColumn("rn", row_number().over(Window.partitionBy("q_id")
+        .orderBy(order, col("vec_id"))).cast(LongType))
+      .filter(col("rn") <= k)
+      .orderBy("q_id", "rn")
+  }
+
+  /** The cosine `score` of an `(embedding, nrm)` × `(q_emb, q_nrm)` pair,
+    * [[Num.r4]]-rounded so rank ties are portable across engines.
+    */
+  private def cosineScore: Column =
+    Num.r4(cosine(col("embedding"), col("q_emb"), col("nrm"), col("q_nrm")))
+      .as("score")
+
+  /** Exact cosine top-k over candidate pairs `(q_id, vec_id, embedding,
+    * nrm, q_emb, q_nrm)`; a query never retrieves itself.
+    */
+  private def cosineTopK(candidates: DataFrame, k: Int): DataFrame =
+    topK(candidates.filter(col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id"), cosineScore), col("score").desc, k)
+
+  /** A `(vec_id, embedding, nrm, …)` frame as the query side of
+    * [[cosineTopK]]: `(q_id, q_emb, q_nrm, extra…)`.
+    */
+  private def asQueries(e: DataFrame, extra: Column*): DataFrame =
+    e.select(Seq(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+      col("nrm").as("q_nrm")) ++ extra: _*)
+
+  /** The cell probe: one `(q_id, carry…, cell)` row per query and probed
+    * cell — each `(vec_id, embedding, nrm2)` query's `nprobe` nearest
+    * cells of the `(cid, cemb, cnrm2)` codebook by (dist², cid), the fold
+    * form of a `row_number() ≤ nprobe` window (same selection, no window
+    * exchange). The codebook reaches the queries as one broadcast row.
+    */
+  private def probe(queries: DataFrame, cents: DataFrame, nprobe: Int,
+      carry: Column*): DataFrame = {
+    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+    queries.crossJoin(broadcast(centArray(cents)))
+      .select(Seq(col("vec_id").as("q_id")) ++ carry :+
+        explode(nearestCells(col("embedding"), col("nrm2"), col("cbk"),
+          nprobe)).as("pc"): _*)
+      .withColumn("cell", col("pc.cid")).drop("pc")
+  }
+
+  /** IVF cosine search: each query probes its `nprobe` nearest cells of
+    * `cents` and scores only those cells' vectors — the shuffle key is
+    * the cell, so cost is O(n·q·nprobe/cells) at the price of recall.
+    * `cells` is the inverted file `(cell, vec_id, embedding, nrm, …)`,
+    * `queries` is `(vec_id, embedding, nrm2, …)` with `qNrm` its ‖q‖.
+    * The in-session ([[ivfSearch]]) and at-rest ([[qSimIvfIndexed]],
+    * [[ivfFilteredSearchAdaptive]]) searches differ only in the frames
+    * they pass.
+    */
+  private def ivfCosineSearch(cells: DataFrame, queries: DataFrame,
+      qNrm: Column, cents: DataFrame, nprobe: Int, k: Int): DataFrame =
+    cosineTopK(cells.join(probe(queries, cents, nprobe,
+      col("embedding").as("q_emb"), qNrm.as("q_nrm")), "cell"), k)
+
+  /** Nearest-cell assignment of featurized `(vec_id, embedding, nrm2)`
+    * rows to the `(cid, cemb, cnrm2)` codebook: `(vec_id, <name>,
+    * embedding, carry…)`. The map-side argmin fold over the broadcast
+    * codebook array (see [[centArray]]): one broadcast row, no k×
+    * fan-out, no sort-aggregate — assignment is a scan projection, with
+    * the lowest-cid tie-break of the crossJoin+min_by form it replaced.
+    * The non-null filter restores that form's empty-codebook semantics
+    * (empty in → empty out).
+    */
+  private def assign(e: DataFrame, cents: DataFrame, name: String,
+      carry: Column*): DataFrame =
+    e.crossJoin(broadcast(centArray(cents)))
+      .select(Seq(col("vec_id"),
+        nearestCell(col("embedding"), col("nrm2"), col("cbk")).as(name),
+        col("embedding")) ++ carry: _*)
+      .filter(col(name).isNotNull)
+
+  /** Every other vector paired with query vector 0: `(vec_id,
+    * embedding, nrm, q_emb, q_nrm)`. The single-row query side is
+    * broadcast.
+    */
+  private def pairsVsFirst(s: SparkSession, dir: String): DataFrame = {
     val e = withNorm(emb(s, dir))
     val q = e.filter(col("vec_id") === 0)
       .select(col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-    e.filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        Num.r4(cosine(col("embedding"), col("q_emb"), col("nrm"), col("q_nrm")))
-          .as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(10)
+    e.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
   }
+
+  /** Brute-force cosine top-k for one query vector: orderBy+limit plans
+    * as TakeOrderedAndProject (per-partition k-heaps, no global sort) —
+    * the exact-scan baseline that IVF approximates. A zero-norm vector's
+    * null score ranks last.
+    */
+  private def qSimTopk(s: SparkSession, dir: String): DataFrame =
+    pairsVsFirst(s, dir).select(col("vec_id"), cosineScore)
+      .orderBy(col("score").desc, col("vec_id")).limit(10)
 
   /** Buffer for [[TopKAgg]]: a binary min-heap on the keep-order's REVERSE
     * — root = the worst kept element — laid out in two parallel primitive
@@ -200,16 +299,17 @@ object Similarity {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
   }
 
+  /** [[qSimTopk]] through the [[TopKAgg]] heap. A pair with a zero-norm
+    * side scores null ([[cosine]]), which cannot decode into the heap's
+    * primitive pair, so such pairs are dropped first — where `q_sim_topk`
+    * ranks them last. The drop tests the norms, not the score: the
+    * optimizer pushes it into the pair join, where a score test would
+    * run the dot product twice.
+    */
   private def qSimTopkAgg(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val e = withNorm(emb(s, dir))
-    val q = e.filter(col("vec_id") === 0)
-      .select(col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-    val scored = e.filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        Num.r4(cosine(col("embedding"), col("q_emb"), col("nrm"), col("q_nrm")))
-          .as("score"))
+    val scored = pairsVsFirst(s, dir).filter(col("nrm") * col("q_nrm") =!= 0.0)
+      .select(col("vec_id"), cosineScore)
       .as[(Long, Double)]
     val topk = new TopKAgg(10).toColumn
     scored.select(topk.name("tk"))
@@ -220,25 +320,12 @@ object Similarity {
   }
 
   /** Per-query kNN (first 20 vectors as the query set): broadcast the
-    * queries, score all candidates, keep k per query with a ranking window
-    * partitioned by query — the per-group top-k pattern (O4) applied to
-    * vectors.
+    * queries, score all candidates, keep k per query ([[cosineTopK]]).
     */
   private def qSimKnn(s: SparkSession, dir: String): DataFrame = {
     val e = withNorm(emb(s, dir))
-    val q = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("score").desc, col("vec_id"))
-    e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        Num.r4(cosine(col("embedding"), col("q_emb"), col("nrm"), col("q_nrm")))
-          .as("score"))
-      .withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= 5)
-      .orderBy("q_id", "rn")
+    cosineTopK(e.crossJoin(broadcast(asQueries(e.filter(col("vec_id") < 20)))),
+      5)
   }
 
   /** IVF-style bucketed ANN with a training-free quantizer: the sign
@@ -247,8 +334,8 @@ object Similarity {
     * shuffle key is the cell and cost drops from O(n·q) to O(n·q / cells)
     * at the price of recall — exactly the IVF trade. The 64-cell constant
     * is this variant's scale limit; the production path is the TRAINED
-    * codebook ([[qSimIvfTrained]], k configurable) with multi-probe
-    * ([[qSimIvfProbe]]) as the recall knob.
+    * codebook ([[ivfSearch]], k configurable) with `nprobe` as the recall
+    * knob.
     */
   private def bucket(e: Column): Column =
     concat((1 to 6).map(i =>
@@ -256,47 +343,42 @@ object Similarity {
 
   private def qSimIvf(s: SparkSession, dir: String): DataFrame = {
     val e = withNorm(emb(s, dir)).withColumn("cell", bucket(col("embedding")))
-    val q = e.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"), col("cell"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("score").desc, col("vec_id"))
-    e.join(q, "cell")
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        Num.r4(cosine(col("embedding"), col("q_emb"), col("nrm"), col("q_nrm")))
-          .as("score"))
-      .withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= 3)
-      .orderBy("q_id", "rn")
+    cosineTopK(e.join(asQueries(e.filter(col("vec_id") < 50), col("cell")),
+      "cell"), 3)
   }
 
   /** Per-cluster embedding centroids — the building block for k-means-style
-    * IVF training and corpus summarization. `posexplode` turns the vector
-    * column into (cluster, pos, value) rows so the mean is one hash
-    * aggregate over (cluster, dim): fully parallel, map-side combinable,
-    * and decimal-exact (float sums would be partitioning-dependent). The
-    * centroid norm folds the per-dim means in `pos` order via a sorted
-    * collect, so the double accumulation order is deterministic and matches
-    * the oracle's `list_sum` fold. Scale: rows = corpus × dim, but the
-    * aggregate state is clusters × dim — tiny; no shuffle carries vectors.
+    * IVF training and corpus summarization. The per-dim means come from
+    * [[clusterMeans]]; the centroid norm folds them in `pos` order via a
+    * sorted collect, so the double accumulation order is deterministic
+    * and matches the oracle's `list_sum` fold. Scale: rows = corpus ×
+    * dim, but the aggregate state is clusters × dim — tiny; no shuffle
+    * carries vectors.
     */
   private def qEmbedCentroid(s: SparkSession, dir: String): DataFrame =
     centroidsOf(emb(s, dir)
       .select((col("vec_id") % 16).as("cluster"), col("embedding")))
 
-  /** Centroid summary of a `(cluster, embedding)` frame — the shared tail
-    * of [[qEmbedCentroid]] (hash-bucketed clusters) and [[qIvfTrain]]
-    * (nearest-seed clusters). See [[qEmbedCentroid]] for the scale notes.
+  /** Per-(cluster, pos) means of a `(cluster, embedding)` frame:
+    * `(cluster, pos, n, mean)`. `posexplode` turns each vector into
+    * (cluster, pos, value) rows so the mean is one hash aggregate over
+    * (cluster, dim): fully parallel, map-side combinable, and
+    * decimal-exact (float sums would be partitioning-dependent).
     */
-  private def centroidsOf(assigned: DataFrame): DataFrame = {
-    val means = assigned
+  private def clusterMeans(assigned: DataFrame): DataFrame =
+    assigned
       .select(col("cluster"), posexplode(col("embedding")).as(Seq("pos", "x")))
       .groupBy("cluster", "pos")
       .agg(count(lit(1)).as("n"),
         (sum(col("x").cast(DoubleType).cast(DecimalType(20, 10)))
           .cast(DoubleType) / count(lit(1))).as("mean"))
-    means.groupBy("cluster")
+
+  /** Centroid summary of a `(cluster, embedding)` frame — the shared tail
+    * of [[qEmbedCentroid]] (hash-bucketed clusters) and [[qIvfTrain]]
+    * (nearest-seed clusters).
+    */
+  private def centroidsOf(assigned: DataFrame): DataFrame =
+    clusterMeans(assigned).groupBy("cluster")
       .agg(max(col("n")).as("n_vecs"),
         Num.r4(max(when(col("pos") === 0, col("mean")))).as("c0"),
         Num.r4(max(when(col("pos") === 1, col("mean")))).as("c1"),
@@ -310,72 +392,50 @@ object Similarity {
           (acc, m) => acc + m.getField("mean") * m.getField("mean"))))
           .as("centroid_norm"))
       .orderBy("cluster")
-  }
 
   /** One Lloyd (k-means) step — the codebook-training primitive behind a
     * REAL IVF index (the sign-pattern quantizer in [[qSimIvf]] is
-    * training-free; this is the trained-codebook upgrade path the IVF
-    * Scaladoc promises). Seeds = the first 16 vectors (deterministic init);
+    * training-free). Seeds = the first 16 vectors (deterministic init);
     * assignment = argmin squared L2 distance, computed as
     * ‖v‖² − 2·v·s + ‖s‖² so the per-pair work is ONE codegen'd dot
-    * product against a BROADCAST seed table — at corpus scale this is a
-    * map-only pass (no shuffle carries vectors); the only shuffle is the
-    * (cluster, dim) mean aggregation, whose state is k × dim cells.
-    * `min_by` on a (dist², seed) struct keys ties to the lowest seed id,
-    * and every double on the distance path is an ordered fold both engines
-    * reproduce exactly, so the argmin is portable. Output = the recomputed
-    * centroid summary ([[centroidsOf]]); iterate to convergence by feeding
-    * centroids back as seeds.
+    * product against a BROADCAST seed table ([[assign]]) — at corpus
+    * scale a map-only pass (no shuffle carries vectors); the only
+    * shuffle is the (cluster, dim) mean aggregation, whose state is
+    * k × dim cells. Ties go to the lowest seed id, and every double on
+    * the distance path is an ordered fold both engines reproduce
+    * exactly, so the argmin is portable. Output = the recomputed
+    * centroid summary ([[centroidsOf]]); iterate to convergence by
+    * feeding centroids back as seeds.
     */
   private def qIvfTrain(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir)
-      .select(col("vec_id"), col("embedding"),
-        dot(col("embedding"), col("embedding")).as("nrm2"))
+    val e = featurize(emb(s, dir))
     val seeds = e.filter(col("vec_id") < 16)
       .select(col("vec_id").as("cid"), col("embedding").as("cemb"),
         col("nrm2").as("cnrm2"))
-    // map-side argmin fold (see centArray) — the seed table is the
-    // codebook; same argmin doubles and lowest-seed tie-break as the
-    // crossJoin+min_by form it replaces
-    val assigned = e.crossJoin(broadcast(centArray(seeds)))
-      .select(col("vec_id"),
-        nearestCell(col("embedding"), col("nrm2"), col("cbk")).as("cluster"),
-        col("embedding"))
-      .filter(col("cluster").isNotNull)
-    centroidsOf(assigned)
+    centroidsOf(assign(e, seeds, "cluster"))
   }
+
+  /** A `(cid, cemb)` codebook with its per-centroid ‖c‖², ready for
+    * [[assign]] and [[probe]].
+    */
+  private def withCnrm2(cents: DataFrame): DataFrame =
+    cents.select(col("cid"), col("cemb"),
+      dot(col("cemb"), col("cemb")).as("cnrm2"))
 
   /** One Lloyd assignment+update step against a broadcast codebook:
     * `cents` is (cid, cemb float vector); returns the recomputed (cid,
-    * cemb) frame. Assignment is the map-side argmin fold over the
-    * broadcast codebook array (see [[centArray]]) — a pure scan
-    * projection, no fan-out and no assignment shuffle; the only
-    * exchange is the (cluster, dim) mean aggregate, whose state is
-    * k × dim cells. Means accumulate in DECIMAL
-    * (partitioning-independent) and land as FLOAT so the next step's
-    * distances are bit-portable across engines.
+    * cemb) frame. Assignment is [[assign]]'s scan projection; the only
+    * exchange is the (cluster, dim) mean aggregate ([[clusterMeans]]),
+    * whose means land as FLOAT so the next step's distances are
+    * bit-portable across engines.
     */
-  private def lloydStep(e: DataFrame, cents: DataFrame): DataFrame = {
-    val withNrm2 = cents.select(col("cid"), col("cemb"),
-      dot(col("cemb"), col("cemb")).as("cnrm2"))
-    // map-side argmin fold (see centArray) — same doubles, same
-    // lowest-cid tie-break as the crossJoin+min_by form it replaces
-    val assigned = e.crossJoin(broadcast(centArray(withNrm2)))
-      .select(col("vec_id"),
-        nearestCell(col("embedding"), col("nrm2"), col("cbk")).as("cluster"),
-        col("embedding"))
-      .filter(col("cluster").isNotNull)
-    assigned
-      .select(col("cluster"), posexplode(col("embedding")).as(Seq("pos", "x")))
-      .groupBy("cluster", "pos")
-      .agg((sum(col("x").cast(DoubleType).cast(DecimalType(20, 10)))
-        .cast(DoubleType) / count(lit(1))).as("mean"))
+  private def lloydStep(e: DataFrame, cents: DataFrame): DataFrame =
+    clusterMeans(assign(e, withCnrm2(cents), "cluster"))
       .groupBy("cluster")
       .agg(sort_array(collect_list(
         struct(col("pos"), col("mean").cast(FloatType).as("m")))).as("ml"))
       .select(col("cluster").as("cid"),
         transform(col("ml"), m => m.getField("m")).as("cemb"))
-  }
 
   /** Trained codebook: `steps` Lloyd iterations from the deterministic
     * first-k seed, entirely as a DataFrame chain (each step is one corpus
@@ -396,25 +456,11 @@ object Similarity {
     cents
   }
 
-  /** IVF search over the TRAINED codebook — train → assign → search
-    * end-to-end (the composition [[qIvfTrain]] alone lacked). Every vector
-    * (and every query) is assigned to its nearest of the 16 trained
-    * centroids by the same broadcast argmin used in training; the candidate
-    * join then matches query to corpus *within a cell only* — shuffle key =
-    * cell, cost O(n·q/k), recall bounded by the quantizer like any IVF with
-    * nprobe=1. Distances to the float codebook are bit-portable, so the
-    * DuckDB oracle reproduces the full 2-step training and the search
-    * exactly.
-    */
-  /** Memoized featurized corpus and trained codebook (batch memos) — the
-    * trained-IVF queries (nprobe=1 and nprobe=2) share one training run
-    * the way a real index serves many searches.
+  /** Memoized featurized corpus (a batch memo) — the trained-IVF queries
+    * share one training run the way a real index serves many searches.
     */
   private[graft] def featurizedCorpus(s: SparkSession, dir: String): DataFrame =
-    Memo.batch("sim_corpus", s, dir)(Memo.persist(
-      emb(s, dir)
-        .select(col("vec_id"), col("embedding"),
-          dot(col("embedding"), col("embedding")).as("nrm2"))))
+    Memo.batch("sim_corpus", s, dir)(Memo.persist(featurize(emb(s, dir))))
 
   /** The 2-step-Lloyd codebook with per-centroid ||c||², ready to
     * broadcast. Persisted (k × dim — tiny) so the second consumer skips
@@ -422,50 +468,36 @@ object Similarity {
     */
   private def trainedCodebook(s: SparkSession, dir: String): DataFrame =
     Memo.batch("sim_codebook", s, dir)(Memo.persist(
-      lloydCentroids(featurizedCorpus(s, dir), 16, 2)
-        .select(col("cid"), col("cemb"),
-          dot(col("cemb"), col("cemb")).as("cnrm2"))))
+      withCnrm2(lloydCentroids(featurizedCorpus(s, dir), 16, 2))))
 
-  /** Nearest-centroid assignment of featurized `(vec_id, embedding,
-    * nrm2)` rows to a FROZEN codebook — shared by the full-corpus
+  /** Nearest-centroid assignment of featurized rows to a FROZEN codebook:
+    * `(vec_id, cell, embedding, nrm, nrm2)` — shared by the full-corpus
     * assignment below and the per-micro-batch streaming index
     * maintenance ([[graft.stream.Streaming.ivfIngest]]), so batch and
-    * streamed index content can only agree. The map-side argmin fold
-    * over the broadcast codebook array (see [[centArray]]): one
-    * broadcast row, no k× fan-out, no sort-aggregate — assignment is a
-    * scan projection. The non-null filter restores the crossJoin
-    * form's empty-codebook semantics (empty in → empty out).
+    * streamed index content can only agree.
     */
   private[graft] def assignFeaturized(e: DataFrame,
                                       cents: DataFrame): DataFrame =
-    e.crossJoin(broadcast(centArray(cents)))
-      .select(col("vec_id"),
-        nearestCell(col("embedding"), col("nrm2"), col("cbk")).as("cell"),
-        col("embedding"),
-        sqrt(col("nrm2")).as("nrm"),
-        // raw ||v||² carried alongside its sqrt so the AT-REST index can
-        // re-run the probe argmin on the exact same doubles (sqrt-then-
-        // square would not round-trip)
-        col("nrm2"))
-      .filter(col("cell").isNotNull)
+    assign(e, cents, "cell", sqrt(col("nrm2")).as("nrm"),
+      // raw ||v||² carried alongside its sqrt so the AT-REST index can
+      // re-run the probe argmin on the exact same doubles (sqrt-then-
+      // square would not round-trip)
+      col("nrm2"))
 
   /** [[assignFeaturized]] over raw `(vec_id, embedding)` rows — the
     * entry point a streaming micro-batch uses (featurization inline).
     */
   private[graft] def assignVectors(vecs: DataFrame,
                                    cents: DataFrame): DataFrame =
-    assignFeaturized(
-      vecs.select(col("vec_id"), col("embedding"),
-        dot(col("embedding"), col("embedding")).as("nrm2")),
-      cents)
+    assignFeaturized(featurize(vecs), cents)
 
-  /** Memoized + persisted corpus assignment: three trained-IVF queries
+  /** Memoized + persisted corpus assignment: the trained-IVF queries
     * (nprobe 1/2/4) and the PQ cell-tagging all read the SAME inverted
-    * file — the r20 form recomputed the assignment per consumer. The
-    * frame carries the full embedding plus norms per row (the searches
-    * score against it), so the persist is roughly a second copy of
-    * [[featurizedCorpus]]'s cached vectors — budget both when sizing
-    * executor storage memory at scale; a batch memo like the corpus.
+    * file. The frame carries the full embedding plus norms per row (the
+    * searches score against it), so the persist is roughly a second
+    * copy of [[featurizedCorpus]]'s cached vectors — budget both when
+    * sizing executor storage memory at scale; a batch memo like the
+    * corpus.
     */
   private def trainedAssignment(s: SparkSession, dir: String): DataFrame =
     Memo.batch("sim_assign", s, dir)(Memo.persist(
@@ -512,113 +544,64 @@ object Similarity {
       root
     }
 
+  /** One landed part of the at-rest index: `cells`, `cents`, `codes` or
+    * `pqcb`.
+    */
+  private def atRest(s: SparkSession, dir: String, part: String): DataFrame =
+    s.read.parquet(ivfIndexRoot(s, dir) + "/" + part)
+
+  /** The at-rest query side: the first 50 landed vectors, `(vec_id,
+    * embedding, nrm, nrm2)`.
+    */
+  private def atRestQueries(cells: DataFrame): DataFrame =
+    cells.filter(col("vec_id") < 50)
+      .select(col("vec_id"), col("embedding"), col("nrm"), col("nrm2"))
+
   /** Multi-probe IVF search over the AT-REST index — the same semantics
     * as [[ivfSearch]] (spec-pinned equal), but no embeddings scan, no
-    * training, no assignment at query time: queries probe their `nprobe`
+    * training, no assignment at query time: queries probe their 2
     * nearest cells against the 16-row codebook sidecar, and the cell
     * join reads only the probed inverted-list directories (DPP prunes
-    * the rest). Score/probe expression trees are shared with the
-    * in-session form, so the two can only disagree about WHERE vectors
-    * came from.
+    * the rest).
     */
-  private[graft] def ivfIndexedSearch(s: SparkSession, dir: String,
-      nprobe: Int): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val root = ivfIndexRoot(s, dir)
-    val idx = s.read.parquet(root + "/cells")
-    val cents = s.read.parquet(root + "/cents")
-    // probe fold (see nearestCells): same (dist² asc, cid asc) selection
-    // as the row_number window it replaces, minus the window exchange
-    val q = idx.filter(col("vec_id") < 50)
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("nrm2"))
-      .crossJoin(broadcast(centArray(cents)))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"),
-        explode(nearestCells(col("embedding"), col("nrm2"), col("cbk"),
-          nprobe)).as("pc"))
-      .select(col("q_id"), col("q_emb"), col("q_nrm"),
-        col("pc.cid").as("cell"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("score").desc, col("vec_id"))
-    idx.join(q, "cell")
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        Num.r4(cosine(col("embedding"), col("q_emb"), col("nrm"), col("q_nrm")))
-          .as("score"))
-      .withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= 3)
-      .orderBy("q_id", "rn")
+  private def qSimIvfIndexed(s: SparkSession, dir: String): DataFrame = {
+    val cells = atRest(s, dir, "cells")
+    ivfCosineSearch(cells, atRestQueries(cells), col("nrm"),
+      atRest(s, dir, "cents"), 2, 3)
   }
-
-  private def qSimIvfIndexed(s: SparkSession, dir: String): DataFrame =
-    ivfIndexedSearch(s, dir, nprobe = 2)
 
   /** The trained codebook size — every IVF tier here partitions into
     * 16 inverted lists (seeds = the first 16 vectors).
     */
   private[graft] val IvfNumCells = 16
 
-  /** FILTERED ANN over the at-rest index — `label < 5 AND cosine top-k`:
-    * the attribute predicate lands directly on the cells scan, so Spark
-    * pushes it into the parquet reader of the PROBED cell directories
+  /** FILTERED ANN over the at-rest index — `pred AND cosine top-k`,
+    * returning the probe width the search settled on. The attribute
+    * predicate lands directly on the cells scan, so Spark pushes it into
+    * the parquet reader of the PROBED cell directories
     * (`PushedFilters: [LessThan(label,5)]`, plan-pinned) and candidates
     * failing it are dropped BEFORE any scoring — never a corpus-wide
     * attribute join, never post-filtering a top-k (which under-fills k
     * when the predicate is selective; filtering first keeps k exact
     * within the probed cells). Queries themselves are NOT filtered —
-    * the predicate constrains what is retrieved, not who asks. Same
-    * probe/score expression trees as [[ivfIndexedSearch]].
+    * the predicate constrains what is retrieved, not who asks.
     *
     * ADAPTIVE nprobe (round-15 VERDICT #7): a fixed probe width
     * under-fills k when the predicate is selective — the probed cells
     * may hold fewer than k qualifying vectors even though the corpus
     * holds plenty. When any query comes back under-filled the probe
     * width DOUBLES (bounded by the cell count) and the search re-runs;
-    * the under-fill check is one tiny aggregate over the k-truncated
-    * result, so the common case (first probe fills) pays a single
-    * count job, and the worst case degrades gracefully to an
-    * all-cells filtered scan — still partition-pruned per query, never
-    * a corpus-wide attribute join.
-    */
-  private[graft] def ivfFilteredSearch(s: SparkSession, dir: String,
-      nprobe: Int): DataFrame =
-    ivfFilteredSearchAdaptive(s, dir, nprobe, col("label") < 5, k = 3)._1
-
-  /** [[ivfFilteredSearch]] with the predicate/k explicit, returning the
-    * probe width the search settled on (the spec window for "escalated
-    * but stayed cell-pruned").
+    * the under-fill check is one tiny aggregate over the candidates,
+    * so the common case (first probe fills) pays a single count job,
+    * and the worst case degrades gracefully to an all-cells filtered
+    * scan — still partition-pruned per query, never a corpus-wide
+    * attribute join.
     */
   private[graft] def ivfFilteredSearchAdaptive(s: SparkSession, dir: String,
       nprobe: Int, pred: Column, k: Int): (DataFrame, Int) = {
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val root = ivfIndexRoot(s, dir)
-    val idx = s.read.parquet(root + "/cells")
-    val cents = s.read.parquet(root + "/cents")
-    // probe fold (see nearestCells): same (dist² asc, cid asc) selection
-    // as the row_number window it replaces, minus the window exchange
-    def probed(np: Int): DataFrame =
-      idx.filter(col("vec_id") < 50)
-        .select(col("vec_id"), col("embedding"), col("nrm"), col("nrm2"))
-        .crossJoin(broadcast(centArray(cents)))
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          col("nrm").as("q_nrm"),
-          explode(nearestCells(col("embedding"), col("nrm2"), col("cbk"),
-            np)).as("pc"))
-        .select(col("q_id"), col("q_emb"), col("q_nrm"),
-          col("pc.cid").as("cell"))
-    def search(np: Int): DataFrame = {
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("score").desc, col("vec_id"))
-      idx.filter(pred) // the pushed attribute predicate
-        .join(probed(np), "cell")
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"),
-          Num.r4(cosine(col("embedding"), col("q_emb"),
-            col("nrm"), col("q_nrm"))).as("score"))
-        .withColumn("rn", row_number().over(w).cast(LongType))
-        .filter(col("rn") <= k)
-        .orderBy("q_id", "rn")
-    }
+    val cells = atRest(s, dir, "cells")
+    val queries = atRestQueries(cells)
+    val cents = atRest(s, dir, "cents")
     // Under-fill check on the CANDIDATE frame (probe ⋈ probed cells,
     // DPP-pruned like the search itself — at 100 TB the check touches
     // only the probed lists): counts per query, no scoring expressions,
@@ -626,9 +609,8 @@ object Similarity {
     // here — a result-side check would silently run the whole search
     // twice (measured 1.9× on the bench).
     def filled(np: Int): Boolean = {
-      val q = probed(np)
-      val perQuery = idx.filter(pred)
-        .join(q.select(col("q_id"), col("cell")), "cell")
+      val perQuery = cells.filter(pred)
+        .join(probe(queries, cents, np), "cell")
         .filter(col("vec_id") =!= col("q_id"))
         .groupBy("q_id").agg(count(lit(1)).as("n"))
         .agg(count(lit(1)).as("q_with_any"), min(col("n")).as("worst"))
@@ -651,7 +633,8 @@ object Similarity {
         w = math.min(w * 2, IvfNumCells)
       w
     }
-    (search(np), np)
+    (ivfCosineSearch(cells.filter(pred), queries, col("nrm"), cents, np, k),
+      np)
   }
 
   /** Query-set size per (session, corpus) — one count, shared by every
@@ -659,53 +642,35 @@ object Similarity {
     */
   private def nQueriesOf(s: SparkSession, dir: String): Long =
     Memo.session("sim_n_queries", s, dir)(
-      s.read.parquet(ivfIndexRoot(s, dir) + "/cells")
+      atRest(s, dir, "cells")
         .filter(col("vec_id") < 50).select("vec_id").distinct().count())
 
   private def qSimFiltered(s: SparkSession, dir: String): DataFrame =
-    ivfFilteredSearch(s, dir, nprobe = 2)
+    ivfFilteredSearchAdaptive(s, dir, 2, col("label") < 5, k = 3)._1
 
   /** IVF-PQ over the AT-REST index — the fully-landed production search
-    * path: queries probe their 2 nearest cells against the codebook
-    * sidecar, build their broadcast ADC tables from the PQ-codebook
-    * sidecar, and score ONLY the probed cells' code directories (DPP
-    * prunes the rest). Raw corpus vectors are touched NOWHERE at query
-    * time — candidates are 4 small codes each; the raw-vector cells/
-    * exist for the exact-rerank tier ([[ivfIndexedSearch]]). Shares
-    * every expression tree with [[qSimIvfPq]], so the at-rest form is
-    * oracle-exact by construction.
+    * path: queries probe their `nprobe` nearest cells against the
+    * codebook sidecar, build their broadcast ADC tables from the
+    * PQ-codebook sidecar, and score ONLY the probed cells' code
+    * directories (DPP prunes the rest). Raw corpus vectors are touched
+    * NOWHERE at query time — candidates are 4 small codes each; the
+    * raw-vector cells/ exist for the exact-rerank tier
+    * ([[qSimIvfPqRerank]]). Shares every expression tree with
+    * [[qSimIvfPq]], so the at-rest form is oracle-exact by construction.
     */
   private[graft] def ivfPqIndexedSearch(s: SparkSession, dir: String,
       nprobe: Int, k: Int = 3): DataFrame = {
-    val root = ivfIndexRoot(s, dir)
-    val cents = s.read.parquet(root + "/cents")
-    val cb = s.read.parquet(root + "/pqcb")
-    val q = s.read.parquet(root + "/cells").filter(col("vec_id") < 8)
-    // probe fold (see nearestCells): same (dist² asc, cid asc) selection
-    // as the row_number window it replaces, minus the window exchange
-    val probed = q
-      .crossJoin(broadcast(centArray(cents)))
-      .select(col("vec_id").as("q_id"),
-        explode(nearestCells(col("embedding"), col("nrm2"), col("cbk"),
-          nprobe)).as("pc"))
-      .select(col("q_id"), col("pc.cid").as("cell"))
+    val q = atRest(s, dir, "cells").filter(col("vec_id") < 8)
     val qd = pqAdcTable(
-      pqSubvectors(q.select(col("vec_id"), col("embedding"))), cb)
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("adist").asc, col("vec_id").asc)
-    s.read.parquet(root + "/codes")
-      .join(broadcast(probed), "cell")
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(broadcast(qd), Seq("q_id", "s", "cid"))
-      .groupBy("q_id", "vec_id")
+      pqSubvectors(q.select(col("vec_id"), col("embedding"))),
+      atRest(s, dir, "pqcb"))
+    adcTopK(atRest(s, dir, "codes")
+      .join(broadcast(probe(q, atRest(s, dir, "cents"), nprobe)), "cell")
+      .join(broadcast(qd), Seq("q_id", "s", "cid")), k,
       // cell is functionally determined by vec_id (one inverted list per
       // vector); carried so the rerank's raw-vector fetch can join on
       // (cell, vec_id) and DPP-prune the cell directories
-      .agg(Num.r4(sum(col("d")).cast(DoubleType)).as("adist"),
-        min(col("cell")).as("cell"))
-      .withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= k)
-      .orderBy("q_id", "rn")
+      min(col("cell")).as("cell"))
   }
 
   private def qSimIvfPqIndexed(s: SparkSession, dir: String): DataFrame =
@@ -725,82 +690,42 @@ object Similarity {
   private[graft] val ShortlistK = 10
 
   private def qSimIvfPqRerank(s: SparkSession, dir: String): DataFrame = {
-    val root = ivfIndexRoot(s, dir)
     // shortlist carries each candidate's cell so the raw-vector fetch
     // joins on (cell, vec_id): DPP prunes the cells/ directories to the
     // probed lists — the rerank stage must not become a raw-corpus scan
     val shortlist = ivfPqIndexedSearch(s, dir, nprobe = 2, k = ShortlistK)
       .select(col("q_id"), col("vec_id"), col("cell"))
-    val cells = s.read.parquet(root + "/cells")
+    val cells = atRest(s, dir, "cells")
       .select(col("cell"), col("vec_id"), col("embedding"), col("nrm"))
-    val q = cells.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("score").desc, col("vec_id"))
-    cells.join(broadcast(shortlist), Seq("cell", "vec_id"))
-      .join(broadcast(q), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        Num.r4(cosine(col("embedding"), col("q_emb"), col("nrm"), col("q_nrm")))
-          .as("score"))
-      .withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= 3)
-      .orderBy("q_id", "rn")
+    // the ADC shortlist never holds the query itself, so the rerank ranks
+    // its pairs directly, without cosineTopK's self-exclusion predicate
+    topK(cells.join(broadcast(shortlist), Seq("cell", "vec_id"))
+      .join(broadcast(asQueries(cells.filter(col("vec_id") < 8))), "q_id")
+      .select(col("q_id"), col("vec_id"), cosineScore), col("score").desc, 3)
   }
 
-  private def qSimIvfTrained(s: SparkSession, dir: String): DataFrame = {
-    val assigned = trainedAssignment(s, dir)
-    val q = assigned.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"), col("cell"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("score").desc, col("vec_id"))
-    assigned.join(q, "cell")
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        Num.r4(cosine(col("embedding"), col("q_emb"), col("nrm"), col("q_nrm")))
-          .as("score"))
-      .withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= 3)
-      .orderBy("q_id", "rn")
-  }
+  /** Single-probe trained IVF: [[ivfSearch]] at nprobe = 1. */
+  private def qSimIvfTrained(s: SparkSession, dir: String): DataFrame =
+    ivfSearch(s, dir, 1)
 
-  /** Multi-probe trained IVF: each query searches its `nprobe` nearest
-    * cells instead of one — the standard IVF recall/latency knob. Corpus
-    * cells stay disjoint (every vector lives in exactly one inverted
-    * list), so probing fans out only the tiny query side (q × nprobe rows
-    * into the cell join) and recall rises at O(nprobe) extra candidate
-    * cost — nothing about the corpus layout changes. The query-side
-    * nprobe-nearest ranking windows over ≤ k rows per query.
-    * `private[graft]` so AnnRecallSpec can sweep the recall/latency curve
-    * at p ∈ {1, 2, 4} against brute-force truth.
+  /** IVF search over the TRAINED codebook — train → assign → search
+    * end-to-end. Every vector is assigned to its nearest of the 16
+    * trained centroids by the same broadcast argmin used in training
+    * ([[trainedAssignment]]); each query searches its `nprobe` nearest
+    * cells — the standard IVF recall/latency knob. Corpus cells stay
+    * disjoint (every vector lives in exactly one inverted list), so
+    * probing fans out only the tiny query side (q × nprobe rows into the
+    * cell join) and recall rises at O(nprobe) extra candidate cost.
+    * Distances to the float codebook are bit-portable, so the DuckDB
+    * oracle reproduces the full 2-step training and the search exactly.
+    * `private[graft]` so AnnRecallSpec can sweep the recall/latency
+    * curve at p ∈ {1, 2, 4} against brute-force truth.
     */
   private[graft] def ivfSearch(s: SparkSession, dir: String,
-      nprobe: Int): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val assigned = trainedAssignment(s, dir)
-    val cents = trainedCodebook(s, dir)
-    // probe fold (see nearestCells): same (dist² asc, cid asc) selection
-    // as the row_number window it replaces, minus the window exchange
-    val q = featurizedCorpus(s, dir).filter(col("vec_id") < 50)
-      .crossJoin(broadcast(centArray(cents)))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        sqrt(col("nrm2")).as("q_nrm"),
-        explode(nearestCells(col("embedding"), col("nrm2"), col("cbk"),
-          nprobe)).as("pc"))
-      .select(col("q_id"), col("q_emb"), col("q_nrm"),
-        col("pc.cid").as("cell"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("score").desc, col("vec_id"))
-    assigned.join(q, "cell")
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        Num.r4(cosine(col("embedding"), col("q_emb"), col("nrm"), col("q_nrm")))
-          .as("score"))
-      .withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= 3)
-      .orderBy("q_id", "rn")
-  }
+      nprobe: Int): DataFrame =
+    ivfCosineSearch(trainedAssignment(s, dir),
+      featurizedCorpus(s, dir).filter(col("vec_id") < 50),
+      sqrt(col("nrm2")), trainedCodebook(s, dir), nprobe, 3)
 
   private def qSimIvfProbe(s: SparkSession, dir: String): DataFrame =
     ivfSearch(s, dir, nprobe = 2)
@@ -876,23 +801,25 @@ object Similarity {
       .select(col("vec_id").as("q_id"), col("s"), col("cid"),
         pqD2(col("sv"), col("cemb")).cast(DecimalType(20, 10)).as("d"))
 
+  /** The ADC tail: candidate `(q_id, vec_id, d, …)` rows, one per
+    * (pair, subspace), summed DECIMAL-exact into one approximate
+    * distance per pair (plus `carry` aggregates), then top-k ascending.
+    */
+  private def adcTopK(candidates: DataFrame, k: Int,
+      carry: Column*): DataFrame =
+    topK(candidates.filter(col("vec_id") =!= col("q_id"))
+      .groupBy("q_id", "vec_id")
+      .agg(Num.r4(sum(col("d")).cast(DoubleType)).as("adist"), carry: _*),
+      col("adist"), k)
+
   private def qSimPq(s: SparkSession, dir: String): DataFrame = {
     val sub = pqSubvectors(emb(s, dir))
     val cb = pqCodebook(sub)
-    val codes = pqCodes(sub, cb)
-    val qd = pqAdcTable(sub, cb)
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("adist").asc, col("vec_id").asc)
     // the ADC table is #queries × (4 subspaces × 4 centroids) rows — by
     // construction broadcast-sized at any corpus scale, and the corpus
     // side (codes) must never shuffle for it
-    codes.join(broadcast(qd), Seq("s", "cid"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .groupBy("q_id", "vec_id")
-      .agg(Num.r4(sum(col("d")).cast(DoubleType)).as("adist"))
-      .withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= 3)
-      .orderBy("q_id", "rn")
+    adcTopK(pqCodes(sub, cb)
+      .join(broadcast(pqAdcTable(sub, cb)), Seq("s", "cid")), 3)
   }
 
   /** IVF-PQ — the full production ANN composition: IVF partitions the
@@ -902,9 +829,9 @@ object Similarity {
     * nearest trained cells and scores ONLY those cells' codes against
     * its broadcast ADC table — at 100 TB both knobs matter: nprobe/k of
     * the corpus is read, and what is read is ~64× smaller than the
-    * vectors. Cell probing shares [[ivfSearch]]'s expression trees, the
-    * PQ kernel shares [[qSimPq]]'s, so the composition is oracle-exact
-    * by construction.
+    * vectors. Cell probing is [[ivfSearch]]'s [[probe]], the PQ kernel
+    * is [[qSimPq]]'s [[adcTopK]], so the composition is oracle-exact by
+    * construction.
     */
   private def qSimIvfPq(s: SparkSession, dir: String): DataFrame = {
     val sub = pqSubvectors(emb(s, dir))
@@ -914,28 +841,10 @@ object Similarity {
     val celled = pqCodes(sub, cb)
       .join(trainedAssignment(s, dir).select(col("vec_id"), col("cell")),
         "vec_id")
-    // query side: probe the 2 nearest trained cells (same argmin tree as
-    // ivfSearch) + the per-query ADC table
-    val cents = trainedCodebook(s, dir)
-    // probe fold (see nearestCells): same (dist² asc, cid asc) selection
-    // as the row_number window it replaces, minus the window exchange
-    val probed = featurizedCorpus(s, dir).filter(col("vec_id") < 8)
-      .crossJoin(broadcast(centArray(cents)))
-      .select(col("vec_id").as("q_id"),
-        explode(nearestCells(col("embedding"), col("nrm2"), col("cbk"),
-          2)).as("pc"))
-      .select(col("q_id"), col("pc.cid").as("cell"))
-    val qd = pqAdcTable(sub, cb)
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("adist").asc, col("vec_id").asc)
-    celled.join(broadcast(probed), "cell")
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(broadcast(qd), Seq("q_id", "s", "cid"))
-      .groupBy("q_id", "vec_id")
-      .agg(Num.r4(sum(col("d")).cast(DoubleType)).as("adist"))
-      .withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= 3)
-      .orderBy("q_id", "rn")
+    val probed = probe(featurizedCorpus(s, dir).filter(col("vec_id") < 8),
+      trainedCodebook(s, dir), 2)
+    adcTopK(celled.join(broadcast(probed), "cell")
+      .join(broadcast(pqAdcTable(sub, cb)), Seq("q_id", "s", "cid")), 3)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
@@ -200,6 +204,62 @@ class SimilaritySpec extends TestSpark {
         Similarity.l2norm(col("a")), Similarity.l2norm(col("b"))).as("c"))
       .head
     assert(row.isNullAt(0))
+  }
+
+  test("zero-norm vectors: embedding dedup and the top-k heap skip them") {
+    // two all-zero vectors: the all-pairs dedup scores their pair, and
+    // sign-LSH buckets them together (a zero vector sets every sign bit)
+    val dir = Files.createTempDirectory("graft_zero_norm").toString
+    val zero = Set(5L, 6L)
+    val rng = new scala.util.Random(7)
+    (0L until 30L).map { id =>
+      val v = if (zero(id)) Array.fill(64)(0.0f)
+        else Array.fill(64)(rng.nextGaussian().toFloat)
+      (id, v, (id % 10).toInt)
+    }.toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$dir/embeddings.parquet")
+    def run(key: String) = graft.SparkEntry.queries(key)(spark, dir).collect()
+    val pairs = run("q_dedup_embed") ++ run("q_dedup_embed_lsh")
+    assert(pairs.forall(r => !zero(r.getLong(0)) && !zero(r.getLong(1))),
+      "a zero-norm vector was reported as a near-dup")
+    val viaAgg = run("q_sim_topk_agg").map(r => (r.getLong(0), r.getDouble(1)))
+    val viaSort = run("q_sim_topk").map(r => (r.getLong(0), r.getDouble(1)))
+    assert(viaSort.length === 10 && viaAgg.toSeq === viaSort.toSeq)
+  }
+
+  test("IVF searches refuse nprobe < 1 and k < 1") {
+    intercept[IllegalArgumentException](
+      Similarity.ivfPqIndexedSearch(spark, Sf, nprobe = 0))
+    intercept[IllegalArgumentException](
+      Similarity.ivfFilteredSearchAdaptive(spark, Sf, nprobe = 2,
+        pred = col("label") < 5, k = 0))
+  }
+
+  test("guard: one ranking window, one probe fold, one assignment fold") {
+    val f = Paths.get("src/main/scala/graft/ops/Similarity.scala")
+    assert(Files.isRegularFile(f), s"run from the repository root: $f")
+    val lines = Files.readAllLines(f).asScala.toIndexedSeq
+    // comments and the oracle's stripMargin SQL lines are not code
+    def code(l: String): Boolean = {
+      val t = l.trim
+      !Seq("*", "/**", "//", "|").exists(t.startsWith)
+    }
+    // the member def each line belongs to (nested defs sit deeper)
+    val member = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r
+    val owner = lines.scanLeft("") { (d, l) =>
+      member.findFirstMatchIn(l).map(_.group(1)).getOrElse(d)
+    }.tail
+    val windows = lines.indices.filter(i =>
+      code(lines(i)) && lines(i).contains("row_number().over("))
+    assert(windows.size === 1, "row_number().over( in " +
+      windows.map(i => s"${owner(i)} (line ${i + 1})").mkString(", "))
+    Seq("nearestCells", "nearestCell").foreach { fold =>
+      val callers = lines.indices.filter { i =>
+        val l = lines(i)
+        code(l) && l.contains(s"$fold(") && !l.contains(s"def $fold(")
+      }.map(owner).distinct
+      assert(callers.size === 1, s"$fold( is called from ${callers.mkString(", ")}")
+    }
   }
 
   test("trained IVF searches within trained cells and improves on random") {

@@ -72,10 +72,12 @@ object Memo {
   }
 
   /** Eagerly checkpoint `df` so an iterative plan stays O(1) per round,
-    * and register its blocks for [[release]]. With a reliable checkpoint
-    * dir set on the context (an HDFS/S3 path on a real cluster) the
-    * checkpoint survives executor loss — the 100 TB setting; without one
-    * it is a fast `localCheckpoint` whose blocks live on the executors.
+    * or a frame several actions read is built once with the partition
+    * count AQE gave its final stage, and register its blocks for
+    * [[release]]. With a reliable checkpoint dir set on the context (an
+    * HDFS/S3 path on a real cluster) the checkpoint survives executor
+    * loss — the 100 TB setting; without one it is a fast
+    * `localCheckpoint` whose blocks live on the executors.
     */
   def checkpoint(df: DataFrame): DataFrame = {
     val c =

@@ -24,11 +24,13 @@ import graft.io.Sources
   * source row count: exit code 0 means all seven tables landed exactly
   * their source row counts, any mismatch exits 1. Source rows are observed
   * on the write itself (`Dataset.observe`, no job of their own); landed
-  * rows are counted by the target: a `SELECT COUNT(*)` the database
-  * answers for `--jdbc`, a parquet re-read for `--out`. For `--jdbc` the
-  * landed count is the before/after DELTA of this run's append, so
-  * re-running against a pre-existing database verifies this run's rows,
-  * not the table's cumulative contents.
+  * rows are counted by the target: for `--jdbc` a `SELECT COUNT(*)` the
+  * database answers over the driver's own JDBC connection (no Spark job),
+  * for `--out` a parquet re-read. For `--jdbc` the landed count is the
+  * before/after DELTA of this run's append, so re-running against a
+  * pre-existing database verifies this run's rows, not the table's
+  * cumulative contents. A `--jdbc` run is one Spark job per table (its
+  * write) plus the one build of the keyed roster all seven share.
   */
 object Migrate {
 
@@ -65,9 +67,9 @@ object Migrate {
     // — mapping it to 0 would mis-report a read error as "landed counts do
     // not match source" and hide the real cause. Table-not-found is
     // recognized by SQLSTATE 42X05 (Derby) / 42S02 (MySQL/standard) /
-    // 42P01 (PostgreSQL) on the SQLException chain under Spark's analysis
-    // wrapper. Targets whose drivers report table-not-found under a
-    // different (or null) SQLSTATE — e.g. SQLite — are not auto-detected:
+    // 42P01 (PostgreSQL) on the SQLException's cause chain. Targets whose
+    // drivers report table-not-found under a different (or null)
+    // SQLSTATE — e.g. SQLite — are not auto-detected:
     // against those, create the tables before the first --jdbc run
     // (round-9 ADVICE documents the supported-target contract).
     def isTableMissing(e: Throwable): Boolean =
@@ -77,13 +79,20 @@ object Migrate {
         case _ => false
       }
     def jdbcCount(url: String, name: String): Long =
-      // the database counts and returns one row: one job, whatever the
-      // table holds (a `dbtable` count() would pull every row back through
-      // one cursor). Derby types COUNT(*) as INTEGER, others as BIGINT.
-      try spark.read.format("jdbc").option("url", url)
-        .option("query", s"SELECT COUNT(*) AS n FROM $name").load().head()
-        .get(0).asInstanceOf[Number].longValue
-      catch { case e: Exception if isTableMissing(e) => 0L }
+      // the database counts and returns one row over one plain connection
+      // on the driver: no Spark job, and no schema-resolution round trip
+      // before it (a Spark JDBC read opens a driver connection for the
+      // schema and then a task connection inside a job). Derby types
+      // COUNT(*) as INTEGER, others as BIGINT; getLong reads both.
+      try {
+        val conn = java.sql.DriverManager.getConnection(url)
+        try {
+          val rs = conn.createStatement()
+            .executeQuery(s"SELECT COUNT(*) FROM $name")
+          rs.next()
+          rs.getLong(1)
+        } finally conn.close()
+      } catch { case e: java.sql.SQLException if isTableMissing(e) => 0L }
     val bundle = Migration.migrateAll(spark, sfDir)
     bundle.map { case (name, frame) =>
       // counted by the write's own tasks; read only after the write returns

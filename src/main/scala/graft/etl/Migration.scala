@@ -194,34 +194,31 @@ object Migration {
     // and identical partition boundaries across the two evaluations would
     // rest on RangePartitioner's sampling being deterministic — an
     // implementation detail AQE replanning can break (round-3 ADVICE,
-    // medium). One materialization makes the invariant structural.
-    // The ≤ nParts-row offsets are persisted beside it: every action over
-    // the result (the seven writes of [[migrateAll]]) then broadcasts one
-    // offsets table instead of re-running its groupBy and single-partition
-    // window. Both stay lazy (no job here) and are
-    // registered with [[graft.Memo]], so `Memo.release()` (called by the
-    // Verify/Bench mains) frees them together and deterministically instead
-    // of waiting on GC + ContextCleaner (round-4 ADVICE).
+    // medium). One materialization makes the invariant structural. It
+    // stays lazy (no job here) and is registered with [[graft.Memo]], so
+    // `Memo.release()` (called by the Verify/Bench mains) frees it
+    // deterministically instead of waiting on GC + ContextCleaner
+    // (round-4 ADVICE).
     val parted = graft.Memo.persist(
       df.repartitionByRange(order)
         .withColumn("__pid", spark_partition_id()))
     val local = parted.withColumn("__idx",
       row_number().over(Window.partitionBy("__pid").orderBy(order))
         .cast(LongType))
-    val offsets = graft.Memo.persist(parted.groupBy("__pid")
+    val offsets = parted.groupBy("__pid")
       .agg(count(lit(1)).as("__n"))
       .select(col("__pid"),
         coalesce(sum(col("__n")).over(
           Window.orderBy("__pid")
             .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-          .as("__off")))
+          .as("__off"))
     local.join(broadcast(offsets), "__pid")
       .withColumn(idName, col("__off") + col("__idx"))
       .drop("__pid", "__idx", "__off")
   }
 
   /** The roster with its minted `person_id` — the one keyed base. */
-  private def keyedRoster(s: SparkSession, dir: String): DataFrame =
+  private[graft] def keyedRoster(s: SparkSession, dir: String): DataFrame =
     surrogateKeysScaled(customer(s, dir), key, "person_id")
 
   private def qSurrogateKeyScaled(s: SparkSession, dir: String): DataFrame =
@@ -306,25 +303,26 @@ object Migration {
     * INSERTs + a lastrowid round-trip per client (reference
     * `README.md:7-17`), every table here is a declarative frame off ONE
     * shared keyed scan: `person_id` is minted once by
-    * [[surrogateKeysScaled]] (the persisted range-partitioned frame), so
-    * cross-table FK consistency is structural — no table re-derives the
-    * key, and a [[graft.io.Sources.jdbcAppend]] over this Seq in order
-    * satisfies every FK at insert time. uuids go through [[mintUuid]]:
+    * [[surrogateKeysScaled]], so cross-table FK consistency is
+    * structural — no table re-derives the key, and a
+    * [[graft.io.Sources.jdbcAppend]] over this Seq in order satisfies
+    * every FK at insert time. uuids go through [[mintUuid]]:
     * deterministic by default, real `uuid()` under [[ProdUuidFlag]].
     *
-    * The keyed base itself is deliberately NOT persisted, although all
-    * seven tables read it: a cached plan keeps its partition count (Spark
-    * does not let AQE change a cached plan's output partitioning), so each
-    * write would run as many writer tasks as the base has partitions
-    * instead of the few AQE coalesces them to. Against Derby that meant 4
-    * concurrent writers per table and a ~15% larger database. Re-running
-    * the local ranks per table is cheap next to that; the roster scan and
-    * the offsets are shared through [[surrogateKeysScaled]]'s persists.
+    * The keyed base is built ONCE, by an eager [[graft.Memo.checkpoint]]
+    * (its jobs run here), so each of the seven frames is a map-only scan:
+    * the `__pid` shuffle and the offsets run once, not once per table. A
+    * checkpoint, not a persist: the checkpoint's RDD keeps the partition
+    * count AQE coalesced the build's final stage to, while a cached plan
+    * keeps its un-coalesced count (AQE may not change a cached plan's
+    * output partitioning). At sf0.01 that is one writer per table instead
+    * of 4 concurrent ones, and against Derby 4 writers made an 8–12%
+    * larger database.
     */
   def migrateAll(s: SparkSession, dir: String): Seq[(String, DataFrame)] = {
     val nation = Sources.table(s, dir, "nation")
       .select(col("n_nationkey"), col("n_name"))
-    val base = keyedRoster(s, dir)
+    val base = graft.Memo.checkpoint(keyedRoster(s, dir))
 
     val personName = base.select(
       col("person_id"),

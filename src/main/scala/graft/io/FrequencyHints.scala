@@ -167,12 +167,14 @@ object GraftFrequencyHints extends Rule[LogicalPlan] {
           // the lower bound is sound only when the filter is EXACTLY
           // one equality (this one) plus conjuncts it already implies
           // (its own IsNotNull — the analyzer's constraint inference —
-          // and IsNotNull of a column every entry's null account proves
-          // null-free, such as an inferred join-key guard); any other
-          // conjunct — including a SECOND equality — could shrink the
-          // side below the bound, so NO_BROADCAST declines
+          // and IsNotNull of a column the recorded schema declares NOT
+          // NULL or every entry's null account proves null-free, such as
+          // an inferred join-key guard over an all-nullable snapshot
+          // view); any other conjunct — including a SECOND equality —
+          // could shrink the side below the bound, so NO_BROADCAST
+          // declines
           def nullFree(a: AttributeReference): Boolean =
-            relationName(f.child, a).exists(c =>
+            relationName(f.child, a).exists(c => m.notNull(c) ||
               entries.forall(_.nulls.get(c).contains(0L)))
           val onlyEq = cs.count(isEqLit) == 1 && cs.forall { c =>
             isEqLit(c) || (c match {

@@ -29,12 +29,17 @@ import org.apache.spark.sql.types._
   * instance (entries are immutable dirs) and only surviving entries'
   * files reach the scan. Unknown predicate shapes or unstatted columns
   * prune nothing — sound-first, like every pruning path in the format.
+  *
+  * `notNull` names (physically) the columns the snapshot's recorded
+  * schema declares NOT NULL: a snapshot read plans all-nullable, so the
+  * planner rules that need the recorded nullability read it here.
   */
 private[graft] final class ManifestFileIndex(
     spark: SparkSession, private[graft] val root: String,
     private[graft] val entries: Seq[TableFormat.Entry],
     private[graft] val writeOpts: Map[String, String] = Map.empty,
-    private[graft] val maskPending: Boolean = false)
+    private[graft] val maskPending: Boolean = false,
+    private[graft] val notNull: Set[String] = Set.empty)
     extends FileIndex {
 
   /** A dv-bearing snapshot served through the one-relation doorway is
@@ -231,10 +236,11 @@ private[graft] object ManifestFileIndex {
   private[graft] def relation(spark: SparkSession, root: String,
       entries: Seq[TableFormat.Entry], schema: StructType,
       writeOpts: Map[String, String] = Map.empty,
-      maskPending: Boolean = false): BaseRelation =
+      maskPending: Boolean = false,
+      notNull: Set[String] = Set.empty): BaseRelation =
     HadoopFsRelation(
       location = new ManifestFileIndex(spark, root, entries, writeOpts,
-        maskPending),
+        maskPending, notNull),
       partitionSchema = StructType(Nil),
       dataSchema = schema,
       bucketSpec = None,
@@ -242,7 +248,9 @@ private[graft] object ManifestFileIndex {
       options = Map.empty)(spark)
 
   private[graft] def frame(spark: SparkSession, root: String,
-      entries: Seq[TableFormat.Entry], schema: StructType): DataFrame =
+      entries: Seq[TableFormat.Entry], schema: StructType,
+      notNull: Set[String]): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .baseRelationToDataFrame(relation(spark, root, entries, schema))
+      .baseRelationToDataFrame(relation(spark, root, entries, schema,
+        notNull = notNull))
 }

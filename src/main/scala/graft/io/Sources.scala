@@ -1,7 +1,5 @@
 package graft.io
 
-import java.util.Properties
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -356,8 +354,7 @@ object Sources {
     */
   def jdbcRead(spark: SparkSession, url: String, table: String,
                partitionColumn: String, lowerBound: Long, upperBound: Long,
-               numPartitions: Int,
-               props: Properties = new Properties()): DataFrame =
+               numPartitions: Int): DataFrame =
     spark.read.format("jdbc")
       .option("url", url)
       .option("dbtable", table)
@@ -374,8 +371,7 @@ object Sources {
     * bulk inserts; idempotent re-runs should instead stage into a temp table
     * and MERGE (see [[graft.stream.Streaming.foreachBatchUpsert]]).
     */
-  def jdbcAppend(df: DataFrame, url: String, table: String,
-                 props: Properties = new Properties()): Unit =
+  def jdbcAppend(df: DataFrame, url: String, table: String): Unit =
     df.write.format("jdbc")
       .option("url", url)
       .option("dbtable", table)

@@ -1127,10 +1127,12 @@ object TableFormat {
     * dirs scan plain, dv-bearing dirs scan under the broadcast
     * anti-join mask ([[dvMaskLegs]]), and predicates push through both
     * legs, so a DV-bearing table prunes exactly like a clean one. An
-    * empty entry set reads as an empty frame under `schema`.
+    * empty entry set reads as an empty frame under `schema`. `notNull`
+    * rides on every leg's index ([[ManifestFileIndex]]).
     */
   private[graft] def entriesFrame(spark: SparkSession, root: String,
-      entries: Seq[Entry], schema: StructType): DataFrame = {
+      entries: Seq[Entry], schema: StructType,
+      notNull: Set[String] = Set.empty): DataFrame = {
     val pmap = physMapOf(schema)
     val physSchema = physicalize(schema)
     // the scan legs plan under PHYSICAL attribute names, so predicates
@@ -1144,7 +1146,7 @@ object TableFormat {
         ndv = e.ndv.map { case (c, x) => pmap.getOrElse(c, c) -> x },
         nulls = e.nulls.map { case (c, n) => pmap.getOrElse(c, c) -> n }))
     def frame(xs: Seq[Entry]): DataFrame =
-      ManifestFileIndex.frame(spark, root, xs, physSchema)
+      ManifestFileIndex.frame(spark, root, xs, physSchema, notNull)
     val (withDv, clean) = es.partition(_.dv.nonEmpty)
     val raw =
       if (withDv.isEmpty) frame(es)
@@ -1276,7 +1278,9 @@ object TableFormat {
                    version: Int = -1): DataFrame = {
     val v = if (version < 0) latestVersion(root) else version
     val m = readManifestFull(root, v)
-    entriesFrame(spark, root, m.entries, readSchema(root, v, m))
+    val notNull = manifestSchema(m).toSeq
+      .flatMap(_.fields.filterNot(_.nullable).map(physNameOf)).toSet
+    entriesFrame(spark, root, m.entries, readSchema(root, v, m), notNull)
   }
 
   /** Row count of a snapshot from manifest metadata alone when the

@@ -109,11 +109,12 @@ class FreqStatsSpec extends TestSpark {
       (0L until 500L).map(i =>
         (i % 1000L, f"r${i % 40}%02d", s"payload-$i-y"))
 
-  private def landSkew(withFreq: Boolean): String = {
+  private def landSkew(withFreq: Boolean,
+      statsCols: Seq[String] = Seq("j")): String = {
     import spark.implicits._
     val root = freshRoot() + "/t"
     TableFormat.append(skewRows.toDF("j", "lang", "payload"), root,
-      statsCols = Seq("j"), ndvCols = Seq("j", "lang"),
+      statsCols = statsCols, ndvCols = Seq("j", "lang"),
       histCols = if (withFreq) Seq("lang") else Nil)
     root
   }
@@ -151,12 +152,24 @@ class FreqStatsSpec extends TestSpark {
     // threshold sits between uniformity's ~1.2k-row estimate and the
     // true 49.5k-row mass of 'en'
     val thr = 64L * 1024L
-    val withFreq = plan(landSkew(withFreq = true), otherRoot, "en", thr)
-    val without = plan(landSkew(withFreq = false), otherRoot, "en", thr)
-    assert(without.contains("BroadcastHashJoin"),
-      s"uniformity must (wrongly) broadcast the filtered side:\n$without")
-    assert(!withFreq.contains("BroadcastHashJoin"),
-      s"the summary's true mass must suppress the broadcast:\n$withFreq")
+    // the view reads the join key `j` nullable, so the join's inferred
+    // IsNotNull(j) must be implied by j's null accounts (statted) or, with
+    // none, by the manifest schema recording it NOT NULL
+    Seq(Seq("j"), Nil).foreach { statsCols =>
+      val root = landSkew(withFreq = true, statsCols)
+      val m = TableFormat.readManifestFull(root,
+        TableFormat.latestVersion(root))
+      assert(m.entries.forall(_.nulls.contains("j")) === statsCols.nonEmpty)
+      val withFreq = plan(root, otherRoot, "en", thr)
+      val without = plan(landSkew(withFreq = false, statsCols), otherRoot,
+        "en", thr)
+      assert(without.contains("BroadcastHashJoin"),
+        s"uniformity must (wrongly) broadcast the filtered side " +
+          s"(statsCols $statsCols):\n$without")
+      assert(!withFreq.contains("BroadcastHashJoin"),
+        s"the summary's true mass must suppress the broadcast " +
+          s"(statsCols $statsCols):\n$withFreq")
+    }
   }
 
   test("a rare string equality enables a broadcast ONLY with the " +

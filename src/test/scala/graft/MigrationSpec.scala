@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.etl.Migration
@@ -115,6 +119,29 @@ class MigrationSpec extends TestSpark {
     val plan = graft.SparkEntry.queries("q_person")(spark, Sf)
       .queryExecution.executedPlan.toString
     assertOnlyPidWindows(plan, "q_person")
+  }
+
+  test("guard: one checkpoint (the bundle base) and one persist (parted)") {
+    val f = Paths.get("src/main/scala/graft/etl/Migration.scala")
+    assert(Files.isRegularFile(f), s"run from the repository root: $f")
+    // comments and the oracle's stripMargin SQL lines are not code
+    val code = Files.readAllLines(f).asScala.toIndexedSeq.filterNot { l =>
+      val t = l.trim
+      Seq("*", "/**", "//", "|").exists(t.startsWith)
+    }
+    def calls(op: String): Seq[String] =
+      code.filter(l => l.contains(s".$op(") || l.contains(s".$op()"))
+        .map(_.trim)
+    // the seven bundle frames scan ONE checkpoint of the keyed base: a
+    // second materialization (or none) brings back the per-table
+    // __pid shuffle; a persist in its place keeps 4 writers per table
+    assert(calls("checkpoint") ===
+      Seq("val base = graft.Memo.checkpoint(keyedRoster(s, dir))"))
+    // the range-partitioned roster both surrogate-key branches read is
+    // the one persist; the offsets are not persisted
+    assert(calls("persist") === Seq("val parted = graft.Memo.persist("))
+    Seq("cache", "localCheckpoint").foreach(op =>
+      assert(calls(op).isEmpty, s"$op in Migration: ${calls(op)}"))
   }
 
   test("migrateAll bundle is FK-consistent across all seven tables") {

@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
+
+import graft.etl.Migration
 
 /** Physical-plan audits for the round-6 operators — the plan each query
   * SHOULD have at 100 TB, pinned so an innocent refactor can't silently
@@ -57,8 +60,33 @@ class PlanAuditSpec extends TestSpark {
   }
 
   test("q_migrate_bundle: no partition-unbounded window anywhere in 7 tables") {
-    val plan = staticPlan("q_migrate_bundle").toString
-    assertOnlyPidWindows(plan, "q_migrate_bundle")
+    // every window sits in the keyed base's one build, the checkpoint
+    // migrateAll takes of keyedRoster (MigrationSpec guards that it is
+    // the only one): all keyed by __pid, and at least one there
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val build =
+      try Migration.keyedRoster(spark, Sf).queryExecution.executedPlan
+      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assertOnlyPidWindows(build.toString, "keyed base build")
+    // the seven tables scan the checkpoint map-side: no window, no
+    // shuffle, and only person_address's nation broadcast as an exchange
+    val frames = Migration.migrateAll(spark, Sf)
+    assert(frames.size === 7)
+    frames.foreach { case (name, df) =>
+      val plan = df.queryExecution.executedPlan
+      val windows = TestSpark.Plans.collect(plan) { case w: WindowExec => w }
+      val exchanges = TestSpark.Plans.collect(plan) { case e: Exchange => e }
+      assert(windows.isEmpty, s"$name windows over the checkpoint:\n$plan")
+      val expected = if (name == "person_address") 1 else 0
+      assert(exchanges.size === expected &&
+        exchanges.forall(_.isInstanceOf[BroadcastExchangeExec]),
+        s"$name has exchanges beyond the nation broadcast:\n$plan")
+      // one writer per table at sf0.001: the checkpoint keeps the
+      // partition count AQE coalesced the build to (a persisted base
+      // keeps the un-coalesced 4)
+      assert(df.rdd.getNumPartitions === 1,
+        s"$name reads ${df.rdd.getNumPartitions} partitions")
+    }
   }
 
   test("q_pagerank: the per-iteration subtree has exactly one shuffle") {
@@ -118,10 +146,10 @@ class PlanAuditSpec extends TestSpark {
 
   test("q_migrate_bundle: all seven tables reuse ONE materialized roster scan") {
     val plan = staticPlan("q_migrate_bundle")
-    // the keyed roster (surrogateKeysScaled over customer) is persisted;
-    // every per-table branch must hit that cache, so the executed plan
-    // contains NO direct parquet scan of customer — a regression here
-    // re-reads the 100 TB roster once per table
+    // the keyed roster (surrogateKeysScaled over customer) is
+    // checkpointed; every per-table branch must scan that checkpoint, so
+    // the executed plan contains NO direct parquet scan of customer — a
+    // regression here re-reads the 100 TB roster once per table
     val custScans = plan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec
           if f.metadata.get("Location").exists(_.contains("customer")) => f

@@ -93,7 +93,7 @@ trait TestSpark extends AnyFunSuite with BeforeAndAfterAll {
 
 object TestSpark {
   /** Plan walks that descend into adaptive query stages. */
-  private object Plans extends AdaptiveSparkPlanHelper
+  object Plans extends AdaptiveSparkPlanHelper
 
   lazy val session: SparkSession = {
     val s = SparkSession.builder()

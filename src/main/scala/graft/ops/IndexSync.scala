@@ -19,10 +19,12 @@ import graft.io.{Sources, TableFormat}
   *     `(doc_id, dl)` table. IVF index = a table of assigned
   *     `(vec_id, cell, embedding, …)` rows against a FROZEN codebook.
   *   - refresh = read the corpus change feed since the last indexed
-  *     version, then: deleted/update-preimage keys → [[TableFormat
-  *     .deleteKeysMor]] (deletion-vector sidecars — O(changed docs)
-  *     writes, NO posting-bucket rewrite), inserted/update-postimage
-  *     rows → tokenize/assign ONLY the delta and append. Cost ∝ changed
+  *     version (−1 for a never-built index, so the first build is a
+  *     refresh whose feed is the whole snapshot as inserts), then:
+  *     deleted/update-preimage keys → [[TableFormat.deleteKeysMor]]
+  *     (deletion-vector sidecars — O(changed docs) writes, NO
+  *     posting-bucket rewrite), inserted/update-postimage rows →
+  *     tokenize/assign ONLY the delta and append. Cost ∝ changed
   *     rows, never corpus or index size — at 100 TB that is the entire
   *     point of maintaining instead of rebuilding.
   *   - a corpus compaction whose effective rows are unchanged feeds an
@@ -141,27 +143,6 @@ object IndexSync {
     ()
   }
 
-  /** Build the postings index over the LATEST corpus snapshot, the
-    * high-water marker riding each table's commit. Idempotent per
-    * table: a re-run after a crash between the two table commits lands
-    * only the missing one (the landed table's marker skips). Returns
-    * the indexed corpus version.
-    */
-  def buildPostings(s: SparkSession, corpusRoot: String,
-                    idxRoot: String): Int = {
-    val v = TableFormat.latestVersion(corpusRoot)
-    require(v >= 0, s"no corpus to index at $corpusRoot")
-    val posts = postingsOf(TableFormat.readSnapshot(s, corpusRoot))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val noDel = posts.select("doc_id").limit(0)
-      for (t <- IndexTables)
-        landDelta(s, idxRoot, t, noDel, posts,
-          txn = Some(corpusRoot -> v.toLong))
-    } finally { posts.unpersist(); () }
-    v
-  }
-
   /** Apply the corpus change feed since the last indexed version to the
     * landed postings + dl tables — never a rebuild: each table's
     * deletes (update preimages included) and delta appends land as ONE
@@ -169,7 +150,9 @@ object IndexSync {
     * between table commits re-runs only the lagging table and a
     * replayed refresh is a per-table no-op. An empty feed (nothing
     * changed, or a byte-identical compaction) commits only the marker
-    * (entries verbatim). Returns the newly indexed corpus version.
+    * (entries verbatim). A never-built index refreshes from version −1,
+    * whose feed is the whole snapshot as inserts: the first build IS a
+    * refresh. Returns the newly indexed corpus version.
     */
   def refreshPostings(s: SparkSession, corpusRoot: String,
                       idxRoot: String): Int =
@@ -181,11 +164,10 @@ object IndexSync {
   private[graft] def refreshPostingsTables(s: SparkSession,
       corpusRoot: String, idxRoot: String, only: Set[String]): Int = {
     val head = TableFormat.latestVersion(corpusRoot)
+    require(head >= 0, s"no corpus to index at $corpusRoot")
     val lasts = IndexTables
       .map(t => t -> tableIndexedVersion(tableRoot(idxRoot, t), corpusRoot))
       .filter { case (t, _) => only(t) }
-    require(lasts.forall(_._2 >= 0), s"index at $idxRoot was never " +
-      "built — call buildPostings first")
     // one tokenize pass per DISTINCT feed window (normally one; two only
     // while a half-applied refresh catches the lagging table up)
     val deltas = scala.collection.mutable.Map
@@ -367,92 +349,43 @@ object IndexSync {
 
   // ------------------------------------------- continuous maintenance
 
-  /** Apply ONE cdc feed frame (rows + `change_type`) to the landed
-    * postings/dl tables — the streaming [[followPostings]] kernel: each
-    * table's deletes (update preimages included) and delta appends land
-    * as ONE atomic commit ([[TableFormat.applyDelta]] — an index being
-    * seeded by its FIRST batch simply takes the append path, which
-    * creates the table).
-    */
-  private def applyFeed(s: SparkSession, idxRoot: String,
-                        feed: DataFrame,
-                        txn: Option[(String, Long)]): Unit = {
-    val gone = feed
-      .filter(col("change_type").isin("delete", "update_preimage"))
-      .select("doc_id")
-    val posts = postingsOf(feed
-        .filter(col("change_type").isin("insert", "update_postimage"))
-        .select("doc_id", "text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try for (t <- IndexTables)
-      landDelta(s, idxRoot, t, gone, posts, txn = txn)
-    finally { posts.unpersist(); () }
-  }
-
-  /** CONTINUOUSLY maintain the postings index from a live corpus: the
-    * table format's cdc streaming source
-    * ([[graft.io.TableFormatSourceProvider]]) feeds each micro-batch of
-    * change rows into [[applyFeed]] — the composition the streaming
-    * source exists for: corpus commits land on one side, the index
-    * follows on the other, no queue and no rebuild in between.
-    * foreachBatch delivers at-least-once, so a replayed batch is
-    * IDEMPOTENT via a per-table TRANSACTION MARKER (appId "follow",
-    * value = batch id — the [[TableFormat.applyDelta]] slot, r16: the
-    * former applied-batch FILE was moved after the table commits, so a
-    * crash in between re-applied the feed; with the marker inside each
-    * table's commit the replay skips per table). The initial batch is
-    * the snapshot-as-inserts, so following a fresh index from an
-    * existing corpus is just `start from scratch`.
+  /** CONTINUOUSLY maintain the postings index from a live corpus: every
+    * corpus commit triggers [[refreshPostings]]
+    * ([[graft.io.TableFormatStreamSource.trigger]] — the micro-batch rows
+    * are never read). Refresh is the one maintainer, so the one marker
+    * domain is corpus root → corpus version: a replayed batch, a restart
+    * and a fresh checkpoint all meet the marker and fold each window
+    * exactly once, an index built or refreshed in batch can be followed
+    * and a followed one refreshed, and a never-built index is seeded by
+    * the first batch's refresh from nothing.
     */
   def followPostings(s: SparkSession, corpusRoot: String, idxRoot: String,
                      checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    s.readStream
-      .format(classOf[graft.io.TableFormatSourceProvider].getName)
-      .option("mode", "cdc").option("keyCol", "doc_id")
-      .load(corpusRoot)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (feed: DataFrame, batchId: Long) =>
-        applyFeed(s, idxRoot, feed, txn = Some("follow" -> batchId))
-      }
-      .start()
+    graft.io.TableFormatStreamSource.trigger(s, corpusRoot, checkpoint) {
+      refreshPostings(s, corpusRoot, idxRoot); ()
+    }
 
   // -------------------------------------------------------- IVF index
 
   private def cellsRoot(idxRoot: String) = idxRoot + "/cells"
-
-  /** Build the IVF inverted file over the LATEST vector-corpus snapshot
-    * against a FROZEN broadcast codebook — the shared
-    * [[Similarity.assignVectors]] kernel, like the streaming ingest, so
-    * maintained, streamed, and batch-built cells cannot drift.
-    */
-  def buildIvf(s: SparkSession, vecRoot: String, idxRoot: String,
-               cents: DataFrame): Int = {
-    val v = TableFormat.latestVersion(vecRoot)
-    require(v >= 0, s"no vector corpus to index at $vecRoot")
-    val assigned = Similarity.assignVectors(
-      TableFormat.readSnapshot(s, vecRoot)
-        .select("vec_id", "embedding"), cents)
-    TableFormat.applyDelta(s, cellsRoot(idxRoot),
-      assigned.select("vec_id").limit(0), "vec_id", assigned,
-      statsCols = Seq("cell", "vec_id"), txn = Some(vecRoot -> v.toLong))
-    v
-  }
 
   /** Apply the vector corpus's change feed to the landed IVF cells:
     * dead/update-preimage vectors masked AND fresh vectors assigned
     * against the SAME frozen codebook, ONE marker-carrying commit
     * (standard IVF maintenance — centroids stay put between retrains,
     * so assignment is delta-only). Cost ∝ changed vectors; replay and
-    * racing refreshers skip on the marker.
+    * racing refreshers skip on the marker. A never-built index
+    * refreshes from version −1: the whole snapshot assigns as inserts
+    * through the shared [[Similarity.assignVectors]] kernel, like the
+    * streaming ingest, so maintained, streamed and first-built cells
+    * cannot drift.
     */
   def refreshIvf(s: SparkSession, vecRoot: String, idxRoot: String,
                  cents: DataFrame): Int = {
     val head = TableFormat.latestVersion(vecRoot)
+    require(head >= 0, s"no vector corpus to index at $vecRoot")
     val last = tableIndexedVersion(cellsRoot(idxRoot), vecRoot)
-    require(last >= 0, s"IVF index at $idxRoot was never built")
     if (head <= last) return last
     val feed = TableFormat.readChanges(s, vecRoot, last, head, "vec_id")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -484,11 +417,12 @@ object IndexSync {
   private[graft] val CdcUpdateText = "spark merge window spark"
 
   /** Landed CDC-maintained index fixture: the documents corpus lands as
-    * a two-append TableFormat table, the postings index builds once, and
-    * then a merge+delete history drives refreshes — every 10th doc
-    * ending in 3 is REWRITTEN to a fixed query-term text (its old
-    * postings must vanish, its new ones land), every 10th ending in 7 is
-    * DELETED (a deletion-vector corpus commit). A corpus compaction then
+    * a two-append TableFormat table, the postings index builds once (a
+    * refresh from nothing), and then a merge+delete history drives
+    * refreshes — every 10th doc ending in 3 is REWRITTEN to a fixed
+    * query-term text (its old postings must vanish, its new ones land),
+    * every 10th ending in 7 is DELETED (a deletion-vector corpus
+    * commit). A corpus compaction then
     * proves the empty-feed no-op, and an index OPTIMIZE folds the index
     * tables' own deletion vectors away. Key arithmetic only, so the
     * oracle recomputes the effective corpus from `documents` alone. A
@@ -504,7 +438,7 @@ object IndexSync {
         statsCol = Some("doc_id"))
       TableFormat.append(d.filter(col("doc_id") % 2 === 1), corpusRoot,
         statsCol = Some("doc_id"))
-      buildPostings(s, corpusRoot, idxRoot)
+      refreshPostings(s, corpusRoot, idxRoot)
       TableFormat.merge(s, corpusRoot,
         d.filter(col("doc_id") % 10 === 3)
           .select(col("doc_id"), lit(CdcUpdateText).as("text")),

@@ -27,16 +27,34 @@ class IndexSyncSpec extends TestSpark {
   }
 
   /** (doc_id, pos, tok) content of a maintained postings table —
-    * deletion vectors applied, order-free compare form.
+    * deletion vectors applied, sorted: a multiset compare form, so a
+    * duplicated posting fails every equality it takes part in.
     */
-  private def postingRows(idxRoot: String): Set[(Long, Int, String)] =
+  private def postingRows(idxRoot: String): Seq[(Long, Int, String)] =
     TableFormat.readSnapshot(spark, idxRoot + "/postings")
       .select("doc_id", "pos", "tok").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq.sorted
+
+  /** Postings of a FRESH index over `corpus`'s effective head — the
+    * truth a maintained index must equal, duplicates included.
+    */
+  private def freshPostings(base: String, corpus: String,
+      tag: String): Seq[(Long, Int, String)] = {
+    TableFormat.append(TableFormat.readSnapshot(spark, corpus),
+      s"$base/$tag-head")
+    IndexSync.refreshPostings(spark, s"$base/$tag-head", s"$base/$tag-idx")
+    postingRows(s"$base/$tag-idx")
+  }
 
   private def dlRows(idxRoot: String): Map[Long, Long] =
     TableFormat.readSnapshot(spark, idxRoot + "/dl")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Follow the corpus until every committed version is indexed. */
+  private def follow(corpus: String, idx: String, ckpt: String): Unit = {
+    val q = IndexSync.followPostings(spark, corpus, idx, ckpt)
+    try q.processAllAvailable() finally q.stop()
+  }
 
   test("maintained postings == fresh build over a merge+delete history") {
     val base = freshBase()
@@ -48,7 +66,7 @@ class IndexSyncSpec extends TestSpark {
     TableFormat.append(docsDf(
       5L -> "spark plans queries", 6L -> "tokens split on space"), corpus,
       statsCol = Some("doc_id"))
-    IndexSync.buildPostings(spark, corpus, idx)
+    IndexSync.refreshPostings(spark, corpus, idx)
     // history: update doc 2 (old postings must vanish, new ones land),
     // insert doc 7, delete docs 3 and 5 (one per original dir)
     TableFormat.merge(spark, corpus,
@@ -61,16 +79,13 @@ class IndexSyncSpec extends TestSpark {
     IndexSync.refreshPostings(spark, corpus, idx)
     // the contract: maintained index content == a FRESH build over the
     // effective head — for postings and the dl sidecar both
-    val rebuilt = s"$base/rebuilt"
-    TableFormat.append(TableFormat.readSnapshot(spark, corpus), s"$base/head")
-    IndexSync.buildPostings(spark, s"$base/head", rebuilt)
-    assert(postingRows(idx) === postingRows(rebuilt),
+    assert(postingRows(idx) === freshPostings(base, corpus, "t"),
       "maintained postings drifted from the fresh build")
-    assert(dlRows(idx) === dlRows(rebuilt),
+    assert(dlRows(idx) === dlRows(s"$base/t-idx"),
       "maintained dl sidecar drifted from the fresh build")
     // spot the semantics: doc 2 has ONLY its new text's postings
     assert(postingRows(idx).filter(_._1 == 2L).map(_._3) ===
-      Set("merge", "rewrites"))
+      Seq("merge", "rewrites", "merge"))
     assert(!postingRows(idx).exists(p => p._1 == 3L || p._1 == 5L))
     // and the refresh wrote deletion vectors, not rewritten dirs: the
     // postings table's data dirs survived both refreshes untouched
@@ -88,7 +103,7 @@ class IndexSyncSpec extends TestSpark {
       corpus, statsCol = Some("doc_id"))
     TableFormat.append(docsDf(3L -> "hash probes"), corpus,
       statsCol = Some("doc_id"))
-    IndexSync.buildPostings(spark, corpus, idx)
+    IndexSync.refreshPostings(spark, corpus, idx)
     val pv = TableFormat.latestVersion(idx + "/postings")
     val pDirs = TableFormat.snapshotDirs(idx + "/postings", pv)
     val dv = TableFormat.latestVersion(idx + "/dl")
@@ -122,7 +137,7 @@ class IndexSyncSpec extends TestSpark {
     TableFormat.append(docsDf((1L to 40L).map(i =>
       i -> s"tok$i spark common filler$i"): _*), corpus,
       statsCol = Some("doc_id"))
-    IndexSync.buildPostings(spark, corpus, idx)
+    IndexSync.refreshPostings(spark, corpus, idx)
     TableFormat.deleteKeysMor(spark, corpus,
       (1L to 40L by 4L).toDF("doc_id"), "doc_id")
     IndexSync.refreshPostings(spark, corpus, idx)
@@ -152,11 +167,12 @@ class IndexSyncSpec extends TestSpark {
     TableFormat.append(docsDf(
       1L -> "spark shuffles data", 2L -> "merge sorts runs",
       3L -> "window frames slide"), corpus, statsCol = Some("doc_id"))
-    IndexSync.buildPostings(spark, corpus, idx)
-    // a REPLAYED build (crash after commit, restart re-runs) must not
-    // double the postings — the marker rides the table's own manifest
+    IndexSync.refreshPostings(spark, corpus, idx)
+    // a REPLAYED first build (a refresh from nothing: crash after
+    // commit, restart re-runs) must not double the postings — the marker
+    // rides the table's own manifest
     val rowsAfterBuild = postingRows(idx)
-    IndexSync.buildPostings(spark, corpus, idx)
+    IndexSync.refreshPostings(spark, corpus, idx)
     assert(postingRows(idx) === rowsAfterBuild,
       "replayed build double-applied the corpus snapshot")
     // history: one merge wave
@@ -179,11 +195,8 @@ class IndexSyncSpec extends TestSpark {
     assert(IndexSync.indexedVersion(idx, corpus) ===
       TableFormat.latestVersion(corpus))
     // and the whole thing equals a fresh build over the effective head
-    TableFormat.append(TableFormat.readSnapshot(spark, corpus),
-      s"$base/head")
-    IndexSync.buildPostings(spark, s"$base/head", s"$base/rebuilt")
-    assert(postingRows(idx) === postingRows(s"$base/rebuilt"))
-    assert(dlRows(idx) === dlRows(s"$base/rebuilt"))
+    assert(postingRows(idx) === freshPostings(base, corpus, "t"))
+    assert(dlRows(idx) === dlRows(s"$base/t-idx"))
     // CONCURRENT refreshers: a second identical delta with the same
     // marker must skip through the CAS, not double-apply — simulate the
     // loser's retry by re-applying the same per-table delta directly
@@ -209,7 +222,7 @@ class IndexSyncSpec extends TestSpark {
       i -> (if (i <= 3L) "rare rare rare common text"
             else s"common filler$i text$i")): _*)
     TableFormat.append(docs, corpus, statsCol = Some("doc_id"))
-    IndexSync.buildPostings(spark, corpus, idx)
+    IndexSync.refreshPostings(spark, corpus, idx)
     val (res, prefix, scoredDocs) = IndexSync.bm25TopKDetail(spark, idx,
       Seq("rare", "common"), 2, maxScoreMinRows = 0)
     val got = res.collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
@@ -262,7 +275,7 @@ class IndexSyncSpec extends TestSpark {
     TableFormat.append(
       vdf((1L to 6L).map(i => i -> Seq(i.toFloat, i.toFloat)): _*),
       vecs, statsCol = Some("vec_id"))
-    IndexSync.buildIvf(spark, vecs, idx, cents)
+    IndexSync.refreshIvf(spark, vecs, idx, cents)
     // history: vector 2 moves across the cell boundary (update), vector
     // 9 arrives (insert), vector 4 is deleted
     TableFormat.merge(spark, vecs,
@@ -297,7 +310,7 @@ class IndexSyncSpec extends TestSpark {
     val q = IndexSync.followPostings(spark, corpus, idx, s"$base/ckpt")
     try {
       q.processAllAvailable()
-      assert(postingRows(idx).map(_._1) === Set(1L, 2L))
+      assert(postingRows(idx).map(_._1).toSet === Set(1L, 2L))
       // live history: append, update, dv-delete — the follower applies
       // each commit's cdc rows without ever rebuilding
       TableFormat.append(docsDf(3L -> "window frames"), corpus,
@@ -310,22 +323,96 @@ class IndexSyncSpec extends TestSpark {
         "doc_id")
       q.processAllAvailable()
       // followed == fresh build over the effective head
-      TableFormat.append(TableFormat.readSnapshot(spark, corpus),
-        s"$base/head")
-      IndexSync.buildPostings(spark, s"$base/head", s"$base/rebuilt")
-      assert(postingRows(idx) === postingRows(s"$base/rebuilt"),
+      assert(postingRows(idx) === freshPostings(base, corpus, "t"),
         "followed index drifted from the fresh build")
-      assert(dlRows(idx) === dlRows(s"$base/rebuilt"))
+      assert(dlRows(idx) === dlRows(s"$base/t-idx"))
     } finally q.stop()
-    // at-least-once replay protection: re-applying the LAST batch's
-    // feed must be a no-op (the applied-batch marker), so a restart
-    // from an old checkpoint cannot double postings
+    // at-least-once replay protection: the restart replays the LAST
+    // batch, whose refresh meets the corpus-version marker and lands
+    // nothing, so a restart from an old checkpoint cannot double postings
     val before = postingRows(idx)
-    val restarted = IndexSync.followPostings(spark, corpus, idx,
-      s"$base/ckpt")
-    try restarted.processAllAvailable() finally restarted.stop()
+    follow(corpus, idx, s"$base/ckpt")
     assert(postingRows(idx) === before,
       "restart replayed a batch into duplicate postings")
+  }
+
+  test("a follow attached to a built index does not re-apply the snapshot") {
+    val base = freshBase()
+    val corpus = s"$base/corpus"; val idx = s"$base/index"
+    TableFormat.append(docsDf(1L -> "spark shuffles data",
+      2L -> "merge sorts runs"), corpus, statsCol = Some("doc_id"))
+    IndexSync.refreshPostings(spark, corpus, idx)
+    // the stream's first batch covers the whole snapshot the build
+    // already indexed: it must land nothing a second time
+    follow(corpus, idx, s"$base/ckpt")
+    assert(postingRows(idx) === freshPostings(base, corpus, "t1"),
+      "follow re-applied the snapshot a build had indexed")
+    TableFormat.append(docsDf(3L -> "window frames"), corpus,
+      statsCol = Some("doc_id"))
+    follow(corpus, idx, s"$base/ckpt")
+    assert(postingRows(idx) === freshPostings(base, corpus, "t2"))
+    assert(dlRows(idx) === dlRows(s"$base/t2-idx"))
+  }
+
+  test("a refresh after a follow folds only the windows the follow left") {
+    import spark.implicits._
+    val base = freshBase()
+    val corpus = s"$base/corpus"; val idx = s"$base/index"
+    TableFormat.append(docsDf(1L -> "spark shuffles data",
+      2L -> "merge sorts runs"), corpus, statsCol = Some("doc_id"))
+    follow(corpus, idx, s"$base/ckpt")
+    TableFormat.deleteKeysMor(spark, corpus, Seq(1L).toDF("doc_id"),
+      "doc_id")
+    TableFormat.append(docsDf(3L -> "window frames"), corpus,
+      statsCol = Some("doc_id"))
+    // the follow indexed v0; the refresh must fold (v0, head] only
+    IndexSync.refreshPostings(spark, corpus, idx)
+    assert(postingRows(idx) === freshPostings(base, corpus, "t"),
+      "refresh after a follow re-applied the followed window")
+    assert(dlRows(idx) === dlRows(s"$base/t-idx"))
+  }
+
+  test("a fresh checkpoint resumes a followed index without losing a window") {
+    val base = freshBase()
+    val corpus = s"$base/corpus"; val idx = s"$base/index"
+    TableFormat.append(docsDf(1L -> "spark shuffles data"), corpus,
+      statsCol = Some("doc_id"))
+    follow(corpus, idx, s"$base/ckpt1")
+    TableFormat.append(docsDf(2L -> "merge sorts runs"), corpus,
+      statsCol = Some("doc_id"))
+    follow(corpus, idx, s"$base/ckpt1")
+    // a new checkpoint renumbers its batches from 0: they must neither
+    // re-apply the followed windows nor be mistaken for replays of them
+    TableFormat.append(docsDf(3L -> "window frames slide",
+      4L -> "hash joins probe"), corpus, statsCol = Some("doc_id"))
+    follow(corpus, idx, s"$base/ckpt2")
+    assert(postingRows(idx) === freshPostings(base, corpus, "t"),
+      "a fresh checkpoint lost or doubled a window")
+    assert(dlRows(idx) === dlRows(s"$base/t-idx"))
+  }
+
+  test("guard: refresh is the one maintainer of every derived table") {
+    import java.nio.file.Paths
+    import scala.jdk.CollectionConverters._
+    val main = Paths.get("src/main/scala")
+    assert(Files.isDirectory(main), s"run from the repository root: $main")
+    val files = Files.walk(main).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    // comments are not code
+    val code = files.flatMap { f =>
+      Files.readAllLines(f).asScala.filterNot { l =>
+        val t = l.trim
+        Seq("*", "/**", "//").exists(t.startsWith)
+      }.map(l => s"${main.relativize(f)}: ${l.trim}")
+    }
+    // a second fold (follow's own feed kernel), its batch-end pin, its
+    // marker domain or its reconciliation prop, and a build entry point
+    // beside the refresh from nothing, are each a second maintainer
+    val banned = Seq("applyFeed", "EndVersionCol", "includeEndVersion",
+      "propFollowCleared", "buildPostings", "buildIvf")
+    val hits = code.filter(l => banned.exists(l.contains)) ++
+      code.filter(l => "\"follow[\":]".r.findFirstIn(l).nonEmpty)
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("q_text_search_topk_cdc returns docs surviving the edit history") {

@@ -144,10 +144,10 @@ class MatViewSpec extends TestSpark {
       "dead NULL group must drop out of the view")
   }
 
-  test("batch refresh after a follower reconciles by rebuild, never double-applies") {
-    // round-16 ADVICE #4: the two maintainers track different
-    // high-water marks (follower batch ids vs source versions);
-    // interleaving used to double-apply windows silently
+  test("batch refresh after a follower neither double-applies nor rebuilds") {
+    // a follow is a trigger for refresh: both advance the ONE
+    // source-version marker, so a batch refresh after a follow folds
+    // exactly the windows the follow left
     import spark.implicits._
     val src = fresh("ilsrc")
     val mv = fresh("ilview")
@@ -155,21 +155,30 @@ class MatViewSpec extends TestSpark {
       .toDF("k", "g", "x"), src, statsCol = Some("k"))
     val aggs = Seq(MvAgg("count_star", "*", "n"), MvAgg("sum", "x", "sx"))
     MatView.create(spark, mv, src, Seq("g"), aggs)
-    val q = MatView.follow(spark, mv, "k", fresh("ilckpt"))
+    val q = MatView.follow(spark, mv, fresh("ilckpt"))
     try {
       TableFormat.append(Seq((3L, "a", 5L)).toDF("k", "g", "x"), src,
         statsCol = Some("k"))
       q.processAllAvailable()
     } finally q.stop()
-    // the follower folded v1; refresh's own marker still says v0 — a
-    // naive incremental refresh would re-apply (3, a, 5)
+    // the follower folded v1 and its refresh marker says so — the
+    // refresh below must not re-apply (3, a, 5)
     TableFormat.append(Seq((4L, "c", 7L)).toDF("k", "g", "x"), src,
       statsCol = Some("k"))
+    val v0 = TableFormat.latestVersion(mv)
+    val dvs0 = TableFormat.snapshotDvs(mv, v0)
     MatView.refresh(spark, mv)
     assertSame(MatView.read(spark, mv), recompute(src, Seq("g"), aggs),
-      "refresh over a followed view must reconcile, not double-apply")
-    // subsequent refreshes resume INCREMENTALLY (the reconciliation is
-    // recorded; no endless rebuild): same equality after one more delta
+      "refresh over a followed view must not double-apply")
+    // ONE incremental commit: the window (group c's birth) touched no
+    // standing group, so every standing dir and its deletion vector is
+    // carried as-is — a rebuild masks every standing key
+    val v1 = TableFormat.latestVersion(mv)
+    assert(v1 === v0 + 1, s"refresh after a follow landed ${v1 - v0} commits")
+    val dvs1 = TableFormat.snapshotDvs(mv, v1)
+    assert(dvs0.forall { case (dir, dv) => dvs1.get(dir).contains(dv) },
+      s"refresh after a follow rebuilt the view: $dvs0 -> $dvs1")
+    // and later refreshes stay incremental: same equality after one more
     TableFormat.append(Seq((5L, "a", 2L)).toDF("k", "g", "x"), src,
       statsCol = Some("k"))
     MatView.refresh(spark, mv)
@@ -386,10 +395,6 @@ class MatViewSpec extends TestSpark {
     val v2 = TableFormat.latestVersion(mv)
     MatView.refresh(spark, mv)
     assert(TableFormat.latestVersion(mv) === v2)
-    // dim-joined views FOLLOW now (r18) — the dedicated follow spec
-    // owns the behavior; here just pin that the doorway opens and the
-    // one-maintainer contract still guards a fresh checkpoint after
-    // this test's batch refreshes (no follow ran: no guard to trip)
     // SQL round trip with a JOIN clause
     val sqlMv = fresh("jsql")
     spark.sql(s"""CREATE MATERIALIZED VIEW '$sqlMv' AS
@@ -559,7 +564,7 @@ class MatViewSpec extends TestSpark {
       .toDF("k", "g", "x"), src, statsCol = Some("k"))
     val aggs = Seq(MvAgg("count_star", "*", "n"), MvAgg("sum", "x", "sx"))
     MatView.create(spark, mv, src, Seq("g"), aggs)
-    val q = MatView.follow(spark, mv, "k", ckpt)
+    val q = MatView.follow(spark, mv, ckpt)
     try {
       TableFormat.append(Seq((3L, "a", 5L), (4L, "c", 7L))
         .toDF("k", "g", "x"), src, statsCol = Some("k"))
@@ -569,7 +574,7 @@ class MatViewSpec extends TestSpark {
         "followed view after appends + MOR delete")
     } finally q.stop()
     // restart from the checkpoint: a replayed batch must not double-apply
-    val q2 = MatView.follow(spark, mv, "k", ckpt)
+    val q2 = MatView.follow(spark, mv, ckpt)
     try {
       TableFormat.append(Seq((9L, "a", 1L)).toDF("k", "g", "x"), src,
         statsCol = Some("k"))
@@ -589,11 +594,10 @@ class MatViewSpec extends TestSpark {
     val aggs = Seq(MvAgg("count_star", "*", "n"),
       MvAgg("min", "x", "mn"), MvAgg("max", "x", "mx"))
     MatView.create(spark, mv, src, Seq("g"), aggs)
-    // r17 VERDICT #5: min/max views FOLLOW now — append-only batches
-    // fold with least/greatest, drop-bearing batches recompute the
-    // affected groups AS OF the batch's end version (the stream's
-    // includeEndVersion pin)
-    val q = MatView.follow(spark, mv, "k", ckpt)
+    // min/max views follow as refresh routes them: append-only windows
+    // fold with least/greatest, drop-bearing windows recompute the
+    // affected groups
+    val q = MatView.follow(spark, mv, ckpt)
     try {
       // append-only batch → the merge path (births included: group c)
       TableFormat.append(Seq((4L, "a", 50L), (5L, "c", 5L))
@@ -617,7 +621,7 @@ class MatViewSpec extends TestSpark {
     } finally q.stop()
     // restart from the checkpoint: replay-safe, and the next drop batch
     // still recomputes exactly
-    val q2 = MatView.follow(spark, mv, "k", ckpt)
+    val q2 = MatView.follow(spark, mv, ckpt)
     try {
       TableFormat.deleteKeysMor(spark, src, Seq(1L).toDF("k"), "k")
       q2.processAllAvailable()
@@ -648,7 +652,7 @@ class MatViewSpec extends TestSpark {
         .groupBy("d_name")
         .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
           max(col("x")).as("mx")))
-    val q = MatView.follow(spark, mv, "k", ckpt)
+    val q = MatView.follow(spark, mv, ckpt)
     try {
       // fact appends fold through the PINNED dim join (group birth: r2
       // grows, and a row joining no dim key contributes nothing)
@@ -662,26 +666,23 @@ class MatViewSpec extends TestSpark {
       q.processAllAvailable()
       assert(sortedRows(MatView.read(spark, mv)) === truth(),
         "dim-joined view after a drop batch")
-      // a MOVED dim fails the next batch LOUDLY — never silently stale
+      // a MOVED dim re-attributes at the next fact commit: its refresh
+      // re-pins the dim and rebuilds — never silently stale
       TableFormat.updateWhere(spark, dim, col("d_id") === 10L,
         Seq("d_name" -> lit("R1")), statsCol = Some("d_id"))
       TableFormat.append(Seq((6L, 10L, 2L)).toDF("k", "fk", "x"), fact,
         statsCol = Some("k"))
-      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q.processAllAvailable()
-      }
-      assert(e.getMessage.contains("dim") ||
-        Option(e.getCause).exists(_.getMessage.contains("dim")),
-        s"moved dim must fail the batch naming the fix: ${e.getMessage}")
+      q.processAllAvailable()
+      assert(sortedRows(MatView.read(spark, mv)) === truth(),
+        "dim-joined view after a dim move + fact append batch")
     } finally q.stop()
-    // the batch refresh reconciles: dim re-pin + the interleaved-
-    // follower rebuild in one pass
+    // the followed view is current: a batch refresh lands nothing
+    val v = TableFormat.latestVersion(mv)
     MatView.refresh(spark, mv)
-    assert(sortedRows(MatView.read(spark, mv)) === truth(),
-      "batch refresh reconciles the moved dim")
-    // SAME checkpoint restarts: the failed batch replays SUBSUMED (the
-    // refresh folded past it — marker-only commit), later batches fold
-    val q2 = MatView.follow(spark, mv, "k", ckpt)
+    assert(TableFormat.latestVersion(mv) === v,
+      "refresh after the follow found work the follow left")
+    // SAME checkpoint restarts: later batches fold
+    val q2 = MatView.follow(spark, mv, ckpt)
     try {
       TableFormat.append(Seq((7L, 20L, 11L)).toDF("k", "fk", "x"), fact,
         statsCol = Some("k"))
@@ -691,7 +692,7 @@ class MatViewSpec extends TestSpark {
     } finally q2.stop()
   }
 
-  test("a fresh checkpoint after a follow requires the reconciling refresh") {
+  test("a fresh checkpoint after a follow resumes with no refresh") {
     import spark.implicits._
     val src = fresh("fcsrc")
     val mv = fresh("fcview")
@@ -699,30 +700,64 @@ class MatViewSpec extends TestSpark {
       statsCol = Some("k"))
     val aggs = Seq(MvAgg("count_star", "*", "n"), MvAgg("sum", "x", "sx"))
     MatView.create(spark, mv, src, Seq("g"), aggs)
-    val q = MatView.follow(spark, mv, "k", fresh("fcckpt1"))
+    val q = MatView.follow(spark, mv, fresh("fcckpt1"))
     try {
       TableFormat.append(Seq((2L, "b", 20L)).toDF("k", "g", "x"), src,
         statsCol = Some("k"))
       q.processAllAvailable()
     } finally q.stop()
-    // a FRESH checkpoint would re-deliver the window the old follow
-    // already folded (its batches renumber from 0 and the seed is the
-    // refresh marker) — refuse, naming the reconcile
-    val e = intercept[IllegalArgumentException] {
-      MatView.follow(spark, mv, "k", fresh("fcckpt2"))
-    }
-    assert(e.getMessage.contains("refresh"), e.getMessage)
-    // the reconciling refresh (rebuild) clears the guard; a fresh
-    // checkpoint then follows cleanly from the post-rebuild marker
-    MatView.refresh(spark, mv)
-    val q2 = MatView.follow(spark, mv, "k", fresh("fcckpt3"))
+    // a FRESH checkpoint renumbers its batches from 0 and its first
+    // batch covers the whole source: the refresh it triggers meets the
+    // view's source-version marker, so it re-applies nothing the old
+    // follow folded and loses nothing committed since
+    TableFormat.append(Seq((3L, "a", 5L)).toDF("k", "g", "x"), src,
+      statsCol = Some("k"))
+    val q2 = MatView.follow(spark, mv, fresh("fcckpt2"))
     try {
-      TableFormat.append(Seq((3L, "a", 5L)).toDF("k", "g", "x"), src,
+      q2.processAllAvailable()
+      assertSame(MatView.read(spark, mv), recompute(src, Seq("g"), aggs),
+        "fresh checkpoint: the window committed between the follows")
+      TableFormat.append(Seq((4L, "b", 1L)).toDF("k", "g", "x"), src,
         statsCol = Some("k"))
       q2.processAllAvailable()
       assertSame(MatView.read(spark, mv), recompute(src, Seq("g"), aggs),
-        "fresh checkpoint after the reconciling refresh")
+        "fresh checkpoint: a live window")
     } finally q2.stop()
+  }
+
+  test("a cascaded view follows its parent view") {
+    import spark.implicits._
+    val src = fresh("cfsrc")
+    val parent = fresh("cfparent")
+    val child = fresh("cfchild")
+    TableFormat.append(Seq((1L, "a", "p", 10L), (2L, "a", "q", 20L),
+      (3L, "b", "p", 5L)).toDF("k", "g", "h", "x"), src,
+      statsCol = Some("k"))
+    MatView.create(spark, parent, src, Seq("g", "h"),
+      Seq(MvAgg("count_star", "*", "n"), MvAgg("sum", "x", "sx")))
+    // the child rolls the parent's finalized rows up by g
+    val childAggs = Seq(MvAgg("count_star", "*", "hs"),
+      MvAgg("sum", "sx", "total"), MvAgg("max", "n", "widest"))
+    MatView.create(spark, child, parent, Seq("g"), childAggs)
+    def truth(): Seq[String] =
+      sortedRows(TableFormat.readSnapshot(spark, src)
+        .groupBy("g", "h").agg(count(lit(1)).as("n"), sum("x").as("sx"))
+        .groupBy("g").agg(count(lit(1)).as("hs"),
+          sum("sx").as("total"), max("n").as("widest")))
+    assert(sortedRows(MatView.read(spark, child)) === truth())
+    val qp = MatView.follow(spark, parent, fresh("cfckptp"))
+    val qc = MatView.follow(spark, child, fresh("cfckptc"))
+    try {
+      // a new (g, h) group, a grown group and a dead one: the child's
+      // trigger is the parent's commit, whose window it folds
+      TableFormat.append(Seq((4L, "b", "q", 7L), (5L, "a", "p", 1L))
+        .toDF("k", "g", "h", "x"), src, statsCol = Some("k"))
+      TableFormat.deleteKeysMor(spark, src, Seq(2L).toDF("k"), "k")
+      qp.processAllAvailable()
+      qc.processAllAvailable()
+      assert(sortedRows(MatView.read(spark, child)) === truth(),
+        "cascaded view after its parent's followed commits")
+    } finally { qp.stop(); qc.stop() }
   }
 
   test("the state merge reads only dirs whose key bounds cover the delta") {

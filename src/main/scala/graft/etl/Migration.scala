@@ -84,9 +84,17 @@ object Migration {
   /** The legacy roster key every derivation is computed from. */
   private def key: Column = col("c_custkey")
 
-  // P7 name cleaning / splitting (reference README.md:9)
+  /** P7 name cleaning (reference README.md:9): the first `#` segment,
+    * trimmed and upper-cased. The upper-casing is graft's own kernel
+    * ([[graft.functions.CaseExprs.upper]]), byte-identical to Spark's
+    * `upper` but without the once-per-JVM title-case table Spark's ICU
+    * path builds on its first string: a `graft.Migrate` run is a fresh
+    * JVM, so that build was paid by every run, inside the first table's
+    * write.
+    */
   private def givenName: Column =
-    upper(trim(split(col("c_name"), "#").getItem(0))).as("given_name")
+    graft.functions.CaseExprs.upper(
+      trim(split(col("c_name"), "#").getItem(0))).as("given_name")
 
   private def familyName: Column =
     split(col("c_name"), "#").getItem(1).as("family_name")

@@ -17,6 +17,9 @@ object Sources {
   /** Parquet table loader for the testdata layout `<dir>/<name>.parquet`.
     * Columnar scan: Catalyst pushes projections and predicates into the
     * vectorized parquet reader, so downstream `select`/`filter` prune I/O.
+    * The read schema comes from one footer on the driver
+    * ([[TableFormat.footerSchema]], the schema a schema-less read would
+    * infer), so loading a table runs no Spark job.
     *
     * `events.ts` arrives in whatever physical form the generator used, and
     * the contract here is ONE logical type downstream: session-zone
@@ -32,7 +35,8 @@ object Sources {
     *     match DuckDB's naive read exactly;
     *   - TIMESTAMP(MICROS, adjusted) → already TimestampType, pass through.
     */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
     if (name == "events") {
       // Resolve the schema WITHOUT the legacy flag first (round-12 ADVICE):
       // only a genuine TIMESTAMP(NANOS) file fails that resolution, so the
@@ -42,7 +46,7 @@ object Sources {
       // code would have silently divided those by 1000; now any resolved
       // type outside the three documented layouts fails loudly at read
       // time instead of producing subtly shifted timestamps.
-      val path = s"$dir/$name.parquet"
+      //
       // The legacy nanosAsLong flag is session-global and set by the
       // flagged read below, so the no-flag probe must not interleave with
       // a concurrent flagged read on the same session (the probe would
@@ -52,7 +56,7 @@ object Sources {
       spark.synchronized {
       val noFlag =
         try {
-          val raw = spark.read.parquet(path)
+          val raw = parquet(spark, path)
           raw.schema("ts").dataType match {
             case org.apache.spark.sql.types.TimestampNTZType =>
               Some(raw.withColumn("ts",
@@ -81,7 +85,7 @@ object Sources {
         // this block; executing the returned plan later needs no flag.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         try {
-          val raw = spark.read.parquet(path)
+          val raw = parquet(spark, path)
           require(raw.schema("ts").dataType ==
             org.apache.spark.sql.types.LongType,
             s"events.ts: no-flag read failed as NANOS but flagged read " +
@@ -103,8 +107,13 @@ object Sources {
       }
       }
     } else {
-      spark.read.parquet(s"$dir/$name.parquet")
+      parquet(spark, path)
     }
+  }
+
+  /** `path` read under its footer schema: no inference job. */
+  private def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(TableFormat.footerSchema(spark, path)).parquet(path)
 
   /** CSV source (header + schema inference off by default at scale: pass an
     * explicit schema to avoid a full pre-scan of 100 TB of text).

@@ -986,19 +986,23 @@ object TableFormat {
       fsup.flatMap(c => freqSlot(c, fcnt.get(c))))
   }
 
-  /** The schema a landed dir's files carry, from ONE footer read on the
-    * driver: what a schema-less `spark.read.parquet(dir)` infers
+  /** The schema a parquet file or dir carries, from ONE footer read on
+    * the driver: what a schema-less `spark.read.parquet(dir)` infers
     * (Spark's own footer rule — the recorded row schema, else the
-    * parquet type conversion) without that read's inference job. Every
-    * file of a dir comes from one write, so one footer speaks for all.
+    * parquet type conversion under the session's conf, from the first
+    * data file by path) without that read's inference job. graft reads
+    * dirs whose files come from one write, so one footer speaks for
+    * all.
     */
-  private def footerSchema(spark: SparkSession, dir: String): StructType = {
+  private[graft] def footerSchema(spark: SparkSession,
+      dir: String): StructType = {
     import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
     val conf = spark.sessionState.newHadoopConf()
-    val f = listDataFiles(conf, dir).headOption.getOrElse(
-      throw new IllegalStateException(s"data dir $dir holds no parquet file"))
+    val f = listDataFiles(conf, dir).sortBy(_.getPath.toString).headOption
+      .getOrElse(throw new IllegalStateException(
+        s"$dir holds no parquet data file"))
     val reader =
       ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
     try ParquetFileFormat.readSchemaFromFooter(
@@ -2073,7 +2077,7 @@ object TableFormat {
     // anti-join is unresolvable — a second writer deleting by a
     // different key (set) must surface as this loud refusal
     touched.flatMap(_.dv).distinct.foreach { p =>
-      val cs = spark.read.parquet(p).columns
+      val cs = footerSchema(spark, p).fieldNames
         .filterNot(_ == DvDirCol).toSeq.sorted
       require(cs == physKeys.sorted,
         s"existing deletion vectors key on ${cs.mkString(",")}, not " +
@@ -2507,7 +2511,7 @@ object TableFormat {
       // live deletion vectors keying on this column would make the
       // masked read unresolvable — fold them first
       m.entries.flatMap(_.dv).distinct.foreach { p =>
-        val ks = spark.read.parquet(p).schema.fieldNames
+        val ks = footerSchema(spark, p).fieldNames
           .filterNot(_ == DvDirCol)
         require(!ks.exists(_.equalsIgnoreCase(phys)),
           s"DROP COLUMN: live deletion vectors key on '${f.name}' — " +

@@ -4,11 +4,14 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.CaseExprs
 import graft.io.Sources
 
-/** Scalar function families F1-F6 (SURVEY.md §2.8). All built-in,
-  * whole-stage-codegen'd column expressions — no UDFs — so Catalyst can
-  * constant-fold, push down, and keep the hot loop vectorized.
+/** Scalar function families F1-F6 (SURVEY.md §2.8). All
+  * whole-stage-codegen'd column expressions — built-in, or graft's own
+  * case-mapping kernel ([[CaseExprs]]) for upper/lower; no UDFs — so
+  * Catalyst can constant-fold, push down, and keep the hot loop
+  * vectorized.
   */
 object Functions {
 
@@ -21,8 +24,8 @@ object Functions {
     t(s, dir, "customer")
       .select(col("c_custkey"),
         concat_ws("-", col("c_mktsegment"), col("c_custkey")).as("tagged"),
-        upper(col("c_mktsegment")).as("seg_up"),
-        lower(col("c_name")).as("name_lo"),
+        CaseExprs.upper(col("c_mktsegment")).as("seg_up"),
+        CaseExprs.lower(col("c_name")).as("name_lo"),
         substring(col("c_name"), 1, 8).as("name8"),
         lpad(col("c_custkey").cast(StringType), 10, "0").as("padded"),
         length(col("c_name")).cast(LongType).as("name_len"),

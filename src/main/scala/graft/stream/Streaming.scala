@@ -98,21 +98,6 @@ object Streaming {
 
   // ------------------------------------------------------- streaming entry
 
-  /** Streaming source over a parquet directory (schema required up front —
-    * a stream cannot infer). `maxFilesPerTrigger` paces micro-batches.
-    */
-  def readEventsStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema(StructType(Seq(
-        StructField("event_id", LongType),
-        StructField("ts", TimestampType),
-        StructField("user_id", LongType),
-        StructField("event_type", StringType),
-        StructField("value", DoubleType),
-        StructField("props", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-
   /** R1+R4 streaming: watermarked tumbling aggregation — late events beyond
     * 10 minutes are dropped and state for closed windows is evicted.
     */

@@ -144,6 +144,18 @@ class MigrationSpec extends TestSpark {
       assert(calls(op).isEmpty, s"$op in Migration: ${calls(op)}"))
   }
 
+  test("plan audit: no Catalyst Upper/Lower/InitCap in the migrateAll frames") {
+    // Catalyst's case mappings take Spark's ICU path, whose first string
+    // builds a title-case table of every code point in each JVM; the
+    // bundle upper-cases through graft's kernel (CaseExprs) instead
+    import org.apache.spark.sql.catalyst.expressions.{InitCap, Lower, Upper}
+    Migration.migrateAll(spark, Sf).foreach { case (name, df) =>
+      val hits = df.queryExecution.analyzed.flatMap(_.expressions.flatMap(
+        _.collect { case e @ (_: Upper | _: Lower | _: InitCap) => e }))
+      assert(hits.isEmpty, s"$name: ${hits.mkString(", ")}")
+    }
+  }
+
   test("migrateAll bundle is FK-consistent across all seven tables") {
     val tables = Migration.migrateAll(spark, Sf).toMap
     def ids(t: String, c: String): Set[Long] =

@@ -38,6 +38,79 @@ class SourcesSpec extends TestSpark {
     assert(back(1).isNullAt(1))
   }
 
+  test("Sources.table learns a schema from one footer: no Spark job, " +
+      "the schema a schema-less read infers") {
+    import org.apache.spark.sql.types.TimestampType
+    def read(dir: String, t: String) = spark.read.parquet(s"$dir/$t.parquet")
+    // every sf0.001 table; events as its contract reads it (ts cast from
+    // the fixture's TIMESTAMP_NTZ)
+    val tables = new java.io.File(Sf).list().toSeq
+      .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).sorted
+    assert(tables.contains("events") && tables.size >= 10, tables)
+    tables.foreach { t =>
+      var df: org.apache.spark.sql.DataFrame = null
+      assert(jobsOf { df = Sources.table(spark, Sf, t) } === 0, t)
+      val want =
+        if (t == "events") read(Sf, t).withColumn("ts",
+          col("ts").cast(TimestampType))
+        else read(Sf, t)
+      assert(df.schema === want.schema, t)
+    }
+    // a multi-file dir written by Spark: its footers record NOT NULL
+    // columns, which a read still reports nullable
+    val dir = Files.createTempDirectory("graft_footer").toString
+    spark.range(0, 400, 1, 4)
+      .select(col("id"), (col("id") % 7).cast("int").as("x"),
+        lit("s").as("s"), lit(null).cast("string").as("n"))
+      .write.parquet(s"$dir/multi.parquet")
+    assert(new java.io.File(s"$dir/multi.parquet").list()
+      .count(_.endsWith(".parquet")) === 4)
+    assert(!graft.io.TableFormat.footerSchema(spark, s"$dir/multi.parquet")(
+      "id").nullable)
+    var multi: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { multi = Sources.table(spark, dir, "multi") } === 0)
+    assert(multi.schema === read(dir, "multi").schema)
+    assert(multi.schema("id").nullable)
+    assert(multi.count() === 400L)
+  }
+
+  test("Sources.table reads a TIMESTAMP(NANOS) events file as µs, " +
+      "with no Spark job") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = Files.createTempDirectory("graft_nanos").toString
+    val schema = MessageTypeParser.parseMessageType(
+      """message events {
+        |  required int64 event_id;
+        |  required int64 ts (TIMESTAMP(NANOS,true));
+        |}""".stripMargin)
+    val conf = spark.sessionState.newHadoopConf()
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+      new Path(s"$dir/events.parquet"), conf)).withType(schema).build()
+    val nanos = Seq(1704067200123456789L, 1704067261000000999L)
+    try nanos.zipWithIndex.foreach { case (ns, i) =>
+      w.write(new SimpleGroupFactory(schema).newGroup()
+        .append("event_id", i.toLong).append("ts", ns))
+    } finally w.close()
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { df = Sources.table(spark, dir, "events") } === 0)
+    // the flag is scoped to the read: the session no longer has it
+    assert(spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
+      .forall(_ == "false"))
+    // the schema a flagged schema-less read infers, after the µs cast
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val want = try spark.read.parquet(s"$dir/events.parquet")
+      .withColumn("ts", timestamp_micros(expr("ts div 1000"))).schema
+      finally spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    assert(df.schema === want)
+    val micros = df.orderBy("event_id")
+      .select(unix_micros(col("ts"))).collect().map(_.getLong(0)).toSeq
+    assert(micros === nanos.map(_ / 1000))
+  }
+
   test("q_src_csv fixture invariant: no nulls/commas/quotes in csv columns") {
     // qSrcCsv's Spark/DuckDB equivalence rests on the four formatted events
     // columns containing no nulls, commas, or quotes: Spark's concat_ws

@@ -30,9 +30,12 @@ import graft.io.Sources
   * before/after DELTA of this run's append, so re-running against a
   * pre-existing database verifies this run's rows, not the table's
   * cumulative contents. A `--jdbc` run is one Spark job per table (its
-  * write) plus the one build of the keyed roster all seven share: 17 jobs
-  * at sf0.001 and sf0.01. Reading the two source tables adds none, as
-  * their schemas come from one parquet footer each, read on the driver.
+  * write) plus the one build of the keyed roster all seven share, a
+  * checkpointed range sort: 11 jobs at sf0.001 and sf0.01, where the
+  * sorted roster is one partition. A roster of more partitions adds one
+  * job, `zipWithIndex`'s count of the rows before the last partition.
+  * Reading the two source tables adds none, as their schemas come from
+  * one parquet footer each, read on the driver.
   */
 object Migrate {
 

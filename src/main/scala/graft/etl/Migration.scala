@@ -1,6 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType, StringType}
@@ -175,57 +177,55 @@ object Migration {
         col("c_custkey").as("client_id"))
       .orderBy("person_id")
 
-  /** Scale path for P5: `zipWithIndex`-style partition-offset minting,
-    * expressed declaratively so it stays a lazy, optimizable plan.
+  /** Scale path for P5: `df` with a 1-based `idName` equal to
+    * `row_number() over (order by order)`, numbered the way Spark's
+    * `RDD.zipWithIndex` numbers an RDD.
     *
-    * 1. `repartitionByRange(order)` — partition i holds keys strictly below
-    *    partition i+1's (one shuffle, the same one a global sort would pay).
-    * 2. `row_number` windowed BY PARTITION ID — every window is one range
-    *    partition, so the sort is parallel across the cluster; nothing ever
-    *    funnels through a single task, unlike `Window.orderBy(key)`.
-    * 3. Per-partition row counts → running offsets (a window over ≤ nParts
-    *    rows — trivially small) broadcast-joined back: id = offset + local
-    *    row number.
+    * 1. `repartitionByRange(order).sortWithinPartitions(order)` — partition
+    *    i holds keys strictly below partition i+1's, each sorted in
+    *    parallel (one range shuffle, the one a global sort would pay;
+    *    nothing funnels through a single task, unlike `Window.orderBy`).
+    * 2. An eager [[graft.Memo.checkpoint]] of that — the one
+    *    materialization, so every read of the result sees the same
+    *    partitions in the same order, and the partition count AQE
+    *    coalesced the sort's stage to (one at sf0.01).
+    * 3. [[numberRows]] over the checkpoint: id = rows in earlier
+    *    partitions + position in its own + 1.
     *
-    * The result is layout-INdependent even though `spark_partition_id` is
-    * layout-dependent: wherever the sampled range boundaries fall, offset +
-    * local rank telescopes to the global rank of `order`, which is unique
-    * and dense by construction. Requires a unique order key (ties would
-    * make the rank assignment arbitrary — same caveat as `row_number`).
-    * No driver action anywhere: unlike RDD `zipWithIndex` (whose offset
-    * scan is an eager job), the offsets here are a plan node.
+    * Eager: the sort's jobs run here, and with more than one partition
+    * `zipWithIndex` counts the rows of all but the last in one more job
+    * before it returns — at scale that count reads the checkpoint again
+    * (its local blocks, or the files under a reliable checkpoint dir).
+    * Wherever the sampled range bounds fall, the offsets telescope to the
+    * global rank of `order`. Requires a unique order key (ties would make
+    * the rank assignment arbitrary — same caveat as `row_number`).
     */
   def surrogateKeysScaled(df: DataFrame, order: Column,
-                          idName: String): DataFrame = {
-    // Persisted because BOTH branches below (local ranks, offsets) consume
-    // it: without the persist each branch re-evaluates the range exchange,
-    // and identical partition boundaries across the two evaluations would
-    // rest on RangePartitioner's sampling being deterministic — an
-    // implementation detail AQE replanning can break (round-3 ADVICE,
-    // medium). One materialization makes the invariant structural. It
-    // stays lazy (no job here) and is registered with [[graft.Memo]], so
-    // `Memo.release()` (called by the Verify/Bench mains) frees it
-    // deterministically instead of waiting on GC + ContextCleaner
-    // (round-4 ADVICE).
-    val parted = graft.Memo.persist(
-      df.repartitionByRange(order)
-        .withColumn("__pid", spark_partition_id()))
-    val local = parted.withColumn("__idx",
-      row_number().over(Window.partitionBy("__pid").orderBy(order))
-        .cast(LongType))
-    val offsets = parted.groupBy("__pid")
-      .agg(count(lit(1)).as("__n"))
-      .select(col("__pid"),
-        coalesce(sum(col("__n")).over(
-          Window.orderBy("__pid")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-          .as("__off"))
-    local.join(broadcast(offsets), "__pid")
-      .withColumn(idName, col("__off") + col("__idx"))
-      .drop("__pid", "__idx", "__off")
+                          idName: String): DataFrame =
+    numberRows(graft.Memo.checkpoint(
+      df.repartitionByRange(order).sortWithinPartitions(order)), idName)
+
+  /** `sorted` with a 1-based `idName` appended: `zipWithIndex` over its
+    * `InternalRow` RDD, rewrapped as a frame with no Row encoding. Each
+    * read re-numbers the rows as it scans them, so `sorted` must yield
+    * the same rows in the same order on every read — a checkpoint does.
+    */
+  private[graft] def numberRows(sorted: DataFrame,
+                                idName: String): DataFrame = {
+    val numbered = sorted.queryExecution.toRdd.zipWithIndex()
+      .mapPartitions[InternalRow] { rows =>
+        val id = new GenericInternalRow(1)
+        val row = new JoinedRow
+        rows.map { case (r, i) => id.setLong(0, i + 1); row(r, id) }
+      }
+    org.apache.spark.sql.GraftStreamingBridge.batchFrame(
+      sorted.sparkSession.asInstanceOf[classic.SparkSession], numbered,
+      sorted.schema.add(idName, LongType, nullable = false))
   }
 
-  /** The roster with its minted `person_id` — the one keyed base. */
+  /** The roster with its minted `person_id` — the one keyed base, built
+    * eagerly by [[surrogateKeysScaled]]: a frame over its checkpoint.
+    */
   private[graft] def keyedRoster(s: SparkSession, dir: String): DataFrame =
     surrogateKeysScaled(customer(s, dir), key, "person_id")
 
@@ -256,12 +256,11 @@ object Migration {
     * the legacy roster, versus the reference's 2 INSERTs + lastrowid
     * round-trip per client (reference `README.md:9,19`).
     *
-    * `person_id` is minted by [[surrogateKeysScaled]] — range-repartitioned
-    * parallel local sorts + broadcast offsets — so the showcase query
-    * carries NO partition-unbounded window: every windowspecdefinition in
-    * its plan is either partitioned by `__pid` (one range partition per
-    * window) or the ≤-nParts-row offsets rollup. `MigrationSpec` asserts
-    * this on the optimized plan; the oracle is unchanged (the scaled form
+    * `person_id` is minted by [[keyedRoster]] when the frame is built —
+    * one range shuffle and parallel per-partition sorts, numbered by
+    * partition offsets — so the showcase query carries NO window and its
+    * mint no single-partition exchange. `MigrationSpec` asserts this on
+    * the mint's build plan; the oracle is unchanged (the scaled form
     * equals `ROW_NUMBER() OVER (ORDER BY c_custkey)` bit-for-bit).
     */
   private def qPerson(s: SparkSession, dir: String): DataFrame =
@@ -311,26 +310,26 @@ object Migration {
     * INSERTs + a lastrowid round-trip per client (reference
     * `README.md:7-17`), every table here is a declarative frame off ONE
     * shared keyed scan: `person_id` is minted once by
-    * [[surrogateKeysScaled]], so cross-table FK consistency is
+    * [[keyedRoster]], so cross-table FK consistency is
     * structural — no table re-derives the key, and a
     * [[graft.io.Sources.jdbcAppend]] over this Seq in order satisfies
     * every FK at insert time. uuids go through [[mintUuid]]:
     * deterministic by default, real `uuid()` under [[ProdUuidFlag]].
     *
-    * The keyed base is built ONCE, by an eager [[graft.Memo.checkpoint]]
-    * (its jobs run here), so each of the seven frames is a map-only scan:
-    * the `__pid` shuffle and the offsets run once, not once per table. A
-    * checkpoint, not a persist: the checkpoint's RDD keeps the partition
-    * count AQE coalesced the build's final stage to, while a cached plan
-    * keeps its un-coalesced count (AQE may not change a cached plan's
-    * output partitioning). At sf0.01 that is one writer per table instead
-    * of 4 concurrent ones, and against Derby 4 writers made an 8–12%
-    * larger database.
+    * The keyed base is built ONCE, here: [[keyedRoster]] is eager (its
+    * range sort and checkpoint run when it is called), so each of the
+    * seven frames is a map-only scan of the checkpoint that numbers its
+    * rows as it reads them. A checkpoint, not a persist: its RDD keeps
+    * the partition count AQE coalesced the sort's stage to, while a
+    * cached plan keeps its un-coalesced count (AQE may not change a cached
+    * plan's output partitioning). At sf0.01 that is one writer per table
+    * instead of 4 concurrent ones, and against Derby 4 writers made an
+    * 8–12% larger database.
     */
   def migrateAll(s: SparkSession, dir: String): Seq[(String, DataFrame)] = {
     val nation = Sources.table(s, dir, "nation")
       .select(col("n_nationkey"), col("n_name"))
-    val base = graft.Memo.checkpoint(keyedRoster(s, dir))
+    val base = keyedRoster(s, dir)
 
     val personName = base.select(
       col("person_id"),

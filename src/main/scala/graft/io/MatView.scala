@@ -291,7 +291,7 @@ object MatView {
       }
     val dimDelta: Option[Int] =
       if (!dimDeltaOk) None
-      else refreshDimDelta(spark, mvRoot, d, dimVs)
+      else refreshDimDelta(spark, mvRoot, d, dimVs, to)
     val version = dimDelta getOrElse {
       if (dimsMoved) {
         // REBUILD: full state from the head; every standing key masked.
@@ -371,10 +371,12 @@ object MatView {
     * the non-idempotent retraction can never double-apply. Returns
     * None when a factKey column cannot be attributed to the fact table
     * or an earlier dim (the caller then rebuilds — loud in cost, never
-    * in correctness).
+    * in correctness). Fact rows are read at `to`, the source version the
+    * view has folded: a fact commit landing mid-refresh belongs to the
+    * next refresh's window, and read here too it would count twice.
     */
   private def refreshDimDelta(spark: SparkSession, mvRoot: String,
-      d: MvDef, dimVs: Seq[(MvDim, Int)]): Option[Int] = {
+      d: MvDef, dimVs: Seq[(MvDim, Int)], to: Int): Option[Int] = {
     val MvDef(source, groupCols, aggs, _, dims) = d
     val factCols = TableFormat.latestSchema(source)
       .map(_.fieldNames.map(_.toLowerCase).toSet)
@@ -423,11 +425,11 @@ object MatView {
     // read for the dominant single-column shape, flag-joins otherwise
     val aff: DataFrame = byCol match {
       case Seq((c, ks)) =>
-        TableFormat.readTouchedForKeys(spark, source, ks, c)
+        TableFormat.readTouchedForKeys(spark, source, ks, Seq(c), to)
           .join(ks, Seq(c), "left_semi")
       case many =>
         val flagged = many.zipWithIndex
-          .foldLeft(TableFormat.readSnapshot(spark, source)) {
+          .foldLeft(TableFormat.readSnapshot(spark, source, to)) {
             case (acc, ((c, ks), i)) =>
               acc.join(ks.withColumn(s"__graft_aff_$i", lit(1)),
                 Seq(c), "left")
@@ -447,7 +449,8 @@ object MatView {
           mergedState(spark, mvRoot, hasState(mvRoot, 0), groupCols,
             aggs, signed)
         else recomputedState(spark, dimImage(spark, d, headOf)(
-          TableFormat.readSnapshot(spark, source)), groupCols, aggs, signed)
+          TableFormat.readSnapshot(spark, source, to)), groupCols, aggs,
+          signed)
       val deletes = signed.select(keyExpr(groupCols).as(KeyCol)).distinct()
       Some(TableFormat.applyDelta(spark, mvRoot, deletes, KeyCol, appends,
         statsCol = Some(KeyCol), propsDelta = pinProps))
@@ -482,22 +485,31 @@ object MatView {
   // ---------------------------------------------------------- follow
 
   /** CONTINUOUS maintenance: [[refresh]] the view on every commit of
-    * its source, through [[TableFormatStreamSource.trigger]] (the
+    * its inputs — its source and each of its dims — through ONE
+    * [[TableFormatStreamSource.trigger]] over all of them (the
     * micro-batch rows are never read). Refresh stays the ONE maintainer
-    * and following keeps no state of its own: the source-version marker
-    * riding each refresh commit turns a replayed batch, a restart, a
-    * fresh checkpoint and an interleaved batch refresh into no-ops past
-    * the folded window, and a followed view goes back to batch refreshes
+    * and following keeps no state of its own: the version markers riding
+    * each refresh commit turn a replayed batch, a restart, a fresh
+    * checkpoint and an interleaved batch refresh into no-ops past the
+    * folded window, and a followed view goes back to batch refreshes
     * with no rebuild. Every view shape follows as refresh routes it
     * (min/max and approx_count_distinct included). A cascaded view
-    * follows its PARENT view's commits. A dim-joined view re-attributes
-    * a moved dim at the next source commit; a dim commit alone does not
-    * wake the trigger, so run [[refresh]] to pick it up at once.
+    * follows its PARENT view's commits. A dim commit alone wakes a
+    * dim-joined view, and refresh re-attributes the moved dim.
+    *
+    * A dim-joined view's checkpoint holds one offset per input, so a
+    * checkpoint from a follow that watched the source alone does not
+    * resume (Spark refuses a checkpoint whose source count differs from
+    * the query's): follow such a view on a fresh checkpoint, whose first
+    * batch's refresh meets the markers and folds only what is new. A view
+    * with no dims still watches one root, and its checkpoints resume.
     */
   def follow(spark: SparkSession, mvRoot: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    TableFormatStreamSource.trigger(spark, definition(mvRoot).source,
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val d = definition(mvRoot)
+    TableFormatStreamSource.trigger(spark, d.source +: d.dims.map(_.root),
       checkpoint) { refresh(spark, mvRoot); () }
+  }
 
   /** Per-group STATE aggregates over raw source rows (`sign` absent) —
     * the recompute/initial shape. Kept textually parallel to

@@ -2258,31 +2258,27 @@ object TableFormat {
       txn = txn, op = op, propsDelta = propsDelta)
   }
 
-  /** Effective rows of exactly the head dirs whose zone maps / blooms
-    * might hold a key tuple of `keys` — the bounded target side a
-    * key-anchored MERGE joins against, and the standing state a
-    * [[MatView]] refresh merges (refresh I/O ∝ the affected groups'
-    * dirs, not view size). Soundness carries from
-    * [[touchedSplit]]: an untouched dir PROVABLY contains none of the
-    * keys, so a join (or an anti-join) of `keys` against this frame
-    * equals the same join against the whole snapshot, at the cost of
-    * the touched dirs only. Empty-touched reads as an empty frame in
+  /** Effective rows of exactly the dirs of snapshot `version` (the head
+    * when negative) whose zone maps / blooms might hold a key tuple of
+    * `keys` — the bounded target side a key-anchored MERGE joins
+    * against, and the standing state a [[MatView]] refresh merges
+    * (refresh I/O ∝ the affected groups' dirs, not view size). Soundness
+    * carries from [[touchedSplit]]: an untouched dir PROVABLY contains
+    * none of the keys, so a join (or an anti-join) of `keys` against this
+    * frame equals the same join against the whole snapshot, at the cost
+    * of the touched dirs only. Empty-touched reads as an empty frame in
     * the table's committed schema.
     */
   private[graft] def readTouchedForKeys(spark: SparkSession, root: String,
-      keys: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val prev = latestVersion(root)
+      keys: DataFrame, keyCols: Seq[String], version: Int = -1)
+      : DataFrame = {
+    val prev = if (version < 0) latestVersion(root) else version
     require(prev >= 0, s"no snapshot at $root")
     val m = readManifestFull(root, prev)
     val (touched, _) =
       touchedSplit(spark, m.entries, keys, keyCols, colMapOf(m))
     entriesFrame(spark, root, touched, readSchema(root, prev, m))
   }
-
-  /** [[readTouchedForKeys]] on one key column. */
-  private[graft] def readTouchedForKeys(spark: SparkSession, root: String,
-      keys: DataFrame, keyCol: String): DataFrame =
-    readTouchedForKeys(spark, root, keys, Seq(keyCol))
 
   /** ALTER TABLE ADD COLUMNS as a commit: widen the head's schema by
     * `fields` (nullable — there is no data to backfill) with every

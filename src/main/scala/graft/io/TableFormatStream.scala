@@ -599,23 +599,34 @@ private[graft] final class TableFormatStreamSource(sqlContext: SQLContext,
 
 private[graft] object TableFormatStreamSource {
 
-  /** A streaming TRIGGER on `root`'s commits: every micro-batch, the
-    * first included, runs `maintain` and never reads the batch rows.
-    * This is how a derived table FOLLOWS its source ([[MatView.follow]],
-    * [[graft.ops.IndexSync.followPostings]]): `maintain` is the table's
-    * own refresh, whose source-version marker rides the derived table's
-    * commit, so a replayed batch, a restart, a fresh checkpoint and an
-    * interleaved batch refresh all meet the same marker, and none can
-    * double or lose a window. The unread batches are `mode=appends`
+  /** A streaming TRIGGER on the commits of every root in `roots` — one
+    * query over the union of their streams: every micro-batch, the first
+    * included, runs `maintain` once, whichever roots moved, and never
+    * reads the batch rows. This is how a derived table FOLLOWS its inputs
+    * ([[MatView.follow]]: the source and its dims;
+    * [[graft.ops.IndexSync.followPostings]]: the corpus): `maintain` is
+    * the table's own refresh, whose version markers ride the derived
+    * table's commit, so a replayed batch, a restart, a fresh checkpoint
+    * and an interleaved batch refresh all meet the same markers, and none
+    * can double or lose a window. The unread batches are `mode=appends`
     * under `ignoreChanges`, so a rewrite commit never refuses and each
-    * trigger costs one manifest diff.
+    * trigger costs one manifest diff per moved root. Each stream is
+    * projected to one constant column so roots of any schema union.
+    *
+    * The checkpoint records one offset per root, in `roots` order: Spark
+    * refuses to resume it under a different number of roots, and a fresh
+    * checkpoint is safe, as the markers make its first batch fold only
+    * what is new.
     */
-  def trigger(spark: SparkSession, root: String, checkpoint: String)(
+  def trigger(spark: SparkSession, roots: Seq[String], checkpoint: String)(
       maintain: => Unit): StreamingQuery =
-    spark.readStream
-      .format(classOf[TableFormatSourceProvider].getName)
-      .option("ignoreChanges", "true")
-      .load(root)
+    roots.map { root =>
+      spark.readStream
+        .format(classOf[TableFormatSourceProvider].getName)
+        .option("ignoreChanges", "true")
+        .load(root)
+        .select(lit(0).as("moved"))
+    }.reduce(_ union _)
       .writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (_: DataFrame, _: Long) => maintain }

@@ -362,7 +362,8 @@ object IndexSync {
   def followPostings(s: SparkSession, corpusRoot: String, idxRoot: String,
                      checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    graft.io.TableFormatStreamSource.trigger(s, corpusRoot, checkpoint) {
+    graft.io.TableFormatStreamSource.trigger(s, Seq(corpusRoot),
+      checkpoint) {
       refreshPostings(s, corpusRoot, idxRoot); ()
     }
 

@@ -617,8 +617,10 @@ object Relational {
   }
 
   /** W4 at scale: the same ntile/percent_rank/cume_dist WITHOUT the
-    * single-partition global window — the [[graft.etl.Migration
-    * .surrogateKeysScaled]] machinery applied to distribution ranks.
+    * single-partition global window — the partition-offset numbering of
+    * [[graft.etl.Migration.surrogateKeysScaled]], here as a lazy plan
+    * (per-partition windows and a broadcast offsets rollup instead of a
+    * checkpoint numbered by `zipWithIndex`) applied to distribution ranks.
     *
     * 1. `repartitionByRange(order)` spreads the sort across the cluster
     *    (the one shuffle a global sort would pay anyway).

@@ -692,6 +692,38 @@ class MatViewSpec extends TestSpark {
     } finally q2.stop()
   }
 
+  test("a followed dim-joined view wakes on a dim-only commit") {
+    import spark.implicits._
+    import graft.io.MvDim
+    val fact = fresh("dwfact")
+    val dim = fresh("dwdim")
+    val mv = fresh("dwview")
+    TableFormat.append(Seq((10L, "r1"), (20L, "r2"))
+      .toDF("d_id", "d_name"), dim, statsCol = Some("d_id"))
+    TableFormat.append(Seq((1L, 10L, 3L), (2L, 20L, 5L), (3L, 10L, 7L))
+      .toDF("k", "fk", "x"), fact, statsCol = Some("k"))
+    MatView.create(spark, mv, fact, Seq("d_name"),
+      Seq(MvAgg("count_star", "*", "n"), MvAgg("sum", "x", "sx")),
+      dims = Seq(MvDim(dim, "fk", "d_id")))
+    def truth(): Seq[String] =
+      sortedRows(TableFormat.readSnapshot(spark, fact)
+        .join(TableFormat.readSnapshot(spark, dim),
+          col("fk") === col("d_id")).drop("d_id")
+        .groupBy("d_name")
+        .agg(count(lit(1)).as("n"), sum(col("x")).as("sx")))
+    val q = MatView.follow(spark, mv, fresh("dwckpt"))
+    try {
+      q.processAllAvailable()
+      // no fact commit follows the rename: the dim's own commit must
+      // wake the follow, or the view keeps serving group r1
+      TableFormat.updateWhere(spark, dim, col("d_id") === 10L,
+        Seq("d_name" -> lit("R1")), statsCol = Some("d_id"))
+      q.processAllAvailable()
+      assert(sortedRows(MatView.read(spark, mv)) === truth(),
+        "followed view after a dim-only commit")
+    } finally q.stop()
+  }
+
   test("a fresh checkpoint after a follow resumes with no refresh") {
     import spark.implicits._
     val src = fresh("fcsrc")

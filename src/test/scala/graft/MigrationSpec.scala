@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.etl.Migration
@@ -112,16 +114,93 @@ class MigrationSpec extends TestSpark {
   }
 
   test("flagship q_person plan has no partition-unbounded window") {
-    // the showcase query mints person_id via surrogateKeysScaled: every
-    // window must be keyed by the __pid range-partition id — a regression
-    // back to row_number().over(Window.orderBy(...)) funnels the whole
-    // table through one task at 100 TB (round-4 VERDICT #1)
-    val plan = graft.SparkEntry.queries("q_person")(spark, Sf)
-      .queryExecution.executedPlan.toString
-    assertOnlyPidWindows(plan, "q_person")
+    // the showcase query reads person_id from the one mint its build
+    // checkpoints: the mint is one range sort — a regression back to
+    // row_number().over(Window.orderBy(...)) funnels the whole table
+    // through one task at 100 TB (round-4 VERDICT #1) — and the query
+    // itself windows nothing
+    var q: org.apache.spark.sql.DataFrame = null
+    val builds = checkpointPlans {
+      q = graft.SparkEntry.queries("q_person")(spark, Sf)
+    }
+    assert(builds.size === 1, s"q_person took ${builds.size} checkpoints")
+    assertRangeSortMint(builds.head, "q_person's mint")
+    val plan = q.queryExecution.executedPlan
+    assert(TestSpark.Plans.collect(plan) { case w: WindowExec => w }.isEmpty,
+      s"q_person windows over its mint:\n$plan")
   }
 
-  test("guard: one checkpoint (the bundle base) and one persist (parted)") {
+  test("the mint assertion rejects a global-window mint") {
+    // the plan pin above must fail on the form it guards against
+    val roster = graft.io.Sources.table(spark, Sf, "customer")
+    val builds = checkpointPlans {
+      roster.withColumn("person_id",
+        row_number().over(Window.orderBy("c_custkey"))).localCheckpoint()
+    }
+    assert(builds.size === 1)
+    intercept[org.scalatest.exceptions.TestFailedException] {
+      assertRangeSortMint(builds.head, "a global-window mint")
+    }
+  }
+
+  test("person_id offsets stay right across many range partitions") {
+    // perfbench's roster coalesces to one partition, where no offset is
+    // ever added: uncoalesced, 8 range partitions each add the rows of
+    // the ones before them. Two rosters: the sf0.001 customers, and keys
+    // in two distant clusters of unequal size. (Neither has an empty
+    // range partition: every range bound is a sampled key, so each
+    // partition holds its own bound. The numbering over empty partitions
+    // is checked on its own below.)
+    import spark.implicits._
+    val clustered = java.nio.file.Files.createTempDirectory("graft_mint")
+    ((0L until 700L) ++ (5000000000L until 5000000037L)).toDF("c_custkey")
+      .select(col("c_custkey"), concat(lit("Client#"), col("c_custkey"))
+        .as("c_name"), (col("c_custkey") % 25).cast("int").as("c_nationkey"),
+        lit(12.5).as("c_acctbal"),
+        lit("BUILDING").as("c_mktsegment"))
+      .coalesce(3).write.parquet(s"$clustered/customer.parquet")
+    java.nio.file.Files.copy(Paths.get(s"$Sf/nation.parquet"),
+      clustered.resolve("nation.parquet"))
+    val saved = Seq("spark.sql.adaptive.coalescePartitions.enabled",
+      "spark.sql.shuffle.partitions").map(k => k -> spark.conf.get(k))
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try for (dir <- Seq(Sf, clustered.toString)) {
+      val base = Migration.keyedRoster(spark, dir)
+      val sizes = base.rdd.mapPartitions(it => Iterator(it.size)).collect()
+      assert(sizes.length > 1, s"$dir: one partition, no offset to add")
+      val truth = graft.io.Sources.table(spark, dir, "customer")
+        .select(col("c_custkey"), row_number()
+          .over(Window.orderBy("c_custkey")).cast("long").as("want"))
+      val tables = Migration.migrateAll(spark, dir).toMap
+      for ((t, k, id) <- Seq(
+          ("person", "client_id", "person_id"),
+          ("dreams_client_patient_mapping", "client_id", "patient_id"))) {
+        val got = tables(t).select(col(k).as("c_custkey"), col(id).as("got"))
+        val wrong = got.join(truth, Seq("c_custkey"), "full_outer")
+          .filter(!col("got").eqNullSafe(col("want")))
+        assert(wrong.isEmpty, s"$dir $t, partition sizes " +
+          s"${sizes.mkString(",")}: ${wrong.limit(5).collect().mkString}")
+      }
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  test("numberRows counts across empty partitions") {
+    // 5 sorted keys in 8 slices: three slices hold nothing, and each
+    // non-empty one must start after all the rows before it
+    import spark.implicits._
+    val keys = Seq(3L, 5L, 7L, 1000L, 1001L)
+    val sorted = spark.sparkContext.parallelize(keys, 8).toDF("k")
+      .localCheckpoint()
+    val sizes = sorted.rdd.mapPartitions(it => Iterator(it.size)).collect()
+    assert(sizes.length === 8 && sizes.count(_ == 0) === 3,
+      s"slice sizes ${sizes.mkString(",")}")
+    val got = Migration.numberRows(sorted, "id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    assert(got === keys.zip(1L to keys.size.toLong))
+  }
+
+  test("guard: one checkpoint (the range-sorted roster) and no persist") {
     val f = Paths.get("src/main/scala/graft/etl/Migration.scala")
     assert(Files.isRegularFile(f), s"run from the repository root: $f")
     // comments and the oracle's stripMargin SQL lines are not code
@@ -132,15 +211,12 @@ class MigrationSpec extends TestSpark {
     def calls(op: String): Seq[String] =
       code.filter(l => l.contains(s".$op(") || l.contains(s".$op()"))
         .map(_.trim)
-    // the seven bundle frames scan ONE checkpoint of the keyed base: a
-    // second materialization (or none) brings back the per-table
-    // __pid shuffle; a persist in its place keeps 4 writers per table
-    assert(calls("checkpoint") ===
-      Seq("val base = graft.Memo.checkpoint(keyedRoster(s, dir))"))
-    // the range-partitioned roster both surrogate-key branches read is
-    // the one persist; the offsets are not persisted
-    assert(calls("persist") === Seq("val parted = graft.Memo.persist("))
-    Seq("cache", "localCheckpoint").foreach(op =>
+    // the seven bundle frames scan ONE checkpoint, the range-sorted
+    // roster the mint numbers: a second materialization (or none)
+    // rebuilds the roster per table; a persist in its place keeps 4
+    // writers per table
+    assert(calls("checkpoint") === Seq("numberRows(graft.Memo.checkpoint("))
+    Seq("persist", "cache", "localCheckpoint").foreach(op =>
       assert(calls(op).isEmpty, s"$op in Migration: ${calls(op)}"))
   }
 

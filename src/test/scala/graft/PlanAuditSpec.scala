@@ -60,17 +60,15 @@ class PlanAuditSpec extends TestSpark {
   }
 
   test("q_migrate_bundle: no partition-unbounded window anywhere in 7 tables") {
-    // every window sits in the keyed base's one build, the checkpoint
-    // migrateAll takes of keyedRoster (MigrationSpec guards that it is
-    // the only one): all keyed by __pid, and at least one there
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val build =
-      try Migration.keyedRoster(spark, Sf).queryExecution.executedPlan
-      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assertOnlyPidWindows(build.toString, "keyed base build")
+    // the keyed base's one build is the checkpoint keyedRoster takes of
+    // the range-sorted roster (MigrationSpec guards that it is the only
+    // one): one range sort, no window, nothing through a single partition
+    var frames = Seq.empty[(String, org.apache.spark.sql.DataFrame)]
+    val builds = checkpointPlans { frames = Migration.migrateAll(spark, Sf) }
+    assert(builds.size === 1, s"migrateAll took ${builds.size} checkpoints")
+    assertRangeSortMint(builds.head, "keyed base build")
     // the seven tables scan the checkpoint map-side: no window, no
     // shuffle, and only person_address's nation broadcast as an exchange
-    val frames = Migration.migrateAll(spark, Sf)
     assert(frames.size === 7)
     frames.foreach { case (name, df) =>
       val plan = df.queryExecution.executedPlan
@@ -146,7 +144,7 @@ class PlanAuditSpec extends TestSpark {
 
   test("q_migrate_bundle: all seven tables reuse ONE materialized roster scan") {
     val plan = staticPlan("q_migrate_bundle")
-    // the keyed roster (surrogateKeysScaled over customer) is
+    // the keyed roster (keyedRoster's range-sorted customer) is
     // checkpointed; every per-table branch must scan that checkpoint, so
     // the executed plan contains NO direct parquet scan of customer — a
     // regression here re-reads the 100 TB roster once per table

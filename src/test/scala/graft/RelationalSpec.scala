@@ -162,15 +162,21 @@ class RelationalSpec extends TestSpark {
   }
 
   test("scaled rank formulations window per range partition, not globally") {
-    // the data-sized window must be keyed by the range-partition id — the
-    // whole point of the scaled twins is that no full-table sort funnels
-    // through one task (the only unpartitioned windows left are over the
-    // <= nParts per-partition counters)
-    for (key <- Seq("q_win_ntile_scaled", "q_surrogate_key_scaled")) {
-      val plan = graft.SparkEntry.queries(key)(spark, Sf)
-        .queryExecution.executedPlan.toString
-      assertOnlyPidWindows(plan, key)
+    // the whole point of the scaled twins is that no full-table sort
+    // funnels through one task. The ntile twin's data-sized window must
+    // be keyed by the range-partition id (the only unpartitioned windows
+    // left are over the <= nParts per-partition counters)
+    val plan = graft.SparkEntry.queries("q_win_ntile_scaled")(spark, Sf)
+      .queryExecution.executedPlan.toString
+    assertOnlyPidWindows(plan, "q_win_ntile_scaled")
+    // the surrogate-key twin windows nothing: its build range-sorts once
+    // and numbers the sorted partitions by their offsets
+    val builds = checkpointPlans {
+      graft.SparkEntry.queries("q_surrogate_key_scaled")(spark, Sf)
     }
+    assert(builds.size === 1,
+      s"q_surrogate_key_scaled took ${builds.size} checkpoints")
+    assertRangeSortMint(builds.head, "q_surrogate_key_scaled's mint")
   }
 
   test("weighted sample equals brute-force A-ES and skews toward heavy docs") {

@@ -3,8 +3,12 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -37,6 +41,45 @@ trait TestSpark extends AnyFunSuite with BeforeAndAfterAll {
       i = plan.indexOf(marker, i + 1)
     }
     assert(n > 0, s"$label plan has no windows at all — check the query:\n$plan")
+  }
+
+  /** The executed plans of the checkpoints `block` takes, in the order
+    * they ran: Spark reports an eager checkpoint to query-execution
+    * listeners as a `checkpoint` or `localCheckpoint` action, so a frame
+    * that only reads a checkpoint still shows how it was built.
+    */
+  def checkpointPlans(block: => Any): Seq[SparkPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
+        if (action == "checkpoint" || action == "localCheckpoint")
+          seen.add(qe.executedPlan)
+      def onFailure(action: String, qe: QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      block
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
+
+  /** Assert `plan` mints its ids with ONE range sort: no window, no
+    * exchange to a single partition, exactly one range-partitioning
+    * exchange. A `row_number().over(Window.orderBy(key))` mint fails all
+    * three: it windows, and its sort funnels the table through one task.
+    */
+  def assertRangeSortMint(plan: SparkPlan, label: String): Unit = {
+    val windows = TestSpark.Plans.collect(plan) { case w: WindowExec => w }
+    val shuffles = TestSpark.Plans.collect(plan) {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }
+    assert(windows.isEmpty, s"$label windows:\n$plan")
+    assert(!shuffles.contains(SinglePartition),
+      s"$label exchanges to a single partition:\n$plan")
+    assert(shuffles.count(_.isInstanceOf[RangePartitioning]) === 1,
+      s"$label does not range-partition exactly once:\n$plan")
   }
 
   /** Spark jobs `block` submits, counted under a fresh job group: the

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import java.util.Comparator
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftStreamingBridge, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -41,7 +41,7 @@ object Memo {
 
   private val batches = new ConcurrentHashMap[Key, Slot]
   private val sessions = new ConcurrentHashMap[Key, Slot]
-  // blocking unpersists of what [[persist]] and [[checkpoint]] registered
+  // blocking unpersists of the RDDs [[persist]] and [[checkpoint]] frames scan
   private val releases = new ConcurrentLinkedQueue[() => Unit]
   private val roots = new ConcurrentLinkedQueue[Path]
 
@@ -62,33 +62,59 @@ object Memo {
     (if (held == null) fresh else held).value.asInstanceOf[A]
   }
 
-  /** Persist `df` at MEMORY_AND_DISK (lazy — no job runs here) and
-    * register it for [[release]]; returns it.
+  /** `df`'s rows, persisted at MEMORY_AND_DISK and registered for
+    * [[release]], as a frame whose plan is one `LogicalRDD` scan of them.
+    *
+    * Why a `LogicalRDD` and not `Dataset.persist`: AQE wraps every
+    * `InMemoryTableScan` in a `TableCacheQueryStage` of its own id, so two
+    * identical exchanges above two scans of one cached frame never
+    * canonicalize equal and the shuffle runs once per scan. Every scan
+    * of this frame reads one RDD id instead, so an exchange above it is
+    * reused (`ReusedExchange`) like one above any shared subtree
+    * (`q_dedup_substring_run` on sf0.001, `local[4]`: 7 exchanges, none
+    * reused, 15 jobs over a cached memo; 5 exchanges, 2 reused, 8 jobs
+    * over this scan). The scan keeps `df`'s statistics, output
+    * partitioning and ordering (`LogicalRDD.fromDataset`, what
+    * `Dataset.checkpoint` builds), so broadcast and exchange choices see
+    * what they saw over `df`.
+    *
+    * Not lazy: AQE runs `df`'s shuffle stages before it can return the
+    * final stage's RDD, so those run HERE; the final stage runs, and its
+    * blocks are stored, on the first action over the result. Lineage is
+    * kept: a lost block recomputes, as with `persist` (a
+    * `localCheckpoint` would fail the job instead when an executor is
+    * lost).
     */
-  def persist[T <: Dataset[_]](df: T): T = {
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    releases.add(() => df.unpersist(blocking = true))
-    df
+  def persist(df: DataFrame): DataFrame = {
+    val rows = df.queryExecution.toRdd.map(_.copy())
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    registered(GraftStreamingBridge.rddScan(df, rows))
   }
 
-  /** Eagerly checkpoint `df` so an iterative plan stays O(1) per round,
-    * or a frame several actions read is built once with the partition
-    * count AQE gave its final stage, and register its blocks for
-    * [[release]]. With a reliable checkpoint dir set on the context (an
-    * HDFS/S3 path on a real cluster) the checkpoint survives executor
-    * loss — the 100 TB setting; without one it is a fast
-    * `localCheckpoint` whose blocks live on the executors.
+  /** Checkpoint `df` so an iterative plan stays O(1) per round, or a
+    * frame several actions read is built once with the partition count
+    * AQE gave its final stage, and register its blocks for [[release]].
+    * With a reliable checkpoint dir set on the context (an HDFS/S3 path
+    * on a real cluster) the checkpoint is eager and survives executor
+    * loss — the 100 TB setting; without one it is a `localCheckpoint`
+    * whose blocks live on the executors, eager unless `eager = false`
+    * (a lazy one folds into the first action over it, running no job
+    * here).
     */
-  def checkpoint(df: DataFrame): DataFrame = {
-    val c =
+  def checkpoint(df: DataFrame, eager: Boolean = true): DataFrame =
+    registered(
       if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
         df.checkpoint()
-      else df.localCheckpoint()
-    c.queryExecution.logical.foreach {
+      else df.localCheckpoint(eager))
+
+  // registers the blocking unpersist of the RDD a persist or checkpoint
+  // frame scans
+  private def registered(frame: DataFrame): DataFrame = {
+    frame.queryExecution.logical.foreach {
       case r: LogicalRDD => releases.add(() => r.rdd.unpersist(blocking = true))
       case _ =>
     }
-    c
+    frame
   }
 
   /** The batch boundary: unpersist every registered frame and checkpoint,

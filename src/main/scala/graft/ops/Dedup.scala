@@ -190,17 +190,19 @@ object Dedup {
       .select(lead :+ col("b.band_id") :+ col("b.bkey"): _*)
   }
 
-  /** Band rows, lazily persisted and memoized per (session, dir).
+  /** Band rows, persisted ([[graft.Memo.persist]]) and memoized per
+    * (session, dir).
     *
     * Without the persist, the LSH self-join evaluates `MinHashSig` (two
     * md5s per shingle) TWICE per doc — AQE can plan the small side as a
     * broadcast, which defeats ReuseExchange, so the "identical subtree"
-    * dedup cannot be relied on. With it, both join sides scan one
-    * InMemoryRelation: signatures compute exactly once per doc, and the
+    * dedup cannot be relied on. With it, both join sides scan the memo's
+    * one RDD: signatures compute exactly once per doc, and the
     * three downstream queries (minhash / fuzzy / components) share the
     * same materialized rows instead of each rebuilding the signature
-    * pipeline from the raw text. `persist` is lazy — no job runs at
-    * construction. Band rows are 4 × (long, int, 32-char hex) per doc —
+    * pipeline from the raw text. Building the memo runs the signature
+    * plan's shuffle stages; the rows are stored by the first query that
+    * reads them. Band rows are 4 × (long, int, 32-char hex) per doc —
     * a few hundred bytes/doc, far smaller than the corpus text, so
     * MEMORY_AND_DISK is safe at any scale the corpus itself fits.
     */
@@ -228,7 +230,7 @@ object Dedup {
     }
 
   /** Band rows of exact-dup group REPRESENTATIVES only (min doc_id per
-    * md5(text)), lazily persisted like [[cachedBands]]. Pre-collapsing
+    * md5(text)), persisted like [[cachedBands]]. Pre-collapsing
     * exact duplicates before the band self-join is the mega-cluster
     * guard: a crawl routinely carries 100 k byte-identical copies of one
     * boilerplate page, and banding all of them puts 100 k rows behind ONE
@@ -436,9 +438,9 @@ object Dedup {
     * standard large-graph formulation (GraphX/GraphFrames use the same
     * loop; Kiveris et al.'s large-star/small-star halves rounds at
     * trillion-edge scale if ever needed). Each round's labels are
-    * checkpointed so per-round plans stay O(1); a lazy-cache variant
-    * benched slower (InMemoryRelation re-plan overhead per round). Edges
-    * are cached — every round re-reads them.
+    * checkpointed so per-round plans stay O(1); a lazy `Dataset.cache`
+    * variant benched slower (cached-relation re-plan overhead per
+    * round). Edges are cached — every round re-reads them.
     *
     * Checkpoint durability: see [[graft.Memo.checkpoint]] — reliable when
     * the context has a checkpoint dir, local (fast, lost with an executor)
@@ -884,8 +886,10 @@ object Dedup {
     * join-back side are different subtrees, so no exchange reuse fires —
     * plan-verified), i.e. 4 corpus re-tokenizations + gram hashings per
     * pass across the two queries; the memo pays it once, owned by
-    * `q_dedup_substring` in sorted bench order. The gram key is the
-    * md5 as 16-BYTE BINARY (`unhex`), not the 32-char hex string — an
+    * `q_dedup_substring` in sorted bench order. Both sides scan the
+    * memo's one RDD, so an exchange both plan alike above it (the run
+    * query's shared gram-frequency branch) runs once and is reused. The
+    * gram key is the md5 as 16-BYTE BINARY (`unhex`), not the 32-char hex string — an
     * injective re-encoding (identical grouping/join semantics, identical
     * outputs) that halves the key bytes on every gram exchange (guide
     * §2.3 narrower types). Positions ride along at one int/row so the

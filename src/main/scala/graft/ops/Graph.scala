@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Memo
 import graft.io.Sources
 
 /** Iterative graph compute beyond connected components: PageRank, the
@@ -45,21 +46,6 @@ object Graph {
         (col("src") * 13 + 3) % N)).as("dst"))
       .distinct()
   }
-
-  /** Lineage truncation for the iteration loop. Both branches return a
-    * Dataset whose logical plan is a flat `LogicalRDD` — that alone is
-    * what keeps Catalyst analysis O(1) per round instead of O(rounds).
-    * The LOCAL branch is lazy (`eager = false`): materialization folds
-    * into the single final action rather than paying one blocking job per
-    * checkpoint — that was 5 of q_pagerank's 6.8 s (round-6 VERDICT item
-    * 4). The RELIABLE branch (cluster, checkpoint dir set) stays eager: a
-    * lazy reliable checkpoint re-runs the lineage after the first action
-    * to write it, doubling every round's compute.
-    */
-  private def checkpoint(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint()
-    else df.localCheckpoint(eager = false)
 
   // base uses the fixed modulus N, not the data-dependent live-node
   // count — it only has to be the SAME constant in both engines
@@ -145,7 +131,16 @@ object Graph {
     s.conf.set(aqeKey, "false")
     s.conf.set(spKey, parts.toString)
     try {
-      var pr = checkpoint(nodes.select(col("node"), lit(Scale / N).as("v")))
+      // lineage truncation: a flat `LogicalRDD` plan per mark keeps
+      // Catalyst analysis O(1) per round instead of O(rounds). Lazy
+      // (`eager = false`) where local: materialization folds into the
+      // single final action rather than paying one blocking job per mark
+      // — that was 5 of q_pagerank's 6.8 s (round-6 VERDICT item 4). A
+      // reliable mark (cluster, checkpoint dir set) stays eager: a lazy
+      // one re-runs the lineage after the first action to write it,
+      // doubling every round's compute.
+      var pr = Memo.checkpoint(
+        nodes.select(col("node"), lit(Scale / N).as("v")), eager = false)
       (1 to Iters).foreach { i =>
         val next = iterate(eo, nodes, pr)
         // checkpoint every SECOND round (and the last): plan depth stays ≤2
@@ -155,12 +150,13 @@ object Graph {
         // min/median): cadence 1 = 1.72/2.11, cadence 2 = 1.70/1.86,
         // cadence 3 = 1.70/1.85 — all within noise, so the standing
         // cadence stays
-        pr = if (i % 2 == 0 || i == Iters) checkpoint(next) else next
+        pr = if (i % 2 == 0 || i == Iters) Memo.checkpoint(next, eager = false)
+          else next
         ()
       }
       // eager materialization: runs the whole loop HERE, inside the AQE-off
       // window, and leaves a flat LogicalRDD for the caller's final sort
-      val done = pr.localCheckpoint(eager = true)
+      val done = Memo.checkpoint(pr)
       done.orderBy("node")
     } finally {
       s.conf.set(aqeKey, aqePrev)
@@ -198,9 +194,16 @@ object Graph {
     val raw = srcs.select(col("x").as("a"), explode(array(
       (col("x") + 1) % N, (col("x") + 2) % N, (col("x") + 3) % N,
       (col("x") * 7 + 1) % N, (col("x") * 13 + 3) % N)).as("b"))
+    // `und` is stated null-free once, here, so its four uses plan one
+    // subtree and the (u, v) shuffle runs once, reused three times;
+    // otherwise each join over it infers its own
+    // `isnotnull(least|greatest(..))` filters below the distinct and the
+    // shuffle runs four times. A null key never passes `a =!= b`, so the
+    // filter drops no row.
     val und = raw.filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("u"),
         greatest(col("a"), col("b")).as("v"))
+      .filter(col("u").isNotNull && col("v").isNotNull)
       .distinct()
     val deg = und.select(col("u").as("x"))
       .unionAll(und.select(col("v").as("x")))
@@ -277,7 +280,7 @@ object Graph {
     // broadcasting the semi-join build sides, and this shrinking-frame
     // loop is exactly the shape AQE's runtime re-plan serves well.
     (1 to CoreRounds).foreach { _ =>
-      alive = checkpoint(kcoreRound(alive))
+      alive = Memo.checkpoint(kcoreRound(alive), eager = false)
     }
     alive.groupBy("src").agg(count(lit(1)).as("deg"))
       .select(col("src").as("node"), col("deg"))

@@ -902,13 +902,21 @@ object TextOps {
     // counts and the per-doc scoring join); un-persisted, each branch
     // re-ran the corpus-wide explode + per-bigram string concat — persist
     // it once per pass (token-scale storage, the tokenRows budget note
-    // applies; a batch memo)
+    // applies; a batch memo). Both branches scan the memo's one RDD, so
+    // an exchange they plan alike above it is reused.
     val b = Memo.batch("text_bigrams", s, dir)(Memo.persist(
       docs(s, dir)
         .select(col("doc_id"), tokens(col("text")).as("ws"))
         .select(col("doc_id"), explode(arr).as("p"))
         .select(col("doc_id"), col("p.big").as("big"), col("p.w1").as("w1"))))
-    val c2 = b.groupBy("big", "w1").agg(count(lit(1)).as("c2"))
+    // null-free keys stated once, so the two uses of c2 below (the model
+    // join and c1's reaggregation) plan ONE subtree and AQE reuses its
+    // exchange; otherwise the joins infer `isnotnull(big)` into one use
+    // only and the (big, w1) shuffle runs twice. Bigram keys are never
+    // null (concat_ws, and elements of split tokens), so the filter drops
+    // no row.
+    val c2 = b.filter(col("big").isNotNull && col("w1").isNotNull)
+      .groupBy("big", "w1").agg(count(lit(1)).as("c2"))
     // context counts DERIVED from the bigram counts instead of a second
     // corpus pass (r21): c1(w1) = Σ_big c2(big, w1) by definition — the
     // reaggregation runs over the VOCAB²-bounded c2 frame, so the corpus

@@ -2,6 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
 
 /** Bridge into the `private[sql]` streaming-frame constructor a v1
@@ -10,7 +11,8 @@ import org.apache.spark.sql.types.StructType
   * nowhere else; Spark's own file stream source calls the same method).
   * Placing the one-line forwarder in `org.apache.spark.sql` is the
   * established pattern third-party v1 connectors use for exactly this
-  * call — nothing else from the private surface is touched.
+  * call. The one other private hop is [[rddScan]], the frame
+  * [[graft.Memo.persist]] returns over its persisted rows.
   */
 object GraftStreamingBridge {
   def streamingFrame(spark: classic.SparkSession, rdd: RDD[InternalRow],
@@ -25,4 +27,15 @@ object GraftStreamingBridge {
   def batchFrame(spark: classic.SparkSession, rdd: RDD[InternalRow],
                  schema: StructType): DataFrame =
     spark.internalCreateDataFrame(rdd, schema, isStreaming = false)
+
+  /** A frame scanning `rdd`, which must hold `df`'s rows: the
+    * `LogicalRDD` `Dataset.checkpoint` builds, keeping `df`'s statistics,
+    * output partitioning and ordering so joins and exchanges above the
+    * scan plan as they would over `df` itself.
+    */
+  def rddScan(df: DataFrame, rdd: RDD[InternalRow]): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    classic.Dataset.ofRows(ds.sparkSession,
+      LogicalRDD.fromDataset(rdd, ds, ds.isStreaming))
+  }
 }

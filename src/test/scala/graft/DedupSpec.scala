@@ -465,10 +465,11 @@ class DedupSpec extends TestSpark {
     // the postings index is a session memo: it must outlive the release
     val index = graft.ops.TextOps.indexRoot(spark, Sf)
     // one key per memo-owning module (plus the per-call persists of
-    // q_win_ntile_scaled)
+    // q_win_ntile_scaled and the loop checkpoints of the two graph loops)
     val keys = Seq("q_dedup_minhash", "q_simjoin_prefix",
       "q_sim_ivf_trained", "q_text_bigram_lp", "q_corpus_pipeline",
-      "q_bpe_encode", "q_mm_dedup", "q_win_ntile_scaled")
+      "q_bpe_encode", "q_mm_dedup", "q_win_ntile_scaled", "q_pagerank",
+      "q_graph_kcore")
     keys.foreach { k =>
       val held = spark.sparkContext.getPersistentRDDs.keySet
       graft.SparkEntry.queries(k)(spark, Sf).count()

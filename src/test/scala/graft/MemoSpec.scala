@@ -8,9 +8,17 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.RDDScanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.storage.StorageLevel
+
 /** The memo registry's contract: one build per key under concurrent first
-  * calls, nested builds on one thread, the batch/session lifetimes, and a
-  * source guard that keeps modules from growing their own memos again.
+  * calls, nested builds on one thread, the batch/session lifetimes, the
+  * persisted memo scan (exchange reuse above it, lineage under it, no
+  * cached Dataset), and a source guard that keeps modules from growing
+  * their own memos again.
   */
 class MemoSpec extends TestSpark {
 
@@ -68,6 +76,59 @@ class MemoSpec extends TestSpark {
     Memo.release()
     both()
     assert((batchBuilds.get, sessionBuilds.get) === ((2, 1)))
+  }
+
+  test("exchanges above a memo are reused: the substring run and prefix join run ≤ 8 jobs") {
+    // every scan of a memo reads one RDD id, so identical exchanges above
+    // two scans of it canonicalize equal; over an `InMemoryRelation` each
+    // scan is its own AQE cache stage, nothing above one is reused, and
+    // these keys ran 15 and 12 jobs
+    Seq("q_dedup_substring_run", "q_simjoin_prefix").foreach { k =>
+      Memo.release()
+      var df: DataFrame = null
+      val jobs = jobsOf { df = SparkEntry.queries(k)(spark, Sf); df.collect() }
+      val plan = df.queryExecution.executedPlan
+      assert(jobs <= 8, s"$k ran $jobs jobs")
+      assert(TestSpark.Plans.collect(plan) { case r: ReusedExchangeExec => r }
+        .nonEmpty, s"$k reuses no exchange:\n$plan")
+    }
+    Memo.release()
+  }
+
+  test("a memo keeps lineage: lost blocks recompute to the same rows") {
+    Memo.release()
+    val owner = SparkEntry.queries("q_dedup_owner")
+    val before = owner(spark, Sf).collect().toSeq
+    val bands = memoRdd(graft.ops.Dedup.cachedBands(spark, Sf))
+    def stored = org.apache.spark.RddBlocks.count(spark.sparkContext, bands)
+    assert(stored > 0, "the band memo stored no blocks")
+    org.apache.spark.RddBlocks.drop(spark.sparkContext, bands)
+    assert(stored === 0)
+    // a local checkpoint fails here: its blocks are its only copy
+    assert(owner(spark, Sf).collect().toSeq === before)
+    Memo.release()
+  }
+
+  test("guard: Memo.persist caches no Dataset — its frame scans one persisted RDD") {
+    val df = spark.range(0, 1000, 1, 4).toDF("id")
+    val m = Memo.persist(df)
+    assert(df.storageLevel === StorageLevel.NONE)
+    val plan = m.queryExecution.executedPlan
+    assert(TestSpark.Plans.collect(plan) { case r: InMemoryTableScanExec => r }
+      .isEmpty, plan.toString)
+    assert(TestSpark.Plans.collect(plan) { case r: RDDScanExec => r.rdd.id } ===
+      Seq(memoRdd(m)), plan.toString)
+    assert(m.collect().map(_.getLong(0)).sorted.toSeq === (0L until 1000L))
+    assert(spark.sparkContext.getPersistentRDDs(memoRdd(m)).getStorageLevel ===
+      StorageLevel.MEMORY_AND_DISK)
+    Memo.release()
+    assert(!spark.sparkContext.getPersistentRDDs.contains(memoRdd(m)))
+    // and in the source: no Dataset persist or cache in its body
+    val src = new String(Files.readAllBytes(Paths.get("src/main/scala/graft/Memo.scala")))
+    val body = src.substring(src.indexOf("def persist("))
+      .split("\n  }\n", 2).head
+    assert("""\bdf\.(persist|cache)\b|\.cache\(""".r.findFirstIn(body).isEmpty,
+      body)
   }
 
   test("temp roots are graft_<name> directories directly under java.io.tmpdir") {

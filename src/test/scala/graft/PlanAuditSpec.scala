@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ShuffleExchangeExec}
-import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
 import graft.etl.Migration
@@ -18,6 +21,32 @@ class PlanAuditSpec extends TestSpark {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try graft.SparkEntry.queries(name)(spark, Sf).queryExecution.executedPlan
     finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  /** Ids of the RDDs `plan` scans, reused exchanges followed to the
+    * subtree they reuse.
+    */
+  private def scannedRdds(plan: SparkPlan): Seq[Int] = plan.flatMap {
+    case r: RDDScanExec => Seq(r.rdd.id)
+    case r: ReusedExchangeExec => scannedRdds(r.child)
+    case _ => Nil
+  }
+
+  /** The hash keys of every shuffle exchange `name` runs: its final AQE
+    * plan, taken after `collect`, where a reused exchange is a
+    * `ReusedExchange` leaf and not counted.
+    */
+  private def ranHashExchanges(name: String): Seq[Seq[String]] = {
+    val df = graft.SparkEntry.queries(name)(spark, Sf)
+    df.collect()
+    TestSpark.Plans.collect(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }.collect { case h: HashPartitioning =>
+      h.expressions.map {
+        case a: Attribute => a.name
+        case x => x.sql
+      }
+    }
   }
 
   test("q_topk_group_heap: partial+final object hash aggregate, no window") {
@@ -297,10 +326,11 @@ class PlanAuditSpec extends TestSpark {
       s"expected a map-side partial max before the exchange:\n$s")
     val n = "Aggregate\\(".r.findAllIn(s).length
     assert(n >= 2, s"expected partial+final selection aggregate:\n$s")
-    // the label attach rides the MEMOIZED component-label frame — a cache
+    // the label attach rides the MEMOIZED component-label frame — a memo
     // miss here would silently rebuild the whole LSH + propagation chain
-    assert(s.contains("InMemoryTableScan"),
-      s"expected the memoized component labels:\n$s")
+    val labels = memoRdd(graft.ops.Dedup.componentLabels(spark, Sf))
+    assert(scannedRdds(plan).contains(labels),
+      s"expected a scan of the memoized component labels (rdd $labels):\n$s")
   }
 
   test("q_text_boilerplate: flagged-set recount is a broadcast semi join") {
@@ -337,10 +367,13 @@ class PlanAuditSpec extends TestSpark {
   test("q_dedup_owner: bucket self-join reuses ONE memoized band relation") {
     val plan = staticPlan("q_dedup_owner")
     val s = plan.toString
-    // both sides of the <= band join must scan the same InMemoryRelation —
-    // a cache miss here rebuilds the MinHash signature pipeline twice
-    val n = "InMemoryTableScan".r.findAllIn(s).length
-    assert(n >= 2, s"expected both join sides on the memoized bands:\n$s")
+    // both sides of the <= band join must read the band memo's ONE RDD —
+    // a memo miss here rebuilds the MinHash signature pipeline twice
+    val bands = memoRdd(graft.ops.Dedup.cachedBands(spark, Sf))
+    val sides = plan.collectFirst { case j: BaseJoinExec => j }
+      .map(_.children.map(scannedRdds))
+    assert(sides === Some(Seq(Seq(bands), Seq(bands))),
+      s"expected both join sides on the memoized bands (rdd $bands):\n$s")
     assert(!s.contains("CartesianProduct") && !s.contains("BroadcastNestedLoop"),
       s"band join degenerated to an all-pairs compare:\n$s")
   }
@@ -415,5 +448,19 @@ class PlanAuditSpec extends TestSpark {
     // join lost its equi-keys
     val bnlj = "BroadcastNestedLoopJoin".r.findAllIn(s).length
     assert(bnlj <= 1, s"unexpected nested-loop join beyond the scalar combine:\n$s")
+  }
+
+  test("q_graph_triangles: the undirected edge set shuffles once") {
+    // `und` feeds the degree count and both pk attachments: its (u, v)
+    // distinct shuffles once and is reused, not once per use
+    val ex = ranHashExchanges("q_graph_triangles")
+    assert(ex.count(_ == Seq("u", "v")) === 1, ex.mkString("\n", "\n", ""))
+  }
+
+  test("q_text_bigram_lp: the bigram counts shuffle once") {
+    // c2 feeds the model join and c1's reaggregation: one (big, w1)
+    // exchange, reused by the second use
+    val ex = ranHashExchanges("q_text_bigram_lp")
+    assert(ex.count(_ == Seq("big", "w1")) === 1, ex.mkString("\n", "\n", ""))
   }
 }

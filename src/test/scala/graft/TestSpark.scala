@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, LogicalRDD, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
@@ -96,6 +96,14 @@ trait TestSpark extends AnyFunSuite with BeforeAndAfterAll {
     try block finally sc.clearJobGroup()
     org.apache.spark.ListenerBusDrain(sc)
     sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  /** The id of the RDD a [[Memo.persist]] frame scans: its plan is one
+    * `LogicalRDD` over the memo's persisted rows.
+    */
+  def memoRdd(df: DataFrame): Int = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.id
+    case p => fail(s"expected a memo frame (one LogicalRDD scan):\n$p")
   }
 
   /** Parquet scan nodes in `df`'s physical plan, adaptive query stages
